@@ -8,9 +8,11 @@ shared SQL string (operators/cdxview.py) executed verbatim by both engines,
 so derivation skew is impossible; operators themselves are DataFrame code.
 
 48 of the 50 entries are oracled. The two without an oracle — the
-stateful scheduler round and the binary image decode — get the driver's
-rows-only check and are covered by pytest golden/equivalence tests
-instead (tests/test_scheduler.py, tests/test_multimodal_decode.py).
+stateful scheduler round and the image header dimensions — get the
+correctness gate's rows-only check and are covered by pytest
+golden/equivalence tests instead (tests/test_scheduler.py;
+tests/test_multimodal_decode.py and tests/test_vp8l.py parse each header
+format; the former pins the gate rows' digest).
 """
 
 from __future__ import annotations
@@ -1415,6 +1417,7 @@ FROM ranked WHERE fetch_rank <= 5 ORDER BY host, fetch_rank
     )
 
     # scheduler_one_round, multimodal_image_features: rows-only (stateful
-    # checkpointing and binary payload decode are not DuckDB-expressible);
-    # covered by pytest golden + equivalence tests.
+    # checkpointing and binary image-header parsing are not
+    # DuckDB-expressible); covered by pytest golden + equivalence tests
+    # and a pinned digest of the image rows.
     return o

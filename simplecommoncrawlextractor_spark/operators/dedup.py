@@ -427,12 +427,12 @@ def ngram_jaccard_pairs(
     JVM row machinery dominated. Now both heavy stages are vectorized
     Arrow passes (guide §4.2):
 
-    1. postings hash-partitioned by shingle; one ``mapInPandas`` task
+    1. postings hash-partitioned by shingle; one ``mapInArrow`` task
        factorizes its shingles, generates the capped in-group pair
        instances with numpy index arithmetic, and emits them partially
        grouped by ``id_a`` as (id_a, sz_a, b_ids[], b_szs[]) array rows —
        ~50× fewer shuffle rows than one row per pair instance;
-    2. rows hash-partitioned by id_a; one ``mapInPandas`` task expands its
+    2. rows hash-partitioned by id_a; one ``mapInArrow`` task expands its
        arrays, lexsorts by (id_b, id_a) and run-length-encodes to the
        EXACT per-pair intersection counts, then applies the provable
        necessary condition J = i/(szA+szB−i) ≤ i/max(szA,szB) ⟹

@@ -1,33 +1,22 @@
-"""Multimodal column operators: image/audio/video as opaque ``binary``
-columns with typed metadata.
+"""Multimodal column operators: images as opaque ``binary`` columns with
+typed metadata.
 
-The Spark-side plumbing (schemas, Arrow batch shapes, mapInPandas
-signatures, partitioning) is real and tested. Decoding is REAL for the
-formats decodable with stdlib + numpy alone — uncompressed BMP
-(BITMAPINFOHEADER, 24/32bpp BI_RGB), binary PPM (P6), non-interlaced
-8-bit RGB/RGBA PNG (zlib inflate + the five scanline filters,
-``_decode_png``), and JPEG — both baseline sequential (SOF0) and
-progressive (SOF2: spectral selection + successive approximation, DC
-first/refine, AC first with EOB runs, AC refine with correction bits)
-through one multi-scan decoder (``_decode_jpeg``: canonical Huffman,
-dequantize, batched IDCT, 4:2:0/4:2:2/4:4:4 chroma upsample, restart
-markers), and lossless WebP (VP8L via ``_vp8l.decode_vp8l_chunk``:
-canonical prefix codes, LZ77 + color cache, meta prefix groups, all
-four inverse transforms). Lossy WebP (VP8) reports TRUE header
-dimensions (``_header_dims``) while its pixel features remain the
-deterministic fake behind ``_decode_image_stub`` (a boolean arithmetic
-decoder + loop filter is out of scope for a container with no image
-libraries) — swap in PIL/libav by replacing that one function. Batch shape: mapInPandas receives an iterator of Arrow
-batches; we yield one output frame per input frame to keep memory bounded
-regardless of payload size — the pattern that matters at 100 TB, where a
-single partition can hold GBs of media bytes.
+``image_features`` reports each payload's sniffed MIME type, byte count
+and TRUE width and height, read from the format's own header: BMP
+(BITMAPINFOHEADER or larger), PNG (IHDR), binary PPM (P6), WebP (VP8,
+VP8L, VP8X) and JPEG (any SOFn frame header). No pixels are decoded. The
+``feat`` column is the labelled deterministic stub of
+``_decode_image_stub``, which also supplies the dimensions when no header
+parses; swap in PIL/libav by replacing that one function. Batch shape:
+mapInPandas receives an iterator of Arrow batches and yields one output
+frame per input frame, so memory stays bounded regardless of payload size.
 """
 
 from __future__ import annotations
 
 import binascii
+import re
 import struct
-import zlib
 from collections.abc import Iterator
 
 import numpy as np
@@ -40,17 +29,14 @@ IMAGE_FEATURES_SCHEMA = (
     "feat array<float>"
 )
 
-FRAME_SAMPLE_SCHEMA = "media_ref string, frame_idx int, frame bytes".replace(
-    "bytes", "binary"
-)
-
 
 def _decode_image_stub(payload: bytes) -> tuple[int, int, np.ndarray]:
-    """DETERMINISTIC FAKE decoder for compressed formats (no PIL in this
-    container): derives a (width, height, 8-dim feature) from the payload
-    bytes. Replace with a real decode (PIL.Image.open + thumbnail +
-    embedding) in production — the surrounding Spark plumbing does not
-    change."""
+    """DETERMINISTIC FAKE decoder (the package depends on no image
+    library): derives a (width, height, 8-dim feature) from the payload
+    bytes. ``feat`` always comes from here; width and height only when
+    ``image_dims`` finds no header. Replace with a real decode
+    (PIL.Image.open + thumbnail + embedding) in production — the
+    surrounding Spark plumbing does not change."""
     h = np.frombuffer(payload[:64].ljust(64, b"\0"), dtype=np.uint8).astype(np.float32)
     width = int(64 + (h[:8].sum() % 1984))
     height = int(64 + (h[8:16].sum() % 1984))
@@ -58,664 +44,49 @@ def _decode_image_stub(payload: bytes) -> tuple[int, int, np.ndarray]:
     return width, height, feat
 
 
-def _pixel_features(px: np.ndarray, width: int, height: int, maxval: int = 255) -> np.ndarray:
-    """8-dim feature from an (n, 3) RGB pixel array: per-channel means,
-    gray std/min/max, aspect, bias — all float32-deterministic.
-    ``maxval`` is the sample ceiling (255 for BMP/PNG; PPM declares its
-    own) so a P6 with maxval 15 normalizes to the same [0,1] range instead
-    of coming out ~maxval/255 too dark."""
-    f = px.astype(np.float32) / np.float32(maxval)
-    gray = f.mean(axis=1)
-    return np.array(
-        [
-            float(f[:, 0].mean()), float(f[:, 1].mean()), float(f[:, 2].mean()),
-            float(gray.std()), float(gray.min()), float(gray.max()),
-            width / float(width + height), 1.0,
-        ],
-        dtype=np.float32,
-    )
+# P6 header: magic, width, height, maxval, each separated by whitespace
+# or '#' comment lines, and exactly one whitespace byte before the pixels
+_PPM_SEP = rb"(?:\s|#[^\n]*\n)+"
+_PPM_HEADER = re.compile(
+    rb"P6" + _PPM_SEP + rb"(\d+)" + _PPM_SEP + rb"(\d+)" + _PPM_SEP + rb"\d+\s"
+)
 
 
-def _decode_bmp(payload: bytes) -> tuple[int, int, np.ndarray] | None:
-    """REAL decode of an uncompressed BI_RGB BMP (BITMAPINFOHEADER+,
-    24/32bpp, bottom-up or top-down). Returns None when the payload isn't
-    one — the caller falls back to the stub."""
-    if len(payload) < 54 or payload[:2] != b"BM":
-        return None
+def image_dims(payload: bytes) -> tuple[int, int]:
+    """TRUE (width, height) from the image header, without decoding any
+    pixels; the stub's dimensions when no header parses (garbage,
+    truncation, zero or out-of-range sizes)."""
+    dims = None
     try:
-        pix_off = struct.unpack_from("<I", payload, 10)[0]
-        hdr_size = struct.unpack_from("<I", payload, 14)[0]
-        if hdr_size < 40:
-            return None  # BITMAPCOREHEADER not supported
-        width, height = struct.unpack_from("<ii", payload, 18)
-        planes, bpp = struct.unpack_from("<HH", payload, 26)
-        compression = struct.unpack_from("<I", payload, 30)[0]
-    except struct.error:
-        return None
-    if compression != 0 or bpp not in (24, 32) or width <= 0 or height == 0:
-        return None
-    top_down = height < 0
-    height = abs(height)
-    stride = ((width * bpp // 8) + 3) & ~3
-    need = pix_off + stride * height
-    if planes != 1 or need > len(payload) or width * height > 1 << 24:
-        return None
-    rows = []
-    step = bpp // 8
-    for r in range(height):
-        row_idx = r if top_down else height - 1 - r
-        off = pix_off + row_idx * stride
-        row = np.frombuffer(payload, dtype=np.uint8, count=width * step, offset=off)
-        # BMP stores BGR(A); emit RGB
-        rows.append(row.reshape(width, step)[:, 2::-1])
-    px = np.concatenate(rows)
-    return width, height, _pixel_features(px, width, height)
-
-
-def _decode_ppm(payload: bytes) -> tuple[int, int, np.ndarray] | None:
-    """REAL decode of a binary PPM (P6, maxval ≤ 255, '#' comments)."""
-    if payload[:2] != b"P6":
-        return None
-    i, fields = 2, []
-    n = len(payload)
-    while len(fields) < 3 and i < n:
-        c = payload[i : i + 1]
-        if c == b"#":
-            while i < n and payload[i : i + 1] != b"\n":
-                i += 1
-        elif c.isspace():
-            i += 1
-        elif c.isdigit():
-            j = i
-            while j < n and payload[j : j + 1].isdigit():
-                j += 1
-            fields.append(int(payload[i:j]))
-            i = j
-        else:
-            return None
-    if len(fields) < 3 or i >= n or not payload[i : i + 1].isspace():
-        return None
-    i += 1  # single whitespace after maxval
-    width, height, maxval = fields
-    if width <= 0 or height <= 0 or not 0 < maxval <= 255 or width * height > 1 << 24:
-        return None
-    need = width * height * 3
-    if n - i < need:
-        return None
-    px = np.frombuffer(payload, dtype=np.uint8, count=need, offset=i).reshape(-1, 3)
-    return width, height, _pixel_features(px, width, height, maxval=maxval)
-
-
-def _paeth(a: int, b: int, c: int) -> int:
-    p = a + b - c
-    pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-    if pa <= pb and pa <= pc:
-        return a
-    return b if pb <= pc else c
-
-
-def _decode_png(payload: bytes) -> tuple[int, int, np.ndarray] | None:
-    """REAL decode of a non-interlaced 8-bit truecolor PNG (color type 2
-    RGB / 6 RGBA) with stdlib zlib: chunk walk with CRC verification,
-    raw-deflate inflate, and the five scanline filters (None/Sub/Up/
-    Average/Paeth). The inflate skips the 2-byte zlib header and the
-    adler32 trailer (PNG forbids preset dictionaries, so the header is
-    always 2 bytes; ignoring adler lets column-synthesized payloads whose
-    trailer is a placeholder decode too — chunk CRCs are still checked).
-    Returns None for palette/interlaced/16-bit/ancillary-critical cases —
-    the caller falls back to the stub."""
-    if payload[:8] != b"\x89PNG\r\n\x1a\n":
-        return None
-    pos, n = 8, len(payload)
-    w = h = channels = None
-    idat = b""
-    while pos + 12 <= n:
-        (length,) = struct.unpack_from(">I", payload, pos)
-        ctype = payload[pos + 4 : pos + 8]
-        end = pos + 8 + length
-        if end + 4 > n:
-            return None
-        data = payload[pos + 8 : end]
-        (crc,) = struct.unpack_from(">I", payload, end)
-        if binascii.crc32(ctype + data) & 0xFFFFFFFF != crc:
-            return None
-        pos = end + 4
-        if ctype == b"IHDR":
-            if length != 13:
-                return None
-            w, h, depth, ct, comp, filt, interlace = struct.unpack(">IIBBBBB", data)
-            if depth != 8 or ct not in (2, 6) or comp or filt or interlace:
-                return None
-            if w <= 0 or h <= 0 or w * h > 1 << 24:
-                return None
-            channels = 3 if ct == 2 else 4
-        elif ctype == b"IDAT":
-            idat += data
-        elif ctype == b"IEND":
-            break
-    if w is None or len(idat) < 3:
-        return None
-    stride = w * channels
-    need = (stride + 1) * h
-    try:
-        # max_length bounds the inflate to the bytes the image can use: a
-        # crafted 65 KB "zip bomb" IDAT would otherwise expand ~1000:1
-        # inside the executor before the size check ever ran
-        raw = zlib.decompressobj(-15).decompress(idat[2:], need)
-    except zlib.error:
-        return None
-    if len(raw) < need:
-        return None
-    buf = np.frombuffer(raw, dtype=np.uint8, count=need)
-    recon = np.zeros((h, stride), dtype=np.uint8)
-    zero_row = [0] * stride
-    # Average/Paeth decode per BYTE in Python (nonlinear left dependency —
-    # see below); a crafted all-Paeth 16M-pixel image would cost ~67M
-    # interpreter iterations inside one executor task (CPU-exhaustion on
-    # untrusted payloads). Budget the slow path: at most 4 MiB of
-    # filter-3/4 scanline bytes per image, then fall back to the stub.
-    # Vectorized filters (None/Sub/Up) keep the full 2^24-pixel cap.
-    slow_budget = 1 << 22
-    for r in range(h):
-        f = int(buf[r * (stride + 1)])
-        line = buf[r * (stride + 1) + 1 : (r + 1) * (stride + 1)]
-        if f == 0:
-            recon[r] = line
-        elif f == 2:  # Up — vectorized (no intra-row dependency)
-            recon[r] = (line.astype(np.int32) + recon[r - 1]) & 0xFF
-        elif f == 1:
-            # Sub is a per-channel prefix sum mod 256 — vectorized
-            recon[r] = (
-                np.cumsum(line.reshape(w, channels).astype(np.int64), axis=0) & 0xFF
-            ).reshape(stride)
-        elif f in (3, 4):
-            # Average/Paeth carry a nonlinear left dependency (floor-div /
-            # abs comparisons) — no closed form, so a Python loop; plain
-            # int lists beat numpy scalar indexing ~5× here.
-            slow_budget -= stride
-            if slow_budget < 0:
-                return None
-            prev = recon[r - 1].tolist() if r else zero_row
-            ln = line.tolist()
-            rec = [0] * stride
-            if f == 3:
-                for i in range(stride):
-                    a = rec[i - channels] if i >= channels else 0
-                    rec[i] = (ln[i] + ((a + prev[i]) >> 1)) & 0xFF
-            else:
-                for i in range(stride):
-                    a = rec[i - channels] if i >= channels else 0
-                    c = prev[i - channels] if i >= channels else 0
-                    rec[i] = (ln[i] + _paeth(a, prev[i], c)) & 0xFF
-            recon[r] = rec
-        else:
-            return None
-    px = recon.reshape(h, w, channels)[:, :, :3].reshape(-1, 3)
-    return w, h, _pixel_features(px, w, h)
-
-
-# ---------------------------------------------------------------------------
-# baseline JPEG (SOF0) — stdlib + numpy only
-# ---------------------------------------------------------------------------
-
-# JPEG zigzag scan order: _ZIGZAG[k] = row-major index of the k-th
-# zigzag-ordered coefficient (ITU-T T.81 Figure 5)
-_ZIGZAG = np.array([
-     0,  1,  8, 16,  9,  2,  3, 10,
-    17, 24, 32, 25, 18, 11,  4,  5,
-    12, 19, 26, 33, 40, 48, 41, 34,
-    27, 20, 13,  6,  7, 14, 21, 28,
-    35, 42, 49, 56, 57, 50, 43, 36,
-    29, 22, 15, 23, 30, 37, 44, 51,
-    58, 59, 52, 45, 38, 31, 39, 46,
-    53, 60, 61, 54, 47, 55, 62, 63,
-], dtype=np.int64)
-
-# 8-point DCT-II basis (orthonormal): spatial = C.T @ coefs @ C
-_DCT_C = np.array([
-    [
-        (np.sqrt(1.0 / 8.0) if u == 0 else np.sqrt(2.0 / 8.0))
-        * np.cos((2 * x + 1) * u * np.pi / 16.0)
-        for x in range(8)
-    ]
-    for u in range(8)
-])
-
-
-class _HuffTable:
-    """Canonical JPEG Huffman table (T.81 Annex C): counts[1..16] +
-    symbols → (mincode, maxcode, valptr) per code length."""
-
-    def __init__(self, counts: list[int], symbols: bytes):
-        self.vals = symbols
-        self.mincode = [0] * 17
-        self.maxcode = [-1] * 17
-        self.valptr = [0] * 17
-        code, k = 0, 0
-        for ln in range(1, 17):
-            n = counts[ln - 1]
-            self.valptr[ln] = k
-            self.mincode[ln] = code
-            self.maxcode[ln] = code + n - 1 if n else -1
-            code = (code + n) << 1
-            k += n
-
-
-def _huff_decode(bits: np.ndarray, pos: int, t: _HuffTable) -> tuple[int, int]:
-    code = 0
-    n = bits.shape[0]
-    for ln in range(1, 17):
-        if pos >= n:
-            raise ValueError("jpeg: bitstream exhausted")
-        code = (code << 1) | int(bits[pos])
-        pos += 1
-        mx = t.maxcode[ln]
-        if mx >= 0 and code <= mx:
-            return t.vals[t.valptr[ln] + code - t.mincode[ln]], pos
-    raise ValueError("jpeg: invalid huffman code")
-
-
-def _receive_extend(bits: np.ndarray, pos: int, s: int) -> tuple[int, int]:
-    if s == 0:
-        return 0, pos
-    if pos + s > bits.shape[0]:
-        raise ValueError("jpeg: bitstream exhausted")
-    v = 0
-    for i in range(s):
-        v = (v << 1) | int(bits[pos + i])
-    pos += s
-    if v < (1 << (s - 1)):
-        v -= (1 << s) - 1
-    return v, pos
-
-
-def _decode_jpeg(payload: bytes) -> tuple[int, int, np.ndarray] | None:
-    """Exception-safe wrapper: a truncated or malformed marker stream
-    (short SOF/DQT/DHT/DRI/SOS segments on untrusted crawl payloads) must
-    decline to the stub, never crash the Arrow batch — the marker WALK
-    can raise just like the entropy decode, so both live under one
-    except."""
-    try:
-        return _decode_jpeg_parse(payload)
-    except (ValueError, IndexError, KeyError, OverflowError, struct.error):
-        return None
-
-
-def _decode_jpeg_parse(payload: bytes) -> tuple[int, int, np.ndarray] | None:
-    """REAL decode of sequential-baseline (SOF0) AND progressive (SOF2)
-    8-bit JPEGs, 1 or 3 components, subsampling factors in {1, 2}, with
-    stdlib + numpy: marker walk collecting every scan, canonical Huffman
-    entropy decode (progressive spectral selection + successive
-    approximation: DC first/refine, AC first with EOB runs, AC refine
-    with correction bits — T.81 Annex G), dequantize + dezigzag, batched
-    orthonormal IDCT, chroma upsample, BT.601 YCbCr→RGB. Returns None
-    for anything else — arithmetic coding, 12-bit, CMYK, hierarchical —
-    and for images past the 2^20-pixel cap or 64-scan cap (the entropy
-    loop is per-coefficient Python; progressive files touch each
-    coefficient once per scan, so BOTH caps bound executor CPU on
-    untrusted payloads, like the PNG slow-path budget)."""
-    if payload[:2] != b"\xff\xd8":
-        return None
-    n = len(payload)
-    pos = 2
-    qtabs: dict[int, np.ndarray] = {}
-    htabs: dict[tuple[int, int], _HuffTable] = {}
-    restart_interval = 0
-    w = h = None
-    progressive = False
-    comps: list[dict] = []  # id, hs, vs, tq
-    scans: list[dict] = []  # members, ss, se, ah, al, data, htabs, ri
-    while pos + 4 <= n:
-        if payload[pos] != 0xFF:
-            return None
-        marker = payload[pos + 1]
-        pos += 2
-        if marker == 0xD9:  # EOI
-            break
-        if 0xD0 <= marker <= 0xD7:  # stray RST outside scan
-            continue
-        (seglen,) = struct.unpack_from(">H", payload, pos)
-        seg = payload[pos + 2 : pos + seglen]
-        if marker == 0xDB:  # DQT
-            i = 0
-            while i < len(seg):
-                pq, tq = seg[i] >> 4, seg[i] & 15
-                if pq != 0:
-                    return None  # 16-bit tables: not baseline-8
-                qtabs[tq] = np.frombuffer(
-                    seg, dtype=np.uint8, count=64, offset=i + 1
-                ).astype(np.int32)
-                i += 65
-        elif marker in (0xC0, 0xC2):  # SOF0 baseline / SOF2 progressive
-            progressive = marker == 0xC2
-            prec, h, w, nc = seg[0], *struct.unpack_from(">HH", seg, 1), seg[5]
-            if prec != 8 or nc not in (1, 3) or w == 0 or h == 0:
-                return None
-            if w * h > 1 << 20:
-                return None  # CPU budget for the Python entropy loop
-            for c in range(nc):
-                cid, hv, tq = seg[6 + 3 * c : 9 + 3 * c]
-                hs, vs = hv >> 4, hv & 15
-                if hs not in (1, 2) or vs not in (1, 2):
-                    return None
-                comps.append({"id": cid, "hs": hs, "vs": vs, "tq": tq})
-        elif marker in (0xC1, 0xC3, 0xC5, 0xC6, 0xC7,
-                        0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF):
-            return None  # extended/lossless/arithmetic SOF
-        elif marker == 0xC4:  # DHT
-            i = 0
-            while i < len(seg):
-                tc, th = seg[i] >> 4, seg[i] & 15
-                counts = list(seg[i + 1 : i + 17])
-                nv = sum(counts)
-                htabs[(tc, th)] = _HuffTable(counts, seg[i + 17 : i + 17 + nv])
-                i += 17 + nv
-        elif marker == 0xDD:  # DRI
-            (restart_interval,) = struct.unpack_from(">H", seg, 0)
-        elif marker == 0xDA:  # SOS
-            if not comps or len(scans) >= 64:
-                return None  # scan-count budget (untrusted input)
-            ns = seg[0]
-            if ns < 1 or ns > len(comps):
-                return None
-            members = []
-            for i in range(ns):
-                cid, tt = seg[1 + 2 * i], seg[2 + 2 * i]
-                idx = next(
-                    (k for k, c in enumerate(comps) if c["id"] == cid), None
-                )
-                if idx is None:
-                    return None
-                members.append({"c": idx, "dc": tt >> 4, "ac": tt & 15})
-            ss, se = seg[1 + 2 * ns], seg[2 + 2 * ns]
-            ah, al = seg[3 + 2 * ns] >> 4, seg[3 + 2 * ns] & 15
-            if not progressive and (ss != 0 or se != 63 or ah or al):
-                return None  # sequential scans are full-band only
-            if progressive and ss > 0 and ns != 1:
-                return None  # T.81: progressive AC scans are single-comp
-            if progressive and ss == 0 and se != 0:
-                return None  # T.81: progressive DC scans carry no AC band
-            if ss > se or se > 63 or al > 13:
-                return None
-            data_start = pos + seglen
-            # entropy data runs to the next non-RST, non-stuffed marker
-            j = data_start
-            while j + 1 < n:
-                if payload[j] == 0xFF and payload[j + 1] not in (0x00,) and not (
-                    0xD0 <= payload[j + 1] <= 0xD7
-                ):
-                    break
-                j += 1 if payload[j] != 0xFF else 2
-            scans.append(
-                {
-                    "members": members, "ss": ss, "se": se, "ah": ah,
-                    "al": al, "data": payload[data_start:j],
-                    "htabs": dict(htabs), "ri": restart_interval,
-                }
-            )
-            pos = j
-            continue
-        pos += seglen
-    if w is None or not scans:
-        return None
-    if len(scans) * w * h > 1 << 24:
-        # COMBINED budget: the entropy loop touches up to w*h coefficients
-        # per scan, so scans×pixels is the real CPU bound on untrusted
-        # payloads — the per-image pixel cap alone would let a 64-scan
-        # crafted file cost 64× the sequential budget. 2^24 admits a
-        # typical ~10-scan megapixel progressive photo and rejects
-        # adversarial scan-stuffing.
-        return None
-
-    try:
-        hmax = max(c["hs"] for c in comps)
-        vmax = max(c["vs"] for c in comps)
-        mcux = -(-w // (8 * hmax))
-        mcuy = -(-h // (8 * vmax))
-        # per-component coefficient store (MCU-padded plane, zigzag order)
-        for c in comps:
-            c["bw"] = mcux * c["hs"]
-            c["bh"] = mcuy * c["vs"]
-            # non-interleaved scans cover only the component's REAL block
-            # grid (ceil(comp_px/8)), not the MCU-padded one
-            cw_px = -(-w * c["hs"] // hmax)   # ceil(w·hs / hmax)
-            ch_px = -(-h * c["vs"] // vmax)
-            c["cbw"] = -(-cw_px // 8)
-            c["cbh"] = -(-ch_px // 8)
-            c["coef"] = np.zeros((c["bh"] * c["bw"], 64), dtype=np.int32)
-
-        for scan in scans:
-            _jpeg_decode_scan(scan, comps, mcux, mcuy)
-
-        # dequantize + dezigzag + batched IDCT per component
-        planes = []
-        for c in comps:
-            q = qtabs.get(c["tq"])
-            if q is None:
-                raise ValueError("jpeg: missing quant table")
-            deq = (c["coef"] * q[np.newaxis, :]).astype(np.float64)
-            blocks = np.zeros((deq.shape[0], 64))
-            blocks[:, _ZIGZAG] = deq
-            blocks = blocks.reshape(-1, 8, 8)
-            spatial = np.einsum("ij,njk,kl->nil", _DCT_C.T, blocks, _DCT_C)
-            plane = (
-                spatial.reshape(c["bh"], c["bw"], 8, 8)
-                .transpose(0, 2, 1, 3)
-                .reshape(c["bh"] * 8, c["bw"] * 8)
-            )
-            plane = np.clip(np.round(plane + 128.0), 0, 255)
-            # upsample to full MCU-grid resolution, then crop to (h, w)
-            plane = np.repeat(
-                np.repeat(plane, vmax // c["vs"], axis=0), hmax // c["hs"], axis=1
-            )
-            planes.append(plane[:h, :w])
-
-        if len(planes) == 1:
-            rgb = np.stack([planes[0]] * 3, axis=-1)
-        else:
-            y, cb, cr = planes
-            r = y + 1.402 * (cr - 128.0)
-            g = y - 0.344136 * (cb - 128.0) - 0.714136 * (cr - 128.0)
-            b = y + 1.772 * (cb - 128.0)
-            rgb = np.stack([r, g, b], axis=-1)
-        px = np.clip(np.round(rgb), 0, 255).astype(np.uint8).reshape(-1, 3)
-        return w, h, _pixel_features(px, w, h)
-    except (ValueError, IndexError, KeyError, OverflowError, struct.error):
-        return None
-
-
-def _receive_raw(bits: np.ndarray, pos: int, r: int) -> tuple[int, int]:
-    """r raw bits, MSB first (EOB-run extension / correction bits)."""
-    if r == 0:
-        return 0, pos
-    if pos + r > bits.shape[0]:
-        raise ValueError("jpeg: bitstream exhausted")
-    v = 0
-    for i in range(r):
-        v = (v << 1) | int(bits[pos + i])
-    return v, pos + r
-
-
-def _jpeg_decode_scan(scan: dict, comps: list[dict], mcux: int, mcuy: int) -> None:
-    """Decode ONE scan's entropy data into the components' zigzag-order
-    coefficient stores. Handles every scan kind with one block routine:
-    sequential full-band (Ss=0, Se=63), progressive DC first/refine
-    (Ss=Se=0, Ah=0 / Ah>0) and progressive AC first/refine (Ss≥1,
-    single component, EOB runs + correction bits — the T.81 Annex G
-    successive-approximation algebra). Restart markers split the data
-    into segments; each segment restarts bit alignment, DC predictors
-    and the EOB run."""
-    members = scan["members"]
-    htabs = scan["htabs"]
-    ss, se, ah, al = scan["ss"], scan["se"], scan["ah"], scan["al"]
-    ri = scan["ri"]
-    interleaved = len(members) > 1
-    raw = scan["data"]
-    segments, cur, i2 = [], bytearray(), 0
-    while i2 < len(raw):
-        bch = raw[i2]
-        if bch == 0xFF and i2 + 1 < len(raw) and 0xD0 <= raw[i2 + 1] <= 0xD7:
-            segments.append(bytes(cur))
-            cur = bytearray()
-            i2 += 2
-            continue
-        cur.append(bch)
-        i2 += 1
-    segments.append(bytes(cur))
-    seg_bits = [
-        np.unpackbits(np.frombuffer(s.replace(b"\xff\x00", b"\xff"), dtype=np.uint8))
-        for s in segments
-    ]
-
-    st = {"seg": 0, "bits": seg_bits[0], "pos": 0,
-          "preds": [0] * len(members), "eobrun": 0}
-
-    def _restart() -> None:
-        st["seg"] += 1
-        if st["seg"] >= len(seg_bits):
-            raise ValueError("jpeg: missing restart segment")
-        st["bits"], st["pos"] = seg_bits[st["seg"]], 0
-        st["preds"] = [0] * len(members)
-        st["eobrun"] = 0
-
-    p1 = 1 << al
-
-    def _decode_block(mi: int, blk: np.ndarray) -> None:
-        bits, pos = st["bits"], st["pos"]
-        if ss == 0:
-            if ah == 0:
-                t, pos = _huff_decode(bits, pos, htabs[(0, members[mi]["dc"])])
-                if t > 15:
-                    # DHT symbols are raw untrusted bytes; an 8-bit frame
-                    # caps the DC size category at 11 — anything bigger
-                    # would shift preds past int32 (numpy wraps on 1.x,
-                    # raises OverflowError on 2.x)
-                    raise ValueError("jpeg: DC size category out of range")
-                diff, pos = _receive_extend(bits, pos, t)
-                st["preds"][mi] += diff
-                blk[0] = st["preds"][mi] << al
-            else:
-                b, pos = _receive_raw(bits, pos, 1)
-                if b:
-                    # append bit Al of the two's-complement DC value —
-                    # Python | on negative ints IS two's complement
-                    blk[0] = int(blk[0]) | p1
-        if se >= 1:
-            act = htabs[(1, members[mi]["ac"])]
-            k = max(ss, 1)
-            if ah == 0:  # first pass (sequential AC is this with Al=0)
-                if st["eobrun"] > 0:
-                    st["eobrun"] -= 1
-                else:
-                    while k <= se:
-                        rs, pos = _huff_decode(bits, pos, act)
-                        r, s = rs >> 4, rs & 15
-                        if s == 0:
-                            if r < 15:
-                                eb, pos = _receive_raw(bits, pos, r)
-                                # EOB run: this block is done, plus
-                                # (2^r - 1 + eb) whole following blocks
-                                st["eobrun"] = (1 << r) - 1 + eb
-                                break
-                            k += 16  # ZRL
-                            continue
-                        k += r
-                        if k > se:
-                            raise ValueError("jpeg: AC index overrun")
-                        v, pos = _receive_extend(bits, pos, s)
-                        blk[k] = v << al
-                        k += 1
-            else:  # refinement pass: correction bits (T.81 G.7.2)
-                if st["eobrun"] == 0:
-                    while k <= se:
-                        rs, pos = _huff_decode(bits, pos, act)
-                        r, s = rs >> 4, rs & 15
-                        if s == 0:
-                            if r < 15:
-                                eb, pos = _receive_raw(bits, pos, r)
-                                # refine EOB run INCLUDES this block's
-                                # correction tail (handled below)
-                                st["eobrun"] = (1 << r) + eb
-                                break
-                            newval = 0  # ZRL: 16 zero-history coeffs
-                        else:
-                            if s != 1:
-                                raise ValueError("jpeg: bad refine size")
-                            b, pos = _receive_raw(bits, pos, 1)
-                            newval = p1 if b else -p1
-                        # advance past r zero-HISTORY coefficients,
-                        # emitting correction bits for nonzero ones
-                        while k <= se:
-                            if blk[k] != 0:
-                                b, pos = _receive_raw(bits, pos, 1)
-                                if b and (int(blk[k]) & p1) == 0:
-                                    blk[k] += p1 if blk[k] > 0 else -p1
-                            else:
-                                if r == 0:
-                                    if s:
-                                        blk[k] = newval
-                                    k += 1
-                                    break
-                                r -= 1
-                            k += 1
-                if st["eobrun"] > 0:
-                    while k <= se:  # correction tail through Se
-                        if blk[k] != 0:
-                            b, pos = _receive_raw(bits, pos, 1)
-                            if b and (int(blk[k]) & p1) == 0:
-                                blk[k] += p1 if blk[k] > 0 else -p1
-                        k += 1
-                    st["eobrun"] -= 1
-        st["pos"] = pos
-
-    if interleaved:
-        unit_count = 0
-        for my in range(mcuy):
-            for mx in range(mcux):
-                if ri and unit_count and unit_count % ri == 0:
-                    _restart()
-                for mi, m in enumerate(members):
-                    c = comps[m["c"]]
-                    for by in range(c["vs"]):
-                        for bx in range(c["hs"]):
-                            row = my * c["vs"] + by
-                            col = mx * c["hs"] + bx
-                            _decode_block(mi, c["coef"][row * c["bw"] + col])
-                unit_count += 1
-    else:
-        c = comps[members[0]["c"]]
-        unit_count = 0
-        for row in range(c["cbh"]):
-            for col in range(c["cbw"]):
-                if ri and unit_count and unit_count % ri == 0:
-                    _restart()
-                _decode_block(0, c["coef"][row * c["bw"] + col])
-                unit_count += 1
-
-
-def _header_dims(payload: bytes) -> tuple[int, int] | None:
-    """TRUE dimensions for formats whose pixels stay stubbed: WEBP
-    (VP8 lossy / VP8L lossless / VP8X extended) and the JPEG variants
-    ``_decode_jpeg`` declines (arithmetic-coded, 12-bit, CMYK,
-    hierarchical, over-budget — any SOFn frame header). The reference
-    only ever sniffs these payloads; real dims already exceed parity —
-    pixels remain the labeled deterministic stub."""
-    try:
-        if payload[:4] == b"RIFF" and payload[8:12] == b"WEBP":
+        if payload[:2] == b"BM":
+            # BITMAPINFOHEADER or larger; a negative height marks top-down rows
+            (hdr_size,) = struct.unpack_from("<I", payload, 14)
+            w, h = struct.unpack_from("<ii", payload, 18)
+            if hdr_size >= 40:
+                dims = w, abs(h)
+        elif payload[:8] == b"\x89PNG\r\n\x1a\n":
+            # IHDR must be the first chunk, with all 13 data bytes present
+            if payload[12:16] == b"IHDR" and len(payload) >= 29:
+                dims = struct.unpack_from(">II", payload, 16)
+        elif payload[:2] == b"P6":
+            m = _PPM_HEADER.match(payload)
+            if m:
+                dims = int(m[1]), int(m[2])
+        elif payload[:4] == b"RIFF" and payload[8:12] == b"WEBP":
             tag = payload[12:16]
             if tag == b"VP8 " and payload[23:26] == b"\x9d\x01\x2a":
                 w, h = struct.unpack_from("<HH", payload, 26)
-                return (w & 0x3FFF), (h & 0x3FFF)
-            if tag == b"VP8L" and payload[20:21] == b"\x2f":
+                dims = (w & 0x3FFF), (h & 0x3FFF)
+            elif tag == b"VP8L" and payload[20:21] == b"\x2f":
                 (bits,) = struct.unpack_from("<I", payload, 21)
-                return (bits & 0x3FFF) + 1, ((bits >> 14) & 0x3FFF) + 1
-            if tag == b"VP8X" and len(payload) >= 30:
+                dims = (bits & 0x3FFF) + 1, ((bits >> 14) & 0x3FFF) + 1
+            elif tag == b"VP8X" and len(payload) >= 30:
                 # length-guarded: int.from_bytes over a short slice would
                 # silently yield 0 and report a fabricated 1x1
                 wm = int.from_bytes(payload[24:27], "little") + 1
                 hm = int.from_bytes(payload[27:30], "little") + 1
-                return wm, hm
-        if payload[:2] == b"\xff\xd8":  # JPEG that _decode_jpeg declined
+                dims = wm, hm
+        elif payload[:2] == b"\xff\xd8":  # JPEG: the first SOFn frame header
             pos, n = 2, len(payload)
             while pos + 4 <= n and payload[pos] == 0xFF:
                 # standards-legal 0xFF fill bytes may pad before a marker
@@ -729,126 +100,42 @@ def _header_dims(payload: bytes) -> tuple[int, int] | None:
                 if marker in (0xC0, 0xC1, 0xC2, 0xC3, 0xC5, 0xC6, 0xC7,
                               0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF):
                     h, w = struct.unpack_from(">HH", payload, pos + 5)
-                    return (w, h) if w and h else None
+                    dims = w, h
+                    break
                 pos += 2 + seglen
     except (struct.error, IndexError):
-        return None
-    return None
-
-
-def _decode_webp(payload: bytes) -> tuple[int, int, np.ndarray] | None:
-    """REAL decode of a lossless WebP: walks the RIFF chunks (handles
-    both a bare VP8L file and a VP8X extended container wrapping one)
-    and hands the VP8L chunk to ``_vp8l.decode_vp8l_chunk``. Lossy VP8
-    has no chunk here (or the decode declines) → None, and the caller
-    falls back to TRUE header dims + stub features."""
-    if len(payload) < 12 or payload[:4] != b"RIFF" or payload[8:12] != b"WEBP":
-        return None
-    pos = 12
-    while pos + 8 <= len(payload):
-        tag = payload[pos : pos + 4]
-        (size,) = struct.unpack_from("<I", payload, pos + 4)
-        data = payload[pos + 8 : pos + 8 + size]
-        if len(data) < size:
-            return None
-        if tag == b"VP8L":
-            from ._vp8l import decode_vp8l_chunk
-
-            out = decode_vp8l_chunk(bytes(data))
-            if out is None:
-                return None
-            w, h, rgb = out
-            return w, h, _pixel_features(rgb, w, h)
-        pos += 8 + size + (size & 1)
-    return None
-
-
-def decode_image(payload: bytes) -> tuple[int, int, np.ndarray]:
-    """Dispatch: real BMP/PPM/PNG/JPEG (baseline + progressive) /
-    lossless-WebP (VP8L) decode when the bytes are one; lossy WebP and
-    declined JPEG variants get TRUE header dimensions with stubbed
-    pixel features; fully deterministic stub otherwise (garbage,
-    truncation)."""
-    out = _decode_bmp(payload)
-    if out is None:
-        out = _decode_ppm(payload)
-    if out is None:
-        out = _decode_png(payload)
-    if out is None:
-        out = _decode_jpeg(payload)
-    if out is None:
-        out = _decode_webp(payload)
-    if out is not None:
-        return out
-    dims = _header_dims(payload)
-    if dims is not None:
-        _, _, feat = _decode_image_stub(payload)
-        return dims[0], dims[1], feat
-    return _decode_image_stub(payload)
+        dims = None
+    # the width and height columns are int32
+    if dims is not None and 0 < dims[0] < 1 << 31 and 0 < dims[1] < 1 << 31:
+        return dims
+    width, height, _ = _decode_image_stub(payload)
+    return width, height
 
 
 def image_features(media: DataFrame, ref_col: str = "media_ref", payload_col: str = "payload") -> DataFrame:
-    """media_ref + binary payload → typed image metadata + feature vector.
+    """media_ref + binary payload → typed image metadata + stub feature vector.
 
-    mapInPandas: one Arrow batch in, one out; decode is vectorized over the
-    batch (list comprehension over bytes objects — the decode itself is the
-    unavoidable Python, everything around it is Arrow)."""
+    mapInPandas: one Arrow batch in, one out; only the header parse and
+    the sniff run in Python, everything around them is Arrow."""
     from ..functions.sniff import _sniff_one
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             payloads = pdf[payload_col]
-            decoded = [decode_image(b if b is not None else b"") for b in payloads]
+            data = [b if b is not None else b"" for b in payloads]
+            dims = [image_dims(b) for b in data]
             yield pd.DataFrame(
                 {
                     "media_ref": pdf[ref_col],
                     "mime": [_sniff_one(b) for b in payloads],
-                    "width": [d[0] for d in decoded],
-                    "height": [d[1] for d in decoded],
-                    "n_bytes": [len(b) if b is not None else 0 for b in payloads],
-                    "feat": [d[2] for d in decoded],
+                    "width": [d[0] for d in dims],
+                    "height": [d[1] for d in dims],
+                    "n_bytes": [len(b) for b in data],
+                    "feat": [_decode_image_stub(b)[2] for b in data],
                 }
             )
 
     return media.mapInPandas(gen, IMAGE_FEATURES_SCHEMA)
-
-
-def resize_images(media: DataFrame, max_side: int = 256,
-                  ref_col: str = "media_ref", payload_col: str = "payload") -> DataFrame:
-    """Resize stub: production would decode → thumbnail → re-encode; the
-    deterministic fake truncates the payload proportionally so output sizes
-    are testable. Plumbing (schema, batch iteration) is the real pattern."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_payload = [
-                (b[: max(1, len(b) * max_side // 2048)] if b else b"")
-                for b in pdf[payload_col]
-            ]
-            yield pd.DataFrame({"media_ref": pdf[ref_col], "resized": out_payload})
-
-    return media.mapInPandas(gen, "media_ref string, resized binary")
-
-
-def sample_frames(media: DataFrame, every_n: int = 10,
-                  ref_col: str = "media_ref", payload_col: str = "payload") -> DataFrame:
-    """Video frame-sampling stub: emits one fake 'frame' per every_n KB of
-    payload (production: pyav keyframe iteration). Demonstrates the 1→N
-    row fan-out shape under mapInPandas."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            refs, idxs, frames = [], [], []
-            for ref, b in zip(pdf[ref_col], pdf[payload_col]):
-                b = b or b""
-                n_frames = max(1, len(b) // (every_n * 1024))
-                for i in range(n_frames):
-                    refs.append(ref)
-                    idxs.append(i)
-                    frames.append(b[i * 16 : i * 16 + 16])
-            yield pd.DataFrame({"media_ref": refs, "frame_idx": idxs, "frame": frames})
-
-    return media.mapInPandas(gen, FRAME_SAMPLE_SCHEMA)
 
 
 # a valid 54-byte header for a 4×4 24bpp BI_RGB BMP (stride 12, no pad):
@@ -863,8 +150,7 @@ _BMP_4X4_HEADER = (
 # from the media_ref: signature + IHDR (with true CRC), a level-0
 # (stored-block) zlib prefix for the 52-byte filtered scanline payload,
 # and IEND. The IDAT CRC is computed per row with F.crc32 column-side;
-# the adler32 trailer is a placeholder (not column-expressible) which
-# _decode_png deliberately does not verify.
+# the adler32 trailer is a placeholder (not column-expressible).
 _PNG_IHDR_DATA = struct.pack(">IIBBBBB", 4, 4, 8, 2, 0, 0, 0)
 _PNG_PREFIX = (
     b"\x89PNG\r\n\x1a\n"
@@ -880,10 +166,10 @@ _PNG_IEND = struct.pack(">I", 0) + b"IEND" + struct.pack(">I", binascii.crc32(b"
 def media_payloads_from_docs(docs: DataFrame) -> DataFrame:
     """Extract media spans from interleaved documents and synthesize their
     payload bytes deterministically from the media_ref (sandbox stand-in
-    for reading the payload store). One bucket in four is a REAL
-    uncompressed BMP whose pixels derive from the ref — exercising the
-    genuine decode path; the rest carry compressed-format magics that
-    reach the documented stub."""
+    for reading the payload store). The PNG and BMP buckets are well-formed
+    4×4 images whose pixels derive from the ref, so ``image_dims`` reads
+    their true headers; the JPEG and WebP buckets carry only the magic
+    bytes and fall back to the stub's dimensions."""
     media = docs.select(F.explode("spans").alias("span")).filter(
         F.col("span.kind") == "media"
     )

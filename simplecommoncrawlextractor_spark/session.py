@@ -28,11 +28,12 @@ def get_spark(
 ) -> SparkSession:
     """Create (or get) a SparkSession with engine defaults.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (driver contract);
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]``,
+    or to one thread per CPU this process may run on when that is unset;
     pass ``local[8]`` vs ``local[32]`` to evidence scaling efficiency.
     """
     if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+        cpus = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
         master = f"local[{cpus}]"
     builder = (
         SparkSession.builder.appName(app_name)

@@ -16,8 +16,6 @@ from simplecommoncrawlextractor_spark.operators.extraction import (
 from simplecommoncrawlextractor_spark.operators.multimodal import (
     image_features,
     media_payloads_from_docs,
-    resize_images,
-    sample_frames,
 )
 from simplecommoncrawlextractor_spark.sources import interleaved_documents, read_cdx
 
@@ -98,15 +96,12 @@ def test_multimodal_plumbing(spark, sf_dir):
     for r in frows:
         assert len(r["feat"]) == 8
         if r["mime"] in ("image/bmp", "image/png"):
-            # the REAL decoders read true dimensions from the header
             assert (r["width"], r["height"]) == (4, 4)
         else:
             assert 64 <= r["width"] <= 2048  # stub-derived (jpeg/webp)
-    # determinism of decode (real + stub paths)
+    # determinism (header and stub paths)
     again = image_features(media).collect()
     assert sorted(map(str, frows)) == sorted(map(str, again))
-    assert resize_images(media).count() == n
-    assert sample_frames(media).count() >= n
 
 
 def test_cdx_source_roundtrip(spark, tmp_path):

@@ -1,525 +1,106 @@
-"""Real BMP/PPM decoders: true dimensions and pixel statistics, fallback
-to the documented stub for anything else."""
+"""Image header dimensions (BMP, PNG, PPM, WebP, JPEG), fallback to the
+documented stub for anything else, bounded handling of hostile payloads,
+and the pinned gate rows."""
 
 from __future__ import annotations
 
+import binascii
+import hashlib
+import os
 import struct
+import time
+import zlib
 
 import numpy as np
+import pytest
 
 from simplecommoncrawlextractor_spark.functions.sniff import _sniff_one
 from simplecommoncrawlextractor_spark.operators.multimodal import (
     _decode_image_stub,
-    decode_image,
+    image_dims,
 )
 
+_PNG_SIG = b"\x89PNG\r\n\x1a\n"
 
-def _make_bmp(width, height, px_rgb, bpp=24, top_down=False):
-    """Build an uncompressed BI_RGB BMP from an (h, w, 3) RGB array."""
-    step = bpp // 8
-    stride = ((width * step) + 3) & ~3
+
+def _make_bmp(width, height, bpp=24, top_down=False, hdr_size=40):
+    """An uncompressed BI_RGB BMP of mid-gray pixels."""
+    stride = ((width * bpp // 8) + 3) & ~3
+    body = b"\x7f" * stride * height
     h_field = -height if top_down else height
-    rows = px_rgb if top_down else px_rgb[::-1]
-    body = b""
-    for r in rows:
-        line = b""
-        for p in r:
-            bgr = bytes([p[2], p[1], p[0]])
-            line += bgr + (b"\xff" if bpp == 32 else b"")
-        body += line.ljust(stride, b"\x00")
     hdr = b"BM" + struct.pack("<IHHI", 54 + len(body), 0, 0, 54)
-    hdr += struct.pack("<IiiHHIIiiII", 40, width, h_field, 1, bpp, 0, len(body), 0, 0, 0, 0)
+    hdr += struct.pack("<IiiHHIIiiII", hdr_size, width, h_field, 1, bpp, 0, len(body), 0, 0, 0, 0)
     return hdr + body
 
 
-def test_bmp_decode_true_pixels():
-    px = np.array(
-        [[[255, 0, 0], [0, 255, 0]],
-         [[0, 0, 255], [255, 255, 255]]], dtype=np.uint8
+def _chunk(tag, data):
+    return struct.pack(">I", len(data)) + tag + data + struct.pack(">I", binascii.crc32(tag + data))
+
+
+def _make_png(width, height):
+    """A real 8-bit RGB PNG: IHDR, one zlib IDAT of filter-0 scanlines, IEND."""
+    raw = (b"\x00" + b"\x7f" * 3 * width) * height
+    return (
+        _PNG_SIG + _chunk(b"IHDR", struct.pack(">IIBBBBB", width, height, 8, 2, 0, 0, 0))
+        + _chunk(b"IDAT", zlib.compress(raw)) + _chunk(b"IEND", b"")
     )
+
+
+def _stub_dims(payload):
+    w, h, _ = _decode_image_stub(payload)
+    return w, h
+
+
+def test_bmp_header_dims():
     for top_down in (False, True):
         for bpp in (24, 32):
-            payload = _make_bmp(2, 2, px, bpp=bpp, top_down=top_down)
-            w, h, feat = decode_image(payload)
-            assert (w, h) == (2, 2)
-            # channel means over the four pixels: 2/4 red on, etc.
-            assert np.allclose(feat[:3], [0.5, 0.5, 0.5], atol=1e-6)
-            assert feat[6] == 0.5  # aspect w/(w+h)
-    assert _sniff_one(_make_bmp(2, 2, px)) == "image/bmp"
+            assert image_dims(_make_bmp(3, 2, bpp=bpp, top_down=top_down)) == (3, 2)
+    # BITMAPV5HEADER (124 bytes) is larger than BITMAPINFOHEADER: still read
+    assert image_dims(_make_bmp(5, 7, hdr_size=124)) == (5, 7)
+    assert _sniff_one(_make_bmp(3, 2)) == "image/bmp"
+
+
+def test_png_header_dims():
+    assert image_dims(_make_png(9, 8)) == (9, 8)
+    assert image_dims(_make_png(1, 300)) == (1, 300)
+    assert _sniff_one(_make_png(9, 8)) == "image/png"
 
 
 def test_ppm_decode_with_comment():
-    body = bytes([10, 20, 30] * 6)
-    payload = b"P6\n# a comment\n3 2\n255\n" + body
-    w, h, feat = decode_image(payload)
-    assert (w, h) == (3, 2)
-    assert np.allclose(feat[:3], [10 / 255, 20 / 255, 30 / 255], atol=1e-6)
-    assert feat[3] == 0.0  # constant image -> zero gray std
+    payload = b"P6\n# a comment\n3 2\n255\n" + bytes([10, 20, 30] * 6)
+    assert image_dims(payload) == (3, 2)
+    # comments may sit between any two header fields
+    assert image_dims(b"P6 640\n# w above, h below\n480 # maxval next\n15\n") == (640, 480)
     assert _sniff_one(payload) == "image/x-portable-pixmap"
 
 
 def test_malformed_falls_back_to_stub():
+    png_ihdr = struct.pack(">IIBBBBB", 4, 4, 8, 2, 0, 0, 0)
     for junk in (
-        b"BMshort",                        # truncated header
-        b"BM" + b"\x00" * 60,              # zero width
-        b"P6 3 2 255",                     # ppm without pixel data
-        b"\x89PNG\r\n\x1a\npretend",       # compressed format -> stub
         b"",
+        b"BMshort",                                    # truncated header
+        b"BM" + b"\x00" * 60,                          # all-zero header
+        _make_bmp(0, 2),                               # zero width
+        _make_bmp(2, 0),                               # zero height
+        _make_bmp(-2, 2),                              # negative width
+        _make_bmp(2, 2, hdr_size=12),                  # BITMAPCOREHEADER (< 40)
+        b"P6 3 2 255",                                 # no byte after maxval
+        b"P6\n3\n255\n" + b"\x00" * 9,                 # missing height
+        b"P6\n3 x 255\n",                              # non-numeric height
+        _PNG_SIG + b"pretend",                         # no chunk at all
+        _PNG_SIG + struct.pack(">I", 13) + b"IHDR" + png_ihdr[:4],  # truncated IHDR
+        _PNG_SIG + _chunk(b"IDAT", png_ihdr),          # wrong first chunk tag
+        _PNG_SIG + _chunk(b"IHDR", struct.pack(">IIBBBBB", 0, 4, 8, 2, 0, 0, 0)),
+        _PNG_SIG + _chunk(b"IHDR", struct.pack(">IIBBBBB", 1 << 31, 4, 8, 2, 0, 0, 0)),
+        b"RIFF1234WEBPVP8X\x0a\x00\x00\x00\x00",       # VP8X shorter than its canvas
+        b"\xff\xd8\xff\xe0\x00\x10JFIF\x00",           # JPEG without a frame header
     ):
-        gw, gh, gf = decode_image(junk)
-        sw, sh, sf = _decode_image_stub(junk)
-        assert (gw, gh) == (sw, sh) and np.array_equal(gf, sf)
-
-
-def test_bmp_compressed_or_weird_bpp_rejected():
-    px = np.zeros((2, 2, 3), dtype=np.uint8)
-    payload = bytearray(_make_bmp(2, 2, px))
-    struct.pack_into("<I", payload, 30, 1)  # BI_RLE8 compression
-    w, _, _ = decode_image(bytes(payload))
-    assert w == _decode_image_stub(bytes(payload))[0]
-
-
-def test_ppm_maxval_below_255_normalizes_correctly():
-    """A P6 with maxval 15 must yield the SAME normalized statistics as
-    the equivalent maxval-255 image — samples are scaled by the declared
-    maxval, not assumed 8-bit full-range."""
-    body15 = bytes([15, 0, 0] * 4)  # pure red at maxval 15
-    w, h, feat = decode_image(b"P6\n2 2\n15\n" + body15)
-    assert (w, h) == (2, 2)
-    assert np.allclose(feat[:3], [1.0, 0.0, 0.0], atol=1e-6)
-    body255 = bytes([255, 0, 0] * 4)
-    _, _, feat255 = decode_image(b"P6\n2 2\n255\n" + body255)
-    assert np.allclose(feat, feat255, atol=1e-6)
-
-
-def _make_png(px, channels=3, filters=None, level=6):
-    """Build a REAL PNG (proper zlib stream + CRCs) from an (h, w, c)
-    uint8 array, optionally forcing a filter type per scanline."""
-    import binascii
-    import struct as st
-    import zlib
-
-    h, w, c = px.shape
-    filters = filters or [0] * h
-    raw = bytearray()
-    prev = np.zeros(w * c, dtype=np.int32)
-    for r in range(h):
-        line = px[r].reshape(-1).astype(np.int32)
-        f = filters[r]
-        raw.append(f)
-        enc = np.empty(w * c, dtype=np.int32)
-        for i in range(w * c):
-            a = int(line[i - c]) if i >= c else 0
-            b = int(prev[i])
-            cc = int(prev[i - c]) if i >= c else 0
-            if f == 0:
-                enc[i] = line[i]
-            elif f == 1:
-                enc[i] = line[i] - a
-            elif f == 2:
-                enc[i] = line[i] - b
-            elif f == 3:
-                enc[i] = line[i] - ((a + b) >> 1)
-            else:
-                pp = a + b - cc
-                pa, pb, pc2 = abs(pp - a), abs(pp - b), abs(pp - cc)
-                pred = a if (pa <= pb and pa <= pc2) else (b if pb <= pc2 else cc)
-                enc[i] = line[i] - pred
-        raw.extend((enc & 0xFF).astype(np.uint8).tobytes())
-        prev = line
-    ct = 2 if c == 3 else 6
-
-    def chunk(t, d):
-        return st.pack(">I", len(d)) + t + d + st.pack(">I", binascii.crc32(t + d))
-
-    ihdr = st.pack(">IIBBBBB", w, h, 8, ct, 0, 0, 0)
-    return (
-        b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", zlib.compress(bytes(raw), level)) + chunk(b"IEND", b"")
-    )
-
-
-def test_png_decode_true_pixels_all_filters():
-    rng = np.random.RandomState(7)
-    px = rng.randint(0, 256, size=(5, 4, 3), dtype=np.uint8)
-    for filters in ([0] * 5, [1] * 5, [2] * 5, [3] * 5, [4] * 5, [0, 1, 2, 3, 4]):
-        payload = _make_png(px, filters=filters)
-        w, h, feat = decode_image(payload)
-        assert (w, h) == (4, 5), filters
-        f = px.reshape(-1, 3).astype(np.float32) / 255.0
-        assert np.allclose(feat[:3], f.mean(axis=0), atol=1e-6), filters
-    assert _sniff_one(_make_png(px)) == "image/png"
-
-
-def test_png_decode_rgba_drops_alpha():
-    rng = np.random.RandomState(11)
-    px = rng.randint(0, 256, size=(3, 3, 4), dtype=np.uint8)
-    w, h, feat = decode_image(_make_png(px, channels=4, filters=[4, 3, 1]))
-    assert (w, h) == (3, 3)
-    f = px.reshape(-1, 4)[:, :3].astype(np.float32) / 255.0
-    assert np.allclose(feat[:3], f.mean(axis=0), atol=1e-6)
-
-
-def test_png_corrupt_crc_or_exotic_falls_back_to_stub():
-    px = np.zeros((2, 2, 3), dtype=np.uint8)
-    good = bytearray(_make_png(px))
-    good[-5] ^= 0xFF  # corrupt IEND CRC... IEND is last: corrupt IDAT CRC instead
-    bad_crc = bytes(good)
-    # palette PNG header (color type 3) → stub
-    pal = bytearray(_make_png(px))
-    pal[8 + 8 + 9] = 3  # IHDR color-type byte
-    for junk in (bad_crc, bytes(pal)):
-        gw, gh, gf = decode_image(junk)
-        sw, sh, sf = _decode_image_stub(junk)
-        assert (gw, gh) == (sw, sh) and np.array_equal(gf, sf)
-
-
-def test_spark_synthesized_png_is_real(spark):
-    """The PNG bucket of media_payloads_from_docs must now decode for
-    real: 4×4, pixels equal to the first 48 ref bytes."""
-    from simplecommoncrawlextractor_spark.operators.multimodal import (
-        media_payloads_from_docs,
-    )
-    from simplecommoncrawlextractor_spark.sources import interleaved_documents
-
-    media = media_payloads_from_docs(
-        interleaved_documents(spark, "/root/testdata/sf0.001")
-    ).collect()
-    n_png = 0
-    for r in media:
-        b = bytes(r["payload"])
-        if not b.startswith(b"\x89PNG"):
-            continue
-        n_png += 1
-        w, h, feat = decode_image(b)
-        assert (w, h) == (4, 4)
-        exp = np.frombuffer((r["media_ref"] * 8).encode()[:48], dtype=np.uint8)
-        f = exp.reshape(-1, 3).astype(np.float32) / 255.0
-        assert np.allclose(feat[:3], f.mean(axis=0), atol=1e-6)
-    assert n_png > 0
-
-
-def test_png_zip_bomb_is_bounded():
-    """A 1×1 PNG whose IDAT inflates to 64 MB must decode with bounded
-    memory (max_length on the inflate) — the trailing inflate output past
-    the image's byte budget is simply never produced."""
-    import binascii
-    import struct as st
-    import tracemalloc
-    import zlib
-
-    def chunk(t, d):
-        return st.pack(">I", len(d)) + t + d + st.pack(">I", binascii.crc32(t + d))
-
-    ihdr = st.pack(">IIBBBBB", 1, 1, 8, 2, 0, 0, 0)
-    # 4 real bytes (filter 0 + one RGB pixel) then 64 MB of zero filler
-    idat = zlib.compress(b"\x00\x0a\x14\x1e" + b"\x00" * (64 << 20), 9)
-    payload = (
-        b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", idat) + chunk(b"IEND", b"")
-    )
-    assert len(payload) < 200_000  # the bomb compresses tiny
-    tracemalloc.start()
-    w, h, feat = decode_image(payload)
-    _, peak = tracemalloc.get_traced_memory()
-    tracemalloc.stop()
-    assert (w, h) == (1, 1)
-    assert np.allclose(feat[:3], [10 / 255, 20 / 255, 30 / 255], atol=1e-6)
-    assert peak < 8 << 20, f"inflate not bounded: peak {peak} bytes"
-
-
-def test_png_all_paeth_cpu_budget_falls_back_to_stub():
-    """Average/Paeth rows decode per byte in Python; a crafted all-Paeth
-    image past the 4 MiB slow-path budget must fall back to the stub
-    instead of burning tens of millions of interpreter iterations inside
-    an executor task. A small all-Paeth image still decodes for real."""
-    from simplecommoncrawlextractor_spark.operators.multimodal import (
-        _decode_image_stub,
-        _decode_png,
-    )
-
-    rng = np.random.default_rng(7)
-    small = rng.integers(0, 256, size=(8, 9, 3), dtype=np.uint8)
-    assert _decode_png(_make_png(small, filters=[4] * 8)) is not None
-
-    # 1100 RGBA rows x stride 4096 = ~4.5 MiB of filter-4 scanlines > 4 MiB.
-    # All-zero pixels Paeth-filter to all-zero bytes, so the IDAT is built
-    # directly (filter byte 4 + zero scanline per row) — same wire bytes
-    # _make_png would emit, without its per-byte encoding loop.
-    import binascii
-    import struct as st
-    import zlib
-
-    def chunk(t, d):
-        return st.pack(">I", len(d)) + t + d + st.pack(">I", binascii.crc32(t + d))
-
-    stride, rows = 1024 * 4, 1100
-    raw = (b"\x04" + b"\x00" * stride) * rows
-    payload = (
-        b"\x89PNG\r\n\x1a\n"
-        + chunk(b"IHDR", st.pack(">IIBBBBB", 1024, rows, 8, 6, 0, 0, 0))
-        + chunk(b"IDAT", zlib.compress(raw, 1))
-        + chunk(b"IEND", b"")
-    )
-    assert _decode_png(payload) is None  # budget tripped, not decoded
-    w, h, feat = decode_image(payload)  # dispatcher lands on the stub
-    sw, sh, sfeat = _decode_image_stub(payload)
-    assert (w, h) == (sw, sh) and np.allclose(feat, sfeat)
-
-
-# ---------------------------------------------------------------------------
-# baseline JPEG roundtrip: a test-side SOF0 encoder (independent zigzag
-# literal, simple canonical Huffman tables) feeds the production decoder
-# ---------------------------------------------------------------------------
-
-_ZZ = [  # independent copy of the T.81 zigzag order (cross-checks the
-    0, 1, 8, 16, 9, 2, 3, 10,          # decoder's constant)
-    17, 24, 32, 25, 18, 11, 4, 5,
-    12, 19, 26, 33, 40, 48, 41, 34,
-    27, 20, 13, 6, 7, 14, 21, 28,
-    35, 42, 49, 56, 57, 50, 43, 36,
-    29, 22, 15, 23, 30, 37, 44, 51,
-    58, 59, 52, 45, 38, 31, 39, 46,
-    53, 60, 61, 54, 47, 55, 62, 63,
-]
-
-
-class _BitWriter:
-    def __init__(self):
-        self.out = bytearray()
-        self.acc = 0
-        self.nbits = 0
-
-    def put(self, value, nbits):
-        for i in range(nbits - 1, -1, -1):
-            self.acc = (self.acc << 1) | ((value >> i) & 1)
-            self.nbits += 1
-            if self.nbits == 8:
-                self.out.append(self.acc)
-                if self.acc == 0xFF:
-                    self.out.append(0x00)  # byte stuffing
-                self.acc, self.nbits = 0, 0
-
-    def flush(self):
-        while self.nbits:
-            self.put(1, 1)  # pad with 1s
-        return bytes(self.out)
-
-
-def _cat_bits(v):
-    """JPEG magnitude category + appended bits for a signed value."""
-    s, a = 0, abs(v)
-    while a:
-        s += 1
-        a >>= 1
-    bits = v if v >= 0 else v + (1 << s) - 1
-    return s, bits
-
-
-def _make_jpeg(planes, w, h, restart_interval=0):
-    """Encode a baseline SOF0 JPEG from full-resolution component planes
-    [(plane_2d, hs, vs), ...] (1 = grayscale, 3 = YCbCr), all-ones quant
-    table, DC symbols as 4-bit identity codes, AC symbols 0..254 as 9-bit
-    identity codes — tiny, valid, and bit-exact to replay."""
-    import struct as st
-
-    C = np.array(
-        [
-            [
-                (np.sqrt(1 / 8) if u == 0 else np.sqrt(2 / 8))
-                * np.cos((2 * x + 1) * u * np.pi / 16)
-                for x in range(8)
-            ]
-            for u in range(8)
-        ]
-    )
-    hmax = max(hs for _, hs, _ in planes)
-    vmax = max(vs for _, _, vs in planes)
-    mcux, mcuy = -(-w // (8 * hmax)), -(-h // (8 * vmax))
-
-    comps = []
-    for plane, hs, vs in planes:
-        # downsample to the component's resolution by exact averaging
-        ph, pw = plane.shape
-        fy, fx = vmax // vs, hmax // hs
-        sub = plane[: ph - ph % fy or ph, : pw - pw % fx or pw]
-        sub = sub.reshape(sub.shape[0] // fy, fy, sub.shape[1] // fx, fx).mean(
-            axis=(1, 3)
-        )
-        # pad to the MCU block grid by edge replication
-        bw, bh = mcux * hs * 8, mcuy * vs * 8
-        padded = np.zeros((bh, bw))
-        padded[: sub.shape[0], : sub.shape[1]] = sub
-        if sub.shape[0] < bh:
-            padded[sub.shape[0] :, : sub.shape[1]] = sub[-1:, :]
-        if sub.shape[1] < bw:
-            padded[:, sub.shape[1] :] = padded[:, sub.shape[1] - 1 : sub.shape[1]]
-        comps.append({"plane": padded, "hs": hs, "vs": vs})
-
-    bw_ = _BitWriter()
-    body = bytearray()
-    preds = [0] * len(comps)
-    mcu_count = 0
-    rst_idx = 0
-
-    def encode_block(c, bx, by, ci):
-        block = c["plane"][by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] - 128.0
-        coef = np.round(C @ block @ C.T).astype(int)
-        zz = [int(coef.flat[_ZZ[k]]) for k in range(64)]
-        diff = zz[0] - preds[ci]
-        preds[ci] = zz[0]
-        s, bits = _cat_bits(diff)
-        bw_.put(s, 4)  # DC identity code
-        if s:
-            bw_.put(bits, s)
-        run = 0
-        last = max((k for k in range(1, 64) if zz[k]), default=0)
-        for k in range(1, 64):
-            if k > last:
-                bw_.put(0x00, 9)  # EOB
-                break
-            if zz[k] == 0:
-                run += 1
-                continue
-            while run > 15:
-                bw_.put(0xF0, 9)  # ZRL
-                run -= 16
-            s, bits = _cat_bits(zz[k])
-            bw_.put((run << 4) | s, 9)
-            bw_.put(bits, s)
-            run = 0
-
-    for my in range(mcuy):
-        for mx in range(mcux):
-            if restart_interval and mcu_count and mcu_count % restart_interval == 0:
-                body += bw_.flush()
-                body += bytes([0xFF, 0xD0 + (rst_idx % 8)])
-                rst_idx += 1
-                bw_.__init__()
-                preds[:] = [0] * len(comps)
-            for ci, c in enumerate(comps):
-                for by in range(c["vs"]):
-                    for bx in range(c["hs"]):
-                        encode_block(c, mx * c["hs"] + bx, my * c["vs"] + by, ci)
-            mcu_count += 1
-    body += bw_.flush()
-
-    def seg(marker, payload):
-        return bytes([0xFF, marker]) + st.pack(">H", len(payload) + 2) + payload
-
-    out = b"\xff\xd8"
-    out += seg(0xDB, bytes([0x00]) + bytes([1] * 64))  # DQT id 0, all ones
-    sof = bytes([8]) + st.pack(">HH", h, w) + bytes([len(comps)])
-    for i, c in enumerate(comps):
-        sof += bytes([i + 1, (c["hs"] << 4) | c["vs"], 0])
-    out += seg(0xC0, sof)
-    dc_counts = [0] * 16
-    dc_counts[3] = 12  # twelve 4-bit identity codes
-    out += seg(0xC4, bytes([0x00]) + bytes(dc_counts) + bytes(range(12)))
-    ac_counts = [0] * 16
-    ac_counts[8] = 255  # 255 nine-bit identity codes (symbols 0..254)
-    out += seg(0xC4, bytes([0x10]) + bytes(ac_counts) + bytes(range(255)))
-    if restart_interval:
-        out += seg(0xDD, st.pack(">H", restart_interval))
-    sos = bytes([len(comps)])
-    for i in range(len(comps)):
-        sos += bytes([i + 1, 0x00])
-    sos += bytes([0, 63, 0])
-    out += seg(0xDA, sos)
-    out += bytes(body)
-    out += b"\xff\xd9"
-    return out
-
-
-def _rgb_to_ycbcr(px):
-    r, g, b = px[..., 0], px[..., 1], px[..., 2]
-    y = 0.299 * r + 0.587 * g + 0.114 * b
-    cb = 128.0 - 0.168736 * r - 0.331264 * g + 0.5 * b
-    cr = 128.0 + 0.5 * r - 0.418688 * g - 0.081312 * b
-    return y, cb, cr
-
-
-def test_jpeg_grayscale_roundtrip_true_pixels():
-    from simplecommoncrawlextractor_spark.operators.multimodal import _decode_jpeg
-
-    rng = np.random.default_rng(11)
-    img = rng.integers(0, 256, size=(16, 24)).astype(np.float64)
-    payload = _make_jpeg([(img, 1, 1)], 24, 16)
-    out = _decode_jpeg(payload)
-    assert out is not None
-    w, h, feat = out
-    assert (w, h) == (24, 16)
-    # q=1 quantization: reconstruction error is DCT rounding only (±2)
-    gray_mean = img.mean() / 255.0
-    assert abs(float(feat[0]) - gray_mean) < 0.01
-    assert abs(float(feat[1]) - gray_mean) < 0.01
-
-
-def test_jpeg_color_444_with_restarts_roundtrip():
-    from simplecommoncrawlextractor_spark.operators.multimodal import _decode_jpeg
-
-    rng = np.random.default_rng(12)
-    px = rng.integers(0, 256, size=(16, 16, 3)).astype(np.float64)
-    y, cb, cr = _rgb_to_ycbcr(px)
-    payload = _make_jpeg(
-        [(y, 1, 1), (cb, 1, 1), (cr, 1, 1)], 16, 16, restart_interval=2
-    )
-    out = _decode_jpeg(payload)
-    assert out is not None
-    w, h, feat = out
-    assert (w, h) == (16, 16)
-    want = px.reshape(-1, 3).mean(axis=0) / 255.0
-    for ch in range(3):
-        assert abs(float(feat[ch]) - want[ch]) < 0.02, (ch, feat[:3], want)
-
-
-def test_jpeg_420_subsampled_uniform_chroma():
-    """4:2:0: random luma + constant chroma, so the 2x2 chroma averaging
-    is exact and the roundtrip error stays at DCT-rounding scale."""
-    from simplecommoncrawlextractor_spark.operators.multimodal import _decode_jpeg
-
-    rng = np.random.default_rng(13)
-    y = rng.integers(40, 216, size=(24, 32)).astype(np.float64)
-    cb = np.full((24, 32), 100.0)
-    cr = np.full((24, 32), 160.0)
-    payload = _make_jpeg([(y, 2, 2), (cb, 1, 1), (cr, 1, 1)], 32, 24)
-    out = _decode_jpeg(payload)
-    assert out is not None
-    w, h, feat = out
-    assert (w, h) == (32, 24)
-    # reconstruct expected RGB means from the YCbCr definition
-    yv, cbv, crv = y.mean(), 100.0, 160.0
-    r = yv + 1.402 * (crv - 128)
-    g = yv - 0.344136 * (cbv - 128) - 0.714136 * (crv - 128)
-    b = yv + 1.772 * (cbv - 128)
-    want = np.clip(np.array([r, g, b]), 0, 255) / 255.0
-    for ch in range(3):
-        assert abs(float(feat[ch]) - want[ch]) < 0.02, (ch, feat[:3], want)
-
-
-def test_jpeg_rejects_progressive_and_oversize():
-    from simplecommoncrawlextractor_spark.operators.multimodal import _decode_jpeg
-
-    img = np.full((8, 8), 99.0)
-    good = bytearray(_make_jpeg([(img, 1, 1)], 8, 8))
-    # flip SOF0 (0xC0) to SOF2 (0xC2): the sequential full-band scan
-    # (Ss=0, Se=63) is ILLEGAL inside a progressive frame (T.81: DC
-    # scans carry no AC band) — the scan-header validation must decline
-    i = bytes(good).find(b"\xff\xc0")
-    prog = bytes(good[:i]) + b"\xff\xc2" + bytes(good[i + 2 :])
-    assert _decode_jpeg(prog) is None
-    # declared dimensions past the 2^20-pixel CPU budget: decline
-    j = i + 2 + 2 + 1  # marker + len + precision
-    big = bytearray(good)
-    big[j : j + 4] = (2048).to_bytes(2, "big") + (2048).to_bytes(2, "big")
-    assert _decode_jpeg(bytes(big)) is None
+        assert image_dims(junk) == _stub_dims(junk), junk
 
 
 def test_jpeg_truncated_segments_fall_back_to_stub():
     """Malformed/truncated marker streams (routine in crawl data) must
-    decline to the stub — never raise out of the Arrow batch."""
-    from simplecommoncrawlextractor_spark.operators.multimodal import _decode_jpeg
-
+    fall back to the stub, never raise out of the Arrow batch."""
     for junk in (
         b"\xff\xd8\xff\xc0\x00\x04\x08\x00",        # short SOF0
         b"\xff\xd8\xff\xdb\x00\x05\x00\x01",        # short DQT
@@ -527,349 +108,237 @@ def test_jpeg_truncated_segments_fall_back_to_stub():
         b"\xff\xd8\xff\xdd\x00\x02",                # empty DRI
         b"\xff\xd8\xff\xda\x00\x02",                # empty SOS
     ):
-        assert _decode_jpeg(junk) is None
-        gw, gh, gf = decode_image(junk)
-        sw, sh, sf = _decode_image_stub(junk)
-        assert (gw, gh) == (sw, sh) and np.array_equal(gf, sf)
+        assert image_dims(junk) == _stub_dims(junk), junk
     # a stream whose SOF header IS readable reports the declared dims
-    # (the header-dims tier) with stub features — strictly more truthful
-    # than the hash fake, still never a crash
     short_comps = b"\xff\xd8\xff\xc0\x00\x0b\x08\x00\x10\x00\x10\x03\x01"
-    assert _decode_jpeg(short_comps) is None
-    gw, gh, gf = decode_image(short_comps)
-    assert (gw, gh) == (16, 16)
-    assert np.array_equal(gf, _decode_image_stub(short_comps)[2])
+    assert image_dims(short_comps) == (16, 16)
 
 
 def test_header_dims_webp_and_progressive_jpeg():
     """WEBP (VP8/VP8L/VP8X) and progressive-JPEG payloads report TRUE
-    dimensions from their headers while pixel features stay stubbed."""
-    import struct as st
-
-    from simplecommoncrawlextractor_spark.operators.multimodal import (
-        _decode_image_stub,
-    )
-
+    dimensions from their headers."""
     # VP8 lossy: RIFF + 'VP8 ' chunk, frame tag, 9D 01 2A, 14-bit w/h
     vp8_payload = (b"\x00\x00\x00" + b"\x9d\x01\x2a"
-                   + st.pack("<HH", 320, 240) + b"\x00" * 8)
-    vp8 = (b"RIFF" + st.pack("<I", 4 + 8 + len(vp8_payload)) + b"WEBP"
-           + b"VP8 " + st.pack("<I", len(vp8_payload)) + vp8_payload)
-    w, h, feat = decode_image(vp8)
-    assert (w, h) == (320, 240)
-    assert np.array_equal(feat, _decode_image_stub(vp8)[2])
+                   + struct.pack("<HH", 320, 240) + b"\x00" * 8)
+    vp8 = (b"RIFF" + struct.pack("<I", 4 + 8 + len(vp8_payload)) + b"WEBP"
+           + b"VP8 " + struct.pack("<I", len(vp8_payload)) + vp8_payload)
+    assert image_dims(vp8) == (320, 240)
 
     # VP8L lossless: signature 0x2f then 14+14 bit dims-1 little-endian
     bits = (127 - 1) | ((63 - 1) << 14)
-    vp8l_payload = b"\x2f" + st.pack("<I", bits) + b"\x00" * 4
-    vp8l = (b"RIFF" + st.pack("<I", 4 + 8 + len(vp8l_payload)) + b"WEBP"
-            + b"VP8L" + st.pack("<I", len(vp8l_payload)) + vp8l_payload)
-    w, h, _ = decode_image(vp8l)
-    assert (w, h) == (127, 63)
+    vp8l_payload = b"\x2f" + struct.pack("<I", bits) + b"\x00" * 4
+    vp8l = (b"RIFF" + struct.pack("<I", 4 + 8 + len(vp8l_payload)) + b"WEBP"
+            + b"VP8L" + struct.pack("<I", len(vp8l_payload)) + vp8l_payload)
+    assert image_dims(vp8l) == (127, 63)
 
     # VP8X extended: 24-bit canvas dims minus one
     vp8x_payload = (b"\x00" + b"\x00\x00\x00"
                     + (799).to_bytes(3, "little") + (599).to_bytes(3, "little"))
-    vp8x = (b"RIFF" + st.pack("<I", 4 + 8 + len(vp8x_payload)) + b"WEBP"
-            + b"VP8X" + st.pack("<I", len(vp8x_payload)) + vp8x_payload)
-    w, h, _ = decode_image(vp8x)
-    assert (w, h) == (800, 600)
+    vp8x = (b"RIFF" + struct.pack("<I", 4 + 8 + len(vp8x_payload)) + b"WEBP"
+            + b"VP8X" + struct.pack("<I", len(vp8x_payload)) + vp8x_payload)
+    assert image_dims(vp8x) == (800, 600)
 
-    # progressive JPEG (SOF2): _decode_jpeg declines, header dims win
+    # progressive JPEG (SOF2), preceded by 0xFF fill bytes
     def seg(marker, payload):
-        return bytes([0xFF, marker]) + st.pack(">H", len(payload) + 2) + payload
+        return bytes([0xFF, marker]) + struct.pack(">H", len(payload) + 2) + payload
 
     prog = (b"\xff\xd8"
             + seg(0xE0, b"JFIF\x00")
-            + seg(0xC2, st.pack(">BHHB", 8, 77, 55, 3) + b"\x01\x11\x00\x02\x11\x00\x03\x11\x00")
+            + b"\xff\xff"
+            + seg(0xC2, struct.pack(">BHHB", 8, 77, 55, 3) + b"\x01\x11\x00\x02\x11\x00\x03\x11\x00")
             + b"\xff\xd9")
-    w, h, feat = decode_image(prog)
-    assert (w, h) == (55, 77)
-    assert np.array_equal(feat, _decode_image_stub(prog)[2])
+    assert image_dims(prog) == (55, 77)
 
 
-# ---------------------------------------------------------------------------
-# progressive JPEG (SOF2): a test-side encoder emitting spectral-selection +
-# successive-approximation scans (DC first/refine, AC first/refine with
-# positionally-attached correction bits) feeds the production decoder
-# ---------------------------------------------------------------------------
+def _assert_header_dims_and_stub_feat(spark, cases, mime):
+    """Run ``image_features`` over the payloads of ``cases`` (pairs of
+    payload and expected dims): each row reports the header dims, the
+    sniffed ``mime`` and the stub ``feat``, and no payload fails the batch."""
+    from simplecommoncrawlextractor_spark.operators.multimodal import image_features
 
-
-def _make_progressive_jpeg(planes, w, h):
-    """Encode an SOF2 progressive JPEG from full-resolution component
-    planes [(plane_2d, hs, vs), ...] with the same all-ones quant table
-    and identity Huffman codes as ``_make_jpeg``, in six scans:
-    interleaved DC first (Al=1), DC refine (Al=0), then per component
-    AC first (Ss=1..63, Al=1) and AC refine (Al=0). Point transforms
-    follow T.81: DC uses arithmetic shift, AC truncates toward zero —
-    so first-pass value ×2 plus the refinement bit reconstructs every
-    coefficient exactly and the decoded pixels must equal the baseline
-    encoding's."""
-    import struct as st
-
-    C = np.array(
-        [
-            [
-                (np.sqrt(1 / 8) if u == 0 else np.sqrt(2 / 8))
-                * np.cos((2 * x + 1) * u * np.pi / 16)
-                for x in range(8)
-            ]
-            for u in range(8)
-        ]
+    df = spark.createDataFrame(
+        [(str(i), p) for i, (p, _) in enumerate(cases)], "media_ref string, payload binary"
     )
-    hmax = max(hs for _, hs, _ in planes)
-    vmax = max(vs for _, _, vs in planes)
-    mcux, mcuy = -(-w // (8 * hmax)), -(-h // (8 * vmax))
-
-    comps = []
-    for plane, hs, vs in planes:
-        ph, pw = plane.shape
-        fy, fx = vmax // vs, hmax // hs
-        sub = plane[: ph - ph % fy or ph, : pw - pw % fx or pw]
-        sub = sub.reshape(sub.shape[0] // fy, fy, sub.shape[1] // fx, fx).mean(
-            axis=(1, 3)
-        )
-        bw, bh = mcux * hs * 8, mcuy * vs * 8
-        padded = np.zeros((bh, bw))
-        padded[: sub.shape[0], : sub.shape[1]] = sub
-        if sub.shape[0] < bh:
-            padded[sub.shape[0] :, : sub.shape[1]] = sub[-1:, :]
-        if sub.shape[1] < bw:
-            padded[:, sub.shape[1] :] = padded[:, sub.shape[1] - 1 : sub.shape[1]]
-        # zigzag coefficient blocks over the full MCU grid
-        zz = {}
-        for by in range(mcuy * vs):
-            for bx in range(mcux * hs):
-                block = padded[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] - 128.0
-                coef = np.round(C @ block @ C.T).astype(int)
-                zz[(by, bx)] = [int(coef.flat[_ZZ[k]]) for k in range(64)]
-        cw_px = -(-w * hs // hmax)           # ceil(w·hs / hmax)
-        ch_px = -(-h * vs // vmax)
-        cw = -(-cw_px // 8)                  # real (non-padded) block cols
-        ch = -(-ch_px // 8)
-        comps.append({"hs": hs, "vs": vs, "zz": zz, "cbw": cw, "cbh": ch})
-
-    def seg(marker, payload):
-        return bytes([0xFF, marker]) + st.pack(">H", len(payload) + 2) + payload
-
-    out = b"\xff\xd8"
-    out += seg(0xDB, bytes([0x00]) + bytes([1] * 64))
-    sof = bytes([8]) + st.pack(">HH", h, w) + bytes([len(comps)])
-    for i, c in enumerate(comps):
-        sof += bytes([i + 1, (c["hs"] << 4) | c["vs"], 0])
-    out += seg(0xC2, sof)  # SOF2 progressive
-    dc_counts = [0] * 16
-    dc_counts[3] = 12
-    out += seg(0xC4, bytes([0x00]) + bytes(dc_counts) + bytes(range(12)))
-    ac_counts = [0] * 16
-    ac_counts[8] = 255
-    out += seg(0xC4, bytes([0x10]) + bytes(ac_counts) + bytes(range(255)))
-
-    def sos_header(member_ids, ss, se, ah, al):
-        p = bytes([len(member_ids)])
-        for cid in member_ids:
-            p += bytes([cid, 0x00])
-        return seg(0xDA, p + bytes([ss, se, (ah << 4) | al]))
-
-    def mcu_block_order():
-        for my in range(mcuy):
-            for mx in range(mcux):
-                for ci, c in enumerate(comps):
-                    for by in range(c["vs"]):
-                        for bx in range(c["hs"]):
-                            yield ci, my * c["vs"] + by, mx * c["hs"] + bx
-
-    # scan 1: DC first, interleaved, Al=1 (DC point transform = arithmetic
-    # shift, so (v>>1)<<1 | refine-bit reconstructs exactly)
-    bw_ = _BitWriter()
-    preds = [0] * len(comps)
-    for ci, by, bx in mcu_block_order():
-        v = comps[ci]["zz"][(by, bx)][0] >> 1
-        s, bits = _cat_bits(v - preds[ci])
-        preds[ci] = v
-        bw_.put(s, 4)
-        if s:
-            bw_.put(bits, s)
-    out += sos_header(range(1, len(comps) + 1), 0, 0, 0, 1) + bw_.flush()
-
-    # scan 2: DC refine, Ah=1 Al=0 — one raw bit per block
-    bw_ = _BitWriter()
-    for ci, by, bx in mcu_block_order():
-        bw_.put(comps[ci]["zz"][(by, bx)][0] & 1, 1)
-    out += sos_header(range(1, len(comps) + 1), 0, 0, 1, 0) + bw_.flush()
-
-    for ci, c in enumerate(comps):
-        # AC first: Ss=1..63, Al=1, values truncated toward zero; one EOB
-        # (r=0) per block with a nonzero tail
-        bw_ = _BitWriter()
-        for by in range(c["cbh"]):
-            for bx in range(c["cbw"]):
-                zz = c["zz"][(by, bx)]
-                t = [int(v / 2) for v in zz]  # trunc toward zero
-                last = max((k for k in range(1, 64) if t[k]), default=0)
-                run = 0
-                for k in range(1, 64):
-                    if k > last:
-                        bw_.put(0x00, 9)  # EOB
-                        break
-                    if t[k] == 0:
-                        run += 1
-                        continue
-                    while run > 15:
-                        bw_.put(0xF0, 9)
-                        run -= 16
-                    s, bits = _cat_bits(t[k])
-                    bw_.put((run << 4) | s, 9)
-                    bw_.put(bits, s)
-                    run = 0
-        out += sos_header([ci + 1], 1, 63, 0, 1) + bw_.flush()
-
-    for ci, c in enumerate(comps):
-        # AC refine: Ah=1 Al=0. Correction bits attach POSITIONALLY to the
-        # symbol whose zero-run span covers them (what the T.81 decoder
-        # consumes while advancing); newly-nonzero = |coef| == 1.
-        bw_ = _BitWriter()
-        for by in range(c["cbh"]):
-            for bx in range(c["cbw"]):
-                zz = c["zz"][(by, bx)]
-                pending = []  # ("z",) zero-history | ("h", bit) history
-                for k in range(1, 64):
-                    a = abs(zz[k])
-                    if a == 0:
-                        pending.append(("z",))
-                    elif a > 1:
-                        pending.append(("h", a & 1))
-                    else:  # newly nonzero at this precision
-                        nzeros = sum(1 for e in pending if e[0] == "z")
-                        while nzeros > 15:
-                            bw_.put(0xF0, 9)  # ZRL: spans 16 zero slots
-                            zcnt = 0
-                            while zcnt < 16:
-                                e = pending.pop(0)
-                                if e[0] == "z":
-                                    zcnt += 1
-                                else:
-                                    bw_.put(e[1], 1)
-                            nzeros -= 16
-                        bw_.put((nzeros << 4) | 1, 9)
-                        bw_.put(1 if zz[k] > 0 else 0, 1)
-                        for e in pending:  # bits the advance pass consumes
-                            if e[0] == "h":
-                                bw_.put(e[1], 1)
-                        pending = []
-                if pending:
-                    bw_.put(0x00, 9)  # EOB: correction tail to Se
-                    for e in pending:
-                        if e[0] == "h":
-                            bw_.put(e[1], 1)
-        out += sos_header([ci + 1], 1, 63, 1, 0) + bw_.flush()
-
-    return out + b"\xff\xd9"
+    rows = sorted(image_features(df).collect(), key=lambda r: int(r["media_ref"]))
+    assert len(rows) == len(cases)
+    for (payload, dims), r in zip(cases, rows):
+        assert (r["width"], r["height"]) == dims
+        assert r["mime"] == mime
+        assert r["n_bytes"] == len(payload)
+        assert np.array_equal(np.asarray(r["feat"], dtype=np.float32), _decode_image_stub(payload)[2])
 
 
-def test_progressive_jpeg_grayscale_equals_baseline():
-    """Six-scan progressive encode of the same plane decodes to exactly
-    the pixels (feature vector) of the baseline encoding — every DC/AC
-    coefficient reconstructs bit-exactly through first+refine."""
-    from simplecommoncrawlextractor_spark.operators.multimodal import _decode_jpeg
-
-    rng = np.random.default_rng(21)
-    img = rng.integers(0, 256, size=(16, 24)).astype(np.float64)
-    base = _decode_jpeg(_make_jpeg([(img, 1, 1)], 24, 16))
-    prog = _decode_jpeg(_make_progressive_jpeg([(img, 1, 1)], 24, 16))
-    assert base is not None and prog is not None
-    assert (prog[0], prog[1]) == (24, 16)
-    assert np.array_equal(np.asarray(base[2]), np.asarray(prog[2]))
+def test_bmp_compressed_or_weird_bpp_rejected(spark):
+    """No BMP is pixel-decoded: an RLE8-compressed or a 7-bpp bitmap
+    reports its header dims with the stub feat."""
+    rle = bytearray(_make_bmp(2, 2))
+    struct.pack_into("<I", rle, 30, 1)  # BI_RLE8 compression
+    odd = bytearray(_make_bmp(2, 2))
+    struct.pack_into("<H", odd, 28, 7)  # 7 bits per pixel
+    _assert_header_dims_and_stub_feat(
+        spark, [(bytes(rle), (2, 2)), (bytes(odd), (2, 2))], "image/bmp"
+    )
 
 
-def test_progressive_jpeg_420_subsampled_color():
-    """4:2:0 progressive: interleaved DC scans over the MCU grid,
-    non-interleaved AC scans over each component's REAL block grid
-    (luma 3 block-cols vs the 4-wide padded store at w=24 — pins the
-    cbw/cbh traversal)."""
-    from simplecommoncrawlextractor_spark.operators.multimodal import _decode_jpeg
-
-    rng = np.random.default_rng(22)
-    y = rng.integers(40, 216, size=(16, 24)).astype(np.float64)
-    cb = np.full((16, 24), 100.0)
-    cr = np.full((16, 24), 160.0)
-    planes = [(y, 2, 2), (cb, 1, 1), (cr, 1, 1)]
-    out = _decode_jpeg(_make_progressive_jpeg(planes, 24, 16))
-    assert out is not None
-    w, h, feat = out
-    assert (w, h) == (24, 16)
-    yv, cbv, crv = y.mean(), 100.0, 160.0
-    r = yv + 1.402 * (crv - 128)
-    g = yv - 0.344136 * (cbv - 128) - 0.714136 * (crv - 128)
-    b = yv + 1.772 * (cbv - 128)
-    want = np.clip(np.array([r, g, b]), 0, 255) / 255.0
-    for chn in range(3):
-        assert abs(float(feat[chn]) - want[chn]) < 0.02, (chn, feat[:3], want)
+def test_png_corrupt_crc_or_exotic_falls_back_to_stub(spark):
+    """Only the IHDR is read: a corrupt IDAT CRC or a palette colour type
+    still reports the IHDR dims, and feat stays the stub."""
+    bad_crc = bytearray(_make_png(2, 2))
+    bad_crc[-13] ^= 0xFF  # last IDAT CRC byte (IEND is the final 12 bytes)
+    pal = bytearray(_make_png(2, 2))
+    pal[8 + 8 + 9] = 3  # IHDR colour-type byte
+    _assert_header_dims_and_stub_feat(
+        spark, [(bytes(bad_crc), (2, 2)), (bytes(pal), (2, 2))], "image/png"
+    )
 
 
-def test_progressive_jpeg_sparse_blocks_exercise_zrl_and_eob_refine():
-    """Sparse high-frequency content: long zero runs force ZRL spans and
-    EOB correction tails through both AC passes."""
-    from simplecommoncrawlextractor_spark.operators.multimodal import _decode_jpeg
+def test_png_zip_bomb_is_bounded():
+    """A 1×1 PNG whose IDAT inflates to 64 MB: its dims come from IHDR
+    and nothing is inflated, so memory stays bounded."""
+    import tracemalloc
 
-    img = np.full((8, 16), 128.0)
-    img[7, 7] = 131.0   # one high-frequency spike per block
-    img[3, 12] = 125.0
-    base = _decode_jpeg(_make_jpeg([(img, 1, 1)], 16, 8))
-    prog = _decode_jpeg(_make_progressive_jpeg([(img, 1, 1)], 16, 8))
-    assert base is not None and prog is not None
-    assert np.array_equal(np.asarray(base[2]), np.asarray(prog[2]))
+    # 4 real bytes (filter 0 + one RGB pixel) then 64 MB of zero filler
+    idat = zlib.compress(b"\x00\x0a\x14\x1e" + b"\x00" * (64 << 20), 9)
+    payload = (
+        _PNG_SIG + _chunk(b"IHDR", struct.pack(">IIBBBBB", 1, 1, 8, 2, 0, 0, 0))
+        + _chunk(b"IDAT", idat) + _chunk(b"IEND", b"")
+    )
+    assert len(payload) < 200_000  # the bomb compresses tiny
+    tracemalloc.start()
+    dims = image_dims(payload)
+    feat = _decode_image_stub(payload)[2]
+    _, peak = tracemalloc.get_traced_memory()
+    tracemalloc.stop()
+    assert dims == (1, 1)
+    assert feat.shape == (8,)
+    assert peak < 8 << 20, f"inflate not bounded: peak {peak} bytes"
 
 
-def test_jpeg_hostile_dc_size_category_declines():
-    """A DHT whose DC symbol is 62 (raw untrusted byte) would shift the
-    predictor past int32 — numpy wraps on 1.x and raises OverflowError on
-    2.x, escaping the old except tuple. The decoder must decline, never
-    crash (r5 review finding)."""
-    import struct as st
+def test_png_all_paeth_cpu_budget_falls_back_to_stub(spark):
+    """A 1024×1100 RGBA PNG of Paeth-filtered rows (~4.5 MiB of
+    scanlines) costs no per-byte Python work: the IHDR gives its dims
+    and feat is the stub."""
+    stride, rows = 1024 * 4, 1100
+    raw = (b"\x04" + b"\x00" * stride) * rows
+    payload = (
+        _PNG_SIG + _chunk(b"IHDR", struct.pack(">IIBBBBB", 1024, rows, 8, 6, 0, 0, 0))
+        + _chunk(b"IDAT", zlib.compress(raw, 1)) + _chunk(b"IEND", b"")
+    )
+    t0 = time.perf_counter()
+    assert image_dims(payload) == (1024, rows)
+    assert time.perf_counter() - t0 < 1.0
+    _assert_header_dims_and_stub_feat(spark, [(payload, (1024, rows))], "image/png")
 
-    from simplecommoncrawlextractor_spark.operators.multimodal import _decode_jpeg
 
-    def seg(marker, payload):
-        return bytes([0xFF, marker]) + st.pack(">H", len(payload) + 2) + payload
+def _seg(marker, payload):
+    return bytes([0xFF, marker]) + struct.pack(">H", len(payload) + 2) + payload
 
-    out = b"\xff\xd8"
-    out += seg(0xDB, bytes([0x00]) + bytes([1] * 64))
-    out += seg(0xC0, bytes([8]) + st.pack(">HH", 8, 8) + bytes([1, 1, 0x11, 0]))
+
+_DQT = _seg(0xDB, bytes([0x00]) + bytes([1] * 64))
+
+
+def _make_jpeg(sof_marker, width, height, scan=bytes([1, 1, 0x00, 0, 63, 0])):
+    """SOI, DQT, a one-component SOFn frame, a one-code DC table, one SOS
+    header with no entropy data, EOI."""
+    dc_counts = [1] + [0] * 15
+    return (
+        b"\xff\xd8" + _DQT
+        + _seg(sof_marker, bytes([8]) + struct.pack(">HH", height, width) + bytes([1, 1, 0x11, 0]))
+        + _seg(0xC4, bytes([0x00]) + bytes(dc_counts) + bytes([0]))
+        + _seg(0xDA, scan) + b"\xff\xd9"
+    )
+
+
+def test_jpeg_rejects_progressive_and_oversize(spark):
+    """Neither a progressive frame carrying a sequential full-band scan
+    (illegal under T.81) nor a 2048×2048 frame is decoded: both report
+    their SOFn dims with the stub feat."""
+    prog = _make_jpeg(0xC2, 8, 8)
+    big = _make_jpeg(0xC0, 2048, 2048)
+    _assert_header_dims_and_stub_feat(
+        spark, [(prog, (8, 8)), (big, (2048, 2048))], "image/jpeg"
+    )
+
+
+def test_jpeg_hostile_dc_size_category_declines(spark):
+    """A DHT whose DC symbol is 62 (a raw untrusted byte, far past the
+    legal size categories) is never interpreted: the frame reports its
+    SOF0 dims with the stub feat, and nothing raises."""
+    out = b"\xff\xd8" + _DQT
+    out += _seg(0xC0, bytes([8]) + struct.pack(">HH", 8, 8) + bytes([1, 1, 0x11, 0]))
     dc_counts = [0] * 16
     dc_counts[3] = 1  # one 4-bit code: 0b0000 -> symbol 62
-    out += seg(0xC4, bytes([0x00]) + bytes(dc_counts) + bytes([62]))
+    out += _seg(0xC4, bytes([0x00]) + bytes(dc_counts) + bytes([62]))
     ac_counts = [0] * 16
     ac_counts[8] = 255
-    out += seg(0xC4, bytes([0x10]) + bytes(ac_counts) + bytes(range(255)))
-    out += seg(0xDA, bytes([1, 1, 0x00, 0, 63, 0]))
+    out += _seg(0xC4, bytes([0x10]) + bytes(ac_counts) + bytes(range(255)))
+    out += _seg(0xDA, bytes([1, 1, 0x00, 0, 63, 0]))
     # entropy: DC code 0000 then 62 magnitude bits of 1s
     out += b"\x0f" + b"\xff\x00" * 8 + b"\xff\xd9"
-    assert _decode_jpeg(out) is None
+    _assert_header_dims_and_stub_feat(spark, [(out, (8, 8))], "image/jpeg")
 
 
-def test_jpeg_scan_stuffing_budget_declines():
-    """scans x pixels is the real CPU bound on untrusted progressive
-    payloads: 17 scans at 2^20 pixels crosses the 2^24 combined budget
-    and must be rejected up front (r5 review finding)."""
-    import time
-
-    import struct as st
-
-    from simplecommoncrawlextractor_spark.operators.multimodal import _decode_jpeg
-
-    def seg(marker, payload):
-        return bytes([0xFF, marker]) + st.pack(">H", len(payload) + 2) + payload
-
-    out = b"\xff\xd8"
-    out += seg(0xDB, bytes([0x00]) + bytes([1] * 64))
-    out += seg(0xC2, bytes([8]) + st.pack(">HH", 1024, 1024) + bytes([1, 1, 0x11, 0]))
+def test_jpeg_scan_stuffing_budget_declines(spark):
+    """17 DC scans over a 1024×1024 progressive frame cost nothing: the
+    header walk stops at the SOF2 frame, well inside a one-second budget."""
+    out = b"\xff\xd8" + _DQT
+    out += _seg(0xC2, bytes([8]) + struct.pack(">HH", 1024, 1024) + bytes([1, 1, 0x11, 0]))
     dc_counts = [0] * 16
     dc_counts[3] = 12
-    out += seg(0xC4, bytes([0x00]) + bytes(dc_counts) + bytes(range(12)))
+    out += _seg(0xC4, bytes([0x00]) + bytes(dc_counts) + bytes(range(12)))
     for _ in range(17):  # DC-first scans, empty entropy segments
-        out += seg(0xDA, bytes([1, 1, 0x00, 0, 0, 0]))
+        out += _seg(0xDA, bytes([1, 1, 0x00, 0, 0, 0]))
     out += b"\xff\xd9"
-    t0 = time.time()
-    assert _decode_jpeg(out) is None
-    assert time.time() - t0 < 1.0
+    t0 = time.perf_counter()
+    assert image_dims(out) == (1024, 1024)
+    assert time.perf_counter() - t0 < 1.0
+    _assert_header_dims_and_stub_feat(spark, [(out, (1024, 1024))], "image/jpeg")
+
+
+def test_spark_synthesized_png_is_real(spark, sf_dir):
+    """The PNG bucket of media_payloads_from_docs is a well-formed 4×4
+    PNG: its IHDR is read, and its IDAT inflates to four filter-0
+    scanlines holding the first 48 ref bytes."""
+    from simplecommoncrawlextractor_spark.operators.multimodal import (
+        media_payloads_from_docs,
+    )
+    from simplecommoncrawlextractor_spark.sources import interleaved_documents
+
+    media = media_payloads_from_docs(interleaved_documents(spark, sf_dir)).collect()
+    n_png = 0
+    for r in media:
+        b = bytes(r["payload"])
+        if not b.startswith(_PNG_SIG):
+            continue
+        n_png += 1
+        assert image_dims(b) == (4, 4)
+        (idat_len,) = struct.unpack_from(">I", b, 33)
+        assert b[37:41] == b"IDAT"
+        # raw inflate past the 2-byte zlib header: the adler32 trailer is a
+        # placeholder, so a checking zlib reader would reject the stream
+        raw = zlib.decompressobj(-15).decompress(b[43 : 41 + idat_len])
+        ref = (r["media_ref"] * 8).encode()[:48]
+        assert raw == b"".join(b"\x00" + ref[12 * i : 12 * i + 12] for i in range(4))
+    assert n_png > 0
+
+
+# (row count, sha256 of the sorted rows as tab-separated fields, one row
+# per line) of the multimodal_image_features gate query, recorded while
+# the dimensions still came from full pixel decoders
+_GATE_PINS = {
+    "sf0.001": (383, "334b770b6319ea70bbe345287053efbf2e96bee79212fb4d7df92a1527ccb605"),
+    "sf0.01": (383, "334b770b6319ea70bbe345287053efbf2e96bee79212fb4d7df92a1527ccb605"),
+    "sf0.1": (509, "ea49934837205208ea585b87d0f021881360a613ab506b89214fb639eceeccf7"),
+}
+
+
+def test_gate_rows_pinned(spark, sf_dir):
+    pin = _GATE_PINS.get(os.path.basename(os.path.normpath(sf_dir)))
+    if pin is None:
+        pytest.skip(f"no gate pin for {sf_dir}")
+    import __spark_entry__ as entry
+
+    q = entry.queries()["multimodal_image_features"]
+    rows = sorted(tuple(r) for r in q(spark, sf_dir).collect())
+    text = "\n".join("\t".join(map(str, r)) for r in rows)
+    assert (len(rows), hashlib.sha256(text.encode()).hexdigest()) == pin

@@ -114,11 +114,11 @@ def test_dedup_caps_no_join_branch_reevaluation(spark, sf_dir):
 
 
 def test_semantic_dedup_plan_no_cartesian_no_python(spark, sf_dir):
-    """SemDeDup plan audit: the k-means fan-out is a broadcast of K
-    centroids (bounded constant — BroadcastNestedLoop over 16 rows is the
-    intended shape, NOT a row×row cartesian), the pair stage is a
-    cluster-key equi-join, and no Python UDF appears anywhere (the whole
-    pipeline is JVM expressions over arrays)."""
+    """SemDeDup plan audit: no CartesianProduct (within-cluster pairs come
+    from one grouped pass per cluster key, never a row × row product) and
+    no per-row Python UDF node (no BatchEvalPython or ArrowEvalPython).
+    The Python that does run is batched: the k-means assignment is a
+    MapInPandas and the pair stage a FlatMapGroupsInPandas."""
     from simplecommoncrawlextractor_spark.operators.similarity import (
         semantic_near_dup_pairs,
     )
