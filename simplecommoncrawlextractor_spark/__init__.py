@@ -14,7 +14,7 @@ semantics Spark-first:
 - ``operators``  — the analytics mapper/reducer surface (counts, sampling,
   filters, joins, orderings), dedup family, similarity search,
   text analysis, politeness top-k.
-- ``plans``      — the URL frontier + fetch scheduler: bloom/cuckoo URL-seen
+- ``plans``      — the URL frontier + fetch scheduler: bloom URL-seen
   state, checkpointed iterative drain loop, simulated fetch, lineage metrics.
 - ``streaming``  — Structured Streaming (foreachBatch) drain around the same
   batch core.

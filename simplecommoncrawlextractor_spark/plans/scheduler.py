@@ -33,7 +33,7 @@ from .frontier import (
     dedup_by_hash,
     politeness_schedule,
 )
-from .state import SEEN_SCHEMA, BloomSeenSet, CuckooSeenSet, StateStore
+from .state import BLOOM_SCHEMA, SEEN_SCHEMA, BloomSeenSet, StateStore
 
 METRICS_SCHEMA = (
     "snapshot int, round int, phase string, partition_id int, rows long, "
@@ -90,42 +90,27 @@ class CrawlScheduler:
         and the resulting rules append to the persistent ``robots`` state
         table, so a resumed run keeps exactly the rules it had fetched.
 
-        ``seen_backend`` picks the URL-seen blob structure: ``"bloom"``
-        (OR-bits; deletes rebuild the touched buckets' blobs from the
-        exact rows) or ``"cuckoo"`` (stored fingerprints; deletes clear in
-        place, no rebuild — the north rule's delete-capable backend).
-        Probe OUTPUT is identical under both (suspects are confirmed
-        against the exact rows either way), so crawl order is backend-
-        independent; the choice is pinned into the store's manifest at
-        bootstrap and a resume with the other backend raises (the blob
-        table's bytes are only meaningful to their writer)."""
+        The URL-seen set is the partitioned bloom ``BloomSeenSet``;
+        ``seen_backend`` accepts only ``"bloom"``. A store whose manifest
+        pins another backend was written by an older build whose blob
+        table this one cannot read, so opening it raises."""
         self.spark = spark
         self.store = store
         self.host_budget = host_budget
         self.salt_k = salt_k
         self.round_seconds = round_seconds
-        backends = {"bloom": BloomSeenSet, "cuckoo": CuckooSeenSet}
-        if seen_backend not in backends:
+        if seen_backend != "bloom":
             raise ValueError(
-                f"seen_backend must be one of {sorted(backends)}, "
-                f"got {seen_backend!r}"
+                f"seen_backend must be 'bloom', got {seen_backend!r}"
             )
-        m = self.store.manifest()
-        pinned = m["meta"].get("seen_backend")
-        if pinned is None and "url_seen" in m["tables"]:
-            # legacy store bootstrapped before the pin existed: every
-            # pre-pin store wrote bloom blobs, so the missing key MEANS
-            # bloom — without this a cuckoo resume over bloom bytes
-            # passes the guard and dies mid-round on the schema mismatch
-            pinned = "bloom"
-        if pinned is not None and pinned != seen_backend:
+        pinned = self.store.manifest()["meta"].get("seen_backend", "bloom")
+        if pinned != "bloom":
             raise ValueError(
                 f"state store at {store.root} was bootstrapped with "
-                f"seen_backend={pinned!r}; resuming with {seen_backend!r} "
-                "would misread its blob table"
+                f"seen_backend={pinned!r}, which this build no longer "
+                "reads; re-bootstrap the store"
             )
-        self.seen_backend = seen_backend
-        self.seen = backends[seen_backend](n_buckets)
+        self.seen = BloomSeenSet(n_buckets)
         self.robots_rules = robots_rules
         self.auto_robots = auto_robots
 
@@ -266,10 +251,8 @@ class CrawlScheduler:
         return self.store.read(self.spark, "url_seen", SEEN_SCHEMA)
 
     def blooms(self) -> DataFrame:
-        """The per-bucket seen-set blobs (table name is historical — under
-        ``seen_backend="cuckoo"`` the rows are cuckoo fingerprint tables;
-        the schema follows the backend)."""
-        return self.store.read(self.spark, "blooms", self.seen.blob_schema)
+        """The per-bucket bloom blobs of the URL-seen set."""
+        return self.store.read(self.spark, "blooms", BLOOM_SCHEMA)
 
     def round_no(self) -> int:
         return int(self.store.manifest()["meta"].get("round", 0))
@@ -288,7 +271,7 @@ class CrawlScheduler:
                 "frontier": cand,
                 "url_seen": self.spark.createDataFrame([], SEEN_SCHEMA),
             },
-            meta={"round": 0, "seen_backend": self.seen_backend},
+            meta={"round": 0},
         )
 
     def _budget_table_from(self, rules: DataFrame | None) -> DataFrame | None:
@@ -351,9 +334,7 @@ class CrawlScheduler:
         # rewritten — the StateStore upsert commit re-references their
         # existing files. At the 10^10 design point this is the difference
         # between ~12 GB of blob writes per round and a few MB.
-        # merge_delta is the backend facade: bloom ORs bits then rebuilds
-        # overfull buckets; cuckoo inserts in place and rebuilds buckets
-        # the batch would push past the load factor.
+        # merge_delta ORs the new bits in, then rebuilds overfull buckets.
         touched = newly_seen.select("bucket").distinct()
         blooms_touched = blooms.join(F.broadcast(touched), "bucket", "left_semi")
         blooms_delta = self.seen.merge_delta(
@@ -489,13 +470,11 @@ class CrawlScheduler:
         fetches refetchable by deleting them from the URL-seen set (the
         reference deletes the payload file; existence IS its seen-bit).
 
-        This is the deletion path plain bloom filters can't do alone.
-        Under the bloom backend, exact rows are anti-joined out and only
-        the touched buckets' blobs rebuild (plans/state.py:delete); under
-        the cuckoo backend the victims' fingerprints clear IN PLACE — no
-        rebuild at all, the rebuild-free delete the north rule names.
-        Commits a full url_seen rewrite (deletes are rare; the per-round
-        hot path stays append-only)."""
+        This is the deletion path plain bloom filters can't do alone:
+        exact rows are anti-joined out and only the touched buckets' blobs
+        rebuild (plans/state.py:BloomSeenSet.delete). Commits a full
+        url_seen rewrite (deletes are rare; the per-round hot path stays
+        append-only)."""
         log = self.store.read(self.spark, "fetch_log", FETCH_LOG_SCHEMA)
         victims = (
             log.filter(
@@ -506,14 +485,11 @@ class CrawlScheduler:
             .filter(F.pmod(F.col("url_hash"), F.lit(1000)) < per_mille)
         )
         seen_rows = self.url_seen()
-        remaining, rebuilt = self.seen.delete_delta(
-            seen_rows, victims, self.blooms()
-        )
+        remaining, rebuilt = self.seen.delete(seen_rows, victims)
         # rebuilt covers only buckets that lost rows; the upsert commit
         # re-references every other bucket's existing blob file (a bucket
-        # emptied completely keeps its stale blob under bloom — FP-safe,
-        # the exact anti-join still confirms; under cuckoo the cleared
-        # table is the new truth)
+        # emptied completely keeps its stale blob — FP-safe, the exact
+        # anti-join still confirms)
         return self.store.commit(
             tables={"url_seen": remaining},
             upserts={"blooms": rebuilt},

@@ -16,14 +16,9 @@ Spark-first re-expression:
   skip the exact join entirely; bloom-positive rows are confirmed with a
   bucket-pruned left-anti join (false positives survive). Catalyst's runtime
   bloom join filter can't do this: it is per-query, ours persists across runs.
-- **deletes** (the cuckoo-filter role): exact rows make deletion trivial —
-  affected buckets are rewritten and ONLY their blobs rebuilt (bounded by
-  one bucket's cardinality). For rebuild-free deletes, ``CuckooSeenSet``
-  (bottom of this module) is the drop-in alternative the north rule names:
-  same bucket-blob shape and probe algebra, but delete() clears one stored
-  fingerprint per victim IN PLACE, and membership is provably independent
-  of insertion order / kick history (the partial-key involution), so any
-  task layout yields identical probe answers.
+- **deletes**: exact rows make deletion trivial — affected buckets are
+  rewritten and ONLY their blobs rebuilt (bounded by one bucket's
+  cardinality), the analog of RefetchedDeleter's file removals.
 - **snapshots**: every commit writes new table versions then atomically
   swaps ``manifest.json`` (os.replace). A killed run resumes from the last
   committed manifest — identical crawl ordering and seen-membership
@@ -91,14 +86,9 @@ def _test_blob(hashes: np.ndarray, bitmap: bytes, n_bits: int, n_hashes: int) ->
 class BloomSeenSet:
     """Partitioned bloom URL-seen set over (bucket, url_hash) exact rows.
 
-    Backend facade (shared with ``CuckooSeenSet`` so ``CrawlScheduler``
-    stays branch-free): ``blob_schema``, ``merge_delta``, ``delete_delta``,
-    ``probe`` — both backends confirm suspects against the exact rows, so
-    probe OUTPUT is identical regardless of blob kind; only the blob
-    maintenance algebra differs (bloom: OR-bits + rebuild-on-overfull /
-    rebuild-on-delete; cuckoo: slot insert + in-place fingerprint clear)."""
-
-    blob_schema = BLOOM_SCHEMA
+    The blobs only accelerate: every bloom hit is confirmed against the
+    exact rows, so probe output equals a plain anti-join. Blob upkeep is
+    OR-bits per round, rebuild-on-overfull and rebuild-on-delete."""
 
     def __init__(self, n_buckets: int = DEFAULT_N_BUCKETS):
         self.n_buckets = n_buckets
@@ -162,20 +152,40 @@ class BloomSeenSet:
         the round, not the lineage) is the one the engine already makes.
         Pass False when the caller has already persisted the batch.
         """
-        # the skeleton lives in _suspects_probe, shared with
-        # CuckooSeenSet so the two backends cannot drift: only the
-        # 16-byte (bucket, url_hash) pair crosses the Arrow boundary —
-        # never the full candidate row (at 10^10 scale the candidate
-        # payload is 10-50× wider than the hash)
+        if materialize:
+            candidates = candidates.localCheckpoint()
+        # only the 16-byte (bucket, url_hash) pair crosses the Arrow
+        # boundary — never the full candidate row (at 10^10 scale the
+        # candidate payload is 10-50× wider than the hash)
+        slim = self.bucketize(candidates).select("bucket", "url_hash")
 
-        def hits(row, hashes):
-            return _test_blob(
-                hashes, row["bitmap"], int(row["n_bits"]), int(row["n_hashes"])
+        def flag(key, cpdf: pd.DataFrame, bpdf: pd.DataFrame) -> pd.DataFrame:
+            if len(cpdf) == 0:
+                return pd.DataFrame(
+                    {"bucket": pd.Series([], dtype="int32"),
+                     "url_hash": pd.Series([], dtype="int64")}
+                )
+            hashes = cpdf["url_hash"].to_numpy(dtype=np.int64)
+            if len(bpdf) == 0:
+                hits = np.zeros(len(hashes), dtype=bool)
+            else:
+                row = bpdf.iloc[0]
+                hits = _test_blob(
+                    hashes, row["bitmap"], int(row["n_bits"]), int(row["n_hashes"])
+                )
+            return pd.DataFrame(
+                {"bucket": cpdf["bucket"][hits], "url_hash": cpdf["url_hash"][hits]}
             )
 
-        return _suspects_probe(
-            self, candidates, seen_rows, blooms, hits, materialize
+        suspects = (
+            slim.groupBy("bucket")
+            .cogroup(blooms.groupBy("bucket"))
+            .applyInPandas(flag, "bucket int, url_hash long")
         )
+        truly_seen = suspects.join(
+            seen_rows, on=["bucket", "url_hash"], how="left_semi"
+        ).select("url_hash")
+        return candidates.join(truly_seen, "url_hash", "left_anti")
 
     def merge_blooms(self, blooms: DataFrame, new_rows: DataFrame) -> DataFrame:
         """OR new hashes into existing blobs (cogrouped per bucket); grows a
@@ -238,15 +248,16 @@ class BloomSeenSet:
         return untouched.unionByName(rebuilt)
 
     def delete(self, seen_rows: DataFrame, victims: DataFrame) -> tuple[DataFrame, DataFrame]:
-        """The deletion path (cuckoo-filter role): remove ``victims``
-        (url_hash) from the seen set so they become refetchable — the
-        semantics of RefetchedDeleter (cc/RefetchedDeleter.java:37-43),
-        which deletes a percentage of truncated payloads from the repo.
+        """The deletion path: remove ``victims`` (url_hash) from the seen
+        set so they become refetchable — the semantics of RefetchedDeleter
+        (cc/RefetchedDeleter.java:37-43), which deletes a percentage of
+        truncated payloads from the repo.
 
         Bloom blobs can't unset bits; exact rows can. We anti-join the
         victims out and rebuild blobs ONLY for buckets that lost rows —
         bucket-local work, deterministic, no eviction cascades. Returns
-        (new_seen_rows, new_blooms) for the caller to commit."""
+        (remaining exact rows, rebuilt blobs for the touched buckets) for
+        the caller to commit."""
         v = self.bucketize(victims.select("url_hash")).select("bucket", "url_hash")
         remaining = seen_rows.join(v, ["bucket", "url_hash"], "left_anti")
         touched = v.select("bucket").distinct()
@@ -255,7 +266,6 @@ class BloomSeenSet:
         )
         return remaining, rebuilt
 
-    # -- scheduler backend facade -----------------------------------------
     def merge_delta(
         self, touched_blobs: DataFrame, new_rows: DataFrame, seen_after: DataFrame
     ) -> DataFrame:
@@ -265,15 +275,6 @@ class BloomSeenSet:
         rows). Only touched buckets can newly overflow."""
         delta = self.merge_blooms(touched_blobs, new_rows)
         return self.rebuild_overfull_blooms(delta, seen_after)
-
-    def delete_delta(
-        self, seen_rows: DataFrame, victims: DataFrame, blobs: DataFrame
-    ) -> tuple[DataFrame, DataFrame]:
-        """(remaining exact rows, blob delta for touched buckets). Bloom
-        bits can't unset — touched buckets rebuild from the remaining
-        rows; ``blobs`` is unused (kept for backend-signature parity)."""
-        return self.delete(seen_rows, victims)
-
 
 
 class StateStore:
@@ -618,419 +619,3 @@ class StateStore:
         for d in dfs[1:]:
             out = out.unionByName(d)
         return out
-
-
-# ---------------------------------------------------------------------------
-# partitioned cuckoo-filter seen set — the deletion-friendly fallback
-# ---------------------------------------------------------------------------
-
-CUCKOO_SCHEMA = "bucket int, table binary, n_ck long, n_items long"
-_CK_SLOTS = 4          # fingerprints per cuckoo bucket (standard (2,4) config)
-_CK_LOAD = 0.84        # max load factor before sizing up
-_CK_MAX_KICKS = 500
-
-
-def _ck_fp(h: np.ndarray) -> np.ndarray:
-    """16-bit nonzero fingerprint from the url hash — bits independent of
-    the index bits (both are multiplicative mixes of the full hash)."""
-    x = h.astype(np.uint64)
-    x = (x ^ (x >> np.uint64(33))) * np.uint64(0xFF51AFD7ED558CCD)
-    return ((x >> np.uint64(48)) % np.uint64(65535) + np.uint64(1)).astype(np.uint16)
-
-
-def _ck_i1(h: np.ndarray, n_ck: int) -> np.ndarray:
-    """Primary index: high bits of a Fibonacci-mix — NOT h mod n_ck, which
-    would collapse inside a partition bucket (bucket = pmod(h, n_buckets)
-    already pins the low bits)."""
-    x = h.astype(np.uint64) * np.uint64(0x9E3779B97F4A7C15)
-    return ((x >> np.uint64(24)) & np.uint64(n_ck - 1)).astype(np.int64)
-
-
-def _ck_i2(i1: np.ndarray, fp: np.ndarray, n_ck: int) -> np.ndarray:
-    """Alternate index: i1 XOR mix(fp) — an involution (i1 = alt(i2, fp)),
-    the partial-key cuckoo property that makes membership layout-independent:
-    if fp(q) == fp(x), then {i1,i2}(x) either equals {i1,i2}(q) or is
-    disjoint from it, so a probe's answer never depends on which of its two
-    buckets an item landed in (or on kick history)."""
-    mix = (fp.astype(np.uint64) * np.uint64(0x5BD1E995)) & np.uint64(n_ck - 1)
-    return (i1.astype(np.uint64) ^ mix).astype(np.int64)
-
-
-def _ck_size(n_items: int) -> int:
-    n_ck = 1 << 4
-    while n_ck * _CK_SLOTS * _CK_LOAD < max(n_items, 1):
-        n_ck <<= 1
-    return n_ck
-
-
-def _bulk_place(
-    tbl: np.ndarray, idx: np.ndarray, fps: np.ndarray
-) -> np.ndarray:
-    """Vectorized bucket placement pass: for each (idx, fp) pair, claim a
-    free slot of bucket ``idx`` if its remaining capacity allows (first-
-    come by position). Returns the boolean placed mask. One np.unique +
-    cumcount — no per-item Python."""
-    order = np.argsort(idx, kind="stable")
-    sidx = idx[order]
-    # rank of each item within its bucket group (0,1,2,... per bucket)
-    uniq, starts, counts = np.unique(sidx, return_index=True, return_counts=True)
-    rank = np.arange(len(sidx)) - np.repeat(starts, counts)
-    free = _CK_SLOTS - np.count_nonzero(tbl[uniq], axis=1)
-    can = rank < np.repeat(free, counts)
-    # slot index = existing occupancy + within-bucket rank
-    occ = np.count_nonzero(tbl[sidx], axis=1)
-    placed = np.zeros(len(idx), dtype=bool)
-    sel = order[can]
-    tbl[idx[sel], (occ[can] + rank[can])] = fps[sel]
-    placed[sel] = True
-    return placed
-
-
-def _ck_build(hashes: np.ndarray, n_ck: int) -> np.ndarray:
-    """Insert all hashes into a fresh (n_ck, SLOTS) uint16 table.
-
-    Two vectorized bulk passes place the overwhelming majority (primary
-    buckets, then alternates for the spillover); only the residual
-    contended tail walks the per-item kick loop — at the 0.84 design
-    load that tail is a few percent, so the build is numpy-speed, and
-    PROBES are fully vectorized regardless."""
-    tbl = np.zeros((n_ck, _CK_SLOTS), dtype=np.uint16)
-    # a seen SET holds each hash once: dedupe the batch first. This also
-    # protects the kick loop — every copy of one hash shares a single
-    # bucket pair (2·SLOTS slots at ANY table size), so a 9th copy could
-    # never place and growing n_ck would not help
-    hashes = np.unique(hashes)
-    fps = _ck_fp(hashes)
-    i1s = _ck_i1(hashes, n_ck)
-    i2s = _ck_i2(i1s, fps, n_ck)
-    if len(hashes) > 64:
-        placed = _bulk_place(tbl, i1s, fps)
-        rem = ~placed
-        placed2 = np.zeros(len(hashes), dtype=bool)
-        placed2[rem] = _bulk_place(tbl, i2s[rem], fps[rem])
-        rem = rem & ~placed2
-        fps, i1s, i2s = fps[rem], i1s[rem], i2s[rem]
-    for fp, i1, i2 in zip(fps.tolist(), i1s.tolist(), i2s.tolist()):
-        placed = False
-        for idx in (i1, i2):
-            row = tbl[idx]
-            free = np.nonzero(row == 0)[0]
-            if free.size:
-                row[free[0]] = fp
-                placed = True
-                break
-        if placed:
-            continue
-        # deterministic kick loop: evict slot (kick % SLOTS) at the
-        # current index, relocate the evictee to its alternate bucket
-        idx, cur = i1, fp
-        for kick in range(_CK_MAX_KICKS):
-            slot = kick % _CK_SLOTS
-            cur, tbl[idx, slot] = int(tbl[idx, slot]), cur
-            alt = _ck_i2(
-                np.array([idx], dtype=np.int64),
-                np.array([cur], dtype=np.uint16),
-                n_ck,
-            )[0]
-            row = tbl[alt]
-            free = np.nonzero(row == 0)[0]
-            if free.size:
-                row[free[0]] = cur
-                break
-            idx = int(alt)
-        else:
-            raise RuntimeError(
-                f"cuckoo filter overfull at {len(hashes)} distinct items / "
-                f"{n_ck * _CK_SLOTS} slots — rebuild this bucket's blob from "
-                "its exact rows at a larger capacity (build_filters sizes by "
-                "item count), or raise n_buckets for the design point"
-            )
-    return tbl
-
-
-def _ck_probe(hashes: np.ndarray, tbl: np.ndarray, n_ck: int) -> np.ndarray:
-    """Vectorized membership: gather both candidate buckets, compare
-    fingerprints. No per-item Python — this is the hot path."""
-    fps = _ck_fp(hashes)
-    i1s = _ck_i1(hashes, n_ck)
-    i2s = _ck_i2(i1s, fps, n_ck)
-    f = fps[:, None]
-    return ((tbl[i1s] == f).any(axis=1)) | ((tbl[i2s] == f).any(axis=1))
-
-
-def _suspects_probe(
-    seen_set, candidates: DataFrame, seen_rows: DataFrame, blobs: DataFrame,
-    blob_hits, materialize: bool,
-) -> DataFrame:
-    """Shared probe skeleton for the bucket-blob seen sets: suspects-only
-    cogroup flag → bucket-pruned exact confirm → ONE anti-join, with only
-    the 16-byte (bucket, url_hash) pair crossing the Arrow boundary.
-    ``blob_hits(row, hashes)`` is the per-blob membership test (bloom bit
-    probe / cuckoo fingerprint gather). See BloomSeenSet.probe for the
-    measured algebra and the materialize/localCheckpoint rationale — the
-    semantics here must stay in lockstep for BOTH backends."""
-    if materialize:
-        candidates = candidates.localCheckpoint()
-    cand = seen_set.bucketize(candidates)
-    slim = cand.select("bucket", "url_hash")
-
-    def flag(key, cpdf: pd.DataFrame, bpdf: pd.DataFrame) -> pd.DataFrame:
-        if len(cpdf) == 0:
-            return pd.DataFrame(
-                {"bucket": pd.Series([], dtype="int32"),
-                 "url_hash": pd.Series([], dtype="int64")}
-            )
-        hashes = cpdf["url_hash"].to_numpy(dtype=np.int64)
-        if len(bpdf) == 0:
-            hits = np.zeros(len(hashes), dtype=bool)
-        else:
-            hits = blob_hits(bpdf.iloc[0], hashes)
-        return pd.DataFrame(
-            {"bucket": cpdf["bucket"][hits], "url_hash": cpdf["url_hash"][hits]}
-        )
-
-    suspects = (
-        slim.groupBy("bucket")
-        .cogroup(blobs.groupBy("bucket"))
-        .applyInPandas(flag, "bucket int, url_hash long")
-    )
-    truly_seen = suspects.join(
-        seen_rows, on=["bucket", "url_hash"], how="left_semi"
-    ).select("url_hash")
-    return candidates.join(truly_seen, "url_hash", "left_anti")
-
-
-class CuckooSeenSet:
-    """Partitioned cuckoo-filter URL-seen set — same outer shape as
-    ``BloomSeenSet`` (one blob per partition bucket, applyInPandas
-    build/probe, exact-rows confirm) but supporting IN-PLACE DELETES: a
-    victim's fingerprint is cleared from its blob directly, no rebuild
-    from the exact rows (the north rule's 'cuckoo fallback for
-    deletions'). Each DISTINCT hash is stored once (build/insert batches
-    are deduped — all copies of one hash share a single bucket pair, so
-    extra copies add nothing and would only exhaust the kick loop);
-    distinct hashes that collide in (fingerprint, bucket pair) keep
-    separate copies, so deleting x never hides a colliding y. No false
-    negatives as long as every delete corresponds to a prior insert of
-    that hash and a hash is not re-inserted across batches (the seen-set
-    flow guarantees both: only probe-survivors insert, and the janitor
-    deletes rows it just read; ``delete_delta`` additionally presence-
-    guards victims against the exact rows so even a replayed janitor call
-    cannot clear a colliding stranger's fingerprint)."""
-
-    blob_schema = CUCKOO_SCHEMA
-
-    def __init__(self, n_buckets: int = DEFAULT_N_BUCKETS):
-        self.n_buckets = n_buckets
-
-    def bucketize(self, df: DataFrame, hash_col: str = "url_hash") -> DataFrame:
-        return df.withColumn(
-            "bucket", F.pmod(F.col(hash_col), F.lit(self.n_buckets)).cast("int")
-        )
-
-    def build_filters(self, seen_rows: DataFrame) -> DataFrame:
-        def build(pdf: pd.DataFrame) -> pd.DataFrame:
-            hashes = pdf["url_hash"].to_numpy(dtype=np.int64)
-            n_ck = _ck_size(len(hashes))
-            tbl = _ck_build(hashes, n_ck)
-            return pd.DataFrame(
-                {
-                    "bucket": [int(pdf["bucket"].iloc[0])],
-                    "table": [tbl.tobytes()],
-                    "n_ck": [n_ck],
-                    "n_items": [len(hashes)],
-                }
-            )
-
-        return seen_rows.groupBy("bucket").applyInPandas(build, CUCKOO_SCHEMA)
-
-    def probe(
-        self,
-        candidates: DataFrame,
-        seen_rows: DataFrame,
-        filters: DataFrame,
-        materialize: bool = True,
-    ) -> DataFrame:
-        """Same algebra as BloomSeenSet.probe (shared skeleton —
-        _suspects_probe). Cuckoo positives are fingerprint collisions at
-        worst (~2^-13/bucket pair), negatives are definite."""
-
-        def hits(row, hashes):
-            n_ck = int(row["n_ck"])
-            tbl = np.frombuffer(row["table"], dtype=np.uint16).reshape(
-                n_ck, _CK_SLOTS
-            )
-            return _ck_probe(hashes, tbl, n_ck)
-
-        return _suspects_probe(
-            self, candidates, seen_rows, filters, hits, materialize
-        )
-
-    def insert(self, filters: DataFrame, new_rows: DataFrame) -> DataFrame:
-        """Add hashes to their buckets' filters (cogrouped). Batches are
-        deduped (a set stores each hash once). A bucket pushed past its
-        load factor RAISES rather than growing in place: the stored
-        16-bit fingerprints cannot be re-indexed at a different n_ck
-        (indexes re-mix from the full hash), so capacity is fixed at
-        build time — rebuild that bucket from its exact rows via
-        build_filters (bounded by one bucket's cardinality), or size
-        n_buckets for the design point up front (4096 at 10^10 urls)."""
-        def merge(key, fpdf: pd.DataFrame, npdf: pd.DataFrame) -> pd.DataFrame:
-            hashes = np.unique(npdf["url_hash"].to_numpy(dtype=np.int64))
-            if len(fpdf) == 0:
-                n_ck = _ck_size(len(hashes))
-                return pd.DataFrame(
-                    {"bucket": [int(key[0])],
-                     "table": [_ck_build(hashes, n_ck).tobytes()],
-                     "n_ck": [n_ck], "n_items": [len(hashes)]}
-                )
-            row = fpdf.iloc[0]
-            n_ck, n_items = int(row["n_ck"]), int(row["n_items"])
-            tbl = np.frombuffer(row["table"], dtype=np.uint16).reshape(
-                n_ck, _CK_SLOTS
-            ).copy()
-            total = n_items + len(hashes)
-            if total > n_ck * _CK_SLOTS * _CK_LOAD:
-                raise RuntimeError(
-                    f"cuckoo bucket {int(key[0])} over load factor "
-                    f"({total} items / {n_ck * _CK_SLOTS} slots) — rebuild "
-                    "this bucket from its exact rows via build_filters"
-                )
-            if len(hashes):
-                fps = _ck_fp(hashes)
-                i1s = _ck_i1(hashes, n_ck)
-                i2s = _ck_i2(i1s, fps, n_ck)
-                for fp, i1, i2 in zip(fps.tolist(), i1s.tolist(), i2s.tolist()):
-                    placed = False
-                    for idx in (i1, i2):
-                        free = np.nonzero(tbl[idx] == 0)[0]
-                        if free.size:
-                            tbl[idx, free[0]] = fp
-                            placed = True
-                            break
-                    if not placed:
-                        idx, cur = i1, fp
-                        for kick in range(_CK_MAX_KICKS):
-                            slot = kick % _CK_SLOTS
-                            cur, tbl[idx, slot] = int(tbl[idx, slot]), cur
-                            alt = _ck_i2(
-                                np.array([idx], dtype=np.int64),
-                                np.array([cur], dtype=np.uint16), n_ck,
-                            )[0]
-                            free = np.nonzero(tbl[alt] == 0)[0]
-                            if free.size:
-                                tbl[alt, free[0]] = cur
-                                break
-                            idx = int(alt)
-                        else:
-                            raise RuntimeError("cuckoo insert kick loop exhausted")
-            return pd.DataFrame(
-                {"bucket": [int(key[0])], "table": [tbl.tobytes()],
-                 "n_ck": [n_ck], "n_items": [total]}
-            )
-
-        return (
-            filters.groupBy("bucket")
-            .cogroup(self.bucketize(new_rows).groupBy("bucket"))
-            .applyInPandas(merge, CUCKOO_SCHEMA)
-        )
-
-    def delete(self, filters: DataFrame, victims: DataFrame) -> DataFrame:
-        """THE cuckoo advantage over bloom: clear one stored fingerprint
-        per victim in place — no rebuild from exact rows. Safe only for
-        victims that were actually inserted (the standard cuckoo-filter
-        contract; the scheduler's janitor deletes rows it just read, so
-        the contract holds by construction)."""
-        def drop(key, fpdf: pd.DataFrame, vpdf: pd.DataFrame) -> pd.DataFrame:
-            if len(fpdf) == 0:
-                return pd.DataFrame(
-                    columns=["bucket", "table", "n_ck", "n_items"]
-                ).astype({"bucket": "int32", "n_ck": "int64", "n_items": "int64"})
-            row = fpdf.iloc[0]
-            n_ck, n_items = int(row["n_ck"]), int(row["n_items"])
-            tbl = np.frombuffer(row["table"], dtype=np.uint16).reshape(
-                n_ck, _CK_SLOTS
-            ).copy()
-            hashes = vpdf["url_hash"].to_numpy(dtype=np.int64)
-            removed = 0
-            if len(hashes):
-                fps = _ck_fp(hashes)
-                i1s = _ck_i1(hashes, n_ck)
-                i2s = _ck_i2(i1s, fps, n_ck)
-                for fp, i1, i2 in zip(fps.tolist(), i1s.tolist(), i2s.tolist()):
-                    for idx in (i1, i2):
-                        hit = np.nonzero(tbl[idx] == fp)[0]
-                        if hit.size:
-                            tbl[idx, hit[0]] = 0
-                            removed += 1
-                            break
-            return pd.DataFrame(
-                {"bucket": [int(key[0])], "table": [tbl.tobytes()],
-                 "n_ck": [n_ck], "n_items": [n_items - removed]}
-            )
-
-        return (
-            filters.groupBy("bucket")
-            .cogroup(self.bucketize(victims).groupBy("bucket"))
-            .applyInPandas(drop, CUCKOO_SCHEMA)
-        )
-
-    # -- scheduler backend facade -----------------------------------------
-    def merge_delta(
-        self, touched_blobs: DataFrame, new_rows: DataFrame, seen_after: DataFrame
-    ) -> DataFrame:
-        """Per-round blob delta: insert the new hashes in place for buckets
-        with headroom; buckets the batch would push past the load factor
-        rebuild at a larger capacity from ``seen_after`` (the post-merge
-        exact rows) — the cuckoo analog of rebuild_overfull_blooms, but
-        detected BEFORE insert (stored 16-bit fingerprints can't be
-        re-indexed at a different n_ck, so growth is always a rebuild).
-        The headroom predicate is the same expression ``insert`` raises
-        on, so the in-place path can never trip it."""
-        incoming = (
-            self.bucketize(new_rows)
-            .groupBy("bucket")
-            .agg(F.count_distinct("url_hash").alias("incoming"))
-        )
-        meta = incoming.join(
-            touched_blobs.select("bucket", "n_ck", "n_items"), "bucket", "left"
-        )
-        overfull = meta.filter(
-            F.col("n_ck").isNotNull()
-            & (
-                (F.col("n_items") + F.col("incoming"))
-                > F.col("n_ck") * F.lit(_CK_SLOTS) * F.lit(_CK_LOAD)
-            )
-        ).select("bucket")
-        rebuilt = self.build_filters(
-            seen_after.join(F.broadcast(overfull), "bucket", "left_semi")
-        )
-        ok_blobs = touched_blobs.join(F.broadcast(overfull), "bucket", "left_anti")
-        ok_rows = (
-            self.bucketize(new_rows)
-            .join(F.broadcast(overfull), "bucket", "left_anti")
-            .select("url_hash")
-        )
-        return self.insert(ok_blobs, ok_rows).unionByName(rebuilt)
-
-    def delete_delta(
-        self, seen_rows: DataFrame, victims: DataFrame, blobs: DataFrame
-    ) -> tuple[DataFrame, DataFrame]:
-        """(remaining exact rows, blob delta) — THE cuckoo payoff: victims'
-        fingerprints clear in place, no rebuild from exact rows. Victims
-        are presence-guarded (semi-join against the exact rows) first:
-        deleting a hash that is NOT stored could clear a distinct hash
-        that collides in (fingerprint, bucket pair) — a false negative.
-        The guard also makes the janitor idempotent (a replayed delete of
-        an already-deleted row is a no-op)."""
-        v = (
-            self.bucketize(victims.select("url_hash"))
-            .select("bucket", "url_hash")
-            .join(seen_rows, ["bucket", "url_hash"], "left_semi")
-        )
-        remaining = seen_rows.join(v, ["bucket", "url_hash"], "left_anti")
-        touched = v.select("bucket").distinct()
-        cleared = self.delete(
-            blobs.join(F.broadcast(touched), "bucket", "left_semi"), v
-        )
-        return remaining, cleared

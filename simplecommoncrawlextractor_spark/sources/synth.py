@@ -134,7 +134,7 @@ def simulated_payload_columns(url_hash: Column) -> dict[str, Column]:
     Magic-byte prefixes cover the sniffer table incl. the octet-stream
     escalation path (cc/warc/Extractor.java:128-139); statuses cover the
     FETCH_STATUS vocabulary (CCGetter.java:69-78); >50 MB lengths trip the
-    WReGetter cap (:45); ~8% truncated rows feed the cuckoo-delete /
+    WReGetter cap (:45); ~8% truncated rows feed the seen-set delete /
     RefetchedDeleter path (:37-43)."""
     h = F.pmod(url_hash, F.lit(9))
     prefix = (

@@ -220,101 +220,44 @@ def test_fetch_rate_report_rolls_up_partition_lineage(spark, tmp_path):
         assert r["rows_per_sec"] > 0
 
 
-def test_cuckoo_backend_kill_resume_and_cross_backend_order(spark, tmp_path):
-    """seen_backend="cuckoo" runs the full bootstrap/step/kill-resume
-    lifecycle, and its crawl order is BYTE-IDENTICAL to the bloom
-    backend's: both backends confirm blob suspects against the exact
-    rows, so probe output — and therefore every schedule — cannot depend
-    on the blob kind."""
-    bloom = _run(spark, str(tmp_path / "bloom"), rounds=4)
-
-    c_root = str(tmp_path / "cuckoo")
-    c1 = _run(spark, c_root, rounds=2, seen_backend="cuckoo")
-    del c1  # "kill": state lives on disk only
-    c2 = CrawlScheduler(
-        spark, StateStore(c_root), host_budget=4, salt_k=4, n_buckets=8,
-        seen_backend="cuckoo",
-    )
-    assert c2.round_no() == 2
-    c2.run(2)
-
-    assert _order_rows(bloom) == _order_rows(c2)
-    sa = {r["url_hash"] for r in bloom.url_seen().collect()}
-    sb = {r["url_hash"] for r in c2.url_seen().collect()}
-    assert sa == sb
-
-
 def test_seen_backend_pinned_in_manifest(spark, tmp_path):
-    """A store bootstrapped under one backend refuses to resume under the
-    other (the blob table's bytes are only meaningful to their writer);
-    unknown backend names are rejected up front."""
-    import pytest
-
-    root = str(tmp_path / "pin")
-    _run(spark, root, rounds=1, seen_backend="cuckoo")
-    with pytest.raises(ValueError, match="cuckoo"):
-        CrawlScheduler(spark, StateStore(root), n_buckets=8)
-    # same backend resumes fine
-    CrawlScheduler(spark, StateStore(root), n_buckets=8, seen_backend="cuckoo")
-    with pytest.raises(ValueError, match="seen_backend"):
-        CrawlScheduler(spark, StateStore(root), n_buckets=8, seen_backend="xor")
-
-
-def test_cuckoo_merge_delta_grows_overfull_bucket(spark):
-    """A batch that would push a cuckoo bucket past its load factor takes
-    the rebuild path (larger n_ck from the exact rows) instead of raising
-    inside insert(); headroom buckets insert in place."""
-    from pyspark.sql import functions as F
-
-    from simplecommoncrawlextractor_spark.plans.state import (
-        _CK_LOAD,
-        _CK_SLOTS,
-        CuckooSeenSet,
-    )
-
-    ck = CuckooSeenSet(n_buckets=1)  # single bucket: every hash collides
-    first = ck.bucketize(
-        spark.range(40).select(F.xxhash64("id").alias("url_hash"))
-    ).select("bucket", "url_hash")
-    filters = ck.build_filters(first).cache()
-    row0 = filters.collect()[0]
-    cap0 = row0["n_ck"] * _CK_SLOTS * _CK_LOAD
-    new = spark.range(40, 80).select(F.xxhash64("id").alias("url_hash"))
-    assert 40 + 40 > cap0, "fixture must actually overflow the bucket"
-    seen_after = first.unionByName(ck.bucketize(new).select("bucket", "url_hash"))
-    delta = ck.merge_delta(filters, new, seen_after)
-    rows = delta.collect()
-    assert len(rows) == 1 and rows[0]["n_ck"] > row0["n_ck"]
-    # every hash (old and new) is now a blob hit: probe returns nothing
-    assert ck.probe(
-        seen_after.select("url_hash", F.lit("u").alias("url")),
-        seen_after, delta,
-    ).count() == 0
-
-
-def test_seen_backend_legacy_store_defaults_to_bloom(spark, tmp_path):
-    """A store bootstrapped before the manifest pin existed (no
-    'seen_backend' meta key) holds bloom blobs by construction — a cuckoo
-    resume must be refused up front, and a bloom resume accepted (r5
-    review finding)."""
+    """Bloom is the only URL-seen backend. A store whose manifest pins
+    another one (written by an older build) is refused by name; a store
+    with the key absent or set to "bloom" opens; any other
+    ``seen_backend`` value is rejected up front."""
     import json
     import os
 
     import pytest
 
-    root = str(tmp_path / "legacy")
-    _run(spark, root, rounds=1)  # default bloom; writes the pin
-    # simulate a pre-r5 manifest: strip the pin from current + snapshot logs
-    for fn in os.listdir(root):
-        if fn.startswith("manifest") and fn.endswith(".json"):
-            p = os.path.join(root, fn)
-            m = json.load(open(p))
-            m["meta"].pop("seen_backend", None)
-            json.dump(m, open(p, "w"))
-    with pytest.raises(ValueError, match="bloom"):
-        CrawlScheduler(spark, StateStore(root), n_buckets=8, seen_backend="cuckoo")
-    sched = CrawlScheduler(spark, StateStore(root), n_buckets=8)
-    sched.step()  # bloom resume still works
+    root = str(tmp_path / "pin")
+    CrawlScheduler(spark, StateStore(root), n_buckets=8).bootstrap(
+        seed_frontier(spark, n=20)
+    )
+
+    def pin(value):
+        # current manifest and every snapshot-log copy
+        for fn in os.listdir(root):
+            if fn.startswith("manifest") and fn.endswith(".json"):
+                p = os.path.join(root, fn)
+                with open(p) as f:
+                    m = json.load(f)
+                if value is None:
+                    m["meta"].pop("seen_backend", None)
+                else:
+                    m["meta"]["seen_backend"] = value
+                with open(p, "w") as f:
+                    json.dump(m, f)
+
+    pin("cuckoo")
+    with pytest.raises(ValueError, match="cuckoo"):
+        CrawlScheduler(spark, StateStore(root), n_buckets=8)
+    for value in (None, "bloom"):
+        pin(value)
+        assert CrawlScheduler(spark, StateStore(root), n_buckets=8).round_no() == 0
+    for bad in ("cuckoo", "xor"):
+        with pytest.raises(ValueError, match="seen_backend"):
+            CrawlScheduler(spark, StateStore(root), n_buckets=8, seen_backend=bad)
 
 
 def test_frontier_commit_is_o_round_and_compaction_neutral(spark, tmp_path, monkeypatch):

@@ -2,7 +2,6 @@
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from simplecommoncrawlextractor_spark.operators.sinks import (
@@ -51,16 +50,13 @@ def test_tsv_json_sinks_and_concat(spark, tmp_path):
     assert merged.count() == 4
 
 
-@pytest.mark.parametrize("backend", ["bloom", "cuckoo"])
-def test_delete_refetchable_reopens_urls(spark, tmp_path, backend):
+def test_delete_refetchable_reopens_urls(spark, tmp_path):
     """K6: deleting truncated fetches from the seen set makes exactly those
-    URLs pass the blob+exact probe again — bloom via bucket-local rebuild,
-    cuckoo via in-place fingerprint clears (both backends run the full
-    bootstrap→step→janitor lifecycle here)."""
+    URLs pass the bloom+exact probe again — the touched buckets' blobs are
+    rebuilt from the remaining exact rows, over the full
+    bootstrap→step→janitor lifecycle."""
     store = StateStore(str(tmp_path / "s"))
-    sched = CrawlScheduler(
-        spark, store, host_budget=4, salt_k=4, n_buckets=8, seen_backend=backend
-    )
+    sched = CrawlScheduler(spark, store, host_budget=4, salt_k=4, n_buckets=8)
     sched.bootstrap(seed_frontier(spark, n=150))
     sched.run(2)
     log = sched.crawl_order()

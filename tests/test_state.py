@@ -310,136 +310,6 @@ def test_rollback_commit_never_reuses_abandoned_sids(spark, tmp_path):
     assert store.read(spark, "t", "x long").count() == 7
 
 
-def test_cuckoo_seen_set_probe_matches_bloom_and_deletes_in_place(spark):
-    """CuckooSeenSet: (a) probe() returns exactly the same surviving
-    candidates as BloomSeenSet.probe on the same data (both are
-    exact-confirmed, so the accelerator choice must be invisible),
-    (b) delete() clears victims' fingerprints IN PLACE — no rebuild —
-    after which deleted urls probe as unseen (refetchable) while every
-    remaining url still probes seen (no false negatives), (c) insert()
-    extends a bucket's filter without touching its siblings."""
-    from pyspark.sql import functions as F
-
-    from simplecommoncrawlextractor_spark.plans.state import (
-        BloomSeenSet,
-        CuckooSeenSet,
-    )
-
-    n = 20_000
-    seen_url = F.concat(F.lit("http://h"), (F.col("id") % 997).cast("string"),
-                        F.lit(".example.com/p/"), F.col("id").cast("string"))
-    all_rows = spark.range(n).select(F.xxhash64(seen_url).alias("url_hash"))
-    ck = CuckooSeenSet(n_buckets=16)
-    bl = BloomSeenSet(n_buckets=16)
-    seen = ck.bucketize(all_rows.filter(F.col("url_hash") % 2 == 0)).select(
-        "bucket", "url_hash"
-    ).cache()
-    cands = all_rows.select("url_hash").cache()
-    filters = ck.build_filters(seen).cache()
-    blooms = bl.build_blooms(seen).cache()
-
-    got = {r["url_hash"] for r in ck.probe(cands, seen, filters).collect()}
-    want = {r["url_hash"] for r in bl.probe(cands, seen, blooms).collect()}
-    assert got == want  # accelerator choice is invisible after confirm
-
-    # (b) delete in place: victims = every 4th seen hash
-    victims = seen.filter(F.col("url_hash") % 4 == 0).select("url_hash").cache()
-    seen_after = seen.join(victims, "url_hash", "left_anti").cache()
-    filters_after = ck.delete(filters, victims).cache()
-    got2 = {
-        r["url_hash"]
-        for r in ck.probe(cands, seen_after, filters_after).collect()
-    }
-    want2 = {r["url_hash"] for r in cands.join(
-        seen_after, "url_hash", "left_anti").collect()}
-    assert got2 == want2  # deleted urls are refetchable, survivors still seen
-
-    # (c) insert the victims back: membership fully restored
-    filters_back = ck.insert(filters_after, victims)
-    got3 = {r["url_hash"] for r in ck.probe(cands, seen, filters_back).collect()}
-    assert got3 == want
-
-
-def test_cuckoo_filter_no_false_negatives_and_layout_independent(spark):
-    """Blob-level invariants through the Spark path: every inserted hash
-    probes positive regardless of the (shuffle-dependent) insertion order
-    a task saw — membership is layout-independent by the partial-key
-    involution."""
-    from pyspark.sql import functions as F
-
-    from simplecommoncrawlextractor_spark.plans.state import CuckooSeenSet
-
-    ck = CuckooSeenSet(n_buckets=8)
-    rows = ck.bucketize(
-        spark.range(30_000).select(F.xxhash64("id").alias("url_hash"))
-    ).select("bucket", "url_hash").cache()
-    f1 = ck.build_filters(rows)
-    f2 = ck.build_filters(rows.repartition(32))  # different per-task order
-    pos1 = rows.count() - ck.probe(
-        rows.select("url_hash"), rows, f1
-    ).count()
-    pos2 = rows.count() - ck.probe(
-        rows.select("url_hash"), rows, f2
-    ).count()
-    assert pos1 == pos2 == rows.count()  # zero false negatives, any layout
-
-
-def test_cuckoo_blob_invariants_property():
-    """Property-based (numpy-level, no Spark): for arbitrary int64 hash
-    multisets — duplicates included — build() never false-negatives,
-    membership is insertion-order independent, and deleting any subset
-    leaves every non-deleted hash positive."""
-    import numpy as np
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    from simplecommoncrawlextractor_spark.plans.state import (
-        _CK_SLOTS,
-        _ck_build,
-        _ck_fp,
-        _ck_i1,
-        _ck_i2,
-        _ck_probe,
-        _ck_size,
-    )
-
-    @settings(max_examples=40, deadline=None)
-    @given(
-        st.lists(
-            st.integers(min_value=-(2**62), max_value=2**62), min_size=1,
-            max_size=400,
-        ),
-        st.randoms(use_true_random=False),
-    )
-    def check(raw, rnd):
-        hashes = np.array(raw, dtype=np.int64)
-        n_ck = _ck_size(len(np.unique(hashes)))
-        tbl = _ck_build(hashes, n_ck)
-        assert _ck_probe(hashes, tbl, n_ck).all()
-        # order independence
-        perm = list(raw)
-        rnd.shuffle(perm)
-        tbl2 = _ck_build(np.array(perm, dtype=np.int64), n_ck)
-        probes = np.array(raw + [x + 1 for x in raw], dtype=np.int64)
-        assert (_ck_probe(probes, tbl, n_ck) == _ck_probe(probes, tbl2, n_ck)).all()
-        # delete half (distinct), survivors stay positive
-        uniq = np.unique(hashes)
-        victims, keep = uniq[::2], uniq[1::2]
-        t3 = tbl.copy()
-        fps, i1s = _ck_fp(victims), _ck_i1(victims, n_ck)
-        i2s = _ck_i2(i1s, fps, n_ck)
-        for fp, i1, i2 in zip(fps.tolist(), i1s.tolist(), i2s.tolist()):
-            for idx in (i1, i2):
-                hit = np.nonzero(t3[idx] == fp)[0]
-                if hit.size:
-                    t3[idx, hit[0]] = 0
-                    break
-        if len(keep):
-            assert _ck_probe(keep, t3, n_ck).all()
-
-    check()
-
-
 def test_expire_snapshots_retention_and_orphan_gc(spark, tmp_path):
     """Iceberg expire_snapshots semantics: old manifests drop, the
     current snapshot always survives, append deltas shared by the

@@ -2,19 +2,19 @@
 crawl ordering must be data-derived, so deployment mode / executor count
 cannot change results — only throughput).
 
-Runs the full scheduler (bootstrap + R rounds) with the given URL-seen
-backend against a fresh on-disk state store and prints one ORDER_RESULT
+Runs the full scheduler (bootstrap + R rounds) against a fresh on-disk
+state store and prints one ORDER_RESULT
 JSON line carrying the sha256 of the materialized crawl ordering
 (round, host, fetch_rank, URL — the same object the kill/resume tests
 compare). Run it under different masters and diff the hashes:
 
     spark-submit --master 'local[4]' --py-files dist/ccspark.zip \
-        tools/cross_deploy_order.py bloom
+        tools/cross_deploy_order.py
     spark-submit --master 'local-cluster[2,2,2048]' \
-        --py-files dist/ccspark.zip tools/cross_deploy_order.py cuckoo
+        --py-files dist/ccspark.zip tools/cross_deploy_order.py
 
-Usage: spark-submit ... tools/cross_deploy_order.py [backend] [rounds]
-       [n_seeds]  (defaults: bloom 3 400)
+Usage: spark-submit ... tools/cross_deploy_order.py [rounds] [n_seeds]
+       (defaults: 3 400)
 """
 
 from __future__ import annotations
@@ -38,12 +38,11 @@ from simplecommoncrawlextractor_spark.sources import seed_frontier  # noqa: E402
 
 
 def main() -> None:
-    backend = sys.argv[1] if len(sys.argv) > 1 else "bloom"
-    rounds = int(sys.argv[2]) if len(sys.argv) > 2 else 3
-    n_seeds = int(sys.argv[3]) if len(sys.argv) > 3 else 400
+    rounds = int(sys.argv[1]) if len(sys.argv) > 1 else 3
+    n_seeds = int(sys.argv[2]) if len(sys.argv) > 2 else 400
     spark = SparkSession.builder.getOrCreate()
 
-    root = tempfile.mkdtemp(prefix=f"xdeploy_{backend}_")
+    root = tempfile.mkdtemp(prefix="xdeploy_")
     try:
         t0 = time.time()
         sched = CrawlScheduler(
@@ -52,7 +51,6 @@ def main() -> None:
             host_budget=4,
             salt_k=4,
             n_buckets=8,
-            seen_backend=backend,
         )
         sched.bootstrap(seed_frontier(spark, n=n_seeds))
         sched.run(rounds)
@@ -69,7 +67,6 @@ def main() -> None:
             + json.dumps(
                 {
                     "master": spark.sparkContext.master,
-                    "backend": backend,
                     "rounds": rounds,
                     "n_seeds": n_seeds,
                     "order_rows": len(rows),

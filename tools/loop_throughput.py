@@ -8,8 +8,9 @@ Prints one LOOP_RESULT JSON line with urls/sec, the scheduled-URL count
 every round since r1), and the 1-min load before/after.
 
 Usage:
-    python tools/loop_throughput.py [backend] [n_seeds] [rounds]
-(defaults: bloom 3000000 2; runs on local[8] like every prior round)
+    python tools/loop_throughput.py [n_seeds] [rounds]
+(defaults: 3000000 2; runs on local[8] like every prior round, or on
+the master named by LOOP_MASTER)
 """
 
 from __future__ import annotations
@@ -32,9 +33,8 @@ from simplecommoncrawlextractor_spark.sources import seed_frontier  # noqa: E402
 
 
 def main() -> None:
-    backend = sys.argv[1] if len(sys.argv) > 1 else "bloom"
-    n_seeds = int(sys.argv[2]) if len(sys.argv) > 2 else 3_000_000
-    rounds = int(sys.argv[3]) if len(sys.argv) > 3 else 2
+    n_seeds = int(sys.argv[1]) if len(sys.argv) > 1 else 3_000_000
+    rounds = int(sys.argv[2]) if len(sys.argv) > 2 else 2
     load_before = os.getloadavg()[0]
     from simplecommoncrawlextractor_spark import get_spark
 
@@ -47,7 +47,7 @@ def main() -> None:
         master=os.environ.get("LOOP_MASTER", "local[8]"),
         shuffle_partitions=16,
     )
-    root = tempfile.mkdtemp(prefix=f"loop_{backend}_")
+    root = tempfile.mkdtemp(prefix="loop_")
     try:
         sched = CrawlScheduler(
             spark,
@@ -55,7 +55,6 @@ def main() -> None:
             host_budget=50,
             salt_k=16,
             n_buckets=64,
-            seen_backend=backend,
         )
         t0 = time.time()
         sched.bootstrap(seed_frontier(spark, n=n_seeds, n_hosts=60_000))
@@ -85,7 +84,6 @@ def main() -> None:
             "LOOP_RESULT "
             + json.dumps(
                 {
-                    "backend": backend,
                     "n_seeds": n_seeds,
                     "rounds": rounds,
                     "urls_scheduled": n,
