@@ -555,8 +555,10 @@ def ngram_jaccard_pairs(
         rs = np.flatnonzero(np.r_[True, ca[1:] != ca[:-1]])
         bnd = np.concatenate([rs, [ca.size]])
         if int_ids:
-            ids_flat = np.ascontiguousarray(uid[cb].astype(np.int64, copy=False))
-            szs_flat = np.ascontiguousarray(sz_b)
+            # explicit little-endian payloads: count_pairs decodes them as
+            # "<i8"/"<i4" whatever the host byte order
+            ids_flat = np.ascontiguousarray(uid[cb].astype(np.dtype("<i8"), copy=False))
+            szs_flat = np.ascontiguousarray(sz_b.astype(np.dtype("<i4"), copy=False))
             nrows = rs.size
             bb_ids = pa.Array.from_buffers(
                 pa.binary(), nrows,

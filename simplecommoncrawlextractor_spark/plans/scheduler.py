@@ -33,7 +33,7 @@ from .frontier import (
     dedup_by_hash,
     politeness_schedule,
 )
-from .state import BLOOM_SCHEMA, SEEN_SCHEMA, BloomSeenSet, StateStore
+from .state import BLOOM_SCHEMA, SEEN_SCHEMA, BloomSeenSet, StateStore, empty_frame
 
 METRICS_SCHEMA = (
     "snapshot int, round int, phase string, partition_id int, rows long, "
@@ -128,7 +128,13 @@ class CrawlScheduler:
         by one row per host ever crawled. Rules stay one row per host THAT
         PUBLISHES rules; at a scale where even that outgrows a broadcast,
         switch robots_filter's join to a shuffle join (same semantics).
-        None when empty so the no-robots fast paths stay intact."""
+        None when empty so the no-robots fast paths stay intact.
+
+        A store with no ``robots`` table (nothing fetched yet, or
+        ``auto_robots`` off) answers from the manifest alone: the
+        constructor rules, with no Spark action."""
+        if "robots" not in self.store.manifest()["tables"]:
+            return self.robots_rules
         stored = self._stored_robots().filter(
             F.col("disallow_prefix").isNotNull() | (F.col("crawl_delay") > 0)
         )
@@ -190,8 +196,9 @@ class CrawlScheduler:
     ) -> DataFrame:
         """Apply robots disallow rules to candidate rows (no-op without
         rules). Callers touching several frames in one round resolve the
-        rules ONCE and pass them in (``resolved=True``) — each
-        _effective_rules() call costs a state read + an isEmpty job."""
+        rules ONCE and pass them in (``resolved=True``) — once a
+        ``robots`` table exists, each _effective_rules() call costs a
+        state read + an isEmpty job."""
         if not resolved:
             rules = self._effective_rules()
         if rules is None:
@@ -269,7 +276,7 @@ class CrawlScheduler:
         return self.store.commit(
             {
                 "frontier": cand,
-                "url_seen": self.spark.createDataFrame([], SEEN_SCHEMA),
+                "url_seen": empty_frame(self.spark, SEEN_SCHEMA),
             },
             meta={"round": 0},
         )
@@ -334,12 +341,14 @@ class CrawlScheduler:
         # rewritten — the StateStore upsert commit re-references their
         # existing files. At the 10^10 design point this is the difference
         # between ~12 GB of blob writes per round and a few MB.
-        # merge_delta ORs the new bits in, then rebuilds overfull buckets.
+        # merge_delta ORs the new bits in, then rebuilds overfull buckets;
+        # it returns a locally checkpointed frame, the one materialization
+        # the probe and the upsert commit both read (no cache here)
         touched = newly_seen.select("bucket").distinct()
         blooms_touched = blooms.join(F.broadcast(touched), "bucket", "left_semi")
         blooms_delta = self.seen.merge_delta(
             blooms_touched, newly_seen.select("url_hash"), seen2
-        ).cache()
+        )
         # full view for this round's probe = untouched ∪ delta (in-plan
         # union; nothing extra hits disk)
         blooms2 = blooms.join(
@@ -418,7 +427,6 @@ class CrawlScheduler:
         t_commit = time.time() - t2
         fetched.unpersist()
         frontier_delta.unpersist()
-        blooms_delta.unpersist()
         newly_seen.unpersist()
         return {
             "snapshot": sid,

@@ -43,6 +43,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 BLOOM_SCHEMA = "bucket int, bitmap binary, n_bits long, n_hashes int, n_items long"
 SEEN_SCHEMA = "bucket int, url_hash long"
@@ -51,6 +52,21 @@ DEFAULT_N_BUCKETS = 64
 BITS_PER_ITEM = 10
 N_HASHES = 7
 MIN_BITS = 1 << 13  # 8 Kibit floor per bucket blob
+
+
+def empty_frame(spark: SparkSession, schema: str) -> DataFrame:
+    """A typed zero-row frame that lives in the JVM. Catalyst folds the
+    always-false filter to an empty ``LocalRelation``, so building or
+    scanning it runs no Python task, and ``isEmpty()`` runs no job.
+    ``spark.createDataFrame([], schema)`` would go through ``parallelize``
+    and schedule one Python task per default-parallelism slice on every
+    scan, each paying the worker's fixed start-up cost for zero rows."""
+    fields = StructType.fromDDL(schema).fields
+    return (
+        spark.range(1)
+        .select(*[F.lit(None).cast(f.dataType).alias(f.name) for f in fields])
+        .where(F.lit(False))
+    )
 
 
 def _probe_positions(hashes: np.ndarray, n_bits: int, n_hashes: int) -> np.ndarray:
@@ -272,9 +288,20 @@ class BloomSeenSet:
         """Per-round blob delta for the buckets receiving ``new_rows``:
         OR the new hashes in, then rebuild any bucket whose item count
         outran its bit budget (from ``seen_after``, the post-merge exact
-        rows). Only touched buckets can newly overflow."""
-        delta = self.merge_blooms(touched_blobs, new_rows)
-        return self.rebuild_overfull_blooms(delta, seen_after)
+        rows). Only touched buckets can newly overflow.
+
+        Eager: the merge is locally checkpointed once, and the overfull
+        bucket ids (at most ``n_buckets``) are collected to the driver, so
+        the merge cogroup runs exactly once and the rebuild is planned
+        only when a bucket overflowed. The returned frame is materialized
+        on both paths; callers need no cache of their own."""
+        delta = self.merge_blooms(touched_blobs, new_rows).localCheckpoint()
+        overfull = delta.filter(
+            F.col("n_items") * BITS_PER_ITEM > F.col("n_bits")
+        ).select("bucket").collect()
+        if not overfull:
+            return delta
+        return self.rebuild_overfull_blooms(delta, seen_after).localCheckpoint()
 
 
 class StateStore:
@@ -445,10 +472,12 @@ class StateStore:
         snapshot: int | None = None,
     ) -> DataFrame:
         """Read a table at the current snapshot, or at a historical one
-        (``snapshot=`` time travel)."""
+        (``snapshot=`` time travel). A table the manifest does not name
+        reads as an ``empty_frame`` of ``schema`` (no job, no Python
+        task)."""
         rel = self.manifest(snapshot)["tables"].get(name)
         if rel is None:
-            return spark.createDataFrame([], schema)
+            return empty_frame(spark, schema)
         if isinstance(rel, dict):
             return self._read_upsert(spark, rel, schema)
         parts = rel if isinstance(rel, list) else [rel]
@@ -467,7 +496,7 @@ class StateStore:
         union, no shuffle, and bucket-partitioned dirs mean Spark opens
         only the owned partitions' files."""
         if not entry["owners"]:
-            return spark.createDataFrame([], schema)
+            return empty_frame(spark, schema)
         cols = [f.strip().split()[0] for f in schema.split(",")]
         return self._read_upsert_entry(spark, entry).select(*cols)
 

@@ -9,11 +9,14 @@ import pytest
 from pyspark.sql import functions as F
 
 from simplecommoncrawlextractor_spark.plans.state import (
+    BLOOM_SCHEMA,
+    SEEN_SCHEMA,
     BloomSeenSet,
     StateStore,
     _bits_for,
     _build_blob,
     _test_blob,
+    empty_frame,
     N_HASHES,
 )
 
@@ -118,6 +121,139 @@ def test_rebuild_overfull_blooms(spark):
         "xxhash64(cast(id as string)) as url_hash", "cast(id as string) as url"
     )
     assert seen.probe(cand, all_rows, rebuilt).count() == 0
+
+
+def _bloom_rows(df):
+    """Blob rows as plain tuples, bucket-ordered, bitmap as bytes."""
+    return sorted(
+        (r["bucket"], bytes(r["bitmap"]), r["n_bits"], r["n_hashes"], r["n_items"])
+        for r in df.collect()
+    )
+
+
+def _hashes(spark, lo, hi, n_buckets=None, bucket=None):
+    df = spark.range(lo, hi).selectExpr("xxhash64(cast(id as string)) as url_hash")
+    if bucket is not None:
+        df = df.filter(F.pmod("url_hash", F.lit(n_buckets)) == bucket)
+    return df
+
+
+def test_merge_delta_keeps_both_branches(spark):
+    """merge_delta materializes the merge once and rebuilds only when a
+    bucket overflowed; both branches return what the two helpers return
+    when composed by hand."""
+    seen = BloomSeenSet(n_buckets=4)
+    first = seen.bucketize(_hashes(spark, 0, 1000)).select("bucket", "url_hash")
+    blooms = seen.build_blooms(first)
+    before = {r[0]: r for r in _bloom_rows(blooms)}
+
+    # no bucket overflows: the result is merge_blooms' rows, byte for byte
+    new = _hashes(spark, 1000, 1100)
+    after = seen.bucketize(_hashes(spark, 0, 1100)).select("bucket", "url_hash")
+    got = _bloom_rows(seen.merge_delta(blooms, new, after))
+    assert got == _bloom_rows(seen.merge_blooms(blooms, new))
+    assert all(r[2] == before[r[0]][2] for r in got)
+
+    # bucket 0 floods past its bit budget, bucket 1 gets a few rows
+    new = _hashes(spark, 1100, 9000, 4, 0).unionByName(
+        _hashes(spark, 9000, 9100, 4, 1)
+    )
+    after = first.unionByName(seen.bucketize(new).select("bucket", "url_hash"))
+    merged = seen.merge_blooms(blooms, new)
+    got = _bloom_rows(seen.merge_delta(blooms, new, after))
+    assert got == _bloom_rows(seen.rebuild_overfull_blooms(merged, after))
+    by_bucket = {r[0]: r for r in got}
+    assert by_bucket[0][2] > before[0][2]
+    assert by_bucket[0][2] >= by_bucket[0][4] * 10
+    untouched = {r[0]: r for r in _bloom_rows(merged) if r[0] != 0}
+    assert {b: r for b, r in by_bucket.items() if b != 0} == untouched
+    assert by_bucket[1][4] > before[1][4]
+    assert by_bucket[2] == before[2] and by_bucket[3] == before[3]
+
+
+def _settle(spark, tag):
+    """Wait until the status store has seen every job submitted so far:
+    listener events arrive in order, so once a marker job shows up, any
+    earlier job would have too."""
+    import time
+
+    sc = spark.sparkContext
+    sc.setJobGroup(tag, tag)
+    spark.range(1).count()
+    deadline = time.time() + 30
+    while not sc.statusTracker().getJobIdsForGroup(tag):
+        assert time.time() < deadline, "status store never saw the marker job"
+        time.sleep(0.05)
+
+
+def test_empty_state_costs_no_job(spark, tmp_path):
+    """Empty state frames live in the JVM: reading a missing table or an
+    upsert entry with no owners, isEmpty() on them, and the robots lookup
+    of a store without a robots table run no Spark job; count() runs only
+    its final one-task aggregate, never a task that scans the frame."""
+    import uuid
+
+    from pyspark.sql.types import StructType
+
+    from simplecommoncrawlextractor_spark.plans import CrawlScheduler
+    from simplecommoncrawlextractor_spark.sources import seed_frontier
+
+    sc = spark.sparkContext
+    store = StateStore(str(tmp_path / "empty_state"))
+    # an upsert table whose first delta is empty: owners stays {}
+    store.commit(tables={}, upserts={"blooms": empty_frame(spark, BLOOM_SCHEMA)})
+    assert store.manifest()["tables"]["blooms"]["owners"] == {}
+    sched = CrawlScheduler(
+        spark, StateStore(str(tmp_path / "boot")), host_budget=4, salt_k=4, n_buckets=8
+    )
+    sched.bootstrap(seed_frontier(spark, n=20))
+    _settle(spark, f"settle-{uuid.uuid4().hex}")
+
+    group = f"empty-state-{uuid.uuid4().hex}"
+    count_group = f"empty-count-{uuid.uuid4().hex}"
+    try:
+        sc.setJobGroup(group, "empty state reads")
+        frames = {
+            SEEN_SCHEMA: store.read(spark, "url_seen", SEEN_SCHEMA),
+            BLOOM_SCHEMA: store.read(spark, "blooms", BLOOM_SCHEMA),
+        }
+        for df in frames.values():
+            assert df.isEmpty()
+        assert sched._effective_rules() is None
+        _settle(spark, f"settle-{uuid.uuid4().hex}")
+        assert sc.statusTracker().getJobIdsForGroup(group) == []
+
+        # a global count over an empty LocalRelation still plans one
+        # final aggregate task; the scan stage below it has no tasks
+        sc.setJobGroup(count_group, "empty state counts")
+        for df in frames.values():
+            assert df.count() == 0
+        _settle(spark, f"settle-{uuid.uuid4().hex}")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tracker = sc.statusTracker()
+    tasks = [
+        tracker.getStageInfo(s).numTasks
+        for j in tracker.getJobIdsForGroup(count_group)
+        for s in tracker.getJobInfo(j).stageIds
+    ]
+    assert sum(tasks) <= len(frames), tasks
+
+    for i, (schema, df) in enumerate(frames.items()):
+        declared = StructType.fromDDL(schema)
+        assert [(f.name, f.dataType) for f in df.schema.fields] == [
+            (f.name, f.dataType) for f in declared.fields
+        ]
+        casts = [
+            f"cast(cast(id as string) as {f.dataType.simpleString()}) as {f.name}"
+            for f in declared.fields
+        ]
+        path = str(tmp_path / f"part{i}")
+        spark.range(3).selectExpr(*casts).write.parquet(path)
+        union = spark.read.parquet(path).unionByName(df)
+        assert union.schema == spark.read.parquet(path).schema
+        assert union.count() == 3
 
 
 def _bloom_files(root):
