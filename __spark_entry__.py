@@ -35,7 +35,7 @@ from simplecommoncrawlextractor_spark.plans.frontier import (
     politeness_schedule,
 )
 from simplecommoncrawlextractor_spark.sources import interleaved_documents
-from simplecommoncrawlextractor_spark.sources.tables import load_table
+from simplecommoncrawlextractor_spark.sources.tables import load_table, sort_once
 
 # ---------------------------------------------------------------------------
 # DuckDB SQL fragments mirroring the scalar parity layer
@@ -240,7 +240,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         then lexed back, cleaned through a mapper-chain config
         (URLUtil.clean), and emitted as (host, url). The oracle computes
         the expected fixpoint directly from cdx, so any lexer
-        misalignment or escape bug hash-mismatches."""
+        misalignment or escape bug hash-mismatches. The result sort is
+        ``sort_once``, so the lexer and clean chain run once per row."""
         from simplecommoncrawlextractor_spark.functions.mappers import (
             load_field_mapper_config,
         )
@@ -299,7 +300,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 }
             }
         )["input_url"]
-        return wiki_external_links(lines, mapper_rules=rules).orderBy("host", "url")
+        # sort_once: the range sample job must not re-run the lexer and clean chain
+        return sort_once(wiki_external_links(lines, mapper_rules=rules), "host", "url")
 
     q["s9_wiki_external_links"] = s9_wiki_external_links
 
@@ -316,7 +318,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         byte counts a closed form of the shard number (75-byte lines ×
         40+(num%23) + 23 bytes of level-0 gzip framing), so the DuckDB
         oracle replays statuses AND sizes exactly — and the join asserts
-        download/HEAD agreement inside the gate itself."""
+        download/HEAD agreement inside the gate itself. The result sort is
+        ``sort_once``, so each shard is fetched and probed once."""
         import tempfile
 
         from simplecommoncrawlextractor_spark.sources.shards import (
@@ -329,7 +332,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         m = shard_manifest(s, "CC-MAIN-2026-08", n_shards=32)
         dl = download_shards(m, out).select("output_name", "status", "n_bytes")
         hd = head_shard_sizes(m)
-        return dl.join(hd, "output_name").orderBy("output_name")
+        # sort_once: the range sample job must not fetch and probe every shard again
+        return sort_once(dl.join(hd, "output_name"), "output_name")
 
     q["s6_s7_shard_fetch_probe"] = s6_s7_shard_fetch_probe
 
@@ -573,7 +577,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         type filter + HTTP unwrap) → projection. The DuckDB oracle
         derives the same rows straight from the documents table — every
         url/mime/truncated flag, byte count, and payload md5 must survive
-        the gzip+WARC+HTTP round trip bit-for-bit."""
+        the gzip+WARC+HTTP round trip bit-for-bit. The result sort is
+        ``sort_once``, so each archive is inflated once."""
         import re
         import tempfile
 
@@ -612,26 +617,35 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # level, and level 9's extra compression passes are pure CPU here
         write_warc(rows.repartition(n_w, "url"), out_dir, compresslevel=6)
         resp = warc_response_records(read_warc(s, os.path.join(out_dir, "*.warc.gz")))
-        return resp.select(
+        # sort_once: the range sample job must not re-run the read_warc inflate
+        return sort_once(
+            resp.select(
+                "url",
+                F.col("header_mime").alias("mime"),
+                "truncated",
+                F.col("length").alias("n_bytes"),
+                F.md5("payload").alias("payload_md5"),
+            ),
             "url",
-            F.col("header_mime").alias("mime"),
-            "truncated",
-            F.col("length").alias("n_bytes"),
-            F.md5("payload").alias("payload_md5"),
-        ).orderBy("url")
+        )
 
     q["warc_roundtrip_records"] = warc_roundtrip_records
 
     def multimodal_features(s, d):
+        """Header-read image width/height per media payload of the
+        interleaved documents, sorted by ``media_ref`` with ``sort_once``
+        so ``image_features`` runs once per payload."""
         from simplecommoncrawlextractor_spark.operators.multimodal import (
             image_features,
             media_payloads_from_docs,
         )
 
         media = media_payloads_from_docs(interleaved_documents(s, d))
-        return image_features(media).select(
-            "media_ref", "mime", "width", "height", "n_bytes"
-        ).orderBy("media_ref")
+        # sort_once: the range sample job must not re-run image_features
+        return sort_once(
+            image_features(media).select("media_ref", "mime", "width", "height", "n_bytes"),
+            "media_ref",
+        )
 
     q["multimodal_image_features"] = multimodal_features
 

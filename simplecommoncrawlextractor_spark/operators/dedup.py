@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import doc_fingerprint
-from ..sources.tables import spread as _spread
+from ..sources.tables import sort_once, spread as _spread
 
 
 def _pairs_from_ids(ids_col) -> F.Column:
@@ -387,6 +387,23 @@ def minhash_lsh_candidates(
     )
 
 
+_INT32_MAX = 2**31 - 1
+
+
+def _check_pair_width(n_pairs: int, unit: int) -> None:
+    """``gen_pairs`` indexes a task's pair instances with int32 arrays and
+    packs them behind int32 Arrow offsets of ``unit`` bytes (or list
+    elements) per pair. Refuse, instead of wrapping to wrong pairs, once
+    ``n_pairs * unit`` passes 2^31 - 1."""
+    if int(n_pairs) * unit > _INT32_MAX:
+        raise OverflowError(
+            f"ngram_jaccard_pairs: one task generated {int(n_pairs):,} pair "
+            f"instances; at {unit} per pair that passes the int32 offset "
+            f"limit of {_INT32_MAX:,}. Raise spark.sql.shuffle.partitions "
+            "or lower max_doc_freq."
+        )
+
+
 def _shingles_sized(
     docs: DataFrame, n: int, text_col: str, id_col: str
 ) -> DataFrame:
@@ -443,6 +460,8 @@ def ngram_jaccard_pairs(
     The surviving candidates (a small superset of the answer) get the
     SAME exact double-division threshold test as before, in Spark — so
     the result set is identical; only where the arithmetic runs moved.
+    The result sort is ``sort_once``: a bare ``orderBy`` would re-run
+    ``count_pairs`` for the range sort's sample job.
     """
     import numpy as np
     import pyarrow as pa
@@ -518,6 +537,7 @@ def ngram_jaccard_pairs(
         cnt = np.concatenate(
             [np.arange(e - s - 1, -1, -1, dtype=np.int32) for s, e in zip(starts, ends)]
         )
+        _check_pair_width(cnt.sum(dtype=np.int64), 1)
         a_idx = np.repeat(gidx, cnt)
         if not a_idx.size:
             return
@@ -554,6 +574,7 @@ def ngram_jaccard_pairs(
         ca, sz_a, cb, sz_b = ca[o2], sz_a[o2], cb[o2], sz_b[o2]
         rs = np.flatnonzero(np.r_[True, ca[1:] != ca[:-1]])
         bnd = np.concatenate([rs, [ca.size]])
+        _check_pair_width(ca.size, 8 if int_ids else 1)
         if int_ids:
             # explicit little-endian payloads: count_pairs decodes them as
             # "<i8"/"<i4" whatever the host byte order
@@ -684,13 +705,18 @@ def ngram_jaccard_pairs(
     # restore the declared long schema (int/int division above is cast to
     # double by Spark exactly as long/long was, so the jaccard values and
     # the survivor set are bit-identical to the previous version)
-    return j.select(
+    # sort_once: the range sample job must not re-run count_pairs
+    return sort_once(
+        j.select(
+            "id_a",
+            "id_b",
+            F.col("inter").cast("long").alias("inter"),
+            F.col("sz_a").cast("long").alias("sz_a"),
+            F.col("sz_b").cast("long").alias("sz_b"),
+        ),
         "id_a",
         "id_b",
-        F.col("inter").cast("long").alias("inter"),
-        F.col("sz_a").cast("long").alias("sz_a"),
-        F.col("sz_b").cast("long").alias("sz_b"),
-    ).orderBy("id_a", "id_b")
+    )
 
 
 def dedup_skew_report(

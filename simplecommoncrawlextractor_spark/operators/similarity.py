@@ -27,6 +27,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..sources.tables import sort_once
+
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -557,7 +559,11 @@ def semantic_near_dup_pairs(
 
     ``max_cluster`` skips degenerate clusters the same way the LSH/
     SimHash bucket caps do (oracle-mirrored, truncation visible): pair
-    generation is O(Σ cluster²), which a hot cluster would blow up."""
+    generation is O(Σ cluster²), which a hot cluster would blow up.
+
+    The (id_a, id_b) result sort is ``sort_once``, so ``cluster_pairs``
+    runs once per cluster instead of again for the range sort's sample
+    job."""
     # the final assignment already carries q — no second scan+quantize
     # pass, no N-row reattach join
     clusters = kmeans_clusters(
@@ -607,10 +613,13 @@ def semantic_near_dup_pairs(
              "id_a": ids[iu[keep]], "id_b": ids[ju[keep]]}
         )
 
-    return (
-        clusters.groupBy("cluster")
-        .applyInPandas(cluster_pairs, "cluster long, id_a long, id_b long")
-        .orderBy("id_a", "id_b")
+    # sort_once: the range sample job must not re-run cluster_pairs
+    return sort_once(
+        clusters.groupBy("cluster").applyInPandas(
+            cluster_pairs, "cluster long, id_a long, id_b long"
+        ),
+        "id_a",
+        "id_b",
     )
 
 

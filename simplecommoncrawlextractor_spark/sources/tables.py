@@ -42,13 +42,32 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # split-count memo (round 6): ``df.rdd.getNumPartitions()`` plans the
 # physical scan through py4j — measured 40-80 ms of driver time per fresh
 # DataFrame, paid on every spread() during every timed query construction.
-# A scan's split count is a pure function of its input files and the
-# session's split confs (projection does not change byte-range splits), so
-# memoize it per input-file set (``inputFiles()`` is ~8 ms and served from
-# the session's file-index cache). Performance metadata only — never rows
-# or results; an unmemoizable frame (no input files) takes the direct
-# probe exactly as before.
+# A scan's split count is a pure function of its input files, the session
+# (its default parallelism) and the session's split confs (projection does
+# not change byte-range splits), so memoize it on exactly those
+# (``inputFiles()`` is ~8 ms and served from the session's file-index
+# cache). Performance metadata only — never rows or results; an
+# unmemoizable frame (no input files) takes the direct probe exactly as
+# before.
 _SPLITS_MEMO: dict[tuple, int] = {}
+_SPLIT_CONFS = (
+    "spark.sql.files.maxPartitionBytes",
+    "spark.sql.files.openCostInBytes",
+    "spark.sql.files.minPartitionNum",
+)
+
+
+def _splits_key(df: DataFrame) -> tuple:
+    """The ``_SPLITS_MEMO`` key of a scan: the session, its split confs and
+    the input files; ``()`` when the frame has no input files."""
+    try:
+        files = tuple(df.inputFiles())
+    except Exception:
+        return ()
+    if not files:
+        return ()
+    s = df.sparkSession
+    return (s, tuple(s.conf.get(c) for c in _SPLIT_CONFS), files)
 
 
 def spread(df: DataFrame) -> DataFrame:
@@ -58,10 +77,7 @@ def spread(df: DataFrame) -> DataFrame:
     scale inputs carry enough splits that this is a no-op (the partition
     check is metadata-only, no job runs)."""
     target = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200"))
-    try:
-        key = tuple(df.inputFiles())
-    except Exception:
-        key = ()
+    key = _splits_key(df)
     n = _SPLITS_MEMO.get(key) if key else None
     if n is None:
         n = df.rdd.getNumPartitions()
@@ -70,6 +86,22 @@ def spread(df: DataFrame) -> DataFrame:
     if n < target:
         return df.repartition(target)
     return df
+
+
+def sort_once(df: DataFrame, *cols: str) -> DataFrame:
+    """``df.orderBy(*cols)`` whose child stage runs once.
+
+    A global sort plans ``Exchange rangepartitioning``, and its
+    ``RangePartitioner`` runs the child stage twice: once as a sampling job
+    that collects the range bounds, then again to write the shuffle. When
+    that child stage holds a Python node (``mapInPandas``, ``mapInArrow``,
+    ``applyInPandas``, an Arrow UDF), every row crosses the Python boundary
+    twice and every task pays the worker start-up twice. Hash-partitioning
+    on the sort keys first ends the child stage at a shuffle, so the sample
+    job reads those shuffle files instead of re-running the Python child.
+    The cost is one extra shuffle of the result rows. Stays lazy; ``cols``
+    are ascending column names."""
+    return df.repartition(*cols).orderBy(*cols)
 
 
 def register_views(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES) -> None:

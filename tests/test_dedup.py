@@ -292,3 +292,18 @@ def test_star_cc_matches_label_propagation_and_handles_long_chain(spark):
         for r in connected_components_star(cand, docs.select("doc_id")).collect()
     }
     assert got == want
+
+
+def test_gen_pairs_width_check_at_int32_boundary():
+    """gen_pairs' int32 index arrays and Arrow offsets must refuse, not
+    wrap, past 2^31 - 1 — checked on counts alone, nothing allocated."""
+    import pytest
+
+    from simplecommoncrawlextractor_spark.operators.dedup import _check_pair_width
+
+    _check_pair_width(2**31 - 1, 1)  # largest index the int32 ramps hold
+    _check_pair_width(2**28 - 1, 8)  # largest id blob the offsets address
+    with pytest.raises(OverflowError, match="2,147,483,648 pair instances"):
+        _check_pair_width(2**31, 1)
+    with pytest.raises(OverflowError, match="268,435,456 pair instances"):
+        _check_pair_width(2**28, 8)

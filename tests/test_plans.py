@@ -5,6 +5,7 @@ and no accidental cartesian products. (SURVEY §4.)"""
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 from pyspark.sql import functions as F
@@ -187,3 +188,112 @@ def test_substring_spans_single_explode_and_partial_agg(spark, sf_dir):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
     assert "CartesianProduct" not in plan
     assert plan.count("HashAggregate") >= 2  # partial+final on the gram key
+
+
+# Python plan nodes: each one runs its rows through a Python worker
+_PY_NODES = (
+    "MapInPandas",
+    "MapInArrow",
+    "ArrowEvalPython",
+    "BatchEvalPython",
+    "FlatMapGroupsInPandas",
+    "FlatMapCoGroupsInPandas",
+)
+_CHILD = re.compile(r"^((?:   |:  )*)(?:\+- |:- )(.*)$")
+
+
+def _plan_nodes(plan: str) -> list[tuple[int, str]]:
+    """(depth, node text) per plan-tree line; lines that are not tree
+    nodes (a string literal's embedded newline) are dropped."""
+    lines = plan.splitlines()
+    nodes = [(0, lines[0])] if lines else []
+    for line in lines[1:]:
+        m = _CHILD.match(line)
+        if m:
+            nodes.append((len(m.group(1)) // 3 + 1, m.group(2)))
+    return nodes
+
+
+def _python_under_range_sort(plan: str) -> list[str]:
+    """Python nodes in the child stage of a range exchange, i.e. between an
+    ``Exchange rangepartitioning`` and the next exchange (or cached
+    relation) below it: the range partitioner's sample job runs that stage
+    a second time."""
+    nodes = _plan_nodes(plan)
+    found = []
+    for i, (depth, text) in enumerate(nodes):
+        if not text.startswith("Exchange rangepartitioning"):
+            continue
+        stop_below = None  # depth of a stage boundary whose subtree is skipped
+        for d, t in nodes[i + 1 :]:
+            if d <= depth:
+                break
+            if stop_below is not None and d > stop_below:
+                continue
+            stop_below = None
+            name = re.sub(r"^\*\(\d+\) ", "", t)
+            if name.startswith(("Exchange", "BroadcastExchange", "ReusedExchange", "InMemory")):
+                stop_below = d
+            elif name.split(" ", 1)[0] in _PY_NODES:
+                found.append(name[:80])
+    return found
+
+
+def test_no_python_stage_under_a_range_sort(spark, sf_dir):
+    """A global sort's range partitioner first runs its child stage to
+    sample the bounds and then runs it again to write the shuffle, so a
+    Python node in that stage runs twice (``sort_once`` ends the stage at
+    a hash shuffle instead). No gate query may plan one there."""
+    bad = {}
+    for name, fn in entrymod.queries().items():
+        hits = _python_under_range_sort(_plan(fn(spark, sf_dir)))
+        if hits:
+            bad[name] = hits
+    assert not bad, f"Python nodes re-run by a range sort's sample job: {bad}"
+
+
+def test_sort_once_runs_the_python_child_once(spark):
+    """Under a bare ``orderBy`` the range sample job re-runs the Python
+    child, so it sees every row twice; under ``sort_once`` it sees each row
+    once, and the sorted rows are the same."""
+    from simplecommoncrawlextractor_spark.sources.tables import sort_once
+
+    seen = spark.sparkContext.accumulator(0)
+
+    def count(batches):
+        for pdf in batches:
+            seen.add(len(pdf))
+            yield pdf
+
+    n = 2_000
+    df = spark.range(n).select(((F.col("id") * 7919) % n).alias("a")).mapInPandas(count, "a long")
+    bare = [r.a for r in df.orderBy("a").collect()]
+    assert seen.value == 2 * n
+    seen.value = 0
+    once = [r.a for r in sort_once(df, "a").collect()]
+    assert seen.value == n
+    assert once == bare == list(range(n))
+
+
+def test_split_memo_keys_on_split_confs(spark, tmp_path):
+    """The same files read under a different maxPartitionBytes are probed
+    again, not served the split count memoized under the old value."""
+    from simplecommoncrawlextractor_spark.sources import tables
+
+    path = str(tmp_path / "t.parquet")
+    spark.range(50_000).coalesce(1).write.parquet(path)
+    conf = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(conf)
+    try:
+        wide = spark.read.parquet(path)
+        assert wide.rdd.getNumPartitions() == 1
+        assert tables.spread(wide) is not wide  # 1 split < 8: repartitioned
+        spark.conf.set(conf, "4096")
+        narrow = spark.read.parquet(path)
+        n = narrow.rdd.getNumPartitions()
+        assert n >= 8
+        assert tables.spread(narrow) is narrow  # enough splits: left as is
+        assert tables._SPLITS_MEMO[tables._splits_key(narrow)] == n
+    finally:
+        spark.conf.set(conf, old)
+    assert tables._SPLITS_MEMO[tables._splits_key(wide)] == 1
