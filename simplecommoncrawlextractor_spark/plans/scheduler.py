@@ -382,12 +382,11 @@ class CrawlScheduler:
         n_frontier = frontier_delta.count()
         t_harvest = time.time() - t1
 
+        sid = self.store.next_snapshot_id()
         metrics_new = _partition_lineage(
-            fetched, self.store.snapshot_id() + 1, rnd, "fetch", t_fetch
+            fetched, sid, rnd, "fetch", t_fetch
         ).unionByName(
-            _partition_lineage(
-                frontier_delta, self.store.snapshot_id() + 1, rnd, "harvest", t_harvest
-            )
+            _partition_lineage(frontier_delta, sid, rnd, "harvest", t_harvest)
         )
 
         # url_seen, fetch_log, metrics and (normal rounds) the frontier are
@@ -405,7 +404,6 @@ class CrawlScheduler:
                     "metrics": metrics_new,
                 },
                 upserts={"blooms": blooms_delta},
-                partition_by={"url_seen": ["bucket"]},
                 carry_forward=["robots"],
                 meta={"round": rnd},
             )
@@ -420,7 +418,6 @@ class CrawlScheduler:
                     "metrics": metrics_new,
                 },
                 upserts={"blooms": blooms_delta},
-                partition_by={"url_seen": ["bucket"]},
                 carry_forward=["robots"],
                 meta={"round": rnd},
             )
@@ -501,7 +498,6 @@ class CrawlScheduler:
         return self.store.commit(
             tables={"url_seen": remaining},
             upserts={"blooms": rebuilt},
-            partition_by={"url_seen": ["bucket"]},
             carry_forward=[
                 "frontier", "frontier_tombs", "fetch_log", "metrics", "robots",
             ],

@@ -1,4 +1,4 @@
-"""Snapshot-pinned state tables + the partitioned bloom URL-seen set.
+"""Snapshot-pinned state tables + the bucketed bloom URL-seen set.
 
 The reference's persistent "seen" state is a digest-addressed filesystem:
 existence of ``<root>/<digest[0:2]>/<digest>`` means already-fetched, and a
@@ -8,14 +8,18 @@ removes a percentage of truncated files (cc/RefetchedDeleter.java:37-43).
 
 Spark-first re-expression:
 - **url_seen**: exact ``(bucket, url_hash)`` rows, hash-bucketed (the analog
-  of the digest[0:2] shard), stored as Parquet partitioned by bucket.
+  of the digest[0:2] shard). The bucket is a column, not a directory: each
+  commit writes one Parquet file per write task, so a round's file count
+  does not grow with the bucket count.
 - **bloom side-structure**: one bloom-filter blob per bucket, built and
   merged with ``applyInPandas`` (each task owns whole buckets — no
   read-modify-write races). Probing a candidate batch co-groups candidates
   with their bucket's blob; bloom-negative rows are *definitely* unseen and
-  skip the exact join entirely; bloom-positive rows are confirmed with a
-  bucket-pruned left-anti join (false positives survive). Catalyst's runtime
-  bloom join filter can't do this: it is per-query, ours persists across runs.
+  skip the exact join entirely; bloom-positive rows are confirmed by a
+  ``(bucket, url_hash)`` semi-join against the exact rows, and one final
+  left-anti join drops the confirmed ones (false positives survive).
+  Catalyst's runtime bloom join filter can't do this: it is per-query, ours
+  persists across runs.
 - **deletes**: exact rows make deletion trivial — affected buckets are
   rewritten and ONLY their blobs rebuilt (bounded by one bucket's
   cardinality), the analog of RefetchedDeleter's file removals.
@@ -27,7 +31,8 @@ Spark-first re-expression:
 
 Scale math (10^10 URLs, design point): 4096 buckets × ~2.4M urls/bucket ×
 10 bits ≈ 3 MB/blob, 12 GB total bloom state — each task touches only its
-buckets' blobs; exact rows are ~80 GB of parquet, bucket-pruned on probe.
+buckets' blobs; exact rows are ~80 GB of parquet, which the confirm join
+scans whole while only the bloom-positive suspects are shuffled into it.
 """
 
 from __future__ import annotations
@@ -148,7 +153,8 @@ class BloomSeenSet:
 
         cogrouped applyInPandas(candidates ⨝bucket blooms) emits ONLY the
         bloom-positive hashes (suspects); those are confirmed against the
-        exact rows with a bucket-pruned semi-join, and the single final
+        exact rows with a ``(bucket, url_hash)`` semi-join (it scans every
+        url_seen part; nothing prunes them by bucket), and the single final
         anti-join removes the confirmed-seen hashes from the candidates.
         Algebra: cand hashes = definite_new ∪ suspects, so
         cand ∖ (suspects ∩ seen) = definite_new ∪ (suspects ∖ seen) — the
@@ -316,13 +322,22 @@ class StateStore:
       (url_seen, fetch_log, metrics).
     - **upsert** (``upserts=``): keyed delta per commit — the manifest maps
       each key (bloom bucket id) to the part that owns its latest row, so a
-      round writes ONLY the touched buckets' blobs and a read opens only
-      the owning files (bucket-partitioned dirs → partition pruning). This
-      is what keeps the bloom state commit O(round): untouched buckets'
-      files are never rewritten, merely re-referenced. The owner map is
-      bounded by n_buckets (≤4096 at the 10^10 design point) — manifest
+      round writes ONLY the touched buckets' blobs and a read keeps only
+      each part's owned keys: an ``In`` filter pushed to the Parquet
+      reader. Upsert parts are sorted by key within each file, so a key's
+      rows are contiguous and row-group min/max stats can skip the rest.
+      This is what keeps the bloom state commit O(round): untouched
+      buckets' rows are never rewritten, merely re-referenced. The owner
+      map is bounded by n_buckets (≤4096 at the 10^10 design point) — manifest
       metadata, not data. Parts compact into a fresh base once the list
       exceeds MAX_UPSERT_PARTS.
+
+    No table is written with ``partitionBy``: a part is one Parquet file
+    per write task. Spark creates every file and directory on ``file://``
+    through Hadoop's local filesystem, which without the native library
+    forks ``chmod`` for each, so one directory per bucket would cost a
+    fork per write task and bucket. Parts written in that older
+    ``bucket=N`` layout still read, next to flat ones.
     """
 
     MANIFEST = "manifest.json"
@@ -353,6 +368,17 @@ class StateStore:
 
     def snapshot_id(self) -> int:
         return int(self.manifest()["snapshot"])
+
+    def next_snapshot_id(self) -> int:
+        """The sid the next ``commit`` allocates: above EVERY retained
+        snapshot, not current+1. After a rollback the current snapshot is
+        older than the abandoned lineage's, and reusing an abandoned sid
+        would overwrite its v{sid}/d{sid} data dirs while
+        manifest-{sid}.json still points at them — a time-travel read
+        mid-overwrite would see torn parquet. Allocating past
+        max(snapshots) keeps every historical manifest's dirs immutable
+        (the Iceberg snapshot-id contract)."""
+        return max([self.snapshot_id()] + self.snapshots()) + 1
 
     def snapshots(self) -> list[int]:
         """All retained snapshot ids, ascending."""
@@ -403,10 +429,11 @@ class StateStore:
         the new snapshot's data (Iceberg's ``remove_orphan_files`` has
         the same ``older_than`` guard for the same reason). The age is
         the NEWEST mtime found anywhere under the part tree, not the
-        top-level directory's: for a partitioned part, writing a file
-        into an existing subdirectory does not touch the top directory,
-        so a large commit could look hours old at the top while still
-        actively writing below. As with Iceberg's guidance,
+        top-level directory's: writing a file into an existing
+        subdirectory (Spark's ``_temporary`` task dirs, an older store's
+        ``bucket=N`` dirs) does not touch the top directory, so a large
+        commit could look hours old at the top while still actively
+        writing below. As with Iceberg's guidance,
         ``orphan_grace_sec`` must still exceed the maximum expected
         write-to-publish span of a commit. Returns
         {"expired": [...], "removed": [...part dirs...]}.
@@ -482,8 +509,8 @@ class StateStore:
             return self._read_upsert(spark, rel, schema)
         parts = rel if isinstance(rel, list) else [rel]
         # read each delta dir separately and union by name: multi-root reads
-        # trip Spark's partition discovery when parts mix partitioned and
-        # unpartitioned layouts (bootstrap tables are unpartitioned)
+        # trip Spark's partition discovery when parts mix layouts (a store
+        # written before parts were flat holds bucket=N part dirs)
         dfs = [spark.read.parquet(os.path.join(self.root, p)) for p in parts]
         out = dfs[0]
         for d in dfs[1:]:
@@ -493,8 +520,10 @@ class StateStore:
     def _read_upsert(self, spark: SparkSession, entry: dict, schema: str) -> DataFrame:
         """Resolve an upsert table: for each part, read only the keys it
         currently owns (latest writer). Disjoint by construction — a plain
-        union, no shuffle, and bucket-partitioned dirs mean Spark opens
-        only the owned partitions' files."""
+        union, no shuffle. Each part's key filter is pushed to the Parquet
+        reader, which skips row groups whose key range holds no owned key
+        (parts are key-sorted); an older store's ``bucket=N`` parts prune
+        by directory instead."""
         if not entry["owners"]:
             return empty_frame(spark, schema)
         cols = [f.strip().split()[0] for f in schema.split(",")]
@@ -504,7 +533,6 @@ class StateStore:
     def commit(
         self,
         tables: dict[str, DataFrame],
-        partition_by: dict[str, list[str]] | None = None,
         meta: dict | None = None,
         carry_forward: Iterable[str] = (),
         appends: dict[str, DataFrame] | None = None,
@@ -519,31 +547,18 @@ class StateStore:
         map redirects readers), carry forward unchanged tables, then
         atomically swap the manifest."""
         m = self.manifest()
-        # sid = above EVERY retained snapshot, not current+1: after a
-        # rollback the current snapshot is older than the abandoned
-        # lineage's, and reusing an abandoned sid would overwrite its
-        # v{sid}/d{sid} data dirs while manifest-{sid}.json still points
-        # at them — a time-travel read mid-overwrite would see torn
-        # parquet. Allocating past max(snapshots) keeps every historical
-        # manifest's dirs immutable (the Iceberg snapshot-id contract).
-        sid = max([int(m["snapshot"])] + self.snapshots()) + 1
+        sid = self.next_snapshot_id()
         new_tables: dict[str, str | list[str] | dict] = {}
         for name in carry_forward:
             if name in m["tables"]:
                 new_tables[name] = m["tables"][name]
         for name, df in tables.items():
             rel = f"{name}/v{sid}"
-            writer = df.write.mode("overwrite")
-            for col in (partition_by or {}).get(name, []):
-                writer = writer.partitionBy(col)
-            writer.parquet(os.path.join(self.root, rel))
+            df.write.mode("overwrite").parquet(os.path.join(self.root, rel))
             new_tables[name] = rel
         for name, df in (appends or {}).items():
             rel = f"{name}/d{sid}"
-            writer = df.write.mode("overwrite")
-            for col in (partition_by or {}).get(name, []):
-                writer = writer.partitionBy(col)
-            writer.parquet(os.path.join(self.root, rel))
+            df.write.mode("overwrite").parquet(os.path.join(self.root, rel))
             prev = m["tables"].get(name, [])
             parts = prev if isinstance(prev, list) else [prev]
             new_tables[name] = parts + [rel]
@@ -568,9 +583,9 @@ class StateStore:
     def _commit_upsert(
         self, m: dict, sid: int, name: str, df: DataFrame, keycol: str
     ) -> dict:
-        """Write the delta part (bucket-partitioned), update the key→part
-        owner map, and compact once the part list grows past
-        MAX_UPSERT_PARTS. The distinct-key collect is bounded by the key
+        """Write the delta part (flat, sorted by key within each file),
+        update the key→part owner map, and compact once the part list
+        grows past MAX_UPSERT_PARTS. The distinct-key collect is bounded by the key
         domain (bloom bucket count), i.e. manifest metadata — it never
         scales with row count. An EMPTY delta writes nothing and carries
         the previous entry forward (no dead parts, no compaction churn)."""
@@ -593,7 +608,7 @@ class StateStore:
             for d in dfs[1:]:
                 base = base.unionByName(d)
             base_rel = f"{name}/m{sid}"
-            base.write.mode("overwrite").partitionBy(keycol).parquet(
+            base.sortWithinPartitions(keycol).write.mode("overwrite").parquet(
                 os.path.join(self.root, base_rel)
             )
             prev_keys = [r[0] for r in base.select(keycol).distinct().collect()]
@@ -602,7 +617,7 @@ class StateStore:
         if not new_keys:
             return {"kind": "upsert", "key": keycol, "parts": parts, "owners": owners}
         rel = f"{name}/u{sid}"
-        df.write.mode("overwrite").partitionBy(keycol).parquet(
+        df.sortWithinPartitions(keycol).write.mode("overwrite").parquet(
             os.path.join(self.root, rel)
         )
         idx = len(parts)
@@ -617,7 +632,7 @@ class StateStore:
             # guaranteed it), so the resolve cannot come up empty.
             resolved = self._read_upsert_entry(df.sparkSession, entry)
             base_rel = f"{name}/v{sid}"
-            resolved.write.mode("overwrite").partitionBy(keycol).parquet(
+            resolved.sortWithinPartitions(keycol).write.mode("overwrite").parquet(
                 os.path.join(self.root, base_rel)
             )
             entry = {

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import os
+import re
 
 import numpy as np
 import pytest
@@ -596,3 +597,152 @@ def test_expire_snapshots_orphan_grace(spark, tmp_path):
     os.makedirs(inflight)
     out3 = store.expire_snapshots(keep_last=1, orphan_grace_sec=0)
     assert "t/v999" in out3["removed"] and not os.path.exists(inflight)
+
+
+def test_metrics_rows_carry_the_committed_sid_after_rollback(spark, tmp_path):
+    """After a rollback the next commit allocates a sid above every
+    retained snapshot, not current+1; the round's ``metrics`` rows must
+    carry that same sid, the one ``step`` returns."""
+    from simplecommoncrawlextractor_spark.plans import CrawlScheduler
+    from simplecommoncrawlextractor_spark.plans.scheduler import METRICS_SCHEMA
+    from simplecommoncrawlextractor_spark.sources import seed_frontier
+
+    store = StateStore(str(tmp_path / "rb"))
+    sched = CrawlScheduler(spark, store, host_budget=4, salt_k=4, n_buckets=8)
+    sched.bootstrap(seed_frontier(spark, n=120))
+    first = sched.step()["snapshot"]
+    sched.step()
+    store.rollback(first)
+    assert store.next_snapshot_id() > store.snapshot_id() + 1
+    stats = sched.step()
+    assert stats["snapshot"] == store.snapshot_id()
+    sids = {
+        r["snapshot"]
+        for r in store.read(spark, "metrics", METRICS_SCHEMA)
+        .filter(F.col("round") == stats["round"])
+        .select("snapshot")
+        .distinct()
+        .collect()
+    }
+    assert sids == {stats["snapshot"]}
+
+
+def _crawl_digest(sched) -> str:
+    import hashlib
+
+    h = hashlib.sha256()
+    for r in sched.crawl_order().collect():
+        h.update(("\t".join(map(str, r)) + "\n").encode())
+    return h.hexdigest()
+
+
+def test_state_parts_are_flat_key_sorted_files(spark, tmp_path, monkeypatch):
+    """No part is split into ``bucket=N`` directories: every part directory
+    holds at most one parquet file per write task (shuffle partitions),
+    and each upsert file is sorted by its key, through a bootstrap, two
+    rounds and an upsert compaction."""
+    from simplecommoncrawlextractor_spark.plans import CrawlScheduler
+    from simplecommoncrawlextractor_spark.sources import seed_frontier
+
+    monkeypatch.setattr(StateStore, "MAX_UPSERT_PARTS", 1)
+    root = str(tmp_path / "flat")
+    store = StateStore(root)
+    sched = CrawlScheduler(spark, store, host_budget=4, salt_k=4, n_buckets=8)
+    sched.bootstrap(seed_frontier(spark, n=200))
+    sched.step()
+    sched.step()
+    blooms = store.manifest()["tables"]["blooms"]
+    assert blooms["parts"] == ["blooms/v3"]  # round 2 compacted u2 + u3
+
+    n_tasks = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    for dirpath, dirs, files in os.walk(root):
+        assert not [d for d in dirs if "=" in d], dirpath
+        data = [f for f in files if f.endswith(".parquet")]
+        assert len(data) <= n_tasks, (dirpath, len(data))
+    _assert_key_sorted(os.path.join(root, "blooms"))
+
+
+def _assert_key_sorted(table_dir):
+    """Every parquet file of every part under ``table_dir`` is sorted by
+    bucket."""
+    import pyarrow.parquet as pq
+
+    for part in os.listdir(table_dir):
+        for fn in os.listdir(os.path.join(table_dir, part)):
+            if fn.endswith(".parquet"):
+                keys = pq.read_table(os.path.join(table_dir, part, fn)).column("bucket")
+                assert keys.to_pylist() == sorted(keys.to_pylist()), (part, fn)
+
+
+def _to_bucket_dirs(spark, part_dir):
+    """Rewrite one part in place in the ``bucket=N`` directory layout that
+    stores written before flat parts hold."""
+    import shutil
+
+    tmp = part_dir + ".old"
+    spark.read.parquet(part_dir).write.partitionBy("bucket").parquet(tmp)
+    shutil.rmtree(part_dir)
+    os.rename(tmp, part_dir)
+
+
+def test_old_bucket_dir_layout_resumes_identically(spark, tmp_path, monkeypatch):
+    """A store whose url_seen and bloom parts are in the older
+    ``bucket=N`` layout resumes next to new flat parts, through an upsert
+    compaction that folds both layouts, to the crawl order of a store
+    that was never rewritten."""
+    from simplecommoncrawlextractor_spark.plans import CrawlScheduler
+    from simplecommoncrawlextractor_spark.sources import seed_frontier
+
+    monkeypatch.setattr(StateStore, "MAX_UPSERT_PARTS", 1)
+
+    def crawl(root, rewrite):
+        store = StateStore(root)
+        sched = CrawlScheduler(spark, store, host_budget=4, salt_k=4, n_buckets=8)
+        sched.bootstrap(seed_frontier(spark, n=200))
+        sched.step()
+        if rewrite:
+            tables = store.manifest()["tables"]
+            old = [p for p in tables["url_seen"] if "/d" in p]
+            old += [p for p in tables["blooms"]["parts"] if "/u" in p]
+            assert old == ["url_seen/d2", "blooms/u2"]
+            for rel in old:
+                _to_bucket_dirs(spark, os.path.join(root, rel))
+                assert any(
+                    d.startswith("bucket=") for d in os.listdir(os.path.join(root, rel))
+                )
+        sched.run(2)
+        assert store.manifest()["tables"]["blooms"]["parts"] == ["blooms/v4"]
+        return _crawl_digest(sched)
+
+    control = crawl(str(tmp_path / "control"), rewrite=False)
+    assert crawl(str(tmp_path / "old"), rewrite=True) == control
+
+
+def test_upsert_read_pushes_owned_bucket_filter(spark, tmp_path):
+    """Resolving an upsert entry reads each flat part with its owned-key
+    ``In`` filter pushed to the Parquet scan, and returns exactly the
+    owned buckets' rows from each part. A delta that arrives in
+    descending key order is still written key-sorted."""
+    root = str(tmp_path / "push")
+    store = StateStore(root)
+    mk = lambda buckets, n: spark.createDataFrame(
+        [(b, bytes([b]), 8, 1, n) for b in buckets], BLOOM_SCHEMA
+    ).coalesce(1)
+    store.commit(tables={}, upserts={"blooms": mk(range(7, -1, -1), 1)})
+    store.commit(tables={}, upserts={"blooms": mk([5, 2], 2)})
+    entry = store.manifest()["tables"]["blooms"]
+    assert entry["parts"] == ["blooms/u1", "blooms/u2"]
+    _assert_key_sorted(os.path.join(root, "blooms"))
+
+    resolved = store.read(spark, "blooms", BLOOM_SCHEMA)
+    plan = resolved._jdf.queryExecution().executedPlan().toString()
+    scans = [ln for ln in plan.splitlines() if "FileScan parquet" in ln]
+    assert len(scans) == 2, plan
+    pushed = []
+    for ln in scans:
+        m = re.search(r"PushedFilters: \[[^\]]*In\(bucket, \[([\d,]+)\]\)", ln)
+        assert m, ln
+        pushed.append(sorted(int(k) for k in m.group(1).split(",")))
+    assert sorted(pushed) == [[0, 1, 3, 4, 6, 7], [2, 5]], pushed
+    got = sorted((r["bucket"], r["n_items"]) for r in resolved.collect())
+    assert got == [(b, 2 if b in (2, 5) else 1) for b in range(8)]
