@@ -372,14 +372,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def dedup_components(s, d):
         """Transitive near-dup clustering: LSH candidate pairs →
-        connected components (min-label propagation) → one component id
-        per document, singletons included. The oracle recomputes the
-        SAME pair set (shared minhash CTEs) and closes it transitively
-        with a recursive CTE — so the gate checks candidate generation
-        AND the closure."""
+        connected components (alternating large-star/small-star) → one
+        component id per document, singletons included. The oracle
+        recomputes the SAME pair set (shared minhash CTEs) and closes it
+        transitively with a recursive CTE — so the gate checks candidate
+        generation AND the closure."""
         docs = _docs(s, d)
         pairs = D.minhash_lsh_candidates(docs)
-        return D.connected_components(pairs, docs).orderBy("doc_id")
+        return D.connected_components_star(pairs, docs).orderBy("doc_id")
 
     q["dedup_components"] = dedup_components
     q["text_token_hist"] = lambda s, d: T.token_count_hist(_docs(s, d))
@@ -485,18 +485,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     # --- embeddings: similarity search -----------------------------------
     # the LSH-bucketed path is the headline (oracled; linear in Σ bucket²);
-    # the brute-force crossJoin variants run on a deterministic ABSOLUTE
-    # slice ONLY (vec_id%5==0 AND vec_id<2500 → ≤500 rows at ANY sf, so the
-    # verifier cost is O(1) in data size, not O((N/5)²)) — they are
-    # recall/exactness verifiers, never the scale path
+    # brute-force cosine lives only in tests/test_similarity.py, as the
+    # recall reference the approximate paths are measured against
     q["ann_lsh_bucketed"] = lambda s, d: SIM.ann_bucketed_top1(
         _emb(s, d), dim=64, n_planes=4, n_tables=8, max_bucket=512
     )
-    # ann_cosine_top1 (the other brute-force capped verifier) retired in
-    # round 4: three approximate ANN entries remain oracled and the
-    # brute-force baseline keeps its pytest recall comparisons
-    # (tests/test_similarity.py:39,119); its seat carries the SemDeDup
-    # pipeline below.
+
     def semantic_dedup_pairs(s, d):
         """SemDeDup (cluster-then-dedup): quantized-integer Lloyd's
         k-means (k=16, 2 iterations, deterministic smallest-id init) +
@@ -506,23 +500,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return SIM.semantic_near_dup_pairs(_emb(s, d))
 
     q["semantic_dedup_pairs"] = semantic_dedup_pairs
-    # ann_near_dups (the brute-force capped verifier) retired from the
-    # roster (round-4): ann_near_dups_bucketed covers the capability and
-    # the verifier keeps its pytest equivalence check
-    # (tests/test_similarity.py); its seat now carries
-    # segment_duplicate_groups.
     q["ann_near_dups_bucketed"] = lambda s, d: SIM.embedding_near_dups_bucketed(
         _emb(s, d), threshold=0.4, dim=64, n_planes=4, n_tables=8, max_bucket=512
     )
-    # ann_multiprobe_top1 and ann_ivf_top1 retired from the roster
-    # (round 5): both keep their pytest equivalence/recall suites
-    # (tests/test_similarity.py) and ann_multiprobe_top1 stays on the
-    # bench roster (bench.py _extra_bench_queries) for round-over-round
-    # continuity; their seats now carry warc_roundtrip_records (the
-    # reference's flagship WARC pipeline) and substring_dup_spans
-    # (Lee-et-al span detection). ann_lsh_bucketed,
-    # ann_near_dups_bucketed and semantic_dedup_pairs keep the ANN
-    # family oracled.
+    # ann_multiprobe_top1 is off the gate roster (its recall suite is in
+    # tests/test_similarity.py) but stays on the bench roster (bench.py
+    # _extra_bench_queries) for round-over-round continuity.
 
     # --- extraction (oracled since round 4 via the presniffed path) ------
     def extraction_select(s, d):
@@ -755,8 +738,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "extraction_select", "warc_roundtrip_records",
         # events (oracled)
         "events_hourly_counts", "events_sessionize",
-        # similarity (oracled; multiprobe/ivf variants retired round 5 —
-        # pytest recall suites + bench continuity kept)
+        # similarity (oracled; multiprobe is bench-only, see above)
         "ann_lsh_bucketed", "ann_near_dups_bucketed", "semantic_dedup_pairs",
         # rows-only tail (stateful / binary-payload / pandas-UDF paths)
         "scheduler_one_round", "multimodal_image_features",

@@ -920,93 +920,22 @@ def simhash_skew_report(
     )
 
 
-def connected_components(
-    pairs: DataFrame,
-    nodes: DataFrame,
-    id_col: str = "doc_id",
-    max_iterations: int = 20,
-) -> DataFrame:
-    """Connected components over near-dup candidate pairs — the step a
-    training-data pipeline runs after LSH/SimHash candidate generation to
-    keep ONE representative per duplicate cluster (transitive closure:
-    A~B and B~C put A,C in one cluster even if they never collided).
-
-    Min-label propagation: every node starts labeled with itself; each
-    round it takes the min of its own and its neighbors' labels. Rounds
-    needed = cluster diameter, which for near-dup clusters is tiny (a
-    handful); ``max_iterations`` bounds the loop and the driver-side
-    convergence check is one count per round on a localCheckpoint'd
-    frame (truncating lineage so the plan doesn't grow per round — the
-    per-round state is O(nodes), same as GraphX/GraphFrames CC; for
-    10^10-node graphs use ``connected_components_star`` below — the
-    alternating large-star/small-star variant with the same join shape
-    per round but an O(log n) round bound). Deterministic:
-    labels are data-derived mins, never partition- or order-dependent.
-
-    Returns (id_col, component) for EVERY node; singletons are their own
-    component. Raises if the labeling has not converged after
-    ``max_iterations`` — an exhausted loop would silently return an
-    inconsistent partition (node x labeled y while y is labeled z) and
-    leak duplicates past ``dedup_representatives``; a diameter that large
-    means the candidate graph is chaining, and the caller should raise
-    the bound (or tighten the pair threshold)."""
-    edges = pairs.select(
-        F.col("id_a").alias("src"), F.col("id_b").alias("dst")
-    ).unionByName(pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
-    # materialize the edge list once: the propagation loop consumes it
-    # every round (and the union consumes `pairs` twice per evaluation),
-    # so an unpersisted candidate-pair plan — LSH shingle explode, band
-    # self-join — would be re-executed ~2x per round
-    edges = edges.localCheckpoint()
-    labels = nodes.select(F.col(id_col).alias("node"), F.col(id_col).alias("comp"))
-    labels = labels.localCheckpoint()
-    changed = -1
-    for _ in range(max_iterations):
-        nbr = (
-            edges.join(labels, edges.dst == labels.node)
-            .groupBy("src")
-            .agg(F.min("comp").alias("nbr_comp"))
-        )
-        new_labels = (
-            labels.join(nbr, labels.node == nbr.src, "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("comp"), F.coalesce("nbr_comp", F.col("comp"))
-                ).alias("comp"),
-            )
-        ).localCheckpoint()
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node")
-            .filter(F.col("n.comp") != F.col("o.comp"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    if changed != 0:
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iterations} "
-            f"iterations ({changed} labels still changing); the candidate "
-            "graph has a longer chain than max_iterations — raise the bound"
-        )
-    return labels.select(F.col("node").alias(id_col), F.col("comp").alias("component"))
-
-
 def connected_components_star(
     pairs: DataFrame,
     nodes: DataFrame,
     id_col: str = "doc_id",
     max_iterations: int = 50,
 ) -> DataFrame:
-    """Connected components via alternating large-star / small-star
-    (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC'14) — the 10^10-node-scale variant ``connected_components``'
-    docstring prescribes: each round is the same equi-join + min-agg
-    shape as one label-propagation round, but the round count is
-    O(log n) even on path graphs, where min-label propagation needs
-    diameter rounds (a 10^3-chain takes ~10 star rounds vs 10^3).
+    """Connected components over near-dup candidate pairs — the step a
+    training-data pipeline runs after LSH/SimHash candidate generation to
+    keep ONE representative per duplicate cluster (transitive closure:
+    A~B and B~C put A,C in one cluster even if they never collided).
+
+    Alternating large-star / small-star (Kiveris et al., "Connected
+    Components in MapReduce and Beyond", SoCC'14): each round is an
+    equi-join + min-agg, and the round count is O(log n) even on path
+    graphs, where min-label propagation needs diameter rounds (a
+    10^3-chain takes ~10 star rounds vs 10^3).
 
     large-star(u): every neighbor v > u re-attaches to
     m_u = min(Γ(u) ∪ {u}); small-star(u): every neighbor v < u and u
@@ -1015,13 +944,15 @@ def connected_components_star(
     edge is (node, component-min). Deterministic: edges are kept as a
     canonical distinct set and all targets are data-derived minima.
 
-    Same contract as ``connected_components``: (id_col, component) for
-    EVERY node, singletons their own component; raises on
-    non-convergence. Equivalence with the min-label loop is
-    pytest-asserted on the MinHash fixture (tests/test_dedup.py)."""
+    Returns (id_col, component) for EVERY node; the component is the
+    cluster's min id and singletons are their own component. Raises if
+    the edge set has not reached its fixpoint after ``max_iterations``
+    rounds — a partial result would split clusters and leak duplicates
+    past ``dedup_representatives``. Checked against a union-find
+    reference in tests/test_dedup.py."""
     # canonical undirected edge set, one row per edge as (a>b) ordered —
-    # self-loops dropped; localCheckpoint for the same reason as the
-    # label loop (the LSH candidate plan must not re-execute per round)
+    # self-loops dropped; localCheckpoint'd because every round consumes
+    # it (the LSH candidate plan must not re-execute per round)
     a, b = F.col("id_a"), F.col("id_b")
     edges = (
         pairs.filter(a != b)

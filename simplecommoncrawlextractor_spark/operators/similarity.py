@@ -1,10 +1,6 @@
 """Similarity search over the ``embeddings`` table (vec_id, embedding
 array<float>, label).
 
-- brute-force cosine top-k: the correctness baseline. The dot product is a
-  JVM-side ``aggregate(zip_with(...))`` — no Python. The pair generation is
-  a crossJoin, which is O(N²) BY DESIGN here: it's the oracle-checkable
-  baseline, not the scale path.
 - LSH-bucketed (sign-random-projection) top-k: the 100 TB path. Vectors
   hash to a bucket in each of L independent tables from the signs of k
   fixed pseudo-random projections (deterministic, integer-derived — no
@@ -13,10 +9,12 @@ array<float>, label).
   same plan partitions across any cluster.
 - Multi-probe variant: the query side also probes each Hamming-1
   neighbor bucket — higher recall per table, half the tables.
-- IVF variant: deterministic stride centroids (no k-means dep), home-cell
-  index + nprobe query cells — the data-adaptive complement to SRP.
-- All approximate variants are DuckDB-oracled bit-for-bit and carry
-  recall-report tests against the brute-force baseline.
+- Candidates pay one JVM-side cosine each (``aggregate(zip_with(...))``
+  in double precision, no Python).
+- SemDeDup: quantized integer k-means, then exact cosine within a cluster.
+- The gate's variants are DuckDB-oracled bit-for-bit; every approximate
+  variant carries a recall-report test against a brute-force reference
+  that lives in tests/test_similarity.py, not here.
 """
 
 from __future__ import annotations
@@ -25,7 +23,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from ..sources.tables import sort_once
 
@@ -42,60 +39,11 @@ def _norm(a: Column) -> Column:
     return F.sqrt(_dot(a, a))
 
 
-def cosine_top1(emb: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
-    """Brute-force cosine nearest neighbor (top-1, ids only — floats stay
-    internal so the result is hash-stable across engines)."""
-    a = emb.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"))
-    b = emb.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"))
-    pairs = a.crossJoin(b).filter(F.col("id_a") != F.col("id_b"))
-    sim = pairs.withColumn(
-        "cos", _dot(F.col("va"), F.col("vb")) / (_norm(F.col("va")) * _norm(F.col("vb")))
-    )
-    w = Window.partitionBy("id_a").orderBy(F.desc("cos"), F.asc("id_b"))
-    return (
-        sim.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(F.col("id_a").alias("vec_id"), F.col("id_b").alias("nn_id"))
-        .orderBy("vec_id")
-    )
-
-
-def cosine_topk(emb: DataFrame, k: int = 5, id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
-    """Brute-force cosine top-k neighbors (ids + rank)."""
-    a = emb.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"))
-    b = emb.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"))
-    pairs = a.crossJoin(b).filter(F.col("id_a") != F.col("id_b"))
-    sim = pairs.withColumn(
-        "cos", _dot(F.col("va"), F.col("vb")) / (_norm(F.col("va")) * _norm(F.col("vb")))
-    )
-    w = Window.partitionBy("id_a").orderBy(F.desc("cos"), F.asc("id_b"))
-    return (
-        sim.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(F.col("id_a").alias("vec_id"), F.col("rank"), F.col("id_b").alias("nn_id"))
-        .orderBy("vec_id", "rank")
-    )
-
-
 def srp_weight(p: int, dim: int, j: int) -> float:
     """Global plane p's ±1 weight for dimension j: Knuth multiplicative
     hash of the (plane, dim) index — pure integer arithmetic, so any engine
     (DuckDB oracle included) reproduces it bit-for-bit. No sin()/RNG."""
     return 1.0 if ((1 + p * dim + j) * 2654435761) % (1 << 32) < (1 << 31) else -1.0
-
-
-def _srp_planes(spark, dim: int, n_planes: int, n_tables: int) -> DataFrame:
-    """The SRP hyperplane normals as a tiny broadcastable table
-    (tbl, p, w: array<double>) — DATA, not plan literals, so dim=768+
-    doesn't bloat the query plan; one row per (table, plane). Each table's
-    planes draw from a disjoint global plane index, so tables are
-    independent hashes (OR-amplification)."""
-    rows = [
-        (t, p, [srp_weight(t * n_planes + p, dim, j) for j in range(dim)])
-        for t in range(n_tables)
-        for p in range(n_planes)
-    ]
-    return spark.createDataFrame(rows, "tbl int, p int, w array<double>")
 
 
 def srp_bucket_assignments(
@@ -126,7 +74,8 @@ def srp_bucket_assignments(
     from ..sources.tables import spread
 
     n_pl = n_planes * n_tables
-    # plane p_global = t·n_planes + p, exactly _srp_planes' layout
+    # plane p_global = t·n_planes + p: each table draws from a disjoint
+    # global plane index, so tables are independent hashes
     W = np.array(
         [[srp_weight(p, dim, j) for j in range(dim)] for p in range(n_pl)],
         dtype=np.float64,
@@ -163,9 +112,9 @@ def srp_bucket_assignments(
 
 
 def _cap_groups(df: DataFrame, keys: list[str], cap: int | None) -> DataFrame:
-    """Drop rows of groups larger than ``cap`` (degenerate LSH buckets /
-    IVF cells would otherwise go quadratic in the pair stage). The keep
-    set is one row per group — always broadcastable."""
+    """Drop rows of groups larger than ``cap`` (degenerate LSH buckets
+    would otherwise go quadratic in the pair stage). The keep set is one
+    row per group — always broadcastable."""
     if cap is None:
         return df
     sizes = df.groupBy(*keys).agg(F.count("*").alias("__n"))
@@ -341,84 +290,6 @@ def embedding_near_dups_bucketed(
         .select("id_a", "id_b")
         .orderBy("id_a", "id_b")
     )
-
-
-def ivf_cell_assignments(
-    emb: DataFrame, centroid_stride: int = 37, nprobe: int = 1,
-    id_col: str = "vec_id", vec_col: str = "embedding",
-) -> DataFrame:
-    """IVF coarse quantization, deterministic 'training': every
-    ``centroid_stride``-th vector (by id) is a centroid — no k-means
-    iterations, no RNG, any engine reproduces the cells. Each vector is
-    assigned its ``nprobe`` nearest centroids by cosine (rank 1 = its home
-    cell; ranks 2..nprobe are probe cells). Assignment is a broadcast of
-    the K centroids against the table — the standard O(N·K) IVF cost, all
-    JVM-side. Returns (id, rank, cell)."""
-    cent = emb.filter(F.col(id_col) % centroid_stride == 0).select(
-        F.col(id_col).alias("cell"),
-        F.col(vec_col).cast("array<double>").alias("cv"),
-    )
-    cent = cent.withColumn("cn", _norm(F.col("cv")))
-    v = emb.select(
-        F.col(id_col), F.col(vec_col).cast("array<double>").alias("__v")
-    ).withColumn("__n", _norm(F.col("__v")))
-    scored = v.join(F.broadcast(cent)).select(
-        F.col(id_col),
-        F.col("cell"),
-        (_dot(F.col("__v"), F.col("cv")) / (F.col("__n") * F.col("cn"))).alias("cs"),
-    )
-    w = Window.partitionBy(id_col).orderBy(F.desc("cs"), F.asc("cell"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= nprobe)
-        .select(id_col, "rank", "cell")
-    )
-
-
-def ann_ivf_top1(
-    emb: DataFrame, centroid_stride: int = 67, nprobe: int = 3,
-    max_cell: int | None = 4096,
-    id_col: str = "vec_id", vec_col: str = "embedding",
-) -> DataFrame:
-    """IVF ANN: index side lives in its home cell (rank 1); the query side
-    probes its ``nprobe`` nearest cells — the asymmetric equi-join shape
-    every IVF implementation uses. ``max_cell`` skips degenerate cells
-    (same role as the LSH bucket cap). Complements the SRP variants: IVF
-    adapts to the data's actual cluster structure where SRP's hyperplanes
-    are data-oblivious. On weakly-clustered data (this synthetic fixture:
-    median nn cos ≈ 0.36) recall demands wide probing and IVF degrades
-    toward exhaustive search — expected; on real embedding corpora with
-    genuine cluster structure the same plan prunes most cells."""
-    probes = ivf_cell_assignments(emb, centroid_stride, nprobe, id_col, vec_col)
-    home = probes.filter(F.col("rank") == 1).select(
-        F.col(id_col).alias("id_b"), "cell"
-    )
-    if max_cell is not None:
-        home = _cap_groups(home, ["cell"], max_cell)
-        probes = probes.join(
-            F.broadcast(home.select("cell").distinct()), "cell", "left_semi"
-        )
-    a = probes.select(F.col(id_col).alias("id_a"), "cell")
-    cand = a.join(home, "cell").filter(F.col("id_a") != F.col("id_b")).select(
-        "id_a", "id_b"
-    )
-    return _top1(_cosine_scored(emb, cand, id_col, vec_col))
-
-
-def embedding_near_dups(
-    emb: DataFrame, threshold: float = 0.95,
-    id_col: str = "vec_id", vec_col: str = "embedding",
-) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs (ids only): cos ≥ threshold.
-    O(N²) crossJoin — the exactness verifier on bounded samples; the scale
-    path is embedding_near_dups_bucketed."""
-    a = emb.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"))
-    b = emb.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"))
-    pairs = a.crossJoin(b).filter(F.col("id_a") < F.col("id_b"))
-    sim = pairs.withColumn(
-        "cos", _dot(F.col("va"), F.col("vb")) / (_norm(F.col("va")) * _norm(F.col("vb")))
-    )
-    return sim.filter(F.col("cos") >= threshold).select("id_a", "id_b").orderBy("id_a", "id_b")
 
 
 # ---------------------------------------------------------------------------

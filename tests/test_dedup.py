@@ -166,12 +166,29 @@ def test_simhash_md5hex_mode_matches_xxhash_on_true_dups(spark):
         assert got.get(("d0002", "d0003")) == 0, mode
 
 
+def _union_find_components(pairs, nodes) -> dict:
+    """Reference CC over collected (id_a, id_b) rows: node → its
+    component's min id, singletons their own component."""
+    parent = {r["doc_id"]: r["doc_id"] for r in nodes.collect()}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for r in pairs.collect():
+        ra, rb = find(r["id_a"]), find(r["id_b"])
+        parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
+
+
 def test_connected_components_transitive_and_singletons(spark):
     """A~B and B~C cluster A,B,C even when A,C never collided; separate
     clusters stay separate; untouched nodes are their own component; and
     dedup_representatives keeps exactly one doc per cluster."""
     from simplecommoncrawlextractor_spark.operators.dedup import (
-        connected_components,
+        connected_components_star,
         dedup_representatives,
     )
 
@@ -180,7 +197,7 @@ def test_connected_components_transitive_and_singletons(spark):
         "id_a string, id_b string",
     )
     nodes = spark.createDataFrame([(f"d{i}",) for i in range(8)], "doc_id string")
-    comp = connected_components(pairs, nodes)
+    comp = connected_components_star(pairs, nodes)
     got = {r["doc_id"]: r["component"] for r in comp.collect()}
     assert got == {
         "d0": "d0", "d1": "d0", "d2": "d0", "d3": "d0",
@@ -191,32 +208,15 @@ def test_connected_components_transitive_and_singletons(spark):
     assert reps == {"d0", "d4", "d5", "d7"}
 
 
-def test_connected_components_deep_chain_converges(spark):
-    """A 12-node path graph needs ~diameter rounds — the loop must reach
-    the fixpoint, label everything with the chain's min id, and stop."""
-    from simplecommoncrawlextractor_spark.operators.dedup import (
-        connected_components,
-    )
-
-    n = 12
-    pairs = spark.createDataFrame(
-        [(f"n{i:02d}", f"n{i+1:02d}") for i in range(n - 1)],
-        "id_a string, id_b string",
-    )
-    nodes = spark.createDataFrame([(f"n{i:02d}",) for i in range(n)], "doc_id string")
-    got = {r["doc_id"]: r["component"] for r in connected_components(pairs, nodes).collect()}
-    assert set(got.values()) == {"n00"}
-
-
 def test_connected_components_long_chain_converges_or_raises(spark):
-    """A 12-doc chain (doc_i ~ doc_{i+1} only) has diameter 11: with a
-    tight iteration bound the propagation MUST raise rather than return a
-    split/inconsistent labeling; with enough rounds all 12 collapse to one
-    component."""
+    """A 12-doc chain (doc_i ~ doc_{i+1} only): star needs 4 rounds to
+    reach its fixpoint and a 5th to see that nothing changed. With
+    max_iterations=4 it MUST raise rather than return a split labeling;
+    with 5 all 12 collapse to one component."""
     import pytest as _pytest
 
     from simplecommoncrawlextractor_spark.operators.dedup import (
-        connected_components,
+        connected_components_star,
     )
 
     ids = [f"d{i:02d}" for i in range(12)]
@@ -225,22 +225,22 @@ def test_connected_components_long_chain_converges_or_raises(spark):
     )
     nodes = spark.createDataFrame([(i,) for i in ids], "doc_id string")
     with _pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(pairs, nodes, max_iterations=3)
+        connected_components_star(pairs, nodes, max_iterations=4)
     got = {
         r["doc_id"]: r["component"]
-        for r in connected_components(pairs, nodes, max_iterations=15).collect()
+        for r in connected_components_star(pairs, nodes, max_iterations=5).collect()
     }
     assert set(got.values()) == {"d00"}
 
 
-def test_star_cc_matches_label_propagation_and_handles_long_chain(spark):
-    """connected_components_star must (a) agree with the min-label loop on
-    a mixed clusters+singletons graph, (b) collapse a 1000-node path graph
-    — diameter 999, far beyond any sane label-propagation budget — within
-    its O(log n) round bound, and (c) agree with the label loop on the
-    MinHash candidate pairs of a real near-dup fixture."""
+def test_star_cc_matches_union_find_and_handles_long_chain(spark):
+    """connected_components_star must (a) agree with a union-find
+    reference on a mixed clusters+singletons graph, (b) collapse a
+    1000-node path graph — diameter 999, far beyond any sane
+    label-propagation budget — within its O(log n) round bound, and
+    (c) agree with union-find on the MinHash candidate pairs of a real
+    near-dup fixture."""
     from simplecommoncrawlextractor_spark.operators.dedup import (
-        connected_components,
         connected_components_star,
         minhash_lsh_candidates,
     )
@@ -251,15 +251,11 @@ def test_star_cc_matches_label_propagation_and_handles_long_chain(spark):
         "id_a string, id_b string",
     )
     nodes = spark.createDataFrame([(f"d{i}",) for i in range(8)], "doc_id string")
-    want = {
-        r["doc_id"]: r["component"]
-        for r in connected_components(pairs, nodes).collect()
-    }
     got = {
         r["doc_id"]: r["component"]
         for r in connected_components_star(pairs, nodes).collect()
     }
-    assert got == want
+    assert got == _union_find_components(pairs, nodes)
 
     # (b) adversarial 1000-node path graph: label propagation would need
     # 999 rounds; the star alternation converges in O(log n)
@@ -276,22 +272,21 @@ def test_star_cc_matches_label_propagation_and_handles_long_chain(spark):
     }
     assert set(comp.values()) == {0} and len(comp) == n
 
-    # (c) equivalence on the MinHash fixture's real candidate graph
+    # (c) the MinHash fixture's real candidate graph
     texts = []
     base = "the quick brown fox jumps over the lazy dog " * 4
     for i in range(12):
         texts.append((f"m{i:02d}", base + f" tail{i % 3}"))
     docs = spark.createDataFrame(texts, "doc_id string, text string")
-    cand = minhash_lsh_candidates(docs)
-    want = {
-        r["doc_id"]: r["component"]
-        for r in connected_components(cand, docs.select("doc_id")).collect()
-    }
+    cand = minhash_lsh_candidates(docs).localCheckpoint()
+    nodes = docs.select("doc_id")
     got = {
         r["doc_id"]: r["component"]
-        for r in connected_components_star(cand, docs.select("doc_id")).collect()
+        for r in connected_components_star(cand, nodes).collect()
     }
+    want = _union_find_components(cand, nodes)
     assert got == want
+    assert len(set(want.values())) < len(want), "fixture formed no cluster"
 
 
 def test_gen_pairs_width_check_at_int32_boundary():

@@ -1,18 +1,18 @@
 """ANN: bucketed-vs-brute-force recall report, bucket cap, determinism.
 
 The bucketed SRP path is the scale headline (equi-join on bucket, linear in
-Σ bucket²); brute force survives only as the exactness/recall verifier on
-bounded samples — these tests are that verification.
+Σ bucket²); brute force exists only here, as the recall reference on the
+bounded test fixture — computed once per module in numpy.
 """
 
 from __future__ import annotations
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from simplecommoncrawlextractor_spark.operators.similarity import (
     ann_bucketed_top1,
-    cosine_top1,
     srp_bucket_assignments,
     srp_weight,
 )
@@ -23,6 +23,37 @@ def emb(spark, sf_dir):
     return spark.read.parquet(f"{sf_dir}/embeddings.parquet").cache()
 
 
+@pytest.fixture(scope="module")
+def cosines(emb):
+    """Brute-force all-pairs cosine: (ids ascending, N×N matrix) in float64,
+    the precision the library's candidate scoring uses; self-pairs are -inf
+    so they never win a top-1 or pass a threshold."""
+    rows = emb.select("vec_id", "embedding").orderBy("vec_id").collect()
+    ids = [r["vec_id"] for r in rows]
+    v = np.array([r["embedding"] for r in rows], dtype=np.float64)
+    norm = np.linalg.norm(v, axis=1)
+    cos = (v @ v.T) / np.outer(norm, norm)
+    np.fill_diagonal(cos, -np.inf)
+    return ids, cos
+
+
+@pytest.fixture(scope="module")
+def exact_top1(cosines):
+    """vec_id → its cosine nearest neighbour. Ties go to the smaller id,
+    as in the library's (cos desc, id asc) order: argmax keeps the first
+    maximum and the ids ascend."""
+    ids, cos = cosines
+    return {ids[i]: ids[j] for i, j in enumerate(cos.argmax(axis=1))}
+
+
+@pytest.fixture(scope="module")
+def exact_near_dups(cosines):
+    """Every unordered pair (id_a < id_b) with cosine >= 0.4."""
+    ids, cos = cosines
+    a, b = np.nonzero(np.triu(cos >= 0.4, k=1))
+    return {(ids[i], ids[j]) for i, j in zip(a, b)}
+
+
 def test_srp_weight_is_pm1_and_balanced():
     ws = [srp_weight(p, 64, j) for p in range(6) for j in range(64)]
     assert set(ws) == {1.0, -1.0}
@@ -31,12 +62,13 @@ def test_srp_weight_is_pm1_and_balanced():
     assert 0.35 < frac < 0.65, frac
 
 
-def test_bucketed_recall_vs_brute_force(spark, emb):
+def test_bucketed_recall_vs_brute_force(spark, emb, exact_top1):
     """Recall report: fraction of brute-force top-1 neighbors the bucketed
     path reproduces exactly, over the vectors the bucketed path covers.
-    SRP with 6 planes on clustered synthetic data should recover a solid
-    majority; the floor pins regressions, the printout is the report."""
-    exact = {r["vec_id"]: r["nn_id"] for r in cosine_top1(emb).collect()}
+    SRP with 8 tables × 4 planes on clustered synthetic data should
+    recover a solid majority; the floor pins regressions, the printout is
+    the report."""
+    exact = exact_top1
     approx = {
         r["vec_id"]: r["nn_id"]
         for r in ann_bucketed_top1(
@@ -86,16 +118,12 @@ def test_bucket_assignment_deterministic_across_parallelism(spark, emb):
     assert one.exceptAll(many).count() == 0 and many.exceptAll(one).count() == 0
 
 
-def test_bucketed_near_dups_recall(spark, emb):
+def test_bucketed_near_dups_recall(spark, emb, exact_near_dups):
     from simplecommoncrawlextractor_spark.operators.similarity import (
-        embedding_near_dups,
         embedding_near_dups_bucketed,
     )
 
-    exact = {
-        (r["id_a"], r["id_b"])
-        for r in embedding_near_dups(emb, threshold=0.4).collect()
-    }
+    exact = exact_near_dups
     approx = {
         (r["id_a"], r["id_b"])
         for r in embedding_near_dups_bucketed(
@@ -109,14 +137,14 @@ def test_bucketed_near_dups_recall(spark, emb):
     assert recall >= 0.6, recall
 
 
-def test_multiprobe_beats_pure_multitable_recall(spark, emb):
+def test_multiprobe_beats_pure_multitable_recall(spark, emb, exact_top1):
     """One-bit multi-probe with HALF the tables must beat the 8-table
     pure variant's top-1 recall (that's its whole point)."""
     from simplecommoncrawlextractor_spark.operators.similarity import (
         ann_multiprobe_top1,
     )
 
-    exact = {r["vec_id"]: r["nn_id"] for r in cosine_top1(emb).collect()}
+    exact = exact_top1
     mp = {
         r["vec_id"]: r["nn_id"]
         for r in ann_multiprobe_top1(
@@ -127,27 +155,6 @@ def test_multiprobe_beats_pure_multitable_recall(spark, emb):
     recall = hits / len(exact)
     print(f"\nmulti-probe recall report: top1-recall={recall:.3f} (8-table pure was 0.720)")
     assert recall >= 0.8, recall
-
-
-def test_ivf_recall_and_determinism(spark, emb):
-    from simplecommoncrawlextractor_spark.operators.similarity import (
-        ann_ivf_top1,
-        ivf_cell_assignments,
-    )
-
-    exact = {r["vec_id"]: r["nn_id"] for r in cosine_top1(emb).collect()}
-    ivf = {
-        r["vec_id"]: r["nn_id"]
-        for r in ann_ivf_top1(emb, centroid_stride=67, nprobe=3).collect()
-    }
-    hits = sum(1 for v in set(ivf) & set(exact) if ivf[v] == exact[v])
-    recall = hits / len(exact)
-    print(f"\nIVF recall report: top1-recall={recall:.3f} (nprobe=3, stride=67)")
-    assert recall >= 0.5, recall
-    # assignments are parallelism-invariant (deterministic centroids + ranks)
-    one = ivf_cell_assignments(emb.repartition(1), 67, 3)
-    many = ivf_cell_assignments(emb.repartition(16), 67, 3)
-    assert one.exceptAll(many).count() == 0 and many.exceptAll(one).count() == 0
 
 
 def test_semantic_dedup_quantized_kmeans_deterministic_and_sound(spark, emb):
