@@ -7,13 +7,14 @@ Design notes for 100 TB:
   + AQE handle skew; the fingerprint (md5 of normalized text) is computed
   scan-side so only 16 bytes shuffle per row, never the text.
 - MinHash signatures use portable primitives (min over md5(salt||shingle))
-  so the DuckDB oracle can replay them bit-for-bit; at scale you'd swap the
-  md5 for xxhash64 (same plan shape, cheaper hash) — the banding/join
-  topology is the part that matters: candidates come from an equi-join on
-  (band_id, band_signature), which Spark executes as a shuffle join on a
-  uniformly-distributed key — no N² comparison anywhere.
-- n-gram Jaccard is bounded the same way: the self-join is on shingle
-  values, and pair aggregation happens before the similarity filter.
+  so the DuckDB oracle can replay them bit-for-bit; the xxhash64 mode is
+  the cheaper production hash with the same banding. Candidates are the
+  docs grouped on (band, band_key), a shuffle on a uniformly-distributed
+  key with oversize buckets skipped — no N² comparison anywhere.
+- n-gram Jaccard and SimHash co-locate postings by shingle or by
+  (segment, segment value) and enumerate the capped in-group pairs in one
+  Arrow pass (``_ingroup_pairs``); n-gram pair counts aggregate before
+  the similarity filter.
 """
 
 from __future__ import annotations
@@ -167,56 +168,6 @@ def shingles(docs: DataFrame, n: int = 3, text_col: str = "text", id_col: str = 
     return _arrow_shingles(docs, n, text_col, id_col, with_size=False)
 
 
-def minhash_signatures(
-    sh: DataFrame, n_hashes: int = 8, id_col: str = "doc_id",
-    hash_mode: str = "md5",
-) -> DataFrame:
-    """MinHash signature per doc: base = hash(shingle) computed ONCE per
-    shingle, then sig_s = min(hash(s, base)) for salt s in 0..n-1 — the
-    variable-length shingle is hashed a single time and the salt
-    permutations re-hash only the fixed-width digest (≈n× cheaper on long
-    shingles, same LSH guarantees: each salt is an independent uniform
-    permutation of shingle space). Output: (doc_id, salt, sig).
-
-    hash_mode:
-    - 'md5' (string sigs) — portable, DuckDB replays it byte-identical;
-      this is the oracle/gate path.
-    - 'xxhash64' (long sigs) — the production path: JVM xxhash64 is ~an
-      order of magnitude cheaper than md5-hex-over-strings and sigs
-      shuffle as 8 bytes instead of 32-char strings. Same banding plan.
-    """
-    if hash_mode == "xxhash64":
-        base = sh.select(F.col(id_col), F.xxhash64("shingle").alias("h0"))
-        hashed = base.select(
-            F.col(id_col),
-            *[F.xxhash64(F.lit(s), F.col("h0")).alias(f"h{s}") for s in range(n_hashes)],
-        )
-    else:
-        base = sh.select(F.col(id_col), F.md5("shingle").alias("h0"))
-        # all n salted hashes as COLUMNS of one row (not an n-way explode):
-        # the groupBy then shuffles one partially-min'd row per
-        # (doc,partition) instead of n_hashes × shingles rows
-        hashed = base.select(
-            F.col(id_col),
-            *[
-                F.md5(F.concat(F.lit(str(s)), F.col("h0"))).alias(f"h{s}")
-                for s in range(n_hashes)
-            ],
-        )
-    mins = hashed.groupBy(id_col).agg(
-        *[F.min(f"h{s}").alias(f"m{s}") for s in range(n_hashes)]
-    )
-    sig_structs = F.array(
-        *[
-            F.struct(F.lit(s).alias("salt"), F.col(f"m{s}").alias("sig"))
-            for s in range(n_hashes)
-        ]
-    )
-    return mins.select(
-        F.col(id_col), F.explode(sig_structs).alias("x")
-    ).select(id_col, F.col("x.salt").alias("salt"), F.col("x.sig").alias("sig"))
-
-
 def minhash_lsh_candidates(
     docs: DataFrame,
     n_hashes: int = 8,
@@ -237,8 +188,7 @@ def minhash_lsh_candidates(
     single bucket at web scale. Buckets above the cap are skipped whole
     (deterministic, oracle-mirrorable); a true near-dup pair in a skipped
     bucket usually still collides in another band's smaller bucket, and a
-    >max_band_bucket-sized identical pile belongs to exact dedup anyway.
-    Use dedup_skew_report to see what a cap would drop."""
+    >max_band_bucket-sized identical pile belongs to exact dedup anyway."""
     rows_per_band = n_hashes // bands
     if hash_mode == "md5":
         # round 6: signatures AND banding for the md5 (oracle) mode fuse
@@ -391,17 +341,44 @@ _INT32_MAX = 2**31 - 1
 
 
 def _check_pair_width(n_pairs: int, unit: int) -> None:
-    """``gen_pairs`` indexes a task's pair instances with int32 arrays and
-    packs them behind int32 Arrow offsets of ``unit`` bytes (or list
-    elements) per pair. Refuse, instead of wrapping to wrong pairs, once
-    ``n_pairs * unit`` passes 2^31 - 1."""
+    """The Arrow pair kernels index a task's pair instances with int32
+    arrays, and ``ngram_jaccard_pairs`` packs them behind int32 Arrow
+    offsets of ``unit`` bytes (or list elements) per pair. Refuse, instead
+    of wrapping to wrong pairs, once ``n_pairs * unit`` passes 2^31 - 1."""
     if int(n_pairs) * unit > _INT32_MAX:
         raise OverflowError(
-            f"ngram_jaccard_pairs: one task generated {int(n_pairs):,} pair "
+            f"dedup pair kernel: one task generated {int(n_pairs):,} pair "
             f"instances; at {unit} per pair that passes the int32 offset "
             f"limit of {_INT32_MAX:,}. Raise spark.sql.shuffle.partitions "
-            "or lower max_doc_freq."
+            "or lower the group cap (max_doc_freq, max_segment_bucket)."
         )
+
+
+def _ingroup_pairs(keys_sorted, cap: int | None):
+    """Every in-group index pair ``(a, b)``, ``a < b``, of a sorted key
+    array, as two int32 arrays. Groups (runs of equal keys) with fewer
+    than 2 rows, or more than ``cap`` rows, are skipped whole.
+
+    One vectorized ramp, no per-group Python: element ``g`` at position
+    ``j`` of a kept group of size ``n`` pairs as ``a`` with the
+    ``n - 1 - j`` elements after it."""
+    import numpy as np
+
+    starts = np.flatnonzero(np.r_[True, keys_sorted[1:] != keys_sorted[:-1]])
+    sizes = np.diff(np.r_[starts, keys_sorted.size])
+    keep = sizes >= 2 if cap is None else (sizes >= 2) & (sizes <= cap)
+    starts = starts[keep].astype(np.int32)
+    sizes = sizes[keep].astype(np.int32)
+    _check_pair_width((sizes.astype(np.int64) * (sizes - 1) // 2).sum(), 1)
+    pos = np.arange(sizes.sum(), dtype=np.int32) - np.repeat(
+        np.cumsum(sizes, dtype=np.int32) - sizes, sizes
+    )
+    gidx = np.repeat(starts, sizes) + pos
+    cnt = np.repeat(sizes, sizes) - 1 - pos
+    a_idx = np.repeat(gidx, cnt)
+    run_start = np.cumsum(cnt, dtype=np.int32) - cnt
+    b_idx = np.arange(a_idx.size, dtype=np.int32) - np.repeat(run_start, cnt) + a_idx + 1
+    return a_idx, b_idx
 
 
 def _shingles_sized(
@@ -520,34 +497,9 @@ def ngram_jaccard_pairs(
         order = np.argsort((codes.astype(np.int64) << 32) | icode)
         icode = icode[order].astype(np.int32, copy=False)
         szs, codes = szs[order], codes[order]
-        # group boundaries + df cap
-        starts = np.flatnonzero(np.r_[True, codes[1:] != codes[:-1]])
-        ends = np.r_[starts[1:], codes.size]
-        df = ends - starts
-        keep = df >= 2 if cap is None else (df >= 2) & (df <= cap)
-        starts, ends = starts[keep], ends[keep]
-        if not starts.size:
-            return
-        # all in-group (a, b) index pairs, a before b, via index ramps:
-        # element at global index g in a group ending at e pairs as 'a'
-        # with the (e-1-g) elements after it
-        gidx = np.concatenate(
-            [np.arange(s, e, dtype=np.int32) for s, e in zip(starts, ends)]
-        )
-        cnt = np.concatenate(
-            [np.arange(e - s - 1, -1, -1, dtype=np.int32) for s, e in zip(starts, ends)]
-        )
-        _check_pair_width(cnt.sum(dtype=np.int64), 1)
-        a_idx = np.repeat(gidx, cnt)
+        a_idx, b_idx = _ingroup_pairs(codes, cap)
         if not a_idx.size:
             return
-        run_start = np.cumsum(cnt, dtype=np.int32) - cnt
-        b_idx = (
-            np.arange(a_idx.size, dtype=np.int32)
-            - np.repeat(run_start, cnt)
-            + a_idx
-            + 1
-        )
         ca, sz_a = icode[a_idx], szs[a_idx]
         cb, sz_b = icode[b_idx], szs[b_idx]
         # size-ratio necessary condition BEFORE the shuffle: i ≤ min(szA,szB)
@@ -719,30 +671,6 @@ def ngram_jaccard_pairs(
     )
 
 
-def dedup_skew_report(
-    docs: DataFrame,
-    shingle_n: int = 3,
-    max_doc_freq: int = 128,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """What the frequency caps drop: one row per over-cap shingle with its
-    document frequency and the pair mass it would have injected into the
-    self-join (df·(df−1)/2). Run this alongside capped dedup so truncation
-    is always visible, never silent."""
-    df = shingles(docs, shingle_n, text_col, id_col).groupBy("shingle").agg(
-        F.count("*").alias("doc_freq")
-    )
-    return (
-        df.filter(F.col("doc_freq") > max_doc_freq)
-        .withColumn(
-            "pairs_avoided",
-            (F.col("doc_freq") * (F.col("doc_freq") - 1) / 2).cast("long"),
-        )
-        .orderBy(F.desc("doc_freq"), "shingle")
-    )
-
-
 def simhash64(
     docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     hash_mode: str = "xxhash64",
@@ -809,10 +737,9 @@ def simhash_near_dups(
     docs sharing one simhash) would make a single 16-bit segment value
     quadratic. Over-cap segment buckets are skipped whole — exact twins
     that large belong to exact_dedup anyway, and a genuine near-dup pair
-    usually still collides in another, smaller segment bucket. Use
-    simhash_skew_report to see what the cap drops. Grouping (instead of
-    the previous self-join) also evaluates the token→vote→simhash
-    pipeline once rather than once per join branch."""
+    usually still collides in another, smaller segment bucket. Grouping,
+    not a self-join, evaluates the token→vote→simhash pipeline once
+    rather than once per join branch."""
     import numpy as np
     import pyarrow as pa
 
@@ -862,20 +789,9 @@ def simhash_near_dups(
         key = np.concatenate(k_l)
         order = np.lexsort((icode, key))
         icode, hsh, key = icode[order], hsh[order], key[order]
-        starts = np.flatnonzero(np.r_[True, key[1:] != key[:-1]])
-        ends = np.r_[starts[1:], key.size]
-        n = ends - starts
-        keep = n >= 2 if cap is None else (n >= 2) & (n <= cap)
-        starts, ends = starts[keep], ends[keep]
-        if not starts.size:
-            return
-        gidx = np.concatenate([np.arange(s, e) for s, e in zip(starts, ends)])
-        cnt = np.concatenate([np.arange(e - s - 1, -1, -1) for s, e in zip(starts, ends)])
-        a_idx = np.repeat(gidx, cnt)
+        a_idx, b_idx = _ingroup_pairs(key, cap)
         if not a_idx.size:
             return
-        run_start = np.cumsum(cnt) - cnt
-        b_idx = np.arange(a_idx.size) - np.repeat(run_start, cnt) + np.repeat(gidx, cnt) + 1
         x = np.bitwise_xor(hsh[a_idx], hsh[b_idx])
         ham = popb[x.view(np.uint8)].reshape(-1, 8).sum(axis=1).astype(np.int32)
         sel = ham <= maxh
@@ -894,30 +810,6 @@ def simhash_near_dups(
         .distinct()
     )
     return cand.orderBy("id_a", "id_b")
-
-
-def simhash_skew_report(
-    docs: DataFrame, max_segment_bucket: int = 256, **kw,
-) -> DataFrame:
-    """What the SimHash segment cap drops: one row per over-cap
-    (segment, value) bucket with its size and the pair mass it would have
-    injected (n·(n−1)/2) — the simhash analog of dedup_skew_report, so
-    truncation stays visible, never silent."""
-    id_col = kw.get("id_col", "doc_id")
-    seg = simhash64(docs, **kw).select(
-        F.col(id_col),
-        F.explode(F.sequence(F.lit(0), F.lit(3))).alias("seg"),
-        F.col("simhash"),
-    ).withColumn("seg_val", F.expr("shiftright(simhash, seg * 16) & 65535"))
-    n = seg.groupBy("seg", "seg_val").agg(F.count("*").alias("bucket_size"))
-    return (
-        n.filter(F.col("bucket_size") > max_segment_bucket)
-        .withColumn(
-            "pairs_avoided",
-            (F.col("bucket_size") * (F.col("bucket_size") - 1) / 2).cast("long"),
-        )
-        .orderBy(F.desc("bucket_size"), "seg", "seg_val")
-    )
 
 
 def connected_components_star(

@@ -357,7 +357,7 @@ def _assign(vecs: DataFrame, centroid_rows: list[tuple[int, list[int]]]) -> Data
 def kmeans_clusters(
     emb: DataFrame, k: int = 16, iters: int = 2,
     id_col: str = "vec_id", vec_col: str = "embedding",
-    scale: int = 10_000, with_vectors: bool = False,
+    scale: int = 10_000,
 ) -> DataFrame:
     """Quantized Lloyd's k-means over the embeddings table, exact-integer
     end to end: init centroids are the vectors with the ``k`` smallest
@@ -365,10 +365,9 @@ def kmeans_clusters(
     centroids as the ELEMENTWISE integer mean
     ``((sum + n*scale) div n) - scale`` — the +n*scale offset keeps the
     dividend positive so truncating division (Spark ``div``) and flooring
-    division (DuckDB ``//``) agree. Returns (id, cluster); with
-    ``with_vectors=True`` also the quantized vector ``q`` (the final
-    assignment carries it anyway — callers that need q avoid a second
-    scan+quantize pass).
+    division (DuckDB ``//``) agree. Returns (id, cluster, q), ``q`` the
+    quantized vector (the final assignment carries it anyway — callers
+    that need q avoid a second scan+quantize pass).
 
     Plan shape at 10^10 rows: assignment is a shuffle-free Arrow map
     with the K centroids riding the task closure (see ``_assign``); the
@@ -409,10 +408,9 @@ def kmeans_clusters(
         centroid_rows = [
             (c, [v for _, v in sorted(pv)]) for c, pv in sorted(by_cluster.items())
         ]
-    final = _assign(vecs, centroid_rows)
-    if with_vectors:
-        return final.select(F.col("id").alias(id_col), "cluster", "q")
-    return final.select(F.col("id").alias(id_col), "cluster")
+    return _assign(vecs, centroid_rows).select(
+        F.col("id").alias(id_col), "cluster", "q"
+    )
 
 
 def semantic_near_dup_pairs(
@@ -437,9 +435,7 @@ def semantic_near_dup_pairs(
     job."""
     # the final assignment already carries q — no second scan+quantize
     # pass, no N-row reattach join
-    clusters = kmeans_clusters(
-        emb, k, iters, id_col, vec_col, scale, with_vectors=True
-    )
+    clusters = kmeans_clusters(emb, k, iters, id_col, vec_col, scale)
     t2 = tau_bp * tau_bp
     loose_rhs = float(t2) * (1.0 - 1.0e-6)
 

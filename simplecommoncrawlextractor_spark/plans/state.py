@@ -146,7 +146,6 @@ class BloomSeenSet:
         candidates: DataFrame,
         seen_rows: DataFrame,
         blooms: DataFrame,
-        materialize: bool = True,
     ) -> DataFrame:
         """Return candidates NOT in the seen set (the F9/J2 anti-join,
         cc/warc/Extractor.java:89-91), bloom-accelerated.
@@ -163,19 +162,11 @@ class BloomSeenSet:
         execution of the cogroup across union branches), and definite-new
         rows never enter any join.
 
-        ``materialize`` eagerly localCheckpoints the candidate batch first:
-        the plan consumes candidates TWICE (the slim hash path and the
-        final anti-join), and Spark re-evaluates shared subtrees across
-        join branches — for a UDF-heavy candidate chain (canonicalize)
-        that re-evaluation dominates the whole probe (measured 1.8× on the
-        frontier kernel). Candidate batches are per-round and bounded, and
-        the scheduler checkpoints round state anyway, so the
-        localCheckpoint fault-tolerance tradeoff (executor loss → recompute
-        the round, not the lineage) is the one the engine already makes.
-        Pass False when the caller has already persisted the batch.
+        The candidate batch is localCheckpointed first: the plan reads it
+        twice (the slim hash path and the final anti-join), and a
+        UDF-heavy candidate chain (canonicalize) would run once per read.
         """
-        if materialize:
-            candidates = candidates.localCheckpoint()
+        candidates = candidates.localCheckpoint()
         # only the 16-byte (bucket, url_hash) pair crosses the Arrow
         # boundary — never the full candidate row (at 10^10 scale the
         # candidate payload is 10-50× wider than the hash)
