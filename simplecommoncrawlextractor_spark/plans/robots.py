@@ -20,6 +20,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 ROBOTS_SCHEMA = "host string, disallow_prefix string, crawl_delay int"
+#: the wall-clock span of one scheduler round that Crawl-delay divides
+ROUND_SECONDS = 60
 
 
 def parse_robots_txt(
@@ -170,11 +172,9 @@ def robots_filter(candidates: DataFrame, rules: DataFrame) -> DataFrame:
     return cand.join(blocked, "url_hash", "left_anti").drop("__path")
 
 
-def budget_with_crawl_delay(
-    rules: DataFrame, base_budget: int, round_seconds: int = 60
-) -> DataFrame:
+def budget_with_crawl_delay(rules: DataFrame, base_budget: int) -> DataFrame:
     """Per-host budget table: hosts with Crawl-delay d get at most
-    round_seconds/d fetches per round (min 1), others the base budget."""
+    ROUND_SECONDS/d fetches per round (min 1), others the base budget."""
     per_host = rules.groupBy("host").agg(F.max("crawl_delay").alias("crawl_delay"))
     # Crawl-delay may only THROTTLE: the derived budget is clamped to
     # base_budget so a small delay can never raise a host above the cap
@@ -186,7 +186,7 @@ def budget_with_crawl_delay(
             F.least(
                 F.lit(base_budget),
                 F.greatest(
-                    F.floor(F.lit(round_seconds) / F.col("crawl_delay")), F.lit(1)
+                    F.floor(F.lit(ROUND_SECONDS) / F.col("crawl_delay")), F.lit(1)
                 ),
             ),
         )

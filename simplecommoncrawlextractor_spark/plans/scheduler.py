@@ -76,7 +76,6 @@ class CrawlScheduler:
         salt_k: int = 8,
         n_buckets: int = 64,
         robots_rules: DataFrame | None = None,
-        round_seconds: int = 60,
         auto_robots: bool = False,
         seen_backend: str = "bloom",
     ):
@@ -98,7 +97,6 @@ class CrawlScheduler:
         self.store = store
         self.host_budget = host_budget
         self.salt_k = salt_k
-        self.round_seconds = round_seconds
         if seen_backend != "bloom":
             raise ValueError(
                 f"seen_backend must be 'bloom', got {seen_backend!r}"
@@ -191,16 +189,12 @@ class CrawlScheduler:
         fresh_hosts.unpersist()
         return n_hosts
 
-    def _admit(
-        self, cand: DataFrame, rules: DataFrame | None = None, resolved: bool = False
-    ) -> DataFrame:
-        """Apply robots disallow rules to candidate rows (no-op without
-        rules). Callers touching several frames in one round resolve the
-        rules ONCE and pass them in (``resolved=True``) — once a
+    def _admit(self, cand: DataFrame, rules: DataFrame | None) -> DataFrame:
+        """Apply robots disallow ``rules`` (``_effective_rules()``) to
+        candidate rows; no-op when None. Callers touching several frames in
+        one round resolve the rules ONCE and pass them to each — once a
         ``robots`` table exists, each _effective_rules() call costs a
         state read + an isEmpty job."""
-        if not resolved:
-            rules = self._effective_rules()
         if rules is None:
             return cand
         from .robots import robots_filter
@@ -209,8 +203,7 @@ class CrawlScheduler:
 
     # -- state accessors ---------------------------------------------------
     #: compact the frontier back to a single base once this many candidate
-    #: parts accumulate (same amortization contract as
-    #: StateStore.MAX_UPSERT_PARTS for the bloom blobs)
+    #: parts accumulate
     MAX_FRONTIER_PARTS = 8
 
     def _frontier_parts(self, snapshot: int | None = None) -> tuple[list[str], bool]:
@@ -258,7 +251,12 @@ class CrawlScheduler:
         return self.store.read(self.spark, "url_seen", SEEN_SCHEMA)
 
     def blooms(self) -> DataFrame:
-        """The per-bucket bloom blobs of the URL-seen set."""
+        """The per-bucket bloom blobs of the URL-seen set. A store written
+        by an older build holds them as a keyed upsert entry; those blobs
+        are rebuilt from the exact rows (the probe's answer does not depend
+        on the blobs), and the next commit writes a plain table."""
+        if isinstance(self.store.manifest()["tables"].get("blooms"), dict):
+            return self.seen.build_blooms(self.url_seen())
         return self.store.read(self.spark, "blooms", BLOOM_SCHEMA)
 
     def round_no(self) -> int:
@@ -270,9 +268,12 @@ class CrawlScheduler:
         optional priority/discovered_at). Dedups within the seed list."""
         pr = F.col("priority") if "priority" in seeds.columns else None
         ts = F.col("discovered_at") if "discovered_at" in seeds.columns else None
-        cand = self._admit(canonical_candidates(seeds, priority=pr, discovered_at=ts))
-        # blooms is an upsert table from its first delta — bootstrap doesn't
-        # commit it at all (read of a missing table is empty)
+        cand = self._admit(
+            canonical_candidates(seeds, priority=pr, discovered_at=ts),
+            self._effective_rules(),
+        )
+        # the seen set is empty, so bootstrap commits no blooms table (a
+        # missing table reads as empty); the first round writes one
         return self.store.commit(
             {
                 "frontier": cand,
@@ -286,7 +287,7 @@ class CrawlScheduler:
             return None
         from .robots import budget_with_crawl_delay
 
-        return budget_with_crawl_delay(rules, self.host_budget, self.round_seconds)
+        return budget_with_crawl_delay(rules, self.host_budget)
 
     def step(self) -> dict:
         """One scheduler round; commits a new snapshot; returns stats."""
@@ -300,7 +301,7 @@ class CrawlScheduler:
         # rows are evicted from the next frontier below rather than pinned
         # forever
         rules = self._effective_rules()
-        frontier = self._admit(self.frontier(), rules, resolved=True)
+        frontier = self._admit(self.frontier(), rules)
         seen_rows = self.url_seen()
         blooms = self.blooms()
 
@@ -337,28 +338,29 @@ class CrawlScheduler:
         )
         seen2 = seen_rows.unionByName(newly_seen)
         # DELTA blob maintenance: only buckets receiving new hashes get a
-        # new blob; untouched buckets' blobs are never recomputed or
-        # rewritten — the StateStore upsert commit re-references their
-        # existing files. At the 10^10 design point this is the difference
-        # between ~12 GB of blob writes per round and a few MB.
+        # new blob; untouched buckets' blobs pass through unchanged.
         # merge_delta ORs the new bits in, then rebuilds overfull buckets;
         # it returns a locally checkpointed frame, the one materialization
-        # the probe and the upsert commit both read (no cache here)
+        # the probe and the commit both read (no cache here)
         touched = newly_seen.select("bucket").distinct()
         blooms_touched = blooms.join(F.broadcast(touched), "bucket", "left_semi")
         blooms_delta = self.seen.merge_delta(
             blooms_touched, newly_seen.select("url_hash"), seen2
         )
-        # full view for this round's probe = untouched ∪ delta (in-plan
-        # union; nothing extra hits disk)
+        # full view = untouched ∪ delta: this round's probe reads it and the
+        # commit writes it as the next blooms version. A round touches
+        # every bucket unless it adds fewer hashes than a few times the
+        # bucket count, so there is no untouched blob worth not rewriting.
+        # The delta holds exactly the touched buckets, already materialized:
+        # keying the anti-join on it skips re-running touched's distinct
         blooms2 = blooms.join(
-            F.broadcast(touched), "bucket", "left_anti"
+            F.broadcast(blooms_delta.select("bucket")), "bucket", "left_anti"
         ).unionByName(blooms_delta)
 
         # harvest next-round candidates, dedup vs (updated) seen set
         t1 = time.time()
         outlinks = synthetic_outlinks(fetched)
-        cand = self._admit(canonical_candidates(outlinks), rules, resolved=True)
+        cand = self._admit(canonical_candidates(outlinks), rules)
         new_cand = self.seen.probe(cand, seen2, blooms2)
         # frontier commit is MERGE-ON-READ (round 6): a normal round
         # appends ONLY this round's new candidates plus the scheduled
@@ -366,8 +368,7 @@ class CrawlScheduler:
         # O(frontier) rewrite (the resolved view in ``frontier()`` applies
         # tombstones + winner dedup at read). Every MAX_FRONTIER_PARTS
         # rounds the accumulated parts fold into one resolved base —
-        # amortized O(frontier / MAX_FRONTIER_PARTS) per round, the same
-        # contract the bloom-blob upsert table already carries.
+        # amortized O(frontier / MAX_FRONTIER_PARTS) per round.
         parts, _ = self._frontier_parts()
         compacting = len(parts) >= self.MAX_FRONTIER_PARTS
         if compacting:
@@ -390,26 +391,26 @@ class CrawlScheduler:
         )
 
         # url_seen, fetch_log, metrics and (normal rounds) the frontier are
-        # append-only; blooms upserts only the touched buckets — each round
-        # commits ONLY its delta, so commit cost stays O(round) instead of
-        # O(crawl). A compaction round folds the frontier back to a single
-        # base and drops the applied tombstones (not carried forward).
+        # append-only — each round commits ONLY its delta, so their commit
+        # cost stays O(round) instead of O(crawl). blooms is rewritten
+        # whole: O(n_buckets) blob rows. A compaction round folds the
+        # frontier back to a single base and drops the applied tombstones
+        # (not carried forward).
         t2 = time.time()
         if compacting:
             sid = self.store.commit(
-                tables={"frontier": frontier_delta},
+                tables={"frontier": frontier_delta, "blooms": blooms2},
                 appends={
                     "url_seen": newly_seen,
                     "fetch_log": log,
                     "metrics": metrics_new,
                 },
-                upserts={"blooms": blooms_delta},
                 carry_forward=["robots"],
                 meta={"round": rnd},
             )
         else:
             sid = self.store.commit(
-                tables={},
+                tables={"blooms": blooms2},
                 appends={
                     "frontier": frontier_delta,
                     "frontier_tombs": newly_seen.select("url_hash"),
@@ -417,7 +418,6 @@ class CrawlScheduler:
                     "fetch_log": log,
                     "metrics": metrics_new,
                 },
-                upserts={"blooms": blooms_delta},
                 carry_forward=["robots"],
                 meta={"round": rnd},
             )
@@ -479,7 +479,9 @@ class CrawlScheduler:
         exact rows are anti-joined out and only the touched buckets' blobs
         rebuild (plans/state.py:BloomSeenSet.delete). Commits a full
         url_seen rewrite (deletes are rare; the per-round hot path stays
-        append-only)."""
+        append-only), and the resolved frontier as a single base with no
+        tombstones: a victim's tombstone would otherwise drop it from the
+        frontier again when it is rediscovered."""
         log = self.store.read(self.spark, "fetch_log", FETCH_LOG_SCHEMA)
         victims = (
             log.filter(
@@ -491,16 +493,17 @@ class CrawlScheduler:
         )
         seen_rows = self.url_seen()
         remaining, rebuilt = self.seen.delete(seen_rows, victims)
-        # rebuilt covers only buckets that lost rows; the upsert commit
-        # re-references every other bucket's existing blob file (a bucket
-        # emptied completely keeps its stale blob — FP-safe, the exact
-        # anti-join still confirms)
+        # rebuilt covers only buckets that kept rows; every other bucket
+        # keeps its blob (a bucket emptied completely keeps its stale blob —
+        # FP-safe, the exact anti-join still confirms)
+        blooms = self.blooms().join(rebuilt.select("bucket"), "bucket", "left_anti")
         return self.store.commit(
-            tables={"url_seen": remaining},
-            upserts={"blooms": rebuilt},
-            carry_forward=[
-                "frontier", "frontier_tombs", "fetch_log", "metrics", "robots",
-            ],
+            tables={
+                "url_seen": remaining,
+                "blooms": blooms.unionByName(rebuilt),
+                "frontier": self.frontier(),
+            },
+            carry_forward=["fetch_log", "metrics", "robots"],
             meta={"round": self.round_no()},
         )
 

@@ -307,21 +307,17 @@ class StateStore:
     os.replace the manifest — readers either see the old snapshot or the
     new one, never a torn state. Resume = read whatever the manifest pins.
 
-    Three table kinds:
-    - **rewrite** (``tables=``): full new version each commit (frontier).
+    Two table kinds:
+    - **rewrite** (``tables=``): full new version each commit (blooms,
+      a compacted frontier).
     - **append** (``appends=``): delta part per commit, read = union
       (url_seen, fetch_log, metrics).
-    - **upsert** (``upserts=``): keyed delta per commit — the manifest maps
-      each key (bloom bucket id) to the part that owns its latest row, so a
-      round writes ONLY the touched buckets' blobs and a read keeps only
-      each part's owned keys: an ``In`` filter pushed to the Parquet
-      reader. Upsert parts are sorted by key within each file, so a key's
-      rows are contiguous and row-group min/max stats can skip the rest.
-      This is what keeps the bloom state commit O(round): untouched
-      buckets' rows are never rewritten, merely re-referenced. The owner
-      map is bounded by n_buckets (≤4096 at the 10^10 design point) — manifest
-      metadata, not data. Parts compact into a fresh base once the list
-      exceeds MAX_UPSERT_PARTS.
+
+    The manifest of a store written by an older build may still hold a
+    keyed ``{"kind": "upsert", "parts": [...], ...}`` entry for blooms;
+    ``read`` does not resolve it (CrawlScheduler.blooms rebuilds those
+    blobs from the exact rows), and orphan GC keeps its parts while a
+    retained manifest names them.
 
     No table is written with ``partitionBy``: a part is one Parquet file
     per write task. Spark creates every file and directory on ``file://``
@@ -332,7 +328,6 @@ class StateStore:
     """
 
     MANIFEST = "manifest.json"
-    MAX_UPSERT_PARTS = 8
 
     def __init__(self, root: str):
         self.root = root
@@ -393,6 +388,8 @@ class StateStore:
         return int(m["snapshot"])
 
     # -- retention --------------------------------------------------------
+    # v: rewrite version, d: append delta; u and m are the delta and
+    # migration parts of an older build's upsert entries
     _PART_RE = re.compile(r"^[vdum]\d+$")
 
     def expire_snapshots(
@@ -496,8 +493,6 @@ class StateStore:
         rel = self.manifest(snapshot)["tables"].get(name)
         if rel is None:
             return empty_frame(spark, schema)
-        if isinstance(rel, dict):
-            return self._read_upsert(spark, rel, schema)
         parts = rel if isinstance(rel, list) else [rel]
         # read each delta dir separately and union by name: multi-root reads
         # trip Spark's partition discovery when parts mix layouts (a store
@@ -508,18 +503,6 @@ class StateStore:
             out = out.unionByName(d)
         return out
 
-    def _read_upsert(self, spark: SparkSession, entry: dict, schema: str) -> DataFrame:
-        """Resolve an upsert table: for each part, read only the keys it
-        currently owns (latest writer). Disjoint by construction — a plain
-        union, no shuffle. Each part's key filter is pushed to the Parquet
-        reader, which skips row groups whose key range holds no owned key
-        (parts are key-sorted); an older store's ``bucket=N`` parts prune
-        by directory instead."""
-        if not entry["owners"]:
-            return empty_frame(spark, schema)
-        cols = [f.strip().split()[0] for f in schema.split(",")]
-        return self._read_upsert_entry(spark, entry).select(*cols)
-
     # -- commit -----------------------------------------------------------
     def commit(
         self,
@@ -527,16 +510,12 @@ class StateStore:
         meta: dict | None = None,
         carry_forward: Iterable[str] = (),
         appends: dict[str, DataFrame] | None = None,
-        upserts: dict[str, DataFrame] | None = None,
-        upsert_keys: dict[str, str] | None = None,
     ) -> int:
         """Write new versions of ``tables``, append delta files to
         ``appends`` tables (the manifest tracks the part list — an append
         round writes only the delta, never rewrites history; this is what
-        keeps per-round commit cost O(round), not O(crawl)), write keyed
-        ``upserts`` deltas (only the touched keys' rows; the manifest owner
-        map redirects readers), carry forward unchanged tables, then
-        atomically swap the manifest."""
+        keeps per-round commit cost O(round), not O(crawl)), carry forward
+        unchanged tables, then atomically swap the manifest."""
         m = self.manifest()
         sid = self.next_snapshot_id()
         new_tables: dict[str, str | list[str] | dict] = {}
@@ -553,10 +532,6 @@ class StateStore:
             prev = m["tables"].get(name, [])
             parts = prev if isinstance(prev, list) else [prev]
             new_tables[name] = parts + [rel]
-        for name, df in (upserts or {}).items():
-            new_tables[name] = self._commit_upsert(
-                m, sid, name, df, (upsert_keys or {}).get(name, "bucket")
-            )
         manifest = {
             "snapshot": sid,
             "tables": new_tables,
@@ -570,87 +545,3 @@ class StateStore:
             json.dump(manifest, f, indent=1)
         os.replace(tmp, self._manifest_path())
         return sid
-
-    def _commit_upsert(
-        self, m: dict, sid: int, name: str, df: DataFrame, keycol: str
-    ) -> dict:
-        """Write the delta part (flat, sorted by key within each file),
-        update the key→part owner map, and compact once the part list
-        grows past MAX_UPSERT_PARTS. The distinct-key collect is bounded by the key
-        domain (bloom bucket count), i.e. manifest metadata — it never
-        scales with row count. An EMPTY delta writes nothing and carries
-        the previous entry forward (no dead parts, no compaction churn)."""
-        new_keys = [r[0] for r in df.select(keycol).distinct().collect()]
-        prev = m["tables"].get(name)
-        if prev is None:
-            parts, owners = [], {}
-        elif isinstance(prev, dict):
-            parts, owners = list(prev["parts"]), dict(prev["owners"])
-        else:
-            # migrate a plain/append table: resolve ALL its parts into one
-            # compacted base (a key's rows could live in any of them) —
-            # one-time O(table) cost at the kind switch, never per-round
-            spark = df.sparkSession
-            prev_parts = prev if isinstance(prev, list) else [prev]
-            dfs = [
-                spark.read.parquet(os.path.join(self.root, p)) for p in prev_parts
-            ]
-            base = dfs[0]
-            for d in dfs[1:]:
-                base = base.unionByName(d)
-            base_rel = f"{name}/m{sid}"
-            base.sortWithinPartitions(keycol).write.mode("overwrite").parquet(
-                os.path.join(self.root, base_rel)
-            )
-            prev_keys = [r[0] for r in base.select(keycol).distinct().collect()]
-            parts = [base_rel]
-            owners = {str(k): 0 for k in prev_keys}
-        if not new_keys:
-            return {"kind": "upsert", "key": keycol, "parts": parts, "owners": owners}
-        rel = f"{name}/u{sid}"
-        df.sortWithinPartitions(keycol).write.mode("overwrite").parquet(
-            os.path.join(self.root, rel)
-        )
-        idx = len(parts)
-        parts.append(rel)
-        for k in new_keys:
-            owners[str(k)] = idx
-        entry = {"kind": "upsert", "key": keycol, "parts": parts, "owners": owners}
-        if len(parts) > self.MAX_UPSERT_PARTS:
-            # compact: materialize the resolved view as a fresh single base.
-            # Amortized O(state / MAX_UPSERT_PARTS) per round — the delta
-            # commits stay O(round). owners is non-empty here (new_keys
-            # guaranteed it), so the resolve cannot come up empty.
-            resolved = self._read_upsert_entry(df.sparkSession, entry)
-            base_rel = f"{name}/v{sid}"
-            resolved.sortWithinPartitions(keycol).write.mode("overwrite").parquet(
-                os.path.join(self.root, base_rel)
-            )
-            entry = {
-                "kind": "upsert",
-                "key": keycol,
-                "parts": [base_rel],
-                "owners": {k: 0 for k in owners},
-            }
-        return entry
-
-    def _read_upsert_entry(self, spark: SparkSession, entry: dict) -> DataFrame:
-        """Resolve an upsert entry without a schema string (compaction path)."""
-        keycol = entry["key"]
-        by_part: dict[int, list[int]] = {}
-        for k, i in entry["owners"].items():
-            by_part.setdefault(int(i), []).append(int(k))
-        dfs = []
-        for i, p in enumerate(entry["parts"]):
-            keys = by_part.get(i)
-            if not keys:
-                continue
-            dfs.append(
-                spark.read.parquet(os.path.join(self.root, p)).filter(
-                    F.col(keycol).isin(keys)
-                )
-            )
-        out = dfs[0]
-        for d in dfs[1:]:
-            out = out.unionByName(d)
-        return out

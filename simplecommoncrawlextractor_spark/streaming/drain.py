@@ -45,7 +45,7 @@ def stream_documents_to_frontier(
         raw_cand = canonical_candidates(harvest_outlinks(batch_df))
         if scheduler.auto_robots:
             scheduler.refresh_robots(extra_hosts=raw_cand.select("host"))
-        cand = scheduler._admit(raw_cand)
+        cand = scheduler._admit(raw_cand, scheduler._effective_rules())
         seen_rows = scheduler.url_seen()
         blooms = scheduler.blooms()
         new_cand = scheduler.seen.probe(cand, seen_rows, blooms)

@@ -52,7 +52,7 @@ def test_crawl_delay_budget(spark):
         "host string, disallow_prefix string, crawl_delay int",
     )
     budgets = {r["host"]: r["host_budget"] for r in
-               budget_with_crawl_delay(rules, base_budget=10, round_seconds=60).collect()}
+               budget_with_crawl_delay(rules, base_budget=10).collect()}
     assert budgets == {"a.com": 2, "b.com": 10}  # 60s / delay 30 = 2
 
 
@@ -104,7 +104,7 @@ def test_scheduler_with_robots(spark, tmp_path):
     store = StateStore(str(tmp_path / "s"))
     sched = CrawlScheduler(
         spark, store, host_budget=4, salt_k=4, n_buckets=8,
-        robots_rules=rules, round_seconds=60,
+        robots_rules=rules,
     )
     sched.bootstrap(seed_frontier(spark, n=200))
     sched.step()
@@ -153,7 +153,7 @@ def test_auto_robots_fetches_rules_and_blocks_frontier(spark, tmp_path):
     assert not (fetched_hosts & banned)
     # blocked rows never pass admission (the view every schedule/harvest
     # consumes) ...
-    admitted = sched._admit(sched.frontier())
+    admitted = sched._admit(sched.frontier(), sched._effective_rules())
     assert admitted.filter(F2.col("host").isin(list(banned))).count() == 0
     # ... and are physically evicted from storage at the next frontier
     # compaction (round-6 merge-on-read: normal rounds append O(round)

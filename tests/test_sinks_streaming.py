@@ -11,7 +11,11 @@ from simplecommoncrawlextractor_spark.operators.sinks import (
     write_json_gz,
     write_tsv,
 )
-from simplecommoncrawlextractor_spark.plans import CrawlScheduler, StateStore
+from simplecommoncrawlextractor_spark.plans import (
+    CrawlScheduler,
+    StateStore,
+    canonical_candidates,
+)
 from simplecommoncrawlextractor_spark.sources import seed_frontier
 
 
@@ -54,7 +58,8 @@ def test_delete_refetchable_reopens_urls(spark, tmp_path):
     """K6: deleting truncated fetches from the seen set makes exactly those
     URLs pass the bloom+exact probe again — the touched buckets' blobs are
     rebuilt from the remaining exact rows, over the full
-    bootstrap→step→janitor lifecycle."""
+    bootstrap→step→janitor lifecycle — and once rediscovered and merged,
+    every one of them is back in the frontier."""
     store = StateStore(str(tmp_path / "s"))
     sched = CrawlScheduler(spark, store, host_budget=4, salt_k=4, n_buckets=8)
     sched.bootstrap(seed_frontier(spark, n=150))
@@ -68,10 +73,11 @@ def test_delete_refetchable_reopens_urls(spark, tmp_path):
     full_log = store.read(spark, "fetch_log", __import__(
         "simplecommoncrawlextractor_spark.plans.scheduler", fromlist=["FETCH_LOG_SCHEMA"]
     ).FETCH_LOG_SCHEMA)
-    victims = full_log.filter(
+    victim_log = full_log.filter(
         (F.col("WARC_IS_TRUNCATED") == "true")
         & (F.col("FETCH_STATUS") == "ADDED_TO_REPOSITORY")
-    ).select(F.xxhash64("URL").alias("url_hash")).distinct()
+    )
+    victims = victim_log.select(F.xxhash64("URL").alias("url_hash")).distinct()
     n_victims = victims.count()
     assert n_victims > 0, "fixture must produce truncated stored fetches"
     assert n_seen_after == n_seen_before - n_victims
@@ -82,6 +88,12 @@ def test_delete_refetchable_reopens_urls(spark, tmp_path):
     # non-victims still blocked
     survivors = seen_after.select("url_hash").limit(20).withColumn("url", F.lit("y"))
     assert sched.seen.probe(survivors, seen_after, sched.blooms()).count() == 0
+    # a rediscovered victim passes the probe and stays in the resolved
+    # frontier (no tombstone from its first fetch drops it again)
+    rediscovered = canonical_candidates(victim_log.select(F.col("URL").alias("url")))
+    sched.merge_candidates(sched.seen.probe(rediscovered, seen_after, sched.blooms()))
+    back = sched.frontier().join(victims, "url_hash", "left_semi").count()
+    assert back == n_victims
 
 
 def test_streaming_drain(spark, tmp_path):

@@ -3,7 +3,6 @@
 from __future__ import annotations
 
 import os
-import re
 
 import numpy as np
 import pytest
@@ -17,7 +16,6 @@ from simplecommoncrawlextractor_spark.plans.state import (
     _bits_for,
     _build_blob,
     _test_blob,
-    empty_frame,
     N_HASHES,
 )
 
@@ -188,10 +186,10 @@ def _settle(spark, tag):
 
 
 def test_empty_state_costs_no_job(spark, tmp_path):
-    """Empty state frames live in the JVM: reading a missing table or an
-    upsert entry with no owners, isEmpty() on them, and the robots lookup
-    of a store without a robots table run no Spark job; count() runs only
-    its final one-task aggregate, never a task that scans the frame."""
+    """Empty state frames live in the JVM: reading a missing table,
+    isEmpty() on it, and the robots lookup of a store without a robots
+    table run no Spark job; count() runs only its final one-task
+    aggregate, never a task that scans the frame."""
     import uuid
 
     from pyspark.sql.types import StructType
@@ -201,9 +199,6 @@ def test_empty_state_costs_no_job(spark, tmp_path):
 
     sc = spark.sparkContext
     store = StateStore(str(tmp_path / "empty_state"))
-    # an upsert table whose first delta is empty: owners stays {}
-    store.commit(tables={}, upserts={"blooms": empty_frame(spark, BLOOM_SCHEMA)})
-    assert store.manifest()["tables"]["blooms"]["owners"] == {}
     sched = CrawlScheduler(
         spark, StateStore(str(tmp_path / "boot")), host_budget=4, salt_k=4, n_buckets=8
     )
@@ -256,133 +251,56 @@ def test_empty_state_costs_no_job(spark, tmp_path):
         assert union.count() == 3
 
 
-def _bloom_files(root):
-    """{relpath: (size, sha256)} of every parquet data file under blooms/."""
-    import hashlib
-
-    out = {}
-    broot = os.path.join(root, "blooms")
-    for dirpath, _dirs, files in os.walk(broot):
-        for fn in files:
-            if not fn.endswith(".parquet"):
-                continue
-            p = os.path.join(dirpath, fn)
-            with open(p, "rb") as f:
-                out[os.path.relpath(p, broot)] = hashlib.sha256(f.read()).hexdigest()
-    return out
-
-
 def test_bloom_delta_commit_leaves_untouched_buckets_alone(spark, tmp_path):
-    """A scheduler round must commit bloom blobs ONLY for buckets that
-    received new hashes: every pre-existing blob file stays byte-identical
-    (O(round) commit, not O(total-state)), and the new delta part holds
-    only the touched buckets."""
-    import json
-
+    """A round writes the bloom blobs as one plain table: buckets that
+    received no new hash keep their blob row byte for byte, touched
+    buckets carry the new hashes, and probing every seen hash afterwards
+    returns nothing. 512 buckets leave most of a ~100-fetch round's
+    buckets untouched."""
     from simplecommoncrawlextractor_spark.plans import CrawlScheduler
     from simplecommoncrawlextractor_spark.sources import seed_frontier
 
-    root = str(tmp_path / "delta")
-    store = StateStore(root)
-    sched = CrawlScheduler(spark, store, host_budget=4, salt_k=4, n_buckets=8)
+    store = StateStore(str(tmp_path / "delta"))
+    sched = CrawlScheduler(spark, store, host_budget=4, salt_k=4, n_buckets=512)
     sched.bootstrap(seed_frontier(spark, n=120))
     sched.step()
-    before = _bloom_files(root)
-    assert before, "round 1 must have written bloom blobs"
-    m1 = json.load(open(os.path.join(root, "manifest.json")))
-    entry1 = m1["tables"]["blooms"]
-    assert entry1["kind"] == "upsert"
+    before = {r[0]: r for r in _bloom_rows(sched.blooms())}
+    seen1 = {r["url_hash"] for r in sched.url_seen().collect()}
 
     sched.step()
-    after = _bloom_files(root)
-    for rel, digest in before.items():
-        assert after.get(rel) == digest, f"pre-existing blob rewritten: {rel}"
-
-    m2 = json.load(open(os.path.join(root, "manifest.json")))
-    entry2 = m2["tables"]["blooms"]
-    assert entry1["parts"] == entry2["parts"][: len(entry1["parts"])]
-    # the round-2 delta part contains only buckets round 2 actually touched
-    delta_rel = entry2["parts"][-1]
-    delta = spark.read.parquet(os.path.join(root, delta_rel))
-    delta_buckets = {r["bucket"] for r in delta.select("bucket").distinct().collect()}
-    owned_by_delta = {
-        int(k) for k, i in entry2["owners"].items() if i == len(entry2["parts"]) - 1
-    }
-    assert delta_buckets == owned_by_delta
-    # resolved view stays exact: probing every seen hash returns nothing new
+    assert store.manifest()["tables"]["blooms"] == "blooms/v3"
+    after = {r[0]: r for r in _bloom_rows(sched.blooms())}
+    new = {r["url_hash"] for r in sched.url_seen().collect()} - seen1
+    touched = {h % 512 for h in new}
+    assert new and len(touched) < 512
+    assert set(after) == set(before) | touched
+    for b, row in after.items():
+        if b in touched:
+            assert row[4] == before.get(b, (0,) * 5)[4] + sum(h % 512 == b for h in new)
+        else:
+            assert row == before[b], b
     seen_rows = sched.url_seen()
-    blooms = sched.blooms()
     cand = seen_rows.selectExpr("url_hash", "cast(url_hash as string) as url")
-    assert sched.seen.probe(cand, seen_rows, blooms).count() == 0
-
-
-def test_upsert_compaction_bounds_part_list(spark, tmp_path):
-    """After many upsert commits the part list compacts into one base and
-    the resolved view is unchanged."""
-    root = str(tmp_path / "compact")
-    store = StateStore(root)
-    seen = BloomSeenSet(n_buckets=4)
-    expect = {}
-    for rnd in range(StateStore.MAX_UPSERT_PARTS + 3):
-        rows = seen.bucketize(
-            spark.range(rnd * 50, rnd * 50 + 50).selectExpr(
-                "xxhash64(cast(id as string)) as url_hash"
-            )
-        ).select("bucket", "url_hash")
-        delta = seen.build_blooms(rows)
-        store.commit(tables={}, upserts={"blooms": delta})
-        for r in delta.collect():
-            expect[r["bucket"]] = r["n_items"]
-    import json
-
-    m = json.load(open(os.path.join(root, "manifest.json")))
-    assert len(m["tables"]["blooms"]["parts"]) <= StateStore.MAX_UPSERT_PARTS
-    resolved = store.read(
-        spark, "blooms", "bucket int, bitmap binary, n_bits long, n_hashes int, n_items long"
-    )
-    got = {r["bucket"]: r["n_items"] for r in resolved.collect()}
-    assert got == expect
+    assert sched.seen.probe(cand, seen_rows, sched.blooms()).count() == 0
 
 
 def test_upsert_empty_delta_carries_forward(spark, tmp_path):
-    """Empty upsert deltas must not grow the part list (a crawl round
-    that schedules nothing would otherwise force compaction churn and,
-    once owners was empty, an IndexError at compaction)."""
-    import json
+    """A round that schedules nothing brings no new hash: its commit
+    still writes a blooms version, holding every bucket's blob
+    unchanged."""
+    from simplecommoncrawlextractor_spark.plans import CrawlScheduler
+    from simplecommoncrawlextractor_spark.sources import seed_frontier
 
     store = StateStore(str(tmp_path / "empty"))
-    seen = BloomSeenSet(n_buckets=4)
-    rows = seen.bucketize(
-        spark.range(50).selectExpr("xxhash64(cast(id as string)) as url_hash")
-    ).select("bucket", "url_hash")
-    store.commit(tables={}, upserts={"blooms": seen.build_blooms(rows)})
-    empty = spark.createDataFrame(
-        [], "bucket int, bitmap binary, n_bits long, n_hashes int, n_items long"
-    )
-    for _ in range(StateStore.MAX_UPSERT_PARTS + 2):
-        store.commit(tables={}, upserts={"blooms": empty})
-    m = json.load(open(os.path.join(str(tmp_path / "empty"), "manifest.json")))
-    assert len(m["tables"]["blooms"]["parts"]) == 1
-    got = store.read(
-        spark, "blooms", "bucket int, bitmap binary, n_bits long, n_hashes int, n_items long"
-    )
-    assert got.count() == 4
-
-
-def test_upsert_migration_resolves_all_prev_parts(spark, tmp_path):
-    """Switching a multi-part (append) table to upsert must not lose rows
-    that live only in later parts."""
-    store = StateStore(str(tmp_path / "mig"))
-    mk = lambda b, n: spark.createDataFrame([(b, bytes([b]), 8, 1, n)],
-        "bucket int, bitmap binary, n_bits long, n_hashes int, n_items long")
-    store.commit(tables={}, appends={"t": mk(0, 1)})
-    store.commit(tables={}, appends={"t": mk(1, 2)}, carry_forward=["t"])
-    # upsert delta touching bucket 0 only; bucket 1 (in part 2) must survive
-    store.commit(tables={}, upserts={"t": mk(0, 9)})
-    got = {r["bucket"]: r["n_items"] for r in store.read(
-        spark, "t", "bucket int, bitmap binary, n_bits long, n_hashes int, n_items long"
-    ).collect()}
-    assert got == {0: 9, 1: 2}
+    sched = CrawlScheduler(spark, store, host_budget=4, salt_k=4, n_buckets=4)
+    sched.bootstrap(seed_frontier(spark, n=20))
+    sched.step()
+    before = _bloom_rows(sched.blooms())
+    assert len(before) == 4
+    sched.host_budget = 0
+    assert sched.step()["fetched"] == 0
+    assert store.manifest()["tables"]["blooms"] == "blooms/v3"
+    assert _bloom_rows(sched.blooms()) == before
 
 
 def test_snapshot_time_travel_and_rollback_replay(spark, tmp_path):
@@ -636,42 +554,26 @@ def _crawl_digest(sched) -> str:
     return h.hexdigest()
 
 
-def test_state_parts_are_flat_key_sorted_files(spark, tmp_path, monkeypatch):
+def test_state_parts_are_flat_key_sorted_files(spark, tmp_path):
     """No part is split into ``bucket=N`` directories: every part directory
     holds at most one parquet file per write task (shuffle partitions),
-    and each upsert file is sorted by its key, through a bootstrap, two
-    rounds and an upsert compaction."""
+    through a bootstrap and two rounds."""
     from simplecommoncrawlextractor_spark.plans import CrawlScheduler
     from simplecommoncrawlextractor_spark.sources import seed_frontier
 
-    monkeypatch.setattr(StateStore, "MAX_UPSERT_PARTS", 1)
     root = str(tmp_path / "flat")
     store = StateStore(root)
     sched = CrawlScheduler(spark, store, host_budget=4, salt_k=4, n_buckets=8)
     sched.bootstrap(seed_frontier(spark, n=200))
     sched.step()
     sched.step()
-    blooms = store.manifest()["tables"]["blooms"]
-    assert blooms["parts"] == ["blooms/v3"]  # round 2 compacted u2 + u3
+    assert store.manifest()["tables"]["blooms"] == "blooms/v3"
 
     n_tasks = int(spark.conf.get("spark.sql.shuffle.partitions"))
     for dirpath, dirs, files in os.walk(root):
         assert not [d for d in dirs if "=" in d], dirpath
         data = [f for f in files if f.endswith(".parquet")]
         assert len(data) <= n_tasks, (dirpath, len(data))
-    _assert_key_sorted(os.path.join(root, "blooms"))
-
-
-def _assert_key_sorted(table_dir):
-    """Every parquet file of every part under ``table_dir`` is sorted by
-    bucket."""
-    import pyarrow.parquet as pq
-
-    for part in os.listdir(table_dir):
-        for fn in os.listdir(os.path.join(table_dir, part)):
-            if fn.endswith(".parquet"):
-                keys = pq.read_table(os.path.join(table_dir, part, fn)).column("bucket")
-                assert keys.to_pylist() == sorted(keys.to_pylist()), (part, fn)
 
 
 def _to_bucket_dirs(spark, part_dir):
@@ -685,15 +587,41 @@ def _to_bucket_dirs(spark, part_dir):
     os.rename(tmp, part_dir)
 
 
-def test_old_bucket_dir_layout_resumes_identically(spark, tmp_path, monkeypatch):
-    """A store whose url_seen and bloom parts are in the older
-    ``bucket=N`` layout resumes next to new flat parts, through an upsert
-    compaction that folds both layouts, to the crawl order of a store
-    that was never rewritten."""
+def _to_upsert_entry(spark, root):
+    """Rewrite the bloom blobs of the current snapshot the way builds that
+    kept an upsert table stored them: a ``u{sid}`` part named by a keyed
+    ``{"kind": "upsert", ...}`` entry, in both the current manifest and
+    the snapshot log. Returns the part's relative path."""
+    import json
+
+    store = StateStore(root)
+    sid = store.snapshot_id()
+    old = f"blooms/u{sid}"
+    os.rename(os.path.join(root, f"blooms/v{sid}"), os.path.join(root, old))
+    buckets = spark.read.parquet(os.path.join(root, old)).select("bucket").collect()
+    for path in (store._manifest_path(), store._manifest_path(sid)):
+        with open(path) as f:
+            m = json.load(f)
+        m["tables"]["blooms"] = {
+            "kind": "upsert",
+            "key": "bucket",
+            "parts": [old],
+            "owners": {str(r[0]): 0 for r in buckets},
+        }
+        with open(path, "w") as f:
+            json.dump(m, f, indent=1)
+    return old
+
+
+def test_old_bucket_dir_layout_resumes_identically(spark, tmp_path):
+    """A store written by an older build resumes to the crawl order of a
+    store that was never rewritten: its url_seen part in the ``bucket=N``
+    layout reads next to new flat parts, and its keyed upsert blooms
+    entry is rebuilt from the exact rows, then replaced by a plain table
+    at the next commit. Orphan GC keeps the upsert part while a retained
+    manifest names it, and sweeps it after."""
     from simplecommoncrawlextractor_spark.plans import CrawlScheduler
     from simplecommoncrawlextractor_spark.sources import seed_frontier
-
-    monkeypatch.setattr(StateStore, "MAX_UPSERT_PARTS", 1)
 
     def crawl(root, rewrite):
         store = StateStore(root)
@@ -701,48 +629,18 @@ def test_old_bucket_dir_layout_resumes_identically(spark, tmp_path, monkeypatch)
         sched.bootstrap(seed_frontier(spark, n=200))
         sched.step()
         if rewrite:
-            tables = store.manifest()["tables"]
-            old = [p for p in tables["url_seen"] if "/d" in p]
-            old += [p for p in tables["blooms"]["parts"] if "/u" in p]
-            assert old == ["url_seen/d2", "blooms/u2"]
-            for rel in old:
-                _to_bucket_dirs(spark, os.path.join(root, rel))
-                assert any(
-                    d.startswith("bucket=") for d in os.listdir(os.path.join(root, rel))
-                )
+            seen_part = os.path.join(root, "url_seen/d2")
+            _to_bucket_dirs(spark, seen_part)
+            assert any(d.startswith("bucket=") for d in os.listdir(seen_part))
+            upsert_part = _to_upsert_entry(spark, root)
         sched.run(2)
-        assert store.manifest()["tables"]["blooms"]["parts"] == ["blooms/v4"]
+        assert store.manifest()["tables"]["blooms"] == "blooms/v4"
+        if rewrite:
+            store.expire_snapshots(keep_last=3, orphan_grace_sec=0)
+            assert os.path.isdir(os.path.join(root, upsert_part))
+            out = store.expire_snapshots(keep_last=1, orphan_grace_sec=0)
+            assert upsert_part in out["removed"]
         return _crawl_digest(sched)
 
     control = crawl(str(tmp_path / "control"), rewrite=False)
     assert crawl(str(tmp_path / "old"), rewrite=True) == control
-
-
-def test_upsert_read_pushes_owned_bucket_filter(spark, tmp_path):
-    """Resolving an upsert entry reads each flat part with its owned-key
-    ``In`` filter pushed to the Parquet scan, and returns exactly the
-    owned buckets' rows from each part. A delta that arrives in
-    descending key order is still written key-sorted."""
-    root = str(tmp_path / "push")
-    store = StateStore(root)
-    mk = lambda buckets, n: spark.createDataFrame(
-        [(b, bytes([b]), 8, 1, n) for b in buckets], BLOOM_SCHEMA
-    ).coalesce(1)
-    store.commit(tables={}, upserts={"blooms": mk(range(7, -1, -1), 1)})
-    store.commit(tables={}, upserts={"blooms": mk([5, 2], 2)})
-    entry = store.manifest()["tables"]["blooms"]
-    assert entry["parts"] == ["blooms/u1", "blooms/u2"]
-    _assert_key_sorted(os.path.join(root, "blooms"))
-
-    resolved = store.read(spark, "blooms", BLOOM_SCHEMA)
-    plan = resolved._jdf.queryExecution().executedPlan().toString()
-    scans = [ln for ln in plan.splitlines() if "FileScan parquet" in ln]
-    assert len(scans) == 2, plan
-    pushed = []
-    for ln in scans:
-        m = re.search(r"PushedFilters: \[[^\]]*In\(bucket, \[([\d,]+)\]\)", ln)
-        assert m, ln
-        pushed.append(sorted(int(k) for k in m.group(1).split(",")))
-    assert sorted(pushed) == [[0, 1, 3, 4, 6, 7], [2, 5]], pushed
-    got = sorted((r["bucket"], r["n_items"]) for r in resolved.collect())
-    assert got == [(b, 2 if b in (2, 5) else 1) for b in range(8)]
