@@ -12,9 +12,10 @@ Spark-first re-expression:
   commit writes one Parquet file per write task, so a round's file count
   does not grow with the bucket count.
 - **bloom side-structure**: one bloom-filter blob per bucket, built and
-  merged with ``applyInPandas`` (each task owns whole buckets — no
-  read-modify-write races). Probing a candidate batch co-groups candidates
-  with their bucket's blob; bloom-negative rows are *definitely* unseen and
+  merged in the JVM with Spark's bitmap functions, partitioned by bucket
+  (each task owns whole buckets — no read-modify-write races). Probing a
+  candidate batch joins its hashes to their bucket's blob and tests the
+  bits; bloom-negative rows are *definitely* unseen and
   skip the exact join entirely; bloom-positive rows are confirmed by a
   ``(bucket, url_hash)`` semi-join against the exact rows, and one final
   left-anti join drops the confirmed ones (false positives survive).
@@ -44,8 +45,6 @@ import shutil
 import time
 from typing import Iterable
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
@@ -57,6 +56,7 @@ DEFAULT_N_BUCKETS = 64
 BITS_PER_ITEM = 10
 N_HASHES = 7
 MIN_BITS = 1 << 13  # 8 Kibit floor per bucket blob
+CHUNK_BITS = 1 << 15  # the fixed size of Spark's bitmap functions
 
 
 def empty_frame(spark: SparkSession, schema: str) -> DataFrame:
@@ -74,34 +74,12 @@ def empty_frame(spark: SparkSession, schema: str) -> DataFrame:
     )
 
 
-def _probe_positions(hashes: np.ndarray, n_bits: int, n_hashes: int) -> np.ndarray:
-    """Double-hashing probe positions: h1 + i*h2 mod n_bits (uint64 math)."""
-    h = hashes.astype(np.uint64)
-    h1 = h & np.uint64(0xFFFFFFFF)
-    h2 = (h >> np.uint64(32)) | np.uint64(1)  # odd-ish, never zero
-    i = np.arange(n_hashes, dtype=np.uint64)[:, None]
-    return ((h1[None, :] + i * h2[None, :]) % np.uint64(n_bits)).astype(np.int64)
-
-
-def _bits_for(n_items: int) -> int:
-    return max(MIN_BITS, 1 << int(np.ceil(np.log2(max(1, n_items) * BITS_PER_ITEM))))
-
-
-def _build_blob(hashes: np.ndarray, n_bits: int) -> bytes:
-    bitmap = np.zeros(n_bits // 8, dtype=np.uint8)
-    if len(hashes):
-        pos = _probe_positions(hashes, n_bits, N_HASHES).ravel()
-        np.bitwise_or.at(bitmap, pos // 8, (1 << (pos % 8)).astype(np.uint8))
-    return bitmap.tobytes()
-
-
-def _test_blob(hashes: np.ndarray, bitmap: bytes, n_bits: int, n_hashes: int) -> np.ndarray:
-    if len(hashes) == 0:
-        return np.zeros(0, dtype=bool)
-    bm = np.frombuffer(bitmap, dtype=np.uint8)
-    pos = _probe_positions(hashes, n_bits, n_hashes)
-    hit = (bm[pos // 8] >> (pos % 8).astype(np.uint8)) & 1
-    return hit.all(axis=0).astype(bool)
+def _probe_position(i: int | str) -> str:
+    """SQL for probe ``i`` of ``url_hash`` by double hashing:
+    h1 + i*h2 mod n_bits. h1 < 2^32 and i*h2 < N_HASHES * 2^32, so the
+    sum never overflows a long, and n_bits is a power of two, so the mask
+    is the modulus."""
+    return f"(((url_hash & 4294967295) + {i} * ((url_hash >>> 32) | 1)) & (n_bits - 1))"
 
 
 class BloomSeenSet:
@@ -120,26 +98,10 @@ class BloomSeenSet:
         )
 
     def build_blooms(self, seen_rows: DataFrame) -> DataFrame:
-        """(bucket, url_hash) rows → one bloom blob per bucket.
-
-        applyInPandas per bucket: each task owns whole buckets, so blob
-        construction is race-free by partitioning, not by locking.
-        """
-
-        def build(pdf: pd.DataFrame) -> pd.DataFrame:
-            hashes = pdf["url_hash"].to_numpy(dtype=np.int64)
-            n_bits = _bits_for(len(hashes))
-            return pd.DataFrame(
-                {
-                    "bucket": [int(pdf["bucket"].iloc[0])],
-                    "bitmap": [_build_blob(hashes, n_bits)],
-                    "n_bits": [n_bits],
-                    "n_hashes": [N_HASHES],
-                    "n_items": [len(hashes)],
-                }
-            )
-
-        return seen_rows.groupBy("bucket").applyInPandas(build, BLOOM_SCHEMA)
+        """(bucket, url_hash) rows → one bloom blob per bucket: the rows
+        merged into an empty blob table."""
+        empty = empty_frame(seen_rows.sparkSession, BLOOM_SCHEMA)
+        return self.merge_blooms(empty, seen_rows.select("url_hash"))
 
     def probe(
         self,
@@ -150,115 +112,100 @@ class BloomSeenSet:
         """Return candidates NOT in the seen set (the F9/J2 anti-join,
         cc/warc/Extractor.java:89-91), bloom-accelerated.
 
-        cogrouped applyInPandas(candidates ⨝bucket blooms) emits ONLY the
-        bloom-positive hashes (suspects); those are confirmed against the
+        Joining the slim ``(bucket, url_hash)`` frame to the blobs keeps
+        ONLY the bloom-positive hashes (suspects); a hash whose bucket has
+        no blob is definitely new. The suspects are confirmed against the
         exact rows with a ``(bucket, url_hash)`` semi-join (it scans every
-        url_seen part; nothing prunes them by bucket), and the single final
-        anti-join removes the confirmed-seen hashes from the candidates.
-        Algebra: cand hashes = definite_new ∪ suspects, so
-        cand ∖ (suspects ∩ seen) = definite_new ∪ (suspects ∖ seen) — the
-        same set as flagging both ways, but the flag output is half the
-        Arrow traffic, the flagged frame has ONE consumer (no double
-        execution of the cogroup across union branches), and definite-new
-        rows never enter any join.
+        url_seen part; nothing prunes them by bucket), and the single
+        final anti-join removes the confirmed-seen hashes from the
+        candidates. Algebra: cand hashes = definite_new ∪ suspects, so
+        cand ∖ (suspects ∩ seen) = definite_new ∪ (suspects ∖ seen), and
+        definite-new rows never enter the confirm join.
 
         The candidate batch is localCheckpointed first: the plan reads it
         twice (the slim hash path and the final anti-join), and a
         UDF-heavy candidate chain (canonicalize) would run once per read.
         """
         candidates = candidates.localCheckpoint()
-        # only the 16-byte (bucket, url_hash) pair crosses the Arrow
-        # boundary — never the full candidate row (at 10^10 scale the
-        # candidate payload is 10-50× wider than the hash)
+        # only the 16-byte (bucket, url_hash) pair meets the blobs — never
+        # the full candidate row (at 10^10 scale the candidate payload is
+        # 10-50× wider than the hash)
         slim = self.bucketize(candidates).select("bucket", "url_hash")
-
-        def flag(key, cpdf: pd.DataFrame, bpdf: pd.DataFrame) -> pd.DataFrame:
-            if len(cpdf) == 0:
-                return pd.DataFrame(
-                    {"bucket": pd.Series([], dtype="int32"),
-                     "url_hash": pd.Series([], dtype="int64")}
-                )
-            hashes = cpdf["url_hash"].to_numpy(dtype=np.int64)
-            if len(bpdf) == 0:
-                hits = np.zeros(len(hashes), dtype=bool)
-            else:
-                row = bpdf.iloc[0]
-                hits = _test_blob(
-                    hashes, row["bitmap"], int(row["n_bits"]), int(row["n_hashes"])
-                )
-            return pd.DataFrame(
-                {"bucket": cpdf["bucket"][hits], "url_hash": cpdf["url_hash"][hits]}
-            )
-
-        suspects = (
-            slim.groupBy("bucket")
-            .cogroup(blooms.groupBy("bucket"))
-            .applyInPandas(flag, "bucket int, url_hash long")
+        # all N_HASHES bits set; the probes are unrolled, as a lambda over
+        # them would run interpreted
+        hit = " AND ".join(
+            f"(cast(conv(hex(substring(bitmap, {p} div 8 + 1, 1)), 16, 10) AS int)"
+            f" >> ({p} % 8)) & 1 = 1"
+            for p in map(_probe_position, range(N_HASHES))
         )
+        suspects = slim.join(blooms, "bucket").where(hit).select("bucket", "url_hash")
         truly_seen = suspects.join(
             seen_rows, on=["bucket", "url_hash"], how="left_semi"
         ).select("url_hash")
         return candidates.join(truly_seen, "url_hash", "left_anti")
 
     def merge_blooms(self, blooms: DataFrame, new_rows: DataFrame) -> DataFrame:
-        """OR new hashes into existing blobs (cogrouped per bucket); grows a
-        blob when its item count outruns its bit budget."""
+        """OR new hashes into existing blobs; a bucket with no blob gets
+        one sized for its new hashes. ``n_items`` counts every new row.
 
-        def merge(key, bpdf: pd.DataFrame, npdf: pd.DataFrame) -> pd.DataFrame:
-            hashes = npdf["url_hash"].to_numpy(dtype=np.int64) if len(npdf) else np.array([], dtype=np.int64)
-            if len(bpdf) == 0:
-                n_bits = _bits_for(len(hashes))
-                return pd.DataFrame(
-                    {
-                        "bucket": [int(key[0])],
-                        "bitmap": [_build_blob(hashes, n_bits)],
-                        "n_bits": [n_bits],
-                        "n_hashes": [N_HASHES],
-                        "n_items": [len(hashes)],
-                    }
-                )
-            row = bpdf.iloc[0]
-            n_bits, n_items = int(row["n_bits"]), int(row["n_items"]) + len(hashes)
-            # growth is handled OUTSIDE this merge: rebuild_overfull_blooms
-            # re-derives oversubscribed buckets from the exact rows (the
-            # n_items bookkeeping below is what flags them)
-            bm = np.frombuffer(row["bitmap"], dtype=np.uint8).copy()
-            if len(hashes):
-                pos = _probe_positions(hashes, n_bits, int(row["n_hashes"])).ravel()
-                np.bitwise_or.at(bm, pos // 8, (1 << (pos % 8)).astype(np.uint8))
-            return pd.DataFrame(
-                {
-                    "bucket": [int(key[0])],
-                    "bitmap": [bm.tobytes()],
-                    "n_bits": [n_bits],
-                    "n_hashes": [int(row["n_hashes"])],
-                    "n_items": [n_items],
-                }
+        A blob of ``n_bits / 8`` bytes holds bit p at bit p % 8 of byte
+        p / 8. It is built in ``CHUNK_BITS`` chunks, the fixed size of
+        Spark's bitmaps: ``bitmap_construct_agg`` sets a chunk's probe
+        positions, ``bitmap_or_agg`` ORs in the stored blob's chunk, and
+        the chunks are joined in order and cut to length (a blob below
+        one chunk is that chunk's prefix). One exchange: the blobs, the
+        bucketized hashes and one marker row per bucket are partitioned
+        by bucket, where a window gives each row its bucket's sizes. Hash
+        rows explode into their probe positions and blob rows into their
+        chunks (a marker stands in for a missing blob, so every chunk has
+        a row even with no bit set); the aggregations per (bucket, chunk)
+        and per bucket reuse that partitioning."""
+        over = "OVER (PARTITION BY bucket)"
+        n_new = f"count(url_hash) {over}"
+        # smallest power of two >= BITS_PER_ITEM * n_new: the bit length
+        # of x - 1 is ceil(log2(x)) in exact integer math
+        bits_for = f"greatest({MIN_BITS}L, 1L << length(bin({n_new} * {BITS_PER_ITEM} - 1)))"
+        markers = new_rows.sparkSession.range(self.n_buckets).selectExpr("cast(id AS int) AS bucket")
+        rows = (
+            blooms.unionByName(self.bucketize(new_rows.select("url_hash")), allowMissingColumns=True)
+            .unionByName(markers, allowMissingColumns=True)
+            .selectExpr(
+                "bucket", "bitmap", "url_hash",
+                f"coalesce(max(n_bits) {over}, {bits_for}) AS n_bits",
+                f"coalesce(max(n_hashes) {over}, {N_HASHES}) AS n_hashes",
+                f"coalesce(max(n_items) {over}, 0) + {n_new} AS n_items",
+                f"max(n_bits) {over} IS NOT NULL OR {n_new} > 0 AS has_blob",
             )
-
-        return (
-            blooms.groupBy("bucket")
-            .cogroup(self.bucketize(new_rows).groupBy("bucket"))
-            .applyInPandas(merge, BLOOM_SCHEMA)
+            .where("has_blob")  # not a marker alone
         )
-
-
-    def rebuild_overfull_blooms(
-        self, blooms: DataFrame, seen_rows: DataFrame
-    ) -> DataFrame:
-        """Grow any bucket whose item count has outrun its bit budget
-        (false-positive rate would decay otherwise): rebuild just those
-        buckets' blobs from the exact rows. Bucket-local, rare (a bucket
-        doubles capacity each rebuild), and cheap relative to the probe
-        traffic it keeps honest."""
-        overfull = blooms.filter(
-            F.col("n_items") * BITS_PER_ITEM > F.col("n_bits")
-        ).select("bucket")
-        rebuilt = self.build_blooms(
-            seen_rows.join(F.broadcast(overfull), "bucket", "left_semi")
+        keys = ["bucket", "n_bits", "n_hashes", "n_items"]
+        pos = _probe_position("k")
+        chunks = (
+            rows.selectExpr(
+                *keys, "bitmap", "url_hash",
+                "explode(sequence(0, IF(url_hash IS NULL,"
+                f" (n_bits + {CHUNK_BITS - 1}) div {CHUNK_BITS}, n_hashes) - 1)) AS k",
+            )
+            .selectExpr(
+                *keys,
+                f"IF(url_hash IS NULL, k, {pos} div {CHUNK_BITS}) AS chunk",
+                f"{pos} % {CHUNK_BITS} AS bit",
+                f"substring(bitmap, k * {CHUNK_BITS // 8} + 1, {CHUNK_BITS // 8}) AS stored",
+            )
+            .groupBy(*keys, "chunk")
+            .agg(
+                F.bitmap_construct_agg("bit").alias("added"),
+                F.bitmap_or_agg("stored").alias("stored"),
+            )
+            # Spark has no binary OR: OR the two as one more aggregate
+            .selectExpr(*keys, "chunk", "explode(array(added, stored)) AS bm")
+            .groupBy(*keys, "chunk")
+            .agg(F.bitmap_or_agg("bm").alias("bm"))
         )
-        untouched = blooms.join(rebuilt.select("bucket"), "bucket", "left_anti")
-        return untouched.unionByName(rebuilt)
+        return chunks.groupBy(*keys).agg(
+            F.expr("substring(listagg(bm) WITHIN GROUP (ORDER BY chunk), 1, n_bits div 8)")
+            .alias("bitmap")
+        ).select("bucket", "bitmap", "n_bits", "n_hashes", "n_items")
 
     def delete(self, seen_rows: DataFrame, victims: DataFrame) -> tuple[DataFrame, DataFrame]:
         """The deletion path: remove ``victims`` (url_hash) from the seen
@@ -283,22 +230,26 @@ class BloomSeenSet:
         self, touched_blobs: DataFrame, new_rows: DataFrame, seen_after: DataFrame
     ) -> DataFrame:
         """Per-round blob delta for the buckets receiving ``new_rows``:
-        OR the new hashes in, then rebuild any bucket whose item count
-        outran its bit budget (from ``seen_after``, the post-merge exact
-        rows). Only touched buckets can newly overflow.
+        OR the new hashes in, then grow any bucket whose item count outran
+        its bit budget (its false-positive rate would decay otherwise) by
+        rebuilding its blob from ``seen_after``, the post-merge exact rows.
+        Only touched buckets can newly overflow, and a rebuild at least
+        doubles the bucket's bits, so rebuilds are rare and bucket-local.
 
         Eager: the merge is locally checkpointed once, and the overfull
         bucket ids (at most ``n_buckets``) are collected to the driver, so
-        the merge cogroup runs exactly once and the rebuild is planned
-        only when a bucket overflowed. The returned frame is materialized
-        on both paths; callers need no cache of their own."""
+        the merge runs exactly once and the rebuild is planned only when
+        a bucket overflowed. The returned frame is materialized on both
+        paths; callers need no cache of their own."""
         delta = self.merge_blooms(touched_blobs, new_rows).localCheckpoint()
-        overfull = delta.filter(
-            F.col("n_items") * BITS_PER_ITEM > F.col("n_bits")
-        ).select("bucket").collect()
-        if not overfull:
+        overfull = delta.where(f"n_items * {BITS_PER_ITEM} > n_bits").select("bucket")
+        if not overfull.collect():
             return delta
-        return self.rebuild_overfull_blooms(delta, seen_after).localCheckpoint()
+        rebuilt = self.build_blooms(
+            seen_after.join(F.broadcast(overfull), "bucket", "left_semi")
+        )
+        untouched = delta.join(rebuilt.select("bucket"), "bucket", "left_anti")
+        return untouched.unionByName(rebuilt).localCheckpoint()
 
 
 class StateStore:
@@ -315,8 +266,8 @@ class StateStore:
 
     The manifest of a store written by an older build may still hold a
     keyed ``{"kind": "upsert", "parts": [...], ...}`` entry for blooms;
-    ``read`` does not resolve it (CrawlScheduler.blooms rebuilds those
-    blobs from the exact rows), and orphan GC keeps its parts while a
+    ``read`` raises a ValueError for it (CrawlScheduler.blooms rebuilds
+    those blobs from the exact rows), and orphan GC keeps its parts while a
     retained manifest names them.
 
     No table is written with ``partitionBy``: a part is one Parquet file
@@ -489,15 +440,24 @@ class StateStore:
         """Read a table at the current snapshot, or at a historical one
         (``snapshot=`` time travel). A table the manifest does not name
         reads as an ``empty_frame`` of ``schema`` (no job, no Python
-        task)."""
-        rel = self.manifest(snapshot)["tables"].get(name)
+        task). Each part is read with ``schema``, so no read runs a
+        Parquet footer-inference job; a part in the older ``bucket=N``
+        layout takes ``bucket`` from its path."""
+        m = self.manifest(snapshot)
+        rel = m["tables"].get(name)
         if rel is None:
             return empty_frame(spark, schema)
+        if isinstance(rel, dict):
+            raise ValueError(f"table {name!r} at snapshot {m['snapshot']} is an older "
+                             f"build's keyed {rel.get('kind')!r} entry; read cannot resolve it")
         parts = rel if isinstance(rel, list) else [rel]
         # read each delta dir separately and union by name: multi-root reads
         # trip Spark's partition discovery when parts mix layouts (a store
         # written before parts were flat holds bucket=N part dirs)
-        dfs = [spark.read.parquet(os.path.join(self.root, p)) for p in parts]
+        dfs = [
+            spark.read.schema(schema).parquet(os.path.join(self.root, p))
+            for p in parts
+        ]
         out = dfs[0]
         for d in dfs[1:]:
             out = out.unionByName(d)

@@ -239,6 +239,28 @@ def _python_under_range_sort(plan: str) -> list[str]:
     return found
 
 
+def test_seen_set_plans_run_no_python(spark):
+    """The bloom seen set is bit arithmetic in the JVM: building, merging
+    and probing its blobs plans no Python node."""
+    from simplecommoncrawlextractor_spark.plans.state import BloomSeenSet
+
+    seen = BloomSeenSet(n_buckets=8)
+    hashes = spark.range(100).selectExpr("xxhash64(id) AS url_hash")
+    rows = seen.bucketize(hashes).select("bucket", "url_hash")
+    blooms = seen.build_blooms(rows)
+    plans = {
+        "build_blooms": blooms,
+        "merge_blooms": seen.merge_blooms(blooms, hashes),
+        "probe": seen.probe(hashes, rows, blooms),
+    }
+    found = {
+        name: [t for _, t in _plan_nodes(_plan(df))
+               if re.sub(r"^\*\(\d+\) ", "", t).split(" ", 1)[0] in _PY_NODES]
+        for name, df in plans.items()
+    }
+    assert not any(found.values()), found
+
+
 def test_no_python_stage_under_a_range_sort(spark, sf_dir):
     """A global sort's range partitioner first runs its child stage to
     sample the bounds and then runs it again to write the shuffle, so a

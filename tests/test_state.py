@@ -9,27 +9,87 @@ import pytest
 from pyspark.sql import functions as F
 
 from simplecommoncrawlextractor_spark.plans.state import (
+    BITS_PER_ITEM,
     BLOOM_SCHEMA,
+    MIN_BITS,
     SEEN_SCHEMA,
     BloomSeenSet,
     StateStore,
-    _bits_for,
-    _build_blob,
-    _test_blob,
     N_HASHES,
 )
 
 
-def test_bloom_blob_no_false_negatives():
+# numpy reference for the blob format: the Spark build, merge and probe
+# must agree with it byte for byte
+def _ref_positions(hashes, n_bits):
+    """Double-hashing probe positions: h1 + i*h2 mod n_bits (uint64 math)."""
+    h = np.asarray(hashes, dtype=np.int64).astype(np.uint64)
+    h1 = h & np.uint64(0xFFFFFFFF)
+    h2 = (h >> np.uint64(32)) | np.uint64(1)
+    i = np.arange(N_HASHES, dtype=np.uint64)[:, None]
+    return ((h1[None, :] + i * h2[None, :]) % np.uint64(n_bits)).astype(np.int64)
+
+
+def _ref_bits_for(n_items):
+    return max(MIN_BITS, 1 << int(np.ceil(np.log2(max(1, n_items) * BITS_PER_ITEM))))
+
+
+def _ref_blob(hashes, n_bits, bitmap=None):
+    """OR ``hashes`` into ``bitmap`` (a zero blob when None)."""
+    bm = np.zeros(n_bits // 8, np.uint8) if bitmap is None else np.frombuffer(bitmap, np.uint8).copy()
+    if len(hashes):
+        pos = _ref_positions(hashes, n_bits).ravel()
+        np.bitwise_or.at(bm, pos // 8, (1 << (pos % 8)).astype(np.uint8))
+    return bm.tobytes()
+
+
+def _ref_test(hashes, bitmap, n_bits):
+    pos = _ref_positions(hashes, n_bits)
+    bm = np.frombuffer(bitmap, np.uint8)
+    return ((bm[pos // 8] >> (pos % 8).astype(np.uint8)) & 1).all(axis=0).astype(bool)
+
+
+def _ref_merge(rows, new_hashes, n_buckets):
+    """numpy merge of blob rows (tuples as ``_bloom_rows`` gives) with new
+    hashes, in ``_bloom_rows`` form."""
+    out = {r[0]: r for r in rows}
+    by_bucket = {}
+    for h in new_hashes:
+        by_bucket.setdefault(h % n_buckets, []).append(h)
+    for b, hs in by_bucket.items():
+        if b in out:
+            _, bm, n_bits, n_hashes, n_items = out[b]
+            out[b] = (b, _ref_blob(hs, n_bits, bm), n_bits, n_hashes, n_items + len(hs))
+        else:
+            n_bits = _ref_bits_for(len(hs))
+            out[b] = (b, _ref_blob(hs, n_bits), n_bits, N_HASHES, len(hs))
+    return sorted(out.values())
+
+
+def test_bloom_blob_no_false_negatives(spark):
+    """The Spark build and probe: every built hash probes as a suspect, and
+    fresh hashes pass as bloom-negative at a sane false-positive rate."""
     rng = np.random.default_rng(7)
     hashes = rng.integers(-(2**62), 2**62, size=5000, dtype=np.int64)
-    n_bits = _bits_for(len(hashes))
-    blob = _build_blob(hashes, n_bits)
-    assert _test_blob(hashes, blob, n_bits, N_HASHES).all()
-    # false-positive rate sane (<3% at 10 bits/item, 7 hashes)
     probe = rng.integers(-(2**62), 2**62, size=20000, dtype=np.int64)
     fresh = probe[~np.isin(probe, hashes)]
-    fp = _test_blob(fresh, blob, n_bits, N_HASHES).mean()
+    seen = BloomSeenSet(n_buckets=1)
+
+    def frame(hs):
+        return spark.createDataFrame([(int(h),) for h in hs], "url_hash long")
+
+    seen_rows = seen.bucketize(frame(hashes)).select("bucket", "url_hash")
+    blooms = seen.build_blooms(seen_rows)
+    # a bloom positive is confirmed against the exact rows and dropped, so
+    # a false negative would survive the probe
+    cand = frame(hashes).selectExpr("url_hash", "cast(url_hash as string) as url")
+    assert seen.probe(cand, seen_rows, blooms).count() == 0
+    # with the fresh hashes themselves as exact rows, exactly the bloom
+    # negatives survive: false-positive rate sane (<3% at 10 bits/item,
+    # 7 hashes)
+    fresh_rows = seen.bucketize(frame(fresh)).select("bucket", "url_hash")
+    fresh_cand = frame(fresh).selectExpr("url_hash", "cast(url_hash as string) as url")
+    fp = 1 - seen.probe(fresh_cand, fresh_rows, blooms).count() / len(fresh)
     assert fp < 0.03, fp
 
 
@@ -96,8 +156,8 @@ def test_statestore_torn_commit_invisible(spark, tmp_path):
 
 
 def test_rebuild_overfull_blooms(spark):
-    """A bucket seeded tiny then flooded past its bit budget gets rebuilt
-    at the next maintenance pass — FP rate returns to design range."""
+    """A bucket seeded tiny then flooded past its bit budget is rebuilt by
+    merge_delta — FP rate returns to design range."""
     seen = BloomSeenSet(n_buckets=2)
     first = seen.bucketize(
         spark.range(0, 50).selectExpr("xxhash64(cast(id as string)) as url_hash")
@@ -113,7 +173,7 @@ def test_rebuild_overfull_blooms(spark):
     # before rebuild: blobs undersized for 15k items/bucket at MIN_BITS=8Kibit
     over = merged.filter(F.col("n_items") * 10 > F.col("n_bits")).count()
     assert over == 2
-    rebuilt = seen.rebuild_overfull_blooms(merged, all_rows)
+    rebuilt = seen.merge_delta(blooms, flood, all_rows)
     assert rebuilt.filter(F.col("n_items") * 10 > F.col("n_bits")).count() == 0
     # correctness preserved: nothing seen may pass the probe
     cand = spark.range(0, 30050).selectExpr(
@@ -137,10 +197,47 @@ def _hashes(spark, lo, hi, n_buckets=None, bucket=None):
     return df
 
 
+@pytest.mark.parametrize(
+    "n_buckets, n, n_bits",
+    [(8, 400, 8192), (4, 4800, 16384), (2, 10000, 65536)],
+)
+def test_blooms_equal_the_numpy_reference(spark, n_buckets, n, n_bits):
+    """build_blooms, merge_blooms (into a table missing every odd bucket)
+    and merge_delta write the reference's blobs byte for byte, below one
+    chunk and across several, and the probe's bloom negatives are the
+    reference's."""
+    seen = BloomSeenSet(n_buckets=n_buckets)
+    first = seen.bucketize(_hashes(spark, 0, n)).select("bucket", "url_hash")
+    built = _bloom_rows(seen.build_blooms(first))
+    assert built == _ref_merge([], [r.url_hash for r in first.collect()], n_buckets)
+    assert {r[2] for r in built} == {n_bits}
+
+    half = [r for r in built if r[0] % 2 == 0]
+    blooms = spark.createDataFrame(half, BLOOM_SCHEMA)
+    new = _hashes(spark, n, n + n // 4)
+    ref = _ref_merge(half, [r.url_hash for r in new.collect()], n_buckets)
+    assert _bloom_rows(seen.merge_blooms(blooms, new)) == ref
+    after = first.unionByName(seen.bucketize(new).select("bucket", "url_hash"))
+    assert _bloom_rows(seen.merge_delta(blooms, new, after)) == ref
+
+    # with the candidates as exact rows, exactly the bloom negatives
+    # survive the probe
+    cand = _hashes(spark, n // 2, n + 2000)
+    cand_rows = seen.bucketize(cand).select("bucket", "url_hash")
+    got = {r.url_hash for r in seen.probe(cand, cand_rows, spark.createDataFrame(ref, BLOOM_SCHEMA)).collect()}
+    blobs = {r[0]: r for r in ref}
+    want = {
+        h for h in (r.url_hash for r in cand.collect())
+        if not _ref_test([h], blobs[h % n_buckets][1], blobs[h % n_buckets][2])[0]
+    }
+    assert got == want and 0 < len(want) < 2000 + n // 2
+
+
 def test_merge_delta_keeps_both_branches(spark):
     """merge_delta materializes the merge once and rebuilds only when a
-    bucket overflowed; both branches return what the two helpers return
-    when composed by hand."""
+    bucket overflowed: without an overflow it returns merge_blooms' rows,
+    with one the overfull bucket is the reference's build from the exact
+    rows and every other bucket is merged."""
     seen = BloomSeenSet(n_buckets=4)
     first = seen.bucketize(_hashes(spark, 0, 1000)).select("bucket", "url_hash")
     blooms = seen.build_blooms(first)
@@ -160,10 +257,11 @@ def test_merge_delta_keeps_both_branches(spark):
     after = first.unionByName(seen.bucketize(new).select("bucket", "url_hash"))
     merged = seen.merge_blooms(blooms, new)
     got = _bloom_rows(seen.merge_delta(blooms, new, after))
-    assert got == _bloom_rows(seen.rebuild_overfull_blooms(merged, after))
     by_bucket = {r[0]: r for r in got}
     assert by_bucket[0][2] > before[0][2]
     assert by_bucket[0][2] >= by_bucket[0][4] * 10
+    rows0 = [r.url_hash for r in after.where("bucket = 0").collect()]
+    assert by_bucket[0] == _ref_merge([], rows0, 4)[0]
     untouched = {r[0]: r for r in _bloom_rows(merged) if r[0] != 0}
     assert {b: r for b, r in by_bucket.items() if b != 0} == untouched
     assert by_bucket[1][4] > before[1][4]
@@ -644,3 +742,17 @@ def test_old_bucket_dir_layout_resumes_identically(spark, tmp_path):
 
     control = crawl(str(tmp_path / "control"), rewrite=False)
     assert crawl(str(tmp_path / "old"), rewrite=True) == control
+
+
+def test_read_of_an_upsert_entry_names_table_and_snapshot(spark, tmp_path):
+    """read cannot resolve the keyed upsert entry an older build wrote;
+    time-travelling to one raises a ValueError naming the table and the
+    snapshot, not a TypeError from deep in the path handling."""
+    root = str(tmp_path / "old")
+    store = StateStore(root)
+    store.commit({"blooms": spark.range(4).selectExpr("cast(id AS int) AS bucket")})
+    sid = store.snapshot_id()
+    _to_upsert_entry(spark, root)
+    store.commit({"t": spark.range(1)})
+    with pytest.raises(ValueError, match=rf"'blooms' at snapshot {sid}\b"):
+        store.read(spark, "blooms", BLOOM_SCHEMA, snapshot=sid)
