@@ -19,6 +19,18 @@ import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 
+# urls imports this module only inside its functions, so this is no cycle
+from .urls import (
+    _DECOMP_RE as decomp_re,
+    _DOTSEG_RE as dotseg_re,
+    _PLAIN_QS_RE as plain_qs_re,
+    _canon_one as canon_one,
+    _fast_sort_parts as fast_sort_parts,
+    _pct_decode_unreserved as pct_decode,
+    _remove_dot_segments as remove_dots,
+    _sort_query as sort_query,
+)
+
 # RE2 has no lookaround: tier 1's "no dot segments" guard runs as a
 # second (cheap) substring-regex test instead of a negative lookahead
 # (the dot-segment pattern itself comes in from urls._DOTSEG_RE — one
@@ -48,14 +60,12 @@ def _sort_two_params(vals: np.ndarray) -> np.ndarray:
     return pc.if_else(ordered, fwd, rev).to_numpy(zero_copy_only=False)
 
 
-def canonicalize_batch(url: pd.Series, *, plain_qs_re, sort_query,
-                       fast_sort_parts, pct_decode, remove_dots,
-                       dotseg_re, decomp_re, canon_one) -> pd.Series:
+def canonicalize_batch(url: pd.Series) -> pd.Series:
     """One Arrow batch of URLs → canonical forms (None = dropped).
 
     Same three tiers as the docstring of ``urls.canonicalize_url``; the
-    helpers are passed in from ``urls`` so a single source of truth
-    defines the per-row semantics."""
+    per-row helpers and patterns come from ``urls``, the single source of
+    truth for the semantics."""
     # force string type: an all-null batch otherwise infers Arrow's null
     # type, for which the regex kernels have no implementation
     s = pa.array(url, from_pandas=True, type=pa.string())

@@ -190,17 +190,7 @@ def canonicalize_url(url: pd.Series) -> pd.Series:
     """
     from ._urls_arrow import canonicalize_batch
 
-    return canonicalize_batch(
-        url,
-        plain_qs_re=_PLAIN_QS_RE,
-        sort_query=_sort_query,
-        fast_sort_parts=_fast_sort_parts,
-        pct_decode=_pct_decode_unreserved,
-        remove_dots=_remove_dot_segments,
-        dotseg_re=_DOTSEG_RE,
-        decomp_re=_DECOMP_RE,
-        canon_one=_canon_one,
-    )
+    return canonicalize_batch(url)
 
 
 def with_canonical_url(df, url_col: str = "url", out_col: str = "url_canon"):
@@ -224,17 +214,7 @@ def with_canonical_url(df, url_col: str = "url", out_col: str = "url_canon"):
 
         for pdf in batches:
             pdf = pdf.copy()
-            pdf[out_col] = canonicalize_batch(
-                pdf[url_col],
-                plain_qs_re=_PLAIN_QS_RE,
-                sort_query=_sort_query,
-                fast_sort_parts=_fast_sort_parts,
-                pct_decode=_pct_decode_unreserved,
-                remove_dots=_remove_dot_segments,
-                dotseg_re=_DOTSEG_RE,
-                decomp_re=_DECOMP_RE,
-                canon_one=_canon_one,
-            )
+            pdf[out_col] = canonicalize_batch(pdf[url_col])
             yield pdf
 
     return df.mapInPandas(canon, f"{fields}, `{out_col}` string")

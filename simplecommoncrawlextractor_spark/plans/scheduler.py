@@ -179,10 +179,6 @@ class CrawlScheduler:
             self.store.commit(
                 tables={},
                 appends={"robots": new_rules},
-                carry_forward=[
-                    "frontier", "frontier_tombs", "url_seen", "blooms",
-                    "fetch_log", "metrics",
-                ],
                 meta={"round": self.round_no()},
             )
         new_rules.unpersist()
@@ -206,45 +202,47 @@ class CrawlScheduler:
     #: parts accumulate
     MAX_FRONTIER_PARTS = 8
 
-    def _frontier_parts(self, snapshot: int | None = None) -> tuple[list[str], bool]:
-        tables = self.store.manifest(snapshot)["tables"]
-        rel = tables.get("frontier")
-        parts = [] if rel is None else (rel if isinstance(rel, list) else [rel])
-        return parts, "frontier_tombs" in tables
-
     def frontier(self, snapshot: int | None = None) -> DataFrame:
         """The resolved frontier view (merge-on-read, round 6): the
-        frontier is stored as append-only candidate parts plus
-        scheduled-tombstone parts, so each round COMMITS only O(round)
-        rows — previously ``step`` rewrote the whole O(frontier) table
-        every round, a quadratic total write volume over a crawl
-        (VERDICT r5 "What's wrong" #1). Resolution = union of candidate
-        parts, anti-join the tombstoned url_hashes, one deterministic
-        winner per hash via ``dedup_by_hash``.
+        frontier is stored as a resolved base part plus append-only
+        candidate parts, so each round COMMITS only O(round) rows —
+        previously ``step`` rewrote the whole O(frontier) table every
+        round, a quadratic total write volume over a crawl (VERDICT r5
+        "What's wrong" #1). Resolution = union of the parts, anti-join
+        the hashes scheduled since the base was written, one
+        deterministic winner per hash via ``dedup_by_hash``.
+
+        The scheduled hashes are the ``url_seen`` parts written after the
+        frontier's first part: every ``url_seen`` append is one round's
+        scheduled hashes, and every commit that rewrites the frontier
+        (a fold, ``delete_refetchable``, ``bootstrap``) writes it already
+        resolved against everything seen, at its own snapshot id.
 
         Equivalence with the previous rewrite-per-round semantics: the
         winner key (−priority, discovered_at, url_canon, url) is a
         lexicographic MIN, and min is associative — the min over all
         accumulated candidate rows equals the iterated min the old code
-        maintained; tombstoned hashes can never reappear in later parts
+        maintained; scheduled hashes can never reappear in later parts
         (the probe drops them as seen), so removing every row of a
-        tombstoned hash matches the old eviction. Byte-identical crawl
+        scheduled hash matches the old eviction. Byte-identical crawl
         order is pytest-pinned (tests/test_scheduler.py kill/resume,
         parallelism and pure-Python-simulator equivalences).
 
-        A freshly bootstrapped or just-compacted frontier (single part,
-        no tombstones) is already resolved and skips the dedup.
+        A freshly bootstrapped or just-folded frontier (single part, no
+        newer ``url_seen`` part) is already resolved and skips the dedup.
         ``snapshot`` time-travels the resolved view (the raw parts of a
         historical snapshot are unresolved storage, not the frontier)."""
         base = self.store.read(self.spark, "frontier", FRONTIER_SCHEMA, snapshot)
-        parts, has_tombs = self._frontier_parts(snapshot)
-        if len(parts) <= 1 and not has_tombs:
+        sids = self.store.part_sids("frontier", snapshot)
+        seen_sids = self.store.part_sids("url_seen", snapshot)
+        newer = bool(sids) and max(seen_sids, default=0) > sids[0]
+        if len(sids) <= 1 and not newer:
             return base
-        if has_tombs:
-            tombs = self.store.read(
-                self.spark, "frontier_tombs", "url_hash long", snapshot
+        if newer:
+            scheduled = self.store.read(
+                self.spark, "url_seen", SEEN_SCHEMA, snapshot, after=sids[0]
             )
-            base = base.join(tombs, "url_hash", "left_anti")
+            base = base.join(scheduled.select("url_hash"), "url_hash", "left_anti")
         return dedup_by_hash(base)
 
     def url_seen(self) -> DataFrame:
@@ -265,7 +263,13 @@ class CrawlScheduler:
     # -- lifecycle ----------------------------------------------------------
     def bootstrap(self, seeds: DataFrame) -> int:
         """Initialize the frontier from a seed URL list (column ``url``;
-        optional priority/discovered_at). Dedups within the seed list."""
+        optional priority/discovered_at). Dedups within the seed list.
+        Raises ValueError on a store that already holds a snapshot."""
+        if self.store.snapshot_id():
+            raise ValueError(
+                f"state store at {self.store.root} is already at snapshot "
+                f"{self.store.snapshot_id()}; bootstrap needs a fresh store"
+            )
         pr = F.col("priority") if "priority" in seeds.columns else None
         ts = F.col("discovered_at") if "discovered_at" in seeds.columns else None
         cand = self._admit(
@@ -290,7 +294,7 @@ class CrawlScheduler:
         return budget_with_crawl_delay(rules, self.host_budget)
 
     def step(self) -> dict:
-        """One scheduler round; commits a new snapshot; returns stats."""
+        """One scheduler round; commits one new snapshot; returns stats."""
         if self.auto_robots:
             self.refresh_robots()
         rnd = self.round_no() + 1
@@ -329,8 +333,8 @@ class CrawlScheduler:
         # failures are terminal within a run here; refetch is the delete path).
         # Derived from the CACHED fetched frame (row-identical to scheduled)
         # and cached itself: it feeds the seen union, the touched-bucket set,
-        # the url_seen append AND the tombstone append — uncached, each of
-        # those would re-run the politeness window plan (round 6)
+        # a fold's frontier anti-join AND the url_seen append — uncached,
+        # each of those would re-run the politeness window plan (round 6)
         newly_seen = (
             self.seen.bucketize(fetched.select("url_hash").distinct())
             .select("bucket", "url_hash")
@@ -363,14 +367,13 @@ class CrawlScheduler:
         cand = self._admit(canonical_candidates(outlinks), rules)
         new_cand = self.seen.probe(cand, seen2, blooms2)
         # frontier commit is MERGE-ON-READ (round 6): a normal round
-        # appends ONLY this round's new candidates plus the scheduled
-        # url_hashes as tombstones — O(round) write volume, not an
-        # O(frontier) rewrite (the resolved view in ``frontier()`` applies
-        # tombstones + winner dedup at read). Every MAX_FRONTIER_PARTS
-        # rounds the accumulated parts fold into one resolved base —
-        # amortized O(frontier / MAX_FRONTIER_PARTS) per round.
-        parts, _ = self._frontier_parts()
-        compacting = len(parts) >= self.MAX_FRONTIER_PARTS
+        # appends ONLY this round's new candidates — O(round) write volume,
+        # not an O(frontier) rewrite (the resolved view in ``frontier()``
+        # drops the hashes url_seen gained since the base, then dedups
+        # winners at read). Every MAX_FRONTIER_PARTS rounds the accumulated
+        # parts fold into one resolved base — amortized
+        # O(frontier / MAX_FRONTIER_PARTS) per round.
+        compacting = len(self.store.part_sids("frontier")) >= self.MAX_FRONTIER_PARTS
         if compacting:
             rest = frontier.join(newly_seen.select("url_hash"), "url_hash", "left_anti")
             merged = rest.select(*new_cand.columns).unionByName(new_cand)
@@ -393,34 +396,13 @@ class CrawlScheduler:
         # url_seen, fetch_log, metrics and (normal rounds) the frontier are
         # append-only — each round commits ONLY its delta, so their commit
         # cost stays O(round) instead of O(crawl). blooms is rewritten
-        # whole: O(n_buckets) blob rows. A compaction round folds the
-        # frontier back to a single base and drops the applied tombstones
-        # (not carried forward).
+        # whole: O(n_buckets) blob rows. A fold writes the frontier as one
+        # resolved base instead of appending to it.
         t2 = time.time()
-        if compacting:
-            sid = self.store.commit(
-                tables={"frontier": frontier_delta, "blooms": blooms2},
-                appends={
-                    "url_seen": newly_seen,
-                    "fetch_log": log,
-                    "metrics": metrics_new,
-                },
-                carry_forward=["robots"],
-                meta={"round": rnd},
-            )
-        else:
-            sid = self.store.commit(
-                tables={"blooms": blooms2},
-                appends={
-                    "frontier": frontier_delta,
-                    "frontier_tombs": newly_seen.select("url_hash"),
-                    "url_seen": newly_seen,
-                    "fetch_log": log,
-                    "metrics": metrics_new,
-                },
-                carry_forward=["robots"],
-                meta={"round": rnd},
-            )
+        tables = {"blooms": blooms2}
+        appends = {"url_seen": newly_seen, "fetch_log": log, "metrics": metrics_new}
+        (tables if compacting else appends)["frontier"] = frontier_delta
+        sid = self.store.commit(tables=tables, appends=appends, meta={"round": rnd})
         t_commit = time.time() - t2
         fetched.unpersist()
         frontier_delta.unpersist()
@@ -443,26 +425,11 @@ class CrawlScheduler:
         micro-batch). Folds the part list into one resolved base when it
         is past MAX_FRONTIER_PARTS, exactly like ``step``."""
         cols = [f.strip().split()[0] for f in FRONTIER_SCHEMA.split(",")]
-        parts, _ = self._frontier_parts()
-        if len(parts) >= self.MAX_FRONTIER_PARTS:
-            merged = self.frontier().unionByName(new_cand.select(*cols))
-            resolved = dedup_by_hash(merged).select(*cols)
-            return self.store.commit(
-                tables={"frontier": resolved},
-                carry_forward=[
-                    "url_seen", "blooms", "fetch_log", "metrics", "robots",
-                ],
-                meta=meta or {},
-            )
-        return self.store.commit(
-            tables={},
-            appends={"frontier": new_cand.select(*cols)},
-            carry_forward=[
-                "frontier_tombs", "url_seen", "blooms", "fetch_log",
-                "metrics", "robots",
-            ],
-            meta=meta or {},
-        )
+        new_cand = new_cand.select(*cols)
+        if len(self.store.part_sids("frontier")) >= self.MAX_FRONTIER_PARTS:
+            resolved = dedup_by_hash(self.frontier().unionByName(new_cand)).select(*cols)
+            return self.store.commit(tables={"frontier": resolved}, meta=meta or {})
+        return self.store.commit(tables={}, appends={"frontier": new_cand}, meta=meta or {})
 
     def run(self, rounds: int) -> list[dict]:
         """Run ``rounds`` more rounds from the current snapshot (resume is
@@ -479,9 +446,10 @@ class CrawlScheduler:
         exact rows are anti-joined out and only the touched buckets' blobs
         rebuild (plans/state.py:BloomSeenSet.delete). Commits a full
         url_seen rewrite (deletes are rare; the per-round hot path stays
-        append-only), and the resolved frontier as a single base with no
-        tombstones: a victim's tombstone would otherwise drop it from the
-        frontier again when it is rediscovered."""
+        append-only), and the resolved frontier as a single base at the
+        same snapshot: ``frontier()`` drops the url_seen parts newer than
+        its base, and the rewritten url_seen has none, so a victim that is
+        rediscovered enters the frontier again."""
         log = self.store.read(self.spark, "fetch_log", FETCH_LOG_SCHEMA)
         victims = (
             log.filter(
@@ -503,7 +471,6 @@ class CrawlScheduler:
                 "blooms": blooms.unionByName(rebuilt),
                 "frontier": self.frontier(),
             },
-            carry_forward=["fetch_log", "metrics", "robots"],
             meta={"round": self.round_no()},
         )
 

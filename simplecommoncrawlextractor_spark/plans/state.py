@@ -43,7 +43,6 @@ import os
 import re
 import shutil
 import time
-from typing import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -178,34 +177,39 @@ class BloomSeenSet:
             )
             .where("has_blob")  # not a marker alone
         )
-        keys = ["bucket", "n_bits", "n_hashes", "n_items"]
+        sizes = ["n_bits", "n_hashes", "n_items"]
+        # the sizes are fixed per bucket: carried through the aggregations
+        # with any_value, not grouped on, so each sort keys on (bucket, chunk)
+        carry = [F.any_value(c).alias(c) for c in sizes]
         pos = _probe_position("k")
         chunks = (
             rows.selectExpr(
-                *keys, "bitmap", "url_hash",
+                "bucket", *sizes, "bitmap", "url_hash",
                 "explode(sequence(0, IF(url_hash IS NULL,"
                 f" (n_bits + {CHUNK_BITS - 1}) div {CHUNK_BITS}, n_hashes) - 1)) AS k",
             )
             .selectExpr(
-                *keys,
+                "bucket", *sizes,
                 f"IF(url_hash IS NULL, k, {pos} div {CHUNK_BITS}) AS chunk",
                 f"{pos} % {CHUNK_BITS} AS bit",
                 f"substring(bitmap, k * {CHUNK_BITS // 8} + 1, {CHUNK_BITS // 8}) AS stored",
             )
-            .groupBy(*keys, "chunk")
+            .groupBy("bucket", "chunk")
             .agg(
                 F.bitmap_construct_agg("bit").alias("added"),
                 F.bitmap_or_agg("stored").alias("stored"),
+                *carry,
             )
             # Spark has no binary OR: OR the two as one more aggregate
-            .selectExpr(*keys, "chunk", "explode(array(added, stored)) AS bm")
-            .groupBy(*keys, "chunk")
-            .agg(F.bitmap_or_agg("bm").alias("bm"))
+            .selectExpr("bucket", "chunk", *sizes, "explode(array(added, stored)) AS bm")
+            .groupBy("bucket", "chunk")
+            .agg(F.bitmap_or_agg("bm").alias("bm"), *carry)
         )
-        return chunks.groupBy(*keys).agg(
-            F.expr("substring(listagg(bm) WITHIN GROUP (ORDER BY chunk), 1, n_bits div 8)")
-            .alias("bitmap")
-        ).select("bucket", "bitmap", "n_bits", "n_hashes", "n_items")
+        return chunks.groupBy("bucket").agg(
+            F.expr("substring(listagg(bm) WITHIN GROUP (ORDER BY chunk), 1, any_value(n_bits) div 8)")
+            .alias("bitmap"),
+            *carry,
+        )
 
     def delete(self, seen_rows: DataFrame, victims: DataFrame) -> tuple[DataFrame, DataFrame]:
         """The deletion path: remove ``victims`` (url_hash) from the seen
@@ -258,11 +262,15 @@ class StateStore:
     os.replace the manifest — readers either see the old snapshot or the
     new one, never a torn state. Resume = read whatever the manifest pins.
 
-    Two table kinds:
+    Two table kinds, and a commit names only the tables it writes (every
+    other table carries forward as the manifest has it):
     - **rewrite** (``tables=``): full new version each commit (blooms,
       a compacted frontier).
     - **append** (``appends=``): delta part per commit, read = union
-      (url_seen, fetch_log, metrics).
+      (url_seen, fetch_log, metrics). A part's name carries the snapshot
+      id that wrote it (``part_sids``), and ``read(after=sid)`` keeps the
+      parts written after one: the scheduler resolves the frontier
+      against the url_seen parts newer than the frontier's base.
 
     The manifest of a store written by an older build may still hold a
     keyed ``{"kind": "upsert", "parts": [...], ...}`` entry for blooms;
@@ -433,24 +441,41 @@ class StateStore:
         return {"expired": expired, "removed": sorted(removed)}
 
     # -- read -------------------------------------------------------------
-    def read(
-        self, spark: SparkSession, name: str, schema: str,
-        snapshot: int | None = None,
-    ) -> DataFrame:
-        """Read a table at the current snapshot, or at a historical one
-        (``snapshot=`` time travel). A table the manifest does not name
-        reads as an ``empty_frame`` of ``schema`` (no job, no Python
-        task). Each part is read with ``schema``, so no read runs a
-        Parquet footer-inference job; a part in the older ``bucket=N``
-        layout takes ``bucket`` from its path."""
-        m = self.manifest(snapshot)
+    @staticmethod
+    def _parts(m: dict, name: str) -> list[str]:
         rel = m["tables"].get(name)
         if rel is None:
-            return empty_frame(spark, schema)
+            return []
         if isinstance(rel, dict):
             raise ValueError(f"table {name!r} at snapshot {m['snapshot']} is an older "
                              f"build's keyed {rel.get('kind')!r} entry; read cannot resolve it")
-        parts = rel if isinstance(rel, list) else [rel]
+        return rel if isinstance(rel, list) else [rel]
+
+    @staticmethod
+    def _sid(part: str) -> int:
+        return int(part.rsplit("/", 1)[1][1:])  # {name}/v{sid} or {name}/d{sid}
+
+    def part_sids(self, name: str, snapshot: int | None = None) -> list[int]:
+        """The snapshot id that wrote each part of table ``name``, in part
+        order; empty when the manifest does not name the table."""
+        return [self._sid(p) for p in self._parts(self.manifest(snapshot), name)]
+
+    def read(
+        self, spark: SparkSession, name: str, schema: str,
+        snapshot: int | None = None, after: int | None = None,
+    ) -> DataFrame:
+        """Read a table at the current snapshot, or at a historical one
+        (``snapshot=`` time travel); ``after=sid`` keeps only the parts
+        written by later snapshots. A table with no (such) part reads as
+        an ``empty_frame`` of ``schema`` (no job, no Python task). Each
+        part is read with ``schema``, so no read runs a Parquet
+        footer-inference job; a part in the older ``bucket=N`` layout
+        takes ``bucket`` from its path."""
+        parts = self._parts(self.manifest(snapshot), name)
+        if after is not None:
+            parts = [p for p in parts if self._sid(p) > after]
+        if not parts:
+            return empty_frame(spark, schema)
         # read each delta dir separately and union by name: multi-root reads
         # trip Spark's partition discovery when parts mix layouts (a store
         # written before parts were flat holds bucket=N part dirs)
@@ -468,20 +493,17 @@ class StateStore:
         self,
         tables: dict[str, DataFrame],
         meta: dict | None = None,
-        carry_forward: Iterable[str] = (),
         appends: dict[str, DataFrame] | None = None,
     ) -> int:
         """Write new versions of ``tables``, append delta files to
         ``appends`` tables (the manifest tracks the part list — an append
         round writes only the delta, never rewrites history; this is what
-        keeps per-round commit cost O(round), not O(crawl)), carry forward
-        unchanged tables, then atomically swap the manifest."""
+        keeps per-round commit cost O(round), not O(crawl)), then
+        atomically swap the manifest. Every table the commit does not name
+        carries forward unchanged."""
         m = self.manifest()
         sid = self.next_snapshot_id()
-        new_tables: dict[str, str | list[str] | dict] = {}
-        for name in carry_forward:
-            if name in m["tables"]:
-                new_tables[name] = m["tables"][name]
+        new_tables: dict[str, str | list[str] | dict] = dict(m["tables"])
         for name, df in tables.items():
             rel = f"{name}/v{sid}"
             df.write.mode("overwrite").parquet(os.path.join(self.root, rel))

@@ -52,7 +52,9 @@ def stream_documents_to_frontier(
         # O(batch) append commit (round 6): the scheduler's merge-on-read
         # frontier means a micro-batch appends only its own candidates —
         # previously every batch re-read, re-deduped and REWROTE the whole
-        # frontier; the winner-per-hash resolution now happens at read
+        # frontier; the winner-per-hash resolution now happens at read.
+        # The commit names only the frontier: url_seen, blooms and every
+        # other table carry forward unchanged
         scheduler.merge_candidates(new_cand, meta={"stream_batch": batch_id})
 
     writer = stream.writeStream.foreachBatch(process_batch).option(

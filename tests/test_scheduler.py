@@ -7,6 +7,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from simplecommoncrawlextractor_spark.plans import CrawlScheduler, StateStore
+from simplecommoncrawlextractor_spark.plans.state import SEEN_SCHEMA
 from simplecommoncrawlextractor_spark.sources import seed_frontier
 
 
@@ -260,13 +261,29 @@ def test_seen_backend_pinned_in_manifest(spark, tmp_path):
             CrawlScheduler(spark, StateStore(root), n_buckets=8, seen_backend=bad)
 
 
+def test_bootstrap_refuses_a_used_store(spark, tmp_path):
+    """bootstrap starts a crawl: on a store that already holds a snapshot
+    it raises, and commits nothing over the crawl's tables."""
+    import pytest
+
+    store = StateStore(str(tmp_path / "used"))
+    sched = CrawlScheduler(spark, store, host_budget=4, salt_k=4, n_buckets=8)
+    sched.bootstrap(seed_frontier(spark, n=20))
+    before = store.manifest()
+    with pytest.raises(ValueError, match="already at snapshot 1"):
+        sched.bootstrap(seed_frontier(spark, n=20))
+    assert store.manifest() == before and store.snapshots() == [1]
+
+
 def test_frontier_commit_is_o_round_and_compaction_neutral(spark, tmp_path, monkeypatch):
     """Round-6 merge-on-read frontier: (a) a normal round's frontier commit
-    appends ONLY that round's candidate delta + scheduled tombstones — its
-    on-disk part holds O(round) rows, not the O(frontier) rewrite the old
-    path wrote; (b) compaction (parts folding past MAX_FRONTIER_PARTS) is
-    order-neutral: a run compacting every 2 rounds schedules the byte-
-    identical crawl order of a run that never compacts."""
+    appends ONLY that round's candidate delta — its on-disk part holds
+    O(round) rows, not the O(frontier) rewrite the old path wrote, and the
+    scheduled hashes the resolved view drops are url_seen's parts newer
+    than the frontier base, not a second copy; (b) compaction (parts
+    folding past MAX_FRONTIER_PARTS) is order-neutral: a run compacting
+    every 2 rounds schedules the byte-identical crawl order of a run that
+    never compacts."""
     import os
 
     # (a) write volume: newest frontier part row count == that round's
@@ -278,16 +295,19 @@ def test_frontier_commit_is_o_round_and_compaction_neutral(spark, tmp_path, monk
     stats = [sched.step() for _ in range(3)]
     rel = store.manifest()["tables"]["frontier"]
     assert isinstance(rel, list) and len(rel) == 4  # bootstrap base + 3 deltas
-    assert "frontier_tombs" in store.manifest()["tables"]
+    assert set(store.manifest()["tables"]) == {
+        "frontier", "url_seen", "blooms", "fetch_log", "metrics",
+    }
     for s, part in zip(stats, rel[1:]):
         assert not s["frontier_compacted"]
         part_rows = spark.read.parquet(os.path.join(root, part)).count()
         assert part_rows == s["frontier"]  # the delta, nothing more
     # the bootstrap base part is never rewritten — only re-referenced
     assert rel[0].startswith("frontier/v")
-    # tombstones = everything ever scheduled
-    tombs = store.read(spark, "frontier_tombs", "url_hash long").count()
-    assert tombs == sum(s["fetched"] for s in stats)
+    # url_seen parts after the frontier base = everything ever scheduled
+    base_sid = store.part_sids("frontier")[0]
+    scheduled = store.read(spark, "url_seen", SEEN_SCHEMA, after=base_sid).count()
+    assert scheduled == sum(s["fetched"] for s in stats) > 0
 
     # (b) compaction neutrality (+ resume across a compaction boundary)
     monkeypatch.setattr(CrawlScheduler, "MAX_FRONTIER_PARTS", 2)

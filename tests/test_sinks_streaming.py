@@ -89,7 +89,7 @@ def test_delete_refetchable_reopens_urls(spark, tmp_path):
     survivors = seen_after.select("url_hash").limit(20).withColumn("url", F.lit("y"))
     assert sched.seen.probe(survivors, seen_after, sched.blooms()).count() == 0
     # a rediscovered victim passes the probe and stays in the resolved
-    # frontier (no tombstone from its first fetch drops it again)
+    # frontier (no url_seen part from its first fetch drops it again)
     rediscovered = canonical_candidates(victim_log.select(F.col("URL").alias("url")))
     sched.merge_candidates(sched.seen.probe(rediscovered, seen_after, sched.blooms()))
     back = sched.frontier().join(victims, "url_hash", "left_semi").count()

@@ -137,8 +137,9 @@ def test_statestore_atomic_snapshots(spark, tmp_path):
     got = store.read(spark, "t", "id long, v long")
     assert got.count() == 5
     assert store.manifest()["meta"]["round"] == 1
-    # carry-forward keeps old tables without rewriting
-    store.commit({"u": df1}, carry_forward=["t"])
+    # a commit keeps every table it does not name, without rewriting it
+    store.commit({"u": df1})
+    assert store.manifest()["tables"]["t"] == "t/v2"
     assert store.read(spark, "t", "id long, v long").count() == 5
     assert store.read(spark, "u", "id long, v long").count() == 10
     # missing table → typed empty frame
@@ -425,8 +426,8 @@ def test_snapshot_time_travel_and_rollback_replay(spark, tmp_path):
 
     # time travel: historical RESOLVED frontier counts readable without
     # rollback (the raw parts are merge-on-read storage since round 6 —
-    # candidate appends + tombstones — so the resolved view is the
-    # frontier, not the raw part union)
+    # candidate appends, resolved against url_seen at read — so the
+    # resolved view is the frontier, not the raw part union)
     mid = sorted(frontiers)[0]
     assert sched.frontier(snapshot=mid).count() == frontiers[mid]
     # historical fetch_log has only the rounds up to that snapshot

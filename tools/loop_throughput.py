@@ -59,16 +59,23 @@ def main() -> None:
         t0 = time.time()
         sched.bootstrap(seed_frontier(spark, n=n_seeds, n_hosts=60_000))
         t1 = time.time()
-        stats = sched.run(rounds)
+        stats = []
+        for _ in range(rounds):
+            t = time.time()
+            stats.append({**sched.step(), "round_sec": time.time() - t})
         elapsed = time.time() - t1  # rounds only: bootstrap is one-time
         n = sched.crawl_order().count()
         # per-phase breakdown (VERDICT r5 item 3): schedule+fetch /
         # harvest+dedup / state commit, per round and totaled — names the
         # dominant phase so the O(round)-commit work is graded against
-        # evidence, not prose
+        # evidence, not prose; per round also the urls it fetched over its
+        # whole step() wall time, which shows a round's cost growing with
+        # the crawl's age
         phases = [
             {
                 "round": s["round"],
+                "fetched": s["fetched"],
+                "urls_per_sec": round(s["fetched"] / s["round_sec"], 1),
                 "fetch_sec": round(s["fetch_sec"], 2),
                 "harvest_sec": round(s["harvest_sec"], 2),
                 "commit_sec": round(s["commit_sec"], 2),
