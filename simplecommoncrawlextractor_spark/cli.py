@@ -6,7 +6,7 @@ Subcommands:
           (resumable: rerun with the same --state to continue)
   query   run one queries() entry against a testdata dir, print rows
   list    list available queries (oracle-checked ones marked)
-  robots  show the synthesized robots rules a crawl would obey
+  robots  show the (simulated) robots rules a crawl would obey
 """
 
 from __future__ import annotations
@@ -23,19 +23,23 @@ def _spark(cpus: int):
                      shuffle_partitions=max(8, cpus))
 
 
+def _seed_robots(spark, n_seeds: int):
+    """The simulated robots rules (fetch + parse) of the seed hosts,
+    materialized once: a crawl reads them in every admission and budget."""
+    from .plans.robots import bootstrap_robots
+    from .sources import seed_frontier
+
+    hosts = seed_frontier(spark, n=n_seeds).selectExpr("parse_url(url, 'HOST') AS host")
+    return bootstrap_robots(hosts.distinct()).localCheckpoint()
+
+
 def cmd_crawl(args: argparse.Namespace) -> int:
     from .plans import CrawlScheduler, StateStore
     from .sources import seed_frontier
 
     spark = _spark(args.cpus)
     store = StateStore(args.state)
-    robots = None
-    if args.obey_robots:
-        from .plans.robots import synth_robots_rules
-
-        seeds = seed_frontier(spark, n=args.seeds)
-        hosts = seeds.selectExpr("parse_url(url, 'HOST') AS host").distinct()
-        robots = synth_robots_rules(spark, hosts)
+    robots = _seed_robots(spark, args.seeds) if args.obey_robots else None
     sched = CrawlScheduler(
         spark, store, host_budget=args.budget, salt_k=args.salt_k,
         n_buckets=args.buckets, robots_rules=robots,
@@ -75,14 +79,7 @@ def cmd_list(args: argparse.Namespace) -> int:
 
 
 def cmd_robots(args: argparse.Namespace) -> int:
-    from .plans.robots import synth_robots_rules
-    from .sources import seed_frontier
-
-    spark = _spark(args.cpus)
-    hosts = seed_frontier(spark, n=args.seeds).selectExpr(
-        "parse_url(url, 'HOST') AS host"
-    ).distinct()
-    synth_robots_rules(spark, hosts).orderBy("host", "disallow_prefix").show(
+    _seed_robots(_spark(args.cpus), args.seeds).orderBy("host", "disallow_prefix").show(
         args.limit, truncate=False
     )
     return 0
@@ -112,7 +109,7 @@ def main(argv: list[str] | None = None) -> int:
     lp = sub.add_parser("list", help="list queries")
     lp.set_defaults(fn=cmd_list)
 
-    rp = sub.add_parser("robots", help="show synthesized robots rules")
+    rp = sub.add_parser("robots", help="show simulated robots rules")
     rp.add_argument("--seeds", type=int, default=1000)
     rp.add_argument("--limit", type=int, default=20)
     rp.set_defaults(fn=cmd_robots)

@@ -7,16 +7,17 @@ gate what the politeness queue may schedule.
 
 Model: a small ``robots_rules`` table (host, disallow_prefix, crawl_delay)
 — in production it is produced by fetching+parsing each host's
-/robots.txt (one more fetch stage through the same scheduler); here it is
-synthesized deterministically or supplied by the caller. Application is a
-broadcast join + prefix predicate: rules tables are tiny relative to the
-frontier (≤ one row per (host, rule)), so no shuffle of the frontier is
-ever needed. Crawl-delay participates by scaling the per-host budget.
+/robots.txt (one more fetch stage through the same scheduler); here the
+fetch is simulated deterministically (``bootstrap_robots``), or the
+caller supplies the table. Application is a broadcast join + prefix
+predicate: rules tables are tiny relative to the frontier (≤ one row per
+(host, rule)), so no shuffle of the frontier is ever needed. Crawl-delay
+participates by scaling the per-host budget.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 ROBOTS_SCHEMA = "host string, disallow_prefix string, crawl_delay int"
@@ -113,23 +114,6 @@ def parse_robots_txt(
         F.col("disallow_prefix"),  # null = no disallow, delay-only host
         F.coalesce("crawl_delay", F.lit(0)).alias("crawl_delay"),
     )
-
-
-def synth_robots_rules(spark: SparkSession, hosts: DataFrame) -> DataFrame:
-    """Deterministic robots rules for the sandbox: every 3rd host (by
-    xxhash64) disallows /private/, every 5th disallows /p/ entirely, every
-    7th asks for crawl-delay 2. Seedless — derived from the host string."""
-    h = F.xxhash64("host")
-    rules_private = hosts.filter(F.pmod(h, F.lit(3)) == 0).select(
-        "host", F.lit("/private/").alias("disallow_prefix"), F.lit(0).alias("crawl_delay")
-    )
-    rules_p = hosts.filter(F.pmod(h, F.lit(5)) == 0).select(
-        "host", F.lit("/p/").alias("disallow_prefix"), F.lit(0).alias("crawl_delay")
-    )
-    rules_delay = hosts.filter(F.pmod(h, F.lit(7)) == 0).select(
-        "host", F.lit("/never-matches/").alias("disallow_prefix"), F.lit(2).alias("crawl_delay")
-    )
-    return rules_private.unionByName(rules_p).unionByName(rules_delay)
 
 
 def fetch_robots_bodies(hosts: DataFrame) -> DataFrame:

@@ -20,11 +20,12 @@ clock, urls/sec) append to the ``metrics`` table.
 
 from __future__ import annotations
 
+import os
 import time
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from .fetch import fetch_log, simulate_fetch, synthetic_outlinks
 from .frontier import (
@@ -33,7 +34,7 @@ from .frontier import (
     dedup_by_hash,
     politeness_schedule,
 )
-from .state import BLOOM_SCHEMA, SEEN_SCHEMA, BloomSeenSet, StateStore, empty_frame
+from .state import FORMAT, BLOOM_SCHEMA, SEEN_SCHEMA, BloomSeenSet, StateStore, empty_frame
 
 METRICS_SCHEMA = (
     "snapshot int, round int, phase string, partition_id int, rows long, "
@@ -50,6 +51,8 @@ FETCH_LOG_SCHEMA = (
     "HEADER_LENGTH string, ACTUAL_LENGTH string, WARC_IS_TRUNCATED string, "
     "FETCH_STATUS string"
 )
+#: the tables a crawl store holds; upgrading an older store drops any other
+TABLES = ("frontier", "url_seen", "blooms", "fetch_log", "metrics", "robots")
 
 
 def _partition_lineage(df: DataFrame, snapshot: int, rnd: int, phase: str, elapsed: float) -> DataFrame:
@@ -90,9 +93,9 @@ class CrawlScheduler:
         table, so a resumed run keeps exactly the rules it had fetched.
 
         The URL-seen set is the partitioned bloom ``BloomSeenSet``;
-        ``seen_backend`` accepts only ``"bloom"``. A store whose manifest
-        pins another backend was written by an older build whose blob
-        table this one cannot read, so opening it raises."""
+        ``seen_backend`` accepts only ``"bloom"``. Opening a store reads
+        its manifest only: a store from before the format stamp is
+        upgraded (``_upgrade``), one in another format raises."""
         self.spark = spark
         self.store = store
         self.host_budget = host_budget
@@ -101,16 +104,44 @@ class CrawlScheduler:
             raise ValueError(
                 f"seen_backend must be 'bloom', got {seen_backend!r}"
             )
-        pinned = self.store.manifest()["meta"].get("seen_backend", "bloom")
-        if pinned != "bloom":
-            raise ValueError(
-                f"state store at {store.root} was bootstrapped with "
-                f"seen_backend={pinned!r}, which this build no longer "
-                "reads; re-bootstrap the store"
-            )
         self.seen = BloomSeenSet(n_buckets)
         self.robots_rules = robots_rules
         self.auto_robots = auto_robots
+        fmt = store.manifest()["meta"].get("format")
+        if fmt is None and store.snapshot_id():
+            self._upgrade()
+        elif fmt not in (None, FORMAT):
+            raise ValueError(f"state store at {store.root} is stored in format {fmt}; "
+                             f"this build reads format {FORMAT}")
+
+    def _upgrade(self) -> None:
+        """Rewrite a store from before the format stamp in one commit at
+        the same round: url_seen as one flat part, the bloom blobs rebuilt
+        from it (replacing upsert entries and other pinned backends), the
+        frontier as one resolved base (nothing seen is pending, so it is
+        its parts minus all of url_seen), and every table not in
+        ``TABLES`` dropped. Each old part reads alone: a ``bucket=N`` part
+        next to flat ones trips partition discovery in one scan."""
+        tables = self.store.manifest()["tables"]
+
+        def each_part(name: str, schema: str) -> DataFrame:
+            rel = tables.get(name, [])
+            return reduce(DataFrame.unionByName, [
+                self.spark.read.schema(schema).parquet(os.path.join(self.store.root, p))
+                for p in (rel if isinstance(rel, list) else [rel])
+            ], empty_frame(self.spark, schema))
+
+        seen = each_part("url_seen", SEEN_SCHEMA)
+        pending = each_part("frontier", FRONTIER_SCHEMA).join(seen, "url_hash", "left_anti")
+        self.store.commit(
+            tables={
+                **{name: None for name in tables if name not in TABLES},
+                "url_seen": seen,
+                "blooms": self.seen.build_blooms(seen),
+                "frontier": dedup_by_hash(pending),
+            },
+            meta={"seen_backend": None},
+        )
 
     # -- robots ------------------------------------------------------------
     def _stored_robots(self) -> DataFrame:
@@ -249,12 +280,7 @@ class CrawlScheduler:
         return self.store.read(self.spark, "url_seen", SEEN_SCHEMA)
 
     def blooms(self) -> DataFrame:
-        """The per-bucket bloom blobs of the URL-seen set. A store written
-        by an older build holds them as a keyed upsert entry; those blobs
-        are rebuilt from the exact rows (the probe's answer does not depend
-        on the blobs), and the next commit writes a plain table."""
-        if isinstance(self.store.manifest()["tables"].get("blooms"), dict):
-            return self.seen.build_blooms(self.url_seen())
+        """The per-bucket bloom blobs of the URL-seen set."""
         return self.store.read(self.spark, "blooms", BLOOM_SCHEMA)
 
     def round_no(self) -> int:
@@ -294,7 +320,11 @@ class CrawlScheduler:
         return budget_with_crawl_delay(rules, self.host_budget)
 
     def step(self) -> dict:
-        """One scheduler round; commits one new snapshot; returns stats."""
+        """One scheduler round; commits one new snapshot; returns stats.
+        Its three phase timers are contiguous and add up to its wall time:
+        ``fetch_sec`` from the first line (robots and state reads too),
+        ``harvest_sec`` from the fetched count (blob merge too)."""
+        t0 = time.time()
         if self.auto_robots:
             self.refresh_robots()
         rnd = self.round_no() + 1
@@ -309,14 +339,14 @@ class CrawlScheduler:
         seen_rows = self.url_seen()
         blooms = self.blooms()
 
-        t0 = time.time()
         scheduled = politeness_schedule(
             frontier, self.host_budget, self.salt_k,
             budget_table=self._budget_table_from(rules),
         )
         fetched = simulate_fetch(scheduled).cache()
         n_fetched = fetched.count()
-        t_fetch = time.time() - t0
+        t1 = time.time()
+        t_fetch = t1 - t0
 
         log = fetch_log(
             fetched,
@@ -362,7 +392,6 @@ class CrawlScheduler:
         ).unionByName(blooms_delta)
 
         # harvest next-round candidates, dedup vs (updated) seen set
-        t1 = time.time()
         outlinks = synthetic_outlinks(fetched)
         cand = self._admit(canonical_candidates(outlinks), rules)
         new_cand = self.seen.probe(cand, seen2, blooms2)
@@ -384,7 +413,8 @@ class CrawlScheduler:
         else:
             frontier_delta = new_cand.cache()
         n_frontier = frontier_delta.count()
-        t_harvest = time.time() - t1
+        t2 = time.time()
+        t_harvest = t2 - t1
 
         sid = self.store.next_snapshot_id()
         metrics_new = _partition_lineage(
@@ -398,7 +428,6 @@ class CrawlScheduler:
         # cost stays O(round) instead of O(crawl). blooms is rewritten
         # whole: O(n_buckets) blob rows. A fold writes the frontier as one
         # resolved base instead of appending to it.
-        t2 = time.time()
         tables = {"blooms": blooms2}
         appends = {"url_seen": newly_seen, "fetch_log": log, "metrics": metrics_new}
         (tables if compacting else appends)["frontier"] = frontier_delta

@@ -56,6 +56,8 @@ BITS_PER_ITEM = 10
 N_HASHES = 7
 MIN_BITS = 1 << 13  # 8 Kibit floor per bucket blob
 CHUNK_BITS = 1 << 15  # the fixed size of Spark's bitmap functions
+#: the on-disk format every commit stamps into its manifest's meta
+FORMAT = 1
 
 
 def empty_frame(spark: SparkSession, schema: str) -> DataFrame:
@@ -272,18 +274,17 @@ class StateStore:
       parts written after one: the scheduler resolves the frontier
       against the url_seen parts newer than the frontier's base.
 
-    The manifest of a store written by an older build may still hold a
-    keyed ``{"kind": "upsert", "parts": [...], ...}`` entry for blooms;
-    ``read`` raises a ValueError for it (CrawlScheduler.blooms rebuilds
-    those blobs from the exact rows), and orphan GC keeps its parts while a
-    retained manifest names them.
-
     No table is written with ``partitionBy``: a part is one Parquet file
     per write task. Spark creates every file and directory on ``file://``
     through Hadoop's local filesystem, which without the native library
     forks ``chmod`` for each, so one directory per bucket would cost a
-    fork per write task and bucket. Parts written in that older
-    ``bucket=N`` layout still read, next to flat ones.
+    fork per write task and bucket.
+
+    Format ``FORMAT`` is those flat parts, each table entry a part path or
+    a list of them. Every commit stamps it into the manifest's meta, and
+    reading any other format raises; a CrawlScheduler upgrades a store
+    written before the stamp when it opens it. Orphan GC still takes the
+    older entries, as a retained manifest may name their parts.
     """
 
     MANIFEST = "manifest.json"
@@ -443,12 +444,13 @@ class StateStore:
     # -- read -------------------------------------------------------------
     @staticmethod
     def _parts(m: dict, name: str) -> list[str]:
+        fmt = m["meta"].get("format")
+        if m["snapshot"] and fmt != FORMAT:
+            raise ValueError(f"table {name!r} at snapshot {m['snapshot']} is stored in "
+                             f"format {fmt}; this build reads format {FORMAT}")
         rel = m["tables"].get(name)
         if rel is None:
             return []
-        if isinstance(rel, dict):
-            raise ValueError(f"table {name!r} at snapshot {m['snapshot']} is an older "
-                             f"build's keyed {rel.get('kind')!r} entry; read cannot resolve it")
         return rel if isinstance(rel, list) else [rel]
 
     @staticmethod
@@ -467,31 +469,21 @@ class StateStore:
         """Read a table at the current snapshot, or at a historical one
         (``snapshot=`` time travel); ``after=sid`` keeps only the parts
         written by later snapshots. A table with no (such) part reads as
-        an ``empty_frame`` of ``schema`` (no job, no Python task). Each
-        part is read with ``schema``, so no read runs a Parquet
-        footer-inference job; a part in the older ``bucket=N`` layout
-        takes ``bucket`` from its path."""
+        an ``empty_frame`` of ``schema`` (no job, no Python task). All
+        parts are one scan with ``schema``, so no read runs a Parquet
+        footer-inference job. Raises ValueError, naming the table and the
+        snapshot, for a manifest not in ``FORMAT``."""
         parts = self._parts(self.manifest(snapshot), name)
         if after is not None:
             parts = [p for p in parts if self._sid(p) > after]
         if not parts:
             return empty_frame(spark, schema)
-        # read each delta dir separately and union by name: multi-root reads
-        # trip Spark's partition discovery when parts mix layouts (a store
-        # written before parts were flat holds bucket=N part dirs)
-        dfs = [
-            spark.read.schema(schema).parquet(os.path.join(self.root, p))
-            for p in parts
-        ]
-        out = dfs[0]
-        for d in dfs[1:]:
-            out = out.unionByName(d)
-        return out
+        return spark.read.schema(schema).parquet(*[os.path.join(self.root, p) for p in parts])
 
     # -- commit -----------------------------------------------------------
     def commit(
         self,
-        tables: dict[str, DataFrame],
+        tables: dict[str, DataFrame | None],
         meta: dict | None = None,
         appends: dict[str, DataFrame] | None = None,
     ) -> int:
@@ -499,12 +491,16 @@ class StateStore:
         ``appends`` tables (the manifest tracks the part list — an append
         round writes only the delta, never rewrites history; this is what
         keeps per-round commit cost O(round), not O(crawl)), then
-        atomically swap the manifest. Every table the commit does not name
-        carries forward unchanged."""
+        atomically swap the manifest, stamped ``FORMAT``. Every table the
+        commit does not name carries forward unchanged; a ``None`` in
+        ``tables`` or ``meta`` drops that entry."""
         m = self.manifest()
         sid = self.next_snapshot_id()
         new_tables: dict[str, str | list[str] | dict] = dict(m["tables"])
         for name, df in tables.items():
+            if df is None:
+                new_tables.pop(name, None)
+                continue
             rel = f"{name}/v{sid}"
             df.write.mode("overwrite").parquet(os.path.join(self.root, rel))
             new_tables[name] = rel
@@ -514,10 +510,11 @@ class StateStore:
             prev = m["tables"].get(name, [])
             parts = prev if isinstance(prev, list) else [prev]
             new_tables[name] = parts + [rel]
+        new_meta = {**m["meta"], **(meta or {}), "format": FORMAT, "committed_at": time.time()}
         manifest = {
             "snapshot": sid,
             "tables": new_tables,
-            "meta": {**m.get("meta", {}), **(meta or {}), "committed_at": time.time()},
+            "meta": {k: v for k, v in new_meta.items() if v is not None},
         }
         # immutable snapshot-log entry first, then the atomic current swap
         with open(self._manifest_path(sid), "w") as f:

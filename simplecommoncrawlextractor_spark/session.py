@@ -9,6 +9,15 @@ Design notes (100 TB / multi-executor):
   pandas UDF / mapInPandas / applyInPandas; zero per-row Python.
 - shuffle.partitions defaults small for local test scale; production would
   size it to cluster cores × 2-3 or rely on AQE coalescing.
+- Tungsten pages are 1 MiB. Spark otherwise sizes them from the execution
+  memory per core, 64 MiB for the 8 GiB local driver, and every sort, hash
+  aggregate and broadcast hash relation takes a whole page however few rows
+  it holds. A 64 MiB array is a G1 humongous object (over half a 4 MiB
+  region). In a crawl round about 500 MiB of them stayed live, and past
+  that each new page started another concurrent mark cycle: 8-14
+  back-to-back cycles in some runs and none in others, 3-7 s of GC CPU that
+  came and went from run to run. A task still takes a larger page when one
+  record needs it.
 - Python worker start-up is paid once per worker. PySpark's daemon calls
   ``importlib.invalidate_caches()`` before every task, which re-reads the
   central directory of ``pyspark.zip`` and the py4j zip once per zip
@@ -75,6 +84,7 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
+        .config("spark.buffer.pageSize", "1m")
     )
     # local-mode shuffle spills to tmpfs when available: at high local
     # parallelism the disk becomes the shuffle bottleneck long before CPU

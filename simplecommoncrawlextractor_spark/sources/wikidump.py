@@ -25,9 +25,8 @@ from __future__ import annotations
 import re
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, StringType
 
 from ..functions.mappers import apply_mapper_chain_staged, uri_valid
 
@@ -182,13 +181,6 @@ def _lex_values_line_slow(s: str, url_col: int = URL_COLUMN) -> list[str]:
                     buf.append(ch)
                 i += 1
     return out
-
-
-@F.pandas_udf(ArrayType(StringType()))
-def lex_externallinks(lines: pd.Series) -> pd.Series:
-    """Per-line array lexer (kept for callers that need line→urls
-    attribution); the flat scan below is the throughput path."""
-    return lines.map(lambda s: _lex_values_line(s) if isinstance(s, str) else [])
 
 
 def parse_externallinks_dump(lines: DataFrame, value_col: str = "value") -> DataFrame:

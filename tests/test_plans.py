@@ -261,6 +261,26 @@ def test_seen_set_plans_run_no_python(spark):
     assert not any(found.values()), found
 
 
+def test_state_read_is_one_parquet_scan(spark, tmp_path):
+    """A state table of several parts reads as one multi-path Parquet
+    scan: no scan per part and no Union node. url_seen after a bootstrap
+    and two rounds has three parts."""
+    from simplecommoncrawlextractor_spark.plans import CrawlScheduler, StateStore
+    from simplecommoncrawlextractor_spark.plans.state import SEEN_SCHEMA
+    from simplecommoncrawlextractor_spark.sources import seed_frontier
+
+    store = StateStore(str(tmp_path / "scan"))
+    sched = CrawlScheduler(spark, store, host_budget=4, salt_k=4, n_buckets=8)
+    sched.bootstrap(seed_frontier(spark, n=100))
+    fetched = sum(sched.step()["fetched"] for _ in range(2))
+    assert len(store.part_sids("url_seen")) == 3
+    df = store.read(spark, "url_seen", SEEN_SCHEMA)
+    nodes = [re.sub(r"^\*\(\d+\) ", "", t) for _, t in _plan_nodes(_plan(df))]
+    assert sum(t.startswith("FileScan parquet") for t in nodes) == 1, nodes
+    assert not [t for t in nodes if t.startswith("Union")], nodes
+    assert df.count() == fetched > 0
+
+
 def test_no_python_stage_under_a_range_sort(spark, sf_dir):
     """A global sort's range partitioner first runs its child stage to
     sample the bounds and then runs it again to write the shuffle, so a

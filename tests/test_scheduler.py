@@ -199,7 +199,10 @@ def test_dedup_by_hash_tiebreak_is_partition_order_independent(spark):
 
 def test_fetch_rate_report_rolls_up_partition_lineage(spark, tmp_path):
     """The per-(round, phase) fetch-rate/skew rollup: totals match the
-    fetch log, every phase appears, and skew_ratio >= 1 by construction."""
+    fetch log, every phase appears, and skew_ratio >= 1 by construction.
+    The step's three phases cover its wall time."""
+    import time
+
     from simplecommoncrawlextractor_spark.plans import CrawlScheduler, StateStore
     from simplecommoncrawlextractor_spark.sources import seed_frontier
 
@@ -208,7 +211,11 @@ def test_fetch_rate_report_rolls_up_partition_lineage(spark, tmp_path):
         n_buckets=16,
     )
     sched.bootstrap(seed_frontier(spark, n=400))
-    sched.step()
+    t = time.time()
+    stats = sched.step()
+    wall = time.time() - t
+    phases = stats["fetch_sec"] + stats["harvest_sec"] + stats["commit_sec"]
+    assert 0.9 * wall <= phases <= wall, (phases, wall)
     rep = sched.fetch_rate_report().collect()
     assert rep, "no lineage rows emitted"
     by_phase = {(r["round"], r["phase"]): r for r in rep}
@@ -222,40 +229,17 @@ def test_fetch_rate_report_rolls_up_partition_lineage(spark, tmp_path):
 
 
 def test_seen_backend_pinned_in_manifest(spark, tmp_path):
-    """Bloom is the only URL-seen backend. A store whose manifest pins
-    another one (written by an older build) is refused by name; a store
-    with the key absent or set to "bloom" opens; any other
-    ``seen_backend`` value is rejected up front."""
-    import json
-    import os
-
+    """Bloom is the only URL-seen backend: any other ``seen_backend`` value
+    is rejected up front. (A store pinned to another backend by an older
+    build is upgraded on open: test_state.py's
+    test_old_bucket_dir_layout_resumes_identically.)"""
     import pytest
 
     root = str(tmp_path / "pin")
     CrawlScheduler(spark, StateStore(root), n_buckets=8).bootstrap(
         seed_frontier(spark, n=20)
     )
-
-    def pin(value):
-        # current manifest and every snapshot-log copy
-        for fn in os.listdir(root):
-            if fn.startswith("manifest") and fn.endswith(".json"):
-                p = os.path.join(root, fn)
-                with open(p) as f:
-                    m = json.load(f)
-                if value is None:
-                    m["meta"].pop("seen_backend", None)
-                else:
-                    m["meta"]["seen_backend"] = value
-                with open(p, "w") as f:
-                    json.dump(m, f)
-
-    pin("cuckoo")
-    with pytest.raises(ValueError, match="cuckoo"):
-        CrawlScheduler(spark, StateStore(root), n_buckets=8)
-    for value in (None, "bloom"):
-        pin(value)
-        assert CrawlScheduler(spark, StateStore(root), n_buckets=8).round_no() == 0
+    assert CrawlScheduler(spark, StateStore(root), n_buckets=8).round_no() == 0
     for bad in ("cuckoo", "xor"):
         with pytest.raises(ValueError, match="seen_backend"):
             CrawlScheduler(spark, StateStore(root), n_buckets=8, seen_backend=bad)

@@ -1,5 +1,6 @@
 """``get_spark``'s worker daemon: when it is set, that a Python stage runs
-with it set and unset, and what its ``invalidate_caches`` wrapper keeps.
+with it set and unset, and what its ``invalidate_caches`` wrapper keeps;
+and its Tungsten page size.
 
 The Spark cases each start their own session in a subprocess, because the
 test session's JVM (and its daemon conf) already exists."""
@@ -112,6 +113,12 @@ def test_daemon_unset_off_local_masters_and_under_spark_submit(monkeypatch):
     # under spark-submit the JVM, and its cwd and environment, came first
     monkeypatch.setenv("PYSPARK_GATEWAY_PORT", "1")
     assert not _daemon_importable("local[2]")
+
+
+def test_tungsten_pages_are_one_mib(spark):
+    # Spark's own size for an 8 GiB driver is 64 MiB, a G1 humongous object
+    memory = spark._jvm.org.apache.spark.SparkEnv.get().memoryManager()
+    assert memory.pageSizeBytes() == 1 << 20
 
 
 @pytest.fixture

@@ -686,74 +686,116 @@ def _to_bucket_dirs(spark, part_dir):
     os.rename(tmp, part_dir)
 
 
+def _edit_manifests(root, edit):
+    """Apply ``edit`` to the current manifest and every snapshot-log copy."""
+    import json
+
+    for fn in os.listdir(root):
+        if fn.startswith("manifest") and fn.endswith(".json"):
+            path = os.path.join(root, fn)
+            with open(path) as f:
+                m = json.load(f)
+            edit(m)
+            with open(path, "w") as f:
+                json.dump(m, f, indent=1)
+
+
 def _to_upsert_entry(spark, root):
     """Rewrite the bloom blobs of the current snapshot the way builds that
     kept an upsert table stored them: a ``u{sid}`` part named by a keyed
     ``{"kind": "upsert", ...}`` entry, in both the current manifest and
     the snapshot log. Returns the part's relative path."""
-    import json
-
-    store = StateStore(root)
-    sid = store.snapshot_id()
+    sid = StateStore(root).snapshot_id()
     old = f"blooms/u{sid}"
     os.rename(os.path.join(root, f"blooms/v{sid}"), os.path.join(root, old))
     buckets = spark.read.parquet(os.path.join(root, old)).select("bucket").collect()
-    for path in (store._manifest_path(), store._manifest_path(sid)):
-        with open(path) as f:
-            m = json.load(f)
-        m["tables"]["blooms"] = {
-            "kind": "upsert",
-            "key": "bucket",
-            "parts": [old],
-            "owners": {str(r[0]): 0 for r in buckets},
-        }
-        with open(path, "w") as f:
-            json.dump(m, f, indent=1)
+
+    def edit(m):
+        if m["snapshot"] == sid:
+            m["tables"]["blooms"] = {
+                "kind": "upsert",
+                "key": "bucket",
+                "parts": [old],
+                "owners": {str(r[0]): 0 for r in buckets},
+            }
+
+    _edit_manifests(root, edit)
     return old
 
 
 def test_old_bucket_dir_layout_resumes_identically(spark, tmp_path):
-    """A store written by an older build resumes to the crawl order of a
-    store that was never rewritten: its url_seen part in the ``bucket=N``
-    layout reads next to new flat parts, and its keyed upsert blooms
-    entry is rebuilt from the exact rows, then replaced by a plain table
-    at the next commit. Orphan GC keeps the upsert part while a retained
-    manifest names it, and sweeps it after."""
+    """A store written before manifests named their format: a url_seen
+    part in the ``bucket=N`` layout, a keyed upsert blooms entry, a
+    ``frontier_tombs`` entry, a ``seen_backend`` pin and no ``format``.
+    A scheduler that opens it upgrades it in one commit, to a manifest at
+    ``FORMAT`` that names only the crawl tables, and resumes to the crawl
+    order and frontier of a store that was never rewritten. Orphan GC
+    keeps the old parts while a retained manifest names them and sweeps
+    them after."""
     from simplecommoncrawlextractor_spark.plans import CrawlScheduler
+    from simplecommoncrawlextractor_spark.plans.state import FORMAT
     from simplecommoncrawlextractor_spark.sources import seed_frontier
+
+    kw = dict(host_budget=4, salt_k=4, n_buckets=8)
 
     def crawl(root, rewrite):
         store = StateStore(root)
-        sched = CrawlScheduler(spark, store, host_budget=4, salt_k=4, n_buckets=8)
+        sched = CrawlScheduler(spark, store, **kw)
         sched.bootstrap(seed_frontier(spark, n=200))
         sched.step()
         if rewrite:
             seen_part = os.path.join(root, "url_seen/d2")
+            tombs = "frontier_tombs/d2"
+            spark.read.parquet(seen_part).select("url_hash").write.parquet(os.path.join(root, tombs))
             _to_bucket_dirs(spark, seen_part)
             assert any(d.startswith("bucket=") for d in os.listdir(seen_part))
-            upsert_part = _to_upsert_entry(spark, root)
+            old_parts = {"url_seen/d2", tombs, _to_upsert_entry(spark, root)}
+
+            def pre_format(m):
+                del m["meta"]["format"]
+                m["meta"]["seen_backend"] = "cuckoo"
+                if m["snapshot"] == 2:
+                    m["tables"]["frontier_tombs"] = [tombs]
+
+            _edit_manifests(root, pre_format)
+            sched = CrawlScheduler(spark, store, **kw)
+            m = store.manifest()
+            assert m["snapshot"] == 3 and m["meta"]["format"] == FORMAT
+            assert m["meta"]["round"] == 1 and "seen_backend" not in m["meta"]
+            assert set(m["tables"]) == {"frontier", "url_seen", "blooms", "fetch_log", "metrics"}
+            assert m["tables"]["url_seen"] == "url_seen/v3"
         sched.run(2)
-        assert store.manifest()["tables"]["blooms"] == "blooms/v4"
         if rewrite:
-            store.expire_snapshots(keep_last=3, orphan_grace_sec=0)
-            assert os.path.isdir(os.path.join(root, upsert_part))
+            store.expire_snapshots(keep_last=4, orphan_grace_sec=0)
+            assert all(os.path.isdir(os.path.join(root, p)) for p in old_parts)
             out = store.expire_snapshots(keep_last=1, orphan_grace_sec=0)
-            assert upsert_part in out["removed"]
-        return _crawl_digest(sched)
+            assert old_parts <= set(out["removed"])
+        return _crawl_digest(sched), sorted(map(tuple, sched.frontier().collect()))
 
     control = crawl(str(tmp_path / "control"), rewrite=False)
     assert crawl(str(tmp_path / "old"), rewrite=True) == control
 
 
 def test_read_of_an_upsert_entry_names_table_and_snapshot(spark, tmp_path):
-    """read cannot resolve the keyed upsert entry an older build wrote;
-    time-travelling to one raises a ValueError naming the table and the
-    snapshot, not a TypeError from deep in the path handling."""
+    """read takes manifests in ``FORMAT`` only. A snapshot from before the
+    format stamp (here one holding an older build's keyed upsert entry)
+    and one stamped with a newer format both raise a ValueError naming
+    the table and the snapshot, not a TypeError from deep in the path
+    handling; a scheduler refuses to open the newer one."""
+    from simplecommoncrawlextractor_spark.plans import CrawlScheduler
+
     root = str(tmp_path / "old")
     store = StateStore(root)
     store.commit({"blooms": spark.range(4).selectExpr("cast(id AS int) AS bucket")})
     sid = store.snapshot_id()
     _to_upsert_entry(spark, root)
+    _edit_manifests(root, lambda m: m["meta"].pop("format"))
     store.commit({"t": spark.range(1)})
-    with pytest.raises(ValueError, match=rf"'blooms' at snapshot {sid}\b"):
+    with pytest.raises(ValueError, match=rf"'blooms' at snapshot {sid} is stored in format None"):
         store.read(spark, "blooms", BLOOM_SCHEMA, snapshot=sid)
+    assert store.read(spark, "t", "id long").count() == 1
+    _edit_manifests(root, lambda m: m["meta"].update(format=2))
+    with pytest.raises(ValueError, match=rf"'t' at snapshot {sid + 1} is stored in format 2"):
+        store.read(spark, "t", "id long")
+    with pytest.raises(ValueError, match="in format 2"):
+        CrawlScheduler(spark, store, n_buckets=8)
