@@ -30,7 +30,8 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+# the CPUs this process may run on, as ``get_spark`` defaults to
+CPUS = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
 
 
 def _noop(spark, label: str, df, trials: int = 2) -> float:

@@ -443,11 +443,14 @@ class StateStore:
 
     # -- read -------------------------------------------------------------
     @staticmethod
-    def _parts(m: dict, name: str) -> list[str]:
-        fmt = m["meta"].get("format")
-        if m["snapshot"] and fmt != FORMAT:
-            raise ValueError(f"table {name!r} at snapshot {m['snapshot']} is stored in "
-                             f"format {fmt}; this build reads format {FORMAT}")
+    def _format_error(m: dict, name: str) -> ValueError:
+        return ValueError(f"table {name!r} at snapshot {m['snapshot']} is stored in "
+                          f"format {m['meta'].get('format')}; this build reads format {FORMAT}")
+
+    @classmethod
+    def _parts(cls, m: dict, name: str) -> list[str]:
+        if m["snapshot"] and m["meta"].get("format") != FORMAT:
+            raise cls._format_error(m, name)
         rel = m["tables"].get(name)
         if rel is None:
             return []
@@ -493,10 +496,23 @@ class StateStore:
         keeps per-round commit cost O(round), not O(crawl)), then
         atomically swap the manifest, stamped ``FORMAT``. Every table the
         commit does not name carries forward unchanged; a ``None`` in
-        ``tables`` or ``meta`` drops that entry."""
+        ``tables`` or ``meta`` drops that entry.
+
+        Refuses, with ``read``'s ValueError and before writing anything, a
+        base this build could not read back once stamped: one in another
+        format, or one from before the stamp that would carry forward an
+        entry that is not a part path or a list of them (an older build's
+        keyed upsert entry). A CrawlScheduler's upgrade rewrites or drops
+        every such table, so it passes."""
         m = self.manifest()
+        fmt = m["meta"].get("format")
+        for name, rel in m["tables"].items():
+            parts = rel if isinstance(rel, list) else [rel]
+            kept_unreadable = name not in tables and not all(isinstance(p, str) for p in parts)
+            if fmt != FORMAT and (fmt is not None or kept_unreadable):
+                raise self._format_error(m, name)
         sid = self.next_snapshot_id()
-        new_tables: dict[str, str | list[str] | dict] = dict(m["tables"])
+        new_tables: dict[str, str | list[str]] = dict(m["tables"])
         for name, df in tables.items():
             if df is None:
                 new_tables.pop(name, None)

@@ -1,6 +1,6 @@
 """``get_spark``'s worker daemon: when it is set, that a Python stage runs
 with it set and unset, and what its ``invalidate_caches`` wrapper keeps;
-and its Tungsten page size.
+its Tungsten page size; and its generated-class cache.
 
 The Spark cases each start their own session in a subprocess, because the
 test session's JVM (and its daemon conf) already exists."""
@@ -119,6 +119,24 @@ def test_tungsten_pages_are_one_mib(spark):
     # Spark's own size for an 8 GiB driver is 64 MiB, a G1 humongous object
     memory = spark._jvm.org.apache.spark.SparkEnv.get().memoryManager()
     assert memory.pageSizeBytes() == 1 << 20
+
+
+def test_generated_classes_compile_once(spark):
+    # 150 distinct classes visited twice in the same order, the shape of a
+    # crawl round's plans: an LRU cache smaller than that evicts each one
+    # before its next use, so the second pass would compile all of them.
+    # No other test uses these literals, so the first pass compiles each.
+    from pyspark.sql import functions as F
+
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    queries = [spark.range(4).select(F.col("id") + F.lit(i)) for i in range(1000, 1150)]
+    counts = [compiles.getCount()]
+    for _ in range(2):
+        for q in queries:
+            q.collect()
+        counts.append(compiles.getCount())
+    assert counts[1] - counts[0] >= len(queries)
+    assert counts[2] - counts[1] == 0
 
 
 @pytest.fixture

@@ -781,7 +781,9 @@ def test_read_of_an_upsert_entry_names_table_and_snapshot(spark, tmp_path):
     format stamp (here one holding an older build's keyed upsert entry)
     and one stamped with a newer format both raise a ValueError naming
     the table and the snapshot, not a TypeError from deep in the path
-    handling; a scheduler refuses to open the newer one."""
+    handling. A direct commit on either raises the same and writes no
+    manifest, as it could not carry the base forward; a scheduler refuses
+    to open the newer one."""
     from simplecommoncrawlextractor_spark.plans import CrawlScheduler
 
     root = str(tmp_path / "old")
@@ -790,12 +792,22 @@ def test_read_of_an_upsert_entry_names_table_and_snapshot(spark, tmp_path):
     sid = store.snapshot_id()
     _to_upsert_entry(spark, root)
     _edit_manifests(root, lambda m: m["meta"].pop("format"))
-    store.commit({"t": spark.range(1)})
-    with pytest.raises(ValueError, match=rf"'blooms' at snapshot {sid} is stored in format None"):
+
+    def manifests():
+        return sorted(f for f in os.listdir(root) if f.startswith("manifest-"))
+
+    before = manifests()
+    pre_format = rf"'blooms' at snapshot {sid} is stored in format None"
+    with pytest.raises(ValueError, match=pre_format):
         store.read(spark, "blooms", BLOOM_SCHEMA, snapshot=sid)
-    assert store.read(spark, "t", "id long").count() == 1
+    with pytest.raises(ValueError, match=pre_format):
+        store.commit({"t": spark.range(1)})
+    assert manifests() == before and store.snapshot_id() == sid
     _edit_manifests(root, lambda m: m["meta"].update(format=2))
-    with pytest.raises(ValueError, match=rf"'t' at snapshot {sid + 1} is stored in format 2"):
+    with pytest.raises(ValueError, match=rf"'t' at snapshot {sid} is stored in format 2"):
         store.read(spark, "t", "id long")
+    with pytest.raises(ValueError, match=rf"'blooms' at snapshot {sid} is stored in format 2"):
+        store.commit({"blooms": spark.range(4).selectExpr("cast(id AS int) AS bucket")})
+    assert manifests() == before
     with pytest.raises(ValueError, match="in format 2"):
         CrawlScheduler(spark, store, n_buckets=8)
