@@ -14,8 +14,10 @@ and every round commits a (frontier, url_seen, blooms) snapshot through the
 atomic manifest swap. Killing the process between rounds and resuming
 replays the remaining rounds IDENTICALLY (pytest: tests/test_scheduler.py)
 because (a) state is snapshot-pinned and (b) every ordering/priority is
-data-derived. Per-round, per-partition lineage rows (rows in/out, wall
-clock, urls/sec) append to the ``metrics`` table.
+data-derived. Per-round, per-partition lineage rows (rows, wall clock,
+urls/sec) append to the ``metrics`` table; they are built on the driver
+from the per-partition row counts the round takes anyway, with no job of
+their own.
 """
 
 from __future__ import annotations
@@ -24,6 +26,7 @@ import os
 import time
 from functools import reduce
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -55,17 +58,9 @@ FETCH_LOG_SCHEMA = (
 TABLES = ("frontier", "url_seen", "blooms", "fetch_log", "metrics", "robots")
 
 
-def _partition_lineage(df: DataFrame, snapshot: int, rnd: int, phase: str, elapsed: float) -> DataFrame:
-    counts = df.groupBy(F.spark_partition_id().alias("partition_id")).count()
-    return counts.select(
-        F.lit(snapshot).alias("snapshot"),
-        F.lit(rnd).alias("round"),
-        F.lit(phase).alias("phase"),
-        F.col("partition_id"),
-        F.col("count").alias("rows"),
-        F.lit(elapsed).alias("elapsed_sec"),
-        (F.col("count") / F.greatest(F.lit(elapsed), F.lit(1e-9))).alias("rows_per_sec"),
-    )
+def _partition_counts(df: DataFrame) -> list[tuple[int, int]]:
+    """(partition id, rows) for every non-empty partition of ``df``: one job."""
+    return [tuple(r) for r in df.groupBy(F.spark_partition_id()).count().collect()]
 
 
 class CrawlScheduler:
@@ -344,7 +339,7 @@ class CrawlScheduler:
             budget_table=self._budget_table_from(rules),
         )
         fetched = simulate_fetch(scheduled).cache()
-        n_fetched = fetched.count()
+        fetch_parts = _partition_counts(fetched)
         t1 = time.time()
         t_fetch = t1 - t0
 
@@ -361,35 +356,16 @@ class CrawlScheduler:
         # reference's repo-existence check only covers stored payloads, but
         # re-queueing permanent failures forever is not crawl semantics —
         # failures are terminal within a run here; refetch is the delete path).
-        # Derived from the CACHED fetched frame (row-identical to scheduled)
-        # and cached itself: it feeds the seen union, the touched-bucket set,
-        # a fold's frontier anti-join AND the url_seen append — uncached,
-        # each of those would re-run the politeness window plan (round 6)
-        newly_seen = (
-            self.seen.bucketize(fetched.select("url_hash").distinct())
-            .select("bucket", "url_hash")
-            .cache()
-        )
+        # Every reader of this projection scans the cached fetched frame,
+        # which holds one row per url_hash (the frontier is deduped by hash
+        # and admission and the budget join never repeat a row)
+        newly_seen = self.seen.bucketize(fetched.select("url_hash")).select("bucket", "url_hash")
         seen2 = seen_rows.unionByName(newly_seen)
-        # DELTA blob maintenance: only buckets receiving new hashes get a
-        # new blob; untouched buckets' blobs pass through unchanged.
-        # merge_delta ORs the new bits in, then rebuilds overfull buckets;
-        # it returns a locally checkpointed frame, the one materialization
-        # the probe and the commit both read (no cache here)
-        touched = newly_seen.select("bucket").distinct()
-        blooms_touched = blooms.join(F.broadcast(touched), "bucket", "left_semi")
-        blooms_delta = self.seen.merge_delta(
-            blooms_touched, newly_seen.select("url_hash"), seen2
-        )
-        # full view = untouched ∪ delta: this round's probe reads it and the
-        # commit writes it as the next blooms version. A round touches
-        # every bucket unless it adds fewer hashes than a few times the
-        # bucket count, so there is no untouched blob worth not rewriting.
-        # The delta holds exactly the touched buckets, already materialized:
-        # keying the anti-join on it skips re-running touched's distinct
-        blooms2 = blooms.join(
-            F.broadcast(blooms_delta.select("bucket")), "bucket", "left_anti"
-        ).unionByName(blooms_delta)
+        # one merge over the whole blob table: a bucket that gets no new
+        # hash passes through byte for byte, and only a bucket that gets
+        # some can overflow. merge_delta returns it materialized, the one
+        # frame this round's probe reads and the commit writes
+        blooms2 = self.seen.merge_delta(blooms, newly_seen.select("url_hash"), seen2)
 
         # harvest next-round candidates, dedup vs (updated) seen set
         outlinks = synthetic_outlinks(fetched)
@@ -412,15 +388,25 @@ class CrawlScheduler:
             frontier_delta = dedup_by_hash(merged).select(*new_cand.columns).cache()
         else:
             frontier_delta = new_cand.cache()
-        n_frontier = frontier_delta.count()
+        harvest_parts = _partition_counts(frontier_delta)
         t2 = time.time()
         t_harvest = t2 - t1
 
+        # the lineage rows are built on the driver from the two counts
+        # above: as a local frame their values are data, not literals
+        # compiled into a new class every round. One partition, so the
+        # round appends one metrics file
         sid = self.store.next_snapshot_id()
-        metrics_new = _partition_lineage(
-            fetched, sid, rnd, "fetch", t_fetch
-        ).unionByName(
-            _partition_lineage(frontier_delta, sid, rnd, "harvest", t_harvest)
+        lineage = [
+            (sid, rnd, phase, pid, n, elapsed, n / max(elapsed, 1e-9))
+            for phase, parts, elapsed in (
+                ("fetch", fetch_parts, t_fetch), ("harvest", harvest_parts, t_harvest),
+            )
+            for pid, n in parts
+        ]
+        metrics_new = (
+            self.spark.createDataFrame(pd.DataFrame(lineage), METRICS_SCHEMA).coalesce(1)
+            if lineage else empty_frame(self.spark, METRICS_SCHEMA)
         )
 
         # url_seen, fetch_log, metrics and (normal rounds) the frontier are
@@ -435,12 +421,11 @@ class CrawlScheduler:
         t_commit = time.time() - t2
         fetched.unpersist()
         frontier_delta.unpersist()
-        newly_seen.unpersist()
         return {
             "snapshot": sid,
             "round": rnd,
-            "fetched": n_fetched,
-            "frontier": n_frontier,
+            "fetched": sum(n for _, n in fetch_parts),
+            "frontier": sum(n for _, n in harvest_parts),
             "frontier_compacted": compacting,
             "fetch_sec": t_fetch,
             "harvest_sec": t_harvest,

@@ -233,21 +233,23 @@ class BloomSeenSet:
         return remaining, rebuilt
 
     def merge_delta(
-        self, touched_blobs: DataFrame, new_rows: DataFrame, seen_after: DataFrame
+        self, blooms: DataFrame, new_rows: DataFrame, seen_after: DataFrame
     ) -> DataFrame:
-        """Per-round blob delta for the buckets receiving ``new_rows``:
-        OR the new hashes in, then grow any bucket whose item count outran
-        its bit budget (its false-positive rate would decay otherwise) by
-        rebuilding its blob from ``seen_after``, the post-merge exact rows.
-        Only touched buckets can newly overflow, and a rebuild at least
-        doubles the bucket's bits, so rebuilds are rare and bucket-local.
+        """Per-round blob merge: OR ``new_rows``' hashes into ``blooms``,
+        then grow any bucket whose item count outran its bit budget (its
+        false-positive rate would decay otherwise) by rebuilding its blob
+        from ``seen_after``, the post-merge exact rows. ``blooms`` may be
+        the whole blob table: a bucket that gets no new hash passes
+        through byte for byte, and only a bucket that gets some can newly
+        overflow. A rebuild at least doubles the bucket's bits, so
+        rebuilds are rare and bucket-local.
 
         Eager: the merge is locally checkpointed once, and the overfull
         bucket ids (at most ``n_buckets``) are collected to the driver, so
         the merge runs exactly once and the rebuild is planned only when
         a bucket overflowed. The returned frame is materialized on both
         paths; callers need no cache of their own."""
-        delta = self.merge_blooms(touched_blobs, new_rows).localCheckpoint()
+        delta = self.merge_blooms(blooms, new_rows).localCheckpoint()
         overfull = delta.where(f"n_items * {BITS_PER_ITEM} > n_bits").select("bucket")
         if not overfull.collect():
             return delta

@@ -29,8 +29,9 @@ Design notes (100 TB / multi-executor):
   4-core box, the ``perfbench`` crawl episode after the warm-up compiles
   4 classes instead of 141, a ``query_mix`` pass 0 instead of 111, and
   rounds 4-5 of a 5-round crawl 6 instead of 194. The cache stays bounded
-  because a few plans inline per-episode literals, which make new classes
-  that must age out.
+  because one plan still inlines a per-round literal (``fetch_log``'s
+  round number), which makes a new class for each new round that must
+  age out.
 - Python worker start-up is paid once per worker. PySpark's daemon calls
   ``importlib.invalidate_caches()`` before every task, which re-reads the
   central directory of ``pyspark.zip`` and the py4j zip once per zip

@@ -7,6 +7,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from simplecommoncrawlextractor_spark.plans import CrawlScheduler, StateStore
+from simplecommoncrawlextractor_spark.plans.scheduler import METRICS_SCHEMA
 from simplecommoncrawlextractor_spark.plans.state import SEEN_SCHEMA
 from simplecommoncrawlextractor_spark.sources import seed_frontier
 
@@ -199,7 +200,8 @@ def test_dedup_by_hash_tiebreak_is_partition_order_independent(spark):
 
 def test_fetch_rate_report_rolls_up_partition_lineage(spark, tmp_path):
     """The per-(round, phase) fetch-rate/skew rollup: totals match the
-    fetch log, every phase appears, and skew_ratio >= 1 by construction.
+    fetch log and the round's new frontier rows, each partition has one
+    row per phase, and skew_ratio >= 1 by construction.
     The step's three phases cover its wall time."""
     import time
 
@@ -222,7 +224,13 @@ def test_fetch_rate_report_rolls_up_partition_lineage(spark, tmp_path):
     fetched = sched.crawl_order().count()
     fetch_rows = [r for (rnd, ph), r in by_phase.items() if ph == "fetch"]
     assert fetch_rows and sum(r["rows"] for r in fetch_rows) == fetched
-    assert any(ph == "harvest" for (_, ph) in by_phase)
+    harvest_rows = [r for (rnd, ph), r in by_phase.items() if ph == "harvest"]
+    assert harvest_rows and sum(r["rows"] for r in harvest_rows) == stats["frontier"]
+    lineage = [
+        (r["round"], r["phase"], r["partition_id"])
+        for r in sched.store.read(spark, "metrics", METRICS_SCHEMA).collect()
+    ]
+    assert len(lineage) == len(set(lineage)), lineage
     for r in rep:
         assert r["skew_ratio"] >= 1.0 - 1e-9
         assert r["rows_per_sec"] > 0
@@ -303,3 +311,36 @@ def test_frontier_commit_is_o_round_and_compaction_neutral(spark, tmp_path, monk
     monkeypatch.setattr(CrawlScheduler, "MAX_FRONTIER_PARTS", 100)
     plain = _run(spark, str(tmp_path / "plain"), rounds=5, n_seeds=300)
     assert _order_rows(compacted) == _order_rows(plain)
+
+
+def test_rounds_run_a_fixed_job_count_and_compile_once(spark, tmp_path):
+    """A round runs the same jobs whatever its number, and no more than
+    its answer needs; a repeated crawl compiles no generated class, as no
+    plan inlines a value that differs between the two crawls, such as a
+    phase's wall time in the metrics rows."""
+    import uuid
+
+    sc = spark.sparkContext
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    groups, compiled = [], []
+    for crawl in range(2):
+        sched = CrawlScheduler(
+            spark, StateStore(str(tmp_path / f"c{crawl}")), host_budget=4, salt_k=4, n_buckets=8
+        )
+        sched.bootstrap(seed_frontier(spark, n=200))
+        for rnd in range(3):
+            groups.append(f"step-{crawl}-{rnd}-{uuid.uuid4().hex}")
+            c = compiles.getCount()
+            sc.setJobGroup(groups[-1], groups[-1])
+            try:
+                sched.step()
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+                sc.setLocalProperty("spark.job.description", None)
+            compiled.append(compiles.getCount() - c)
+    # the status store fills from the listener bus: drain it first
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = [len(sc.statusTracker().getJobIdsForGroup(g)) for g in groups]
+    assert jobs[1] == jobs[2] == jobs[4] == jobs[5], jobs
+    assert jobs[1] <= 23, jobs
+    assert compiled[3:] == [0, 0, 0], compiled

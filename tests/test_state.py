@@ -386,8 +386,11 @@ def test_bloom_delta_commit_leaves_untouched_buckets_alone(spark, tmp_path):
 def test_upsert_empty_delta_carries_forward(spark, tmp_path):
     """A round that schedules nothing brings no new hash: its commit
     still writes a blooms version, holding every bucket's blob
-    unchanged."""
+    unchanged, and an empty metrics part."""
+    from pyspark.sql.types import StructType
+
     from simplecommoncrawlextractor_spark.plans import CrawlScheduler
+    from simplecommoncrawlextractor_spark.plans.scheduler import METRICS_SCHEMA
     from simplecommoncrawlextractor_spark.sources import seed_frontier
 
     store = StateStore(str(tmp_path / "empty"))
@@ -400,6 +403,11 @@ def test_upsert_empty_delta_carries_forward(spark, tmp_path):
     assert sched.step()["fetched"] == 0
     assert store.manifest()["tables"]["blooms"] == "blooms/v3"
     assert _bloom_rows(sched.blooms()) == before
+    # the round's lineage has no row, yet it appends a metrics part that
+    # reads back with the table's schema
+    assert store.manifest()["tables"]["metrics"][-1] == "metrics/d3"
+    part = spark.read.parquet(os.path.join(store.root, "metrics/d3"))
+    assert part.schema == StructType.fromDDL(METRICS_SCHEMA) and part.count() == 0
 
 
 def test_snapshot_time_travel_and_rollback_replay(spark, tmp_path):
