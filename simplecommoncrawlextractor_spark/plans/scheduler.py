@@ -24,6 +24,7 @@ from __future__ import annotations
 
 import os
 import time
+from contextlib import ExitStack
 from functools import reduce
 
 import pandas as pd
@@ -187,29 +188,32 @@ class CrawlScheduler:
         known = self._stored_robots().select("host")
         if self.robots_rules is not None:
             known = known.unionByName(self.robots_rules.select("host"))
-        fresh_hosts = hosts.join(known.distinct(), "host", "left_anti").cache()
-        parsed = bootstrap_robots(fresh_hosts)
-        # allow-all hosts yield no parsed rows — record a sentinel
-        # (null disallow, delay 0) so they count as covered and are never
-        # re-fetched; robots_filter ignores null prefixes by construction
-        sentinels = fresh_hosts.join(
-            parsed.select("host").distinct(), "host", "left_anti"
-        ).select(
-            "host",
-            F.lit(None).cast("string").alias("disallow_prefix"),
-            F.lit(0).alias("crawl_delay"),
-        )
-        new_rules = parsed.unionByName(sentinels).cache()
-        n_hosts = fresh_hosts.count()
-        if n_hosts:
-            self.store.commit(
-                tables={},
-                appends={"robots": new_rules},
-                meta={"round": self.round_no()},
+        # the cached frames are released on failure too, or they stay
+        # pinned for the session's life
+        with ExitStack() as cached:
+            fresh_hosts = hosts.join(known.distinct(), "host", "left_anti").cache()
+            cached.callback(fresh_hosts.unpersist)
+            parsed = bootstrap_robots(fresh_hosts)
+            # allow-all hosts yield no parsed rows — record a sentinel
+            # (null disallow, delay 0) so they count as covered and are never
+            # re-fetched; robots_filter ignores null prefixes by construction
+            sentinels = fresh_hosts.join(
+                parsed.select("host").distinct(), "host", "left_anti"
+            ).select(
+                "host",
+                F.lit(None).cast("string").alias("disallow_prefix"),
+                F.lit(0).alias("crawl_delay"),
             )
-        new_rules.unpersist()
-        fresh_hosts.unpersist()
-        return n_hosts
+            new_rules = parsed.unionByName(sentinels).cache()
+            cached.callback(new_rules.unpersist)
+            n_hosts = fresh_hosts.count()
+            if n_hosts:
+                self.store.commit(
+                    tables={},
+                    appends={"robots": new_rules},
+                    meta={"round": self.round_no()},
+                )
+            return n_hosts
 
     def _admit(self, cand: DataFrame, rules: DataFrame | None) -> DataFrame:
         """Apply robots disallow ``rules`` (``_effective_rules()``) to
@@ -338,99 +342,102 @@ class CrawlScheduler:
             frontier, self.host_budget, self.salt_k,
             budget_table=self._budget_table_from(rules),
         )
-        fetched = simulate_fetch(scheduled).cache()
-        fetch_parts = _partition_counts(fetched)
-        t1 = time.time()
-        t_fetch = t1 - t0
+        # the cached frames are released when the round fails too (a
+        # commit or probe error), or they stay pinned for the session's life
+        with ExitStack() as cached:
+            fetched = simulate_fetch(scheduled).cache()
+            cached.callback(fetched.unpersist)
+            fetch_parts = _partition_counts(fetched)
+            t1 = time.time()
+            t_fetch = t1 - t0
 
-        log = fetch_log(
-            fetched,
-            extra=(
-                F.lit(rnd).alias("round"),
-                F.col("host"),
-                F.col("fetch_rank").cast("int").alias("fetch_rank"),
-            ),
-        )
-
-        # mark scheduled urls as seen (both fetched-ok and failed: the
-        # reference's repo-existence check only covers stored payloads, but
-        # re-queueing permanent failures forever is not crawl semantics —
-        # failures are terminal within a run here; refetch is the delete path).
-        # Every reader of this projection scans the cached fetched frame,
-        # which holds one row per url_hash (the frontier is deduped by hash
-        # and admission and the budget join never repeat a row)
-        newly_seen = self.seen.bucketize(fetched.select("url_hash")).select("bucket", "url_hash")
-        seen2 = seen_rows.unionByName(newly_seen)
-        # one merge over the whole blob table: a bucket that gets no new
-        # hash passes through byte for byte, and only a bucket that gets
-        # some can overflow. merge_delta returns it materialized, the one
-        # frame this round's probe reads and the commit writes
-        blooms2 = self.seen.merge_delta(blooms, newly_seen.select("url_hash"), seen2)
-
-        # harvest next-round candidates, dedup vs (updated) seen set
-        outlinks = synthetic_outlinks(fetched)
-        cand = self._admit(canonical_candidates(outlinks), rules)
-        new_cand = self.seen.probe(cand, seen2, blooms2)
-        # frontier commit is MERGE-ON-READ (round 6): a normal round
-        # appends ONLY this round's new candidates — O(round) write volume,
-        # not an O(frontier) rewrite (the resolved view in ``frontier()``
-        # drops the hashes url_seen gained since the base, then dedups
-        # winners at read). Every MAX_FRONTIER_PARTS rounds the accumulated
-        # parts fold into one resolved base — amortized
-        # O(frontier / MAX_FRONTIER_PARTS) per round.
-        compacting = len(self.store.part_sids("frontier")) >= self.MAX_FRONTIER_PARTS
-        if compacting:
-            rest = frontier.join(newly_seen.select("url_hash"), "url_hash", "left_anti")
-            merged = rest.select(*new_cand.columns).unionByName(new_cand)
-            # a candidate can be re-discovered while still pending in the
-            # frontier — keep exactly one row per url_hash, deterministic
-            # winner (same key the read-side dedup uses)
-            frontier_delta = dedup_by_hash(merged).select(*new_cand.columns).cache()
-        else:
-            frontier_delta = new_cand.cache()
-        harvest_parts = _partition_counts(frontier_delta)
-        t2 = time.time()
-        t_harvest = t2 - t1
-
-        # the lineage rows are built on the driver from the two counts
-        # above: as a local frame their values are data, not literals
-        # compiled into a new class every round. One partition, so the
-        # round appends one metrics file
-        sid = self.store.next_snapshot_id()
-        lineage = [
-            (sid, rnd, phase, pid, n, elapsed, n / max(elapsed, 1e-9))
-            for phase, parts, elapsed in (
-                ("fetch", fetch_parts, t_fetch), ("harvest", harvest_parts, t_harvest),
+            log = fetch_log(
+                fetched,
+                extra=(
+                    F.lit(rnd).alias("round"),
+                    F.col("host"),
+                    F.col("fetch_rank").cast("int").alias("fetch_rank"),
+                ),
             )
-            for pid, n in parts
-        ]
-        metrics_new = (
-            self.spark.createDataFrame(pd.DataFrame(lineage), METRICS_SCHEMA).coalesce(1)
-            if lineage else empty_frame(self.spark, METRICS_SCHEMA)
-        )
 
-        # url_seen, fetch_log, metrics and (normal rounds) the frontier are
-        # append-only — each round commits ONLY its delta, so their commit
-        # cost stays O(round) instead of O(crawl). blooms is rewritten
-        # whole: O(n_buckets) blob rows. A fold writes the frontier as one
-        # resolved base instead of appending to it.
-        tables = {"blooms": blooms2}
-        appends = {"url_seen": newly_seen, "fetch_log": log, "metrics": metrics_new}
-        (tables if compacting else appends)["frontier"] = frontier_delta
-        sid = self.store.commit(tables=tables, appends=appends, meta={"round": rnd})
-        t_commit = time.time() - t2
-        fetched.unpersist()
-        frontier_delta.unpersist()
-        return {
-            "snapshot": sid,
-            "round": rnd,
-            "fetched": sum(n for _, n in fetch_parts),
-            "frontier": sum(n for _, n in harvest_parts),
-            "frontier_compacted": compacting,
-            "fetch_sec": t_fetch,
-            "harvest_sec": t_harvest,
-            "commit_sec": t_commit,
-        }
+            # mark scheduled urls as seen (both fetched-ok and failed: the
+            # reference's repo-existence check only covers stored payloads, but
+            # re-queueing permanent failures forever is not crawl semantics —
+            # failures are terminal within a run here; refetch is the delete path).
+            # Every reader of this projection scans the cached fetched frame,
+            # which holds one row per url_hash (the frontier is deduped by hash
+            # and admission and the budget join never repeat a row)
+            newly_seen = self.seen.bucketize(fetched.select("url_hash")).select("bucket", "url_hash")
+            seen2 = seen_rows.unionByName(newly_seen)
+            # one merge over the whole blob table: a bucket that gets no new
+            # hash passes through byte for byte, and only a bucket that gets
+            # some can overflow. merge_delta returns it materialized, the one
+            # frame this round's probe reads and the commit writes
+            blooms2 = self.seen.merge_delta(blooms, newly_seen.select("url_hash"), seen2)
+
+            # harvest next-round candidates, dedup vs (updated) seen set
+            outlinks = synthetic_outlinks(fetched)
+            cand = self._admit(canonical_candidates(outlinks), rules)
+            new_cand = self.seen.probe(cand, seen2, blooms2)
+            # frontier commit is MERGE-ON-READ (round 6): a normal round
+            # appends ONLY this round's new candidates — O(round) write volume,
+            # not an O(frontier) rewrite (the resolved view in ``frontier()``
+            # drops the hashes url_seen gained since the base, then dedups
+            # winners at read). Every MAX_FRONTIER_PARTS rounds the accumulated
+            # parts fold into one resolved base — amortized
+            # O(frontier / MAX_FRONTIER_PARTS) per round.
+            compacting = len(self.store.part_sids("frontier")) >= self.MAX_FRONTIER_PARTS
+            if compacting:
+                rest = frontier.join(newly_seen.select("url_hash"), "url_hash", "left_anti")
+                merged = rest.select(*new_cand.columns).unionByName(new_cand)
+                # a candidate can be re-discovered while still pending in the
+                # frontier — keep exactly one row per url_hash, deterministic
+                # winner (same key the read-side dedup uses)
+                frontier_delta = dedup_by_hash(merged).select(*new_cand.columns).cache()
+            else:
+                frontier_delta = new_cand.cache()
+            cached.callback(frontier_delta.unpersist)
+            harvest_parts = _partition_counts(frontier_delta)
+            t2 = time.time()
+            t_harvest = t2 - t1
+
+            # the lineage rows are built on the driver from the two counts
+            # above: as a local frame their values are data, not literals
+            # compiled into a new class every round. One partition, so the
+            # round appends one metrics file
+            sid = self.store.next_snapshot_id()
+            lineage = [
+                (sid, rnd, phase, pid, n, elapsed, n / max(elapsed, 1e-9))
+                for phase, parts, elapsed in (
+                    ("fetch", fetch_parts, t_fetch), ("harvest", harvest_parts, t_harvest),
+                )
+                for pid, n in parts
+            ]
+            metrics_new = (
+                self.spark.createDataFrame(pd.DataFrame(lineage), METRICS_SCHEMA).coalesce(1)
+                if lineage else empty_frame(self.spark, METRICS_SCHEMA)
+            )
+
+            # url_seen, fetch_log, metrics and (normal rounds) the frontier are
+            # append-only — each round commits ONLY its delta, so their commit
+            # cost stays O(round) instead of O(crawl). blooms is rewritten
+            # whole: O(n_buckets) blob rows. A fold writes the frontier as one
+            # resolved base instead of appending to it.
+            tables = {"blooms": blooms2}
+            appends = {"url_seen": newly_seen, "fetch_log": log, "metrics": metrics_new}
+            (tables if compacting else appends)["frontier"] = frontier_delta
+            sid = self.store.commit(tables=tables, appends=appends, meta={"round": rnd})
+            t_commit = time.time() - t2
+            return {
+                "snapshot": sid,
+                "round": rnd,
+                "fetched": sum(n for _, n in fetch_parts),
+                "frontier": sum(n for _, n in harvest_parts),
+                "frontier_compacted": compacting,
+                "fetch_sec": t_fetch,
+                "harvest_sec": t_harvest,
+                "commit_sec": t_commit,
+            }
 
     def merge_candidates(self, new_cand: DataFrame, meta: dict | None = None) -> int:
         """Merge already-admitted, already-probed candidate rows into the

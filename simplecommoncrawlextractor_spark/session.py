@@ -32,6 +32,22 @@ Design notes (100 TB / multi-executor):
   because one plan still inlines a per-round literal (``fetch_log``'s
   round number), which makes a new class for each new round that must
   age out.
+- HotSpot's C2 compiler gets a method only once it stays hot: the four
+  tier-4 thresholds are 10x their defaults (``C2_THRESHOLDS``, set as
+  ``spark.driver.defaultJavaOptions``; in local mode that JVM runs the
+  tasks too). At the defaults a fresh JVM spent more CPU in C2 than on
+  work: in a ``perfbench`` ``crawl_bulk`` unit on a 4-core box, C2 used
+  6.6-8.2 s and C1 1.2-1.6 s against 2.1-2.7 s of executor task time.
+  By ``-XX:+LogCompilation`` that C2 time went to framework code that
+  first gets warm at that size (Parquet's column writer, Catalyst, the
+  ClosureCleaner's ASM reader, ``Utils.getCallSite``, the Pickler), not
+  to generated classes (0.18 s). With 10x thresholds C2 in the unit fell
+  to 3.1-3.4 s and ``setup_s`` 42.6 -> 33.2 s, while the long
+  ``tools/loop_throughput.py`` loop kept its urls/s. C1 only
+  (``TieredStopAtLevel=1``) and 50x thresholds both slowed that loop by
+  15-30%: its hot loops need C2 code. Spark prepends
+  ``defaultJavaOptions`` to ``spark.driver.extraJavaOptions``, so a
+  caller's own JVM options still apply.
 - Python worker start-up is paid once per worker. PySpark's daemon calls
   ``importlib.invalidate_caches()`` before every task, which re-reads the
   central directory of ``pyspark.zip`` and the py4j zip once per zip
@@ -55,6 +71,11 @@ from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
 DAEMON_MODULE = "simplecommoncrawlextractor_spark.worker_daemon"
+# HotSpot's defaults are 5000, 600, 15000 and 40000 (see the module docstring)
+C2_THRESHOLDS = (
+    "-XX:Tier4InvocationThreshold=50000 -XX:Tier4MinInvocationThreshold=6000 "
+    "-XX:Tier4CompileThreshold=150000 -XX:Tier4BackEdgeThreshold=400000"
+)
 
 
 def _daemon_importable(master: str) -> bool:
@@ -100,6 +121,7 @@ def get_spark(
         .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
         .config("spark.buffer.pageSize", "1m")
         .config("spark.sql.codegen.cache.maxEntries", "1024")
+        .config("spark.driver.defaultJavaOptions", C2_THRESHOLDS)
     )
     # local-mode shuffle spills to tmpfs when available: at high local
     # parallelism the disk becomes the shuffle bottleneck long before CPU

@@ -4,6 +4,7 @@ reference simulator of the crawl semantics (SURVEY §5.3)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from simplecommoncrawlextractor_spark.plans import CrawlScheduler, StateStore
@@ -344,3 +345,25 @@ def test_rounds_run_a_fixed_job_count_and_compile_once(spark, tmp_path):
     assert jobs[1] == jobs[2] == jobs[4] == jobs[5], jobs
     assert jobs[1] <= 23, jobs
     assert compiled[3:] == [0, 0, 0], compiled
+
+
+@pytest.mark.parametrize("auto_robots", [False, True])
+def test_failed_round_releases_its_cached_frames(spark, tmp_path, monkeypatch, auto_robots):
+    """A round that raises leaves nothing in the session's cache: with
+    ``auto_robots`` the first commit to fail is ``refresh_robots``', which
+    caches the fresh hosts and their rules; without it, the round's own,
+    after the fetched rows and the frontier delta are cached."""
+    store = StateStore(str(tmp_path / "s"))
+    sched = CrawlScheduler(
+        spark, store, host_budget=4, salt_k=4, n_buckets=8, auto_robots=auto_robots
+    )
+    sched.bootstrap(seed_frontier(spark, n=200))
+
+    def fail(*args, **kwargs):
+        raise ValueError("commit failed")
+
+    monkeypatch.setattr(store, "commit", fail)
+    spark.catalog.clearCache()
+    with pytest.raises(ValueError, match="commit failed"):
+        sched.step()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

@@ -1,6 +1,6 @@
 """``get_spark``'s worker daemon: when it is set, that a Python stage runs
 with it set and unset, and what its ``invalidate_caches`` wrapper keeps;
-its Tungsten page size; and its generated-class cache.
+its Tungsten page size; its generated-class cache; and its JVM options.
 
 The Spark cases each start their own session in a subprocess, because the
 test session's JVM (and its daemon conf) already exists."""
@@ -55,11 +55,37 @@ print(json.dumps({"module": module, "file": pkg.__file__, "rows": rows, "probes"
 """
 
 
-def _run_child(cwd: str, pkg_path: str, probe_dir: str = "") -> dict:
+# Run like CHILD: opens a session whose caller adds a JVM option of its own
+# and prints the JVM's input arguments and the property that option sets.
+JVM_CHILD = r"""
+import json, sys
+sys.path.insert(0, sys.argv[1])
+import simplecommoncrawlextractor_spark as pkg
+spark = pkg.get_spark(
+    app_name="test-session-jvm", master="local[1]", shuffle_partitions=1,
+    extra_conf={"spark.driver.extraJavaOptions": "-Dccspark.probe=1"},
+)
+jvm = spark._jvm
+args = list(jvm.java.lang.management.ManagementFactory.getRuntimeMXBean().getInputArguments())
+probe = jvm.java.lang.System.getProperty("ccspark.probe")
+spark.stop()
+print(json.dumps({"args": args, "probe": probe}))
+"""
+
+# HotSpot's four C2 thresholds at 10x their defaults
+C2_THRESHOLDS = {
+    "-XX:Tier4InvocationThreshold=50000",
+    "-XX:Tier4MinInvocationThreshold=6000",
+    "-XX:Tier4CompileThreshold=150000",
+    "-XX:Tier4BackEdgeThreshold=400000",
+}
+
+
+def _run_child(cwd: str, pkg_path: str, probe_dir: str = "", script: str = CHILD) -> dict:
     env = {k: v for k, v in os.environ.items() if k not in ("PYTHONPATH", "PYSPARK_GATEWAY_PORT")}
     env["PYSPARK_PYTHON"] = sys.executable
     out = subprocess.run(
-        [sys.executable, "-c", CHILD, pkg_path, probe_dir],
+        [sys.executable, "-c", script, pkg_path, probe_dir],
         cwd=cwd, env=env, capture_output=True, text=True, timeout=600,
     )
     assert out.returncode == 0, out.stdout[-2000:] + out.stderr[-4000:]
@@ -137,6 +163,19 @@ def test_generated_classes_compile_once(spark):
         counts.append(compiles.getCount())
     assert counts[1] - counts[0] >= len(queries)
     assert counts[2] - counts[1] == 0
+
+
+def test_c2_thresholds_in_shared_session(spark):
+    args = spark._jvm.java.lang.management.ManagementFactory.getRuntimeMXBean().getInputArguments()
+    assert C2_THRESHOLDS <= set(args)
+
+
+def test_c2_thresholds_kept_with_callers_java_options():
+    # Spark prepends defaultJavaOptions to the caller's extraJavaOptions
+    got = _run_child(ROOT, ROOT, script=JVM_CHILD)
+    assert C2_THRESHOLDS <= set(got["args"])
+    assert "-Dccspark.probe=1" in got["args"]
+    assert got["probe"] == "1"
 
 
 @pytest.fixture

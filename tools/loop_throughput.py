@@ -6,8 +6,8 @@ scheduled per round — the round shape a 10^10-URL crawl actually has).
 Prints one LOOP_RESULT JSON line with urls/sec, the scheduled-URL count
 (byte-identity continuity check: 4,224,809 at the standard setting for
 every round since r1), per-round phases (with the generated classes each
-round compiled, Spark's ``CodegenMetrics`` count, and the Spark jobs it
-ran), and the 1-min load before/after.
+round compiled, Spark's ``CodegenMetrics`` count, the JVM's JIT compile
+time in ms, and the Spark jobs it ran), and the 1-min load before/after.
 
 Usage:
     python tools/loop_throughput.py [n_seeds] [rounds]
@@ -64,15 +64,19 @@ def main() -> None:
         # Spark's count of generated classes compiled in the driver JVM
         # (every class under a local master), read around each step
         compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+        # the JVM's own total of JIT compiler time, which keeps the time of
+        # compiler threads that have since exited
+        jit = spark._jvm.java.lang.management.ManagementFactory.getCompilationMXBean()
         # each step runs under its own job group, so the status tracker
         # can count the Spark jobs it ran
         sc = spark.sparkContext
         stats = []
         for r in range(rounds):
             sc.setJobGroup(f"loop-step-{r}", f"loop step {r}")
-            t, c = time.time(), compiles.getCount()
+            t, c, ms = time.time(), compiles.getCount(), jit.getTotalCompilationTime()
             stats.append({
                 **sched.step(), "round_sec": time.time() - t, "codegen_compiles": compiles.getCount() - c,
+                "jit_ms": jit.getTotalCompilationTime() - ms,
             })
         elapsed = time.time() - t1  # rounds only: bootstrap is one-time
         sc.setLocalProperty("spark.jobGroup.id", None)
@@ -87,7 +91,8 @@ def main() -> None:
         # whole step() wall time, which shows a round's cost growing with
         # the crawl's age, the part of that wall outside the three
         # phases (about 0: the step's timers are contiguous), the
-        # generated classes the step compiled and the jobs it ran
+        # generated classes the step compiled, its JIT time and the jobs
+        # it ran
         phases = [
             {
                 "round": s["round"],
@@ -101,6 +106,7 @@ def main() -> None:
                 ),
                 "compacted": s["frontier_compacted"],
                 "codegen_compiles": s["codegen_compiles"],
+                "jit_ms": s["jit_ms"],
                 "spark_jobs": j,
             }
             for s, j in zip(stats, jobs)
