@@ -43,11 +43,12 @@ Design notes (100 TB / multi-executor):
   ClosureCleaner's ASM reader, ``Utils.getCallSite``, the Pickler), not
   to generated classes (0.18 s). With 10x thresholds C2 in the unit fell
   to 3.1-3.4 s and ``setup_s`` 42.6 -> 33.2 s, while the long
-  ``tools/loop_throughput.py`` loop kept its urls/s. C1 only
-  (``TieredStopAtLevel=1``) and 50x thresholds both slowed that loop by
+  ``tools/loop_throughput.py`` loop kept its urls/s. 20x thresholds cost
+  that loop about 6%, and C1 only (``TieredStopAtLevel=1``) and 50x
   15-30%: its hot loops need C2 code. Spark prepends
   ``defaultJavaOptions`` to ``spark.driver.extraJavaOptions``, so a
-  caller's own JVM options still apply.
+  caller's own JVM options still apply. Like any JVM option it applies
+  only when this process launches the JVM, not under ``spark-submit``.
 - Python worker start-up is paid once per worker. PySpark's daemon calls
   ``importlib.invalidate_caches()`` before every task, which re-reads the
   central directory of ``pyspark.zip`` and the py4j zip once per zip
